@@ -11,10 +11,13 @@ import graft.functions.{MinHashSig, PythonRound}
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   *   spark.sql("SELECT py_round(x, 3), minhash_sig(hashes, 64, 42)")
   *
-  * No custom optimizer Rule or SparkStrategy is injected — SURVEY §4:
-  * every rewrite the reference relies on is index selection inside
-  * MongoDB, which Spark replaces with layout (TableLayout) + Catalyst's
-  * own pushdown/pruning.
+  * No custom optimizer Rule is injected — SURVEY §4: every rewrite the
+  * reference relies on is index selection inside MongoDB, which Spark
+  * replaces with layout (TableLayout) + Catalyst's own pushdown/pruning.
+  * The engine's one SparkStrategy, `GroupedTopKStrategy`, is not
+  * installed here: `PlanBridge.groupedTopK` appends it to the session's
+  * `experimental.extraStrategies` on first use, since it only plans the
+  * `GroupedTopK` node that method builds.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import GraftExtensions._

@@ -175,61 +175,6 @@ object MergeOps {
     fs.delete(retired, true)
   }
 
-  /** K1 at cluster scale — partition-pruned keyed merge into a
-    * month-partitioned parquet table (the layout
-    * [[graft.sources.TableLayout.writeEventsTable]] produces).
-    *
-    * [[upsertParquet]] reads and rewrites the WHOLE table per batch —
-    * fine for a single collection-sized table, a non-starter at 100 TB
-    * where an incremental crawl batch touches 0.01% of rows. This
-    * variant mirrors the reference's incremental upsert-on-arrival
-    * (reference: my_scrapers/unified_scraper.py:622-642 — the reference
-    * never rewrites its collection to absorb a batch): only the month
-    * partitions containing incoming rows are read (partition-pruned
-    * scan), merged, and swapped in; every other month's files are never
-    * opened, let alone rewritten.
-    *
-    * Contract: `incoming` carries the partition column `partCol`, and
-    * the partition value must be STABLE per merge key (every version of
-    * a key maps to the same month — true for the events layout, where
-    * the caller re-derives start_month from the row being upserted and
-    * a re-scrape that MOVES an event across months must include the old
-    * month in the same batch, or reconcile via a periodic compaction
-    * run of [[upsertParquet]]). A key whose old version lives in an
-    * untouched month would otherwise survive alongside its replacement.
-    *
-    * Crash safety, per month: the merged batch is materialized under a
-    * sibling `_mstaging` root while the destination is intact, then
-    * each touched month is swapped in with two renames (live month →
-    * `_mretired` root, staged month → live). A crash mid-swap leaves
-    * every month either fully old or fully new, and any month whose
-    * sole live copy sits under `_mretired` is restored on the next
-    * call before anything is read. A crash between month activations
-    * can leave the batch HALF-APPLIED (some months new, the rest old —
-    * each individually consistent); the contract is apply-or-retry:
-    * re-running the same batch is idempotent (latest-wins re-merge of
-    * already-applied months is a no-op), which is exactly what a
-    * foreachBatch caller's checkpoint replay does after a crash. The
-    * distinct-months collect is bounded by the number of touched
-    * partitions (a handful of months per crawl batch), not by data
-    * volume.
-    *
-    * Recovery invariant (proven by MergeOpsSpec's kill-between-renames
-    * case): after a crash at ANY point, the next merge / reconcile /
-    * compact call first restores every month whose only live copy sits
-    * under `_mretired` and discards the `_mstaging` root, leaving the
-    * table readable with no month lost — each month holding either its
-    * pre-merge or its post-merge contents, never neither. A killed
-    * batch is recovered TO THE PRE-MERGE STATE for its unswapped
-    * months; re-running the batch completes it.
-    *
-    * Reader exclusion: the swap is crash-safe but NOT reader-atomic —
-    * between a month's retire and activate renames a concurrent reader
-    * of the table sees that month's rows silently absent (no error).
-    * Single writer is assumed, and readers must not overlap a merge /
-    * reconcile / compact call on the same table; schedule reads around
-    * merges, or read through a snapshot copy.
-    */
   /** The month-directory swap machinery shared by the partition-scoped
     * merge and the cross-month reconcile: sibling staging/retired
     * roots, orphan recovery, and the per-month two-rename activation.
@@ -363,10 +308,83 @@ object MergeOps {
       fs.delete(retiredRoot, true)
     }
 
+    /** Write `df` under the staging root, partitioned by `parts` and
+      * clustered by them first, so each staged partition dir is
+      * written by ONE task as ONE file — a reader of the month opens
+      * one file, not one per upstream task that held its rows. The
+      * `rebalance` hint (not a bare repartition) keeps big months
+      * parallel: AQE splits a partition past
+      * `spark.sql.adaptive.advisoryPartitionSizeInBytes` into several
+      * tasks, so such a month lands as that many files.
+      */
+    def stage(df: DataFrame, parts: Seq[String]): Unit =
+      df.hint("rebalance", parts.map(col): _*)
+        .write.mode(SaveMode.Overwrite)
+        .partitionBy(parts: _*).parquet(stagingRoot.toString)
+
     def activate(partCol: String, months: Seq[String]): Unit =
       activateDirs(months.map(partCol + "=" + _))
   }
 
+  /** K1 at cluster scale — partition-pruned keyed merge into a
+    * month-partitioned parquet table (the layout
+    * [[graft.sources.TableLayout.writeEventsTable]] produces).
+    *
+    * [[upsertParquet]] reads and rewrites the WHOLE table per batch —
+    * fine for a single collection-sized table, a non-starter at 100 TB
+    * where an incremental crawl batch touches 0.01% of rows. This
+    * variant mirrors the reference's incremental upsert-on-arrival
+    * (reference: my_scrapers/unified_scraper.py:622-642 — the reference
+    * never rewrites its collection to absorb a batch): only the month
+    * partitions containing incoming rows are read (partition-pruned
+    * scan), merged, and swapped in; every other month's files are never
+    * opened, let alone rewritten.
+    *
+    * Contract: `incoming` carries the partition column `partCol`, and
+    * the partition value must be STABLE per merge key (every version of
+    * a key maps to the same month — true for the events layout, where
+    * the caller re-derives start_month from the row being upserted and
+    * a re-scrape that MOVES an event across months must include the old
+    * month in the same batch, or reconcile via a periodic compaction
+    * run of [[upsertParquet]]). A key whose old version lives in an
+    * untouched month would otherwise survive alongside its replacement.
+    *
+    * Crash safety, per month: the merged batch is materialized under a
+    * sibling `_mstaging` root while the destination is intact, then
+    * each touched month is swapped in with two renames (live month →
+    * `_mretired` root, staged month → live). A crash mid-swap leaves
+    * every month either fully old or fully new, and any month whose
+    * sole live copy sits under `_mretired` is restored on the next
+    * call before anything is read. A crash between month activations
+    * can leave the batch HALF-APPLIED (some months new, the rest old —
+    * each individually consistent); the contract is apply-or-retry:
+    * re-running the same batch is idempotent (latest-wins re-merge of
+    * already-applied months is a no-op), which is exactly what a
+    * foreachBatch caller's checkpoint replay does after a crash. The
+    * distinct-months collect is bounded by the number of touched
+    * partitions (a handful of months per crawl batch), not by data
+    * volume.
+    *
+    * Recovery invariant (proven by MergeOpsSpec's kill-between-renames
+    * case): after a crash at ANY point, the next merge / reconcile /
+    * compact call first restores every month whose only live copy sits
+    * under `_mretired` and discards the `_mstaging` root, leaving the
+    * table readable with no month lost — each month holding either its
+    * pre-merge or its post-merge contents, never neither. A killed
+    * batch is recovered TO THE PRE-MERGE STATE for its unswapped
+    * months; re-running the batch completes it.
+    *
+    * Reader exclusion: the swap is crash-safe but NOT reader-atomic —
+    * between a month's retire and activate renames a concurrent reader
+    * of the table sees that month's rows silently absent (no error).
+    * Single writer is assumed, and readers must not overlap a merge /
+    * reconcile / compact call on the same table; schedule reads around
+    * merges, or read through a snapshot copy.
+    *
+    * Layout: each touched month is written as one file, or one per
+    * AQE split for a month past the advisory partition size (see
+    * `MonthSwap.stage`), however many tasks produced the merged rows.
+    */
   def upsertParquetByMonth(spark: SparkSession, tablePath: String,
       incoming: DataFrame, keys: Seq[String], recency: String,
       partCol: String = "start_month"): Unit = {
@@ -406,8 +424,7 @@ object MergeOps {
           .withColumn(partCol, col(partCol).cast("string"))
         upsert(existing, incoming, keys, recency)
       } else incoming
-    merged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol).parquet(swap.stagingRoot.toString)
+    swap.stage(merged, Seq(partCol))
     swap.activate(partCol, months)
   }
 
@@ -734,9 +751,7 @@ object MergeOps {
           .withColumn(shardCol, col(shardCol).cast("string"))
         upsert(existing, inc, keys, recency)
       } else inc
-    merged.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol, shardCol)
-      .parquet(swap.stagingRoot.toString)
+    swap.stage(merged, Seq(partCol, shardCol))
     // numShards sizing diagnostic — geometry is static TABLE state a
     // deployment must guess up front, so the merge (which already
     // opened exactly the touched dirs) measures what the guess costs:
@@ -1658,24 +1673,11 @@ object MergeOps {
     // never mining it for shards this pass deliberately dropped.
     val writeParts = partCol +: shardLayout(swap.fs, swap.dest)
       .map(_._1).toSeq
-    keep.write.mode(SaveMode.Overwrite)
-      .partitionBy(writeParts: _*).parquet(swap.stagingRoot.toString)
+    swap.stage(keep, writeParts)
     swap.activate(partCol, staleMonths)
     staleMonths
   }
 
-  /** Compact fragmented month partitions: any month whose file count
-    * exceeds `maxFilesPerMonth` is rewritten into
-    * ceil(rows/maxRecordsPerFile) files (sorted within partitions by
-    * the keys, restoring the row-group-statistics locality the
-    * TableLayout write establishes); months at or under the bound are
-    * never opened. Sustained micro-batch ingest rewrites its touched
-    * months wholesale, so fragmentation stays bounded per month — this
-    * pass is the periodic floor-sweep for long-lived tables (and the
-    * natural place the cross-month reconcile piggybacks in an ops
-    * schedule). Same per-month staging/retire crash safety as the
-    * merge. Returns the compacted months.
-    */
   /** Retention: drop every month partition strictly BEFORE
     * `cutoffMonth` (lexicographic on the yyyy-MM partition value — the
     * layout's natural order) as DIRECTORY renames, never row rewrites:
@@ -1732,6 +1734,21 @@ object MergeOps {
     months
   }
 
+  /** Compact fragmented month partitions: any month whose file count
+    * exceeds `maxFilesPerMonth` is rewritten into
+    * ceil(rows/maxRecordsPerFile) files (sorted within partitions by
+    * the keys, restoring the row-group-statistics locality the
+    * TableLayout write establishes); months at or under the bound are
+    * never opened. The merges and the reconcile already write each
+    * month (or month/shard) they touch as one file — more only where
+    * AQE split an oversized month — so this pass is the periodic
+    * floor-sweep for months fragmented by something else: plain
+    * appends, foreign writers, and months written before the merges
+    * clustered their output (and the natural place the cross-month
+    * reconcile piggybacks in an ops schedule). Same per-month
+    * staging/retire crash safety as the merge. Returns the compacted
+    * months.
+    */
   def compactMonths(spark: SparkSession, tablePath: String,
       keys: Seq[String], partCol: String = "start_month",
       maxFilesPerMonth: Int = 4,

@@ -849,12 +849,20 @@ class MergeOpsSpec extends AnyFunSuite {
   test("compaction on a sharded table works per shard and converges") {
     val dir = Files.createTempDirectory("graft_shcomp").toFile.getAbsolutePath
     val table = s"$dir/events"
-    // 12 keys in one month over 2 shards, scattered across many input
-    // partitions so each shard dir lands several small files
+    // 12 keys in one month over 2 shards. The merge creates the table
+    // (and its _shard_layout) from the first four as one file per
+    // shard; the other eight are then appended straight into the
+    // shard dirs from many input partitions, so each shard dir holds
+    // several small files
     val rows = (1 to 12).map(i => (s"e$i", s"t$i", 1, "2025-01"))
     MergeOps.upsertParquetByMonthShard(spark, table,
-      monthDocs(rows).repartition(12), Seq("event_id"), "version",
+      monthDocs(rows.take(4)), Seq("event_id"), "version",
       numShards = 2)
+    monthDocs(rows.drop(4))
+      .withColumn("kshard", MergeOps.keyShard(Seq("event_id"), 2))
+      .repartition(8)
+      .write.mode("append").partitionBy("start_month", "kshard")
+      .parquet(table)
     val fs = new org.apache.hadoop.fs.Path(table)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def shardFiles(): Map[String, Int] = fs.listStatus(
@@ -1506,9 +1514,10 @@ class MergeOpsSpec extends AnyFunSuite {
       .getAbsolutePath
     val table = s"$dir/events"
     val rows = (1 to 6).map(i => (s"e$i", s"t$i", 1, "2025-01"))
-    // six 1-row files in the month
-    MergeOps.upsertParquetByMonth(spark, table,
-      monthDocs(rows).repartition(6), Seq("event_id"), "version")
+    // six 1-row files in the month (a plain partitioned write: the
+    // merge would cluster the month into one file)
+    monthDocs(rows).repartition(6)
+      .write.partitionBy("start_month").parquet(table)
     val before = spark.read.parquet(table).orderBy("event_id")
       .collect().map(_.getAs[String]("title")).toSeq
     // 6 rows at 2 rows/file → 3 files, above maxFilesPerMonth=1: the
@@ -1643,5 +1652,141 @@ class MergeOpsSpec extends AnyFunSuite {
     assert(got === Seq("e1" -> "jan", "e2" -> "feb"),
       "marker-listed orphan was not restored")
     assert(!fs.exists(retiredRoot))
+  }
+
+  // ---- month-clustered writes ----------------------------------------
+
+  private type Doc = (String, String, Int, String)
+
+  /** The latest-wins state of every version ever merged, in read-back
+    * order. */
+  private def latestWins(docs: Seq[Doc]): Seq[Doc] =
+    docs.groupBy(_._1).values.map(_.maxBy(_._3)).toSeq.sortBy(_._1)
+
+  private def readBack(table: String): Seq[Doc] =
+    spark.read.parquet(table)
+      .select("event_id", "title", "version", "start_month")
+      .orderBy("event_id").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2),
+        r.getString(3))).toSeq
+
+  /** `.parquet` file count per partition leaf dir, keyed by its path
+    * relative to the table root (`start_month=M[/kshard=S]`). */
+  private def leafFiles(table: String): Map[String, Int] = {
+    val fs = new org.apache.hadoop.fs.Path(table)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qroot = fs.makeQualified(new org.apache.hadoop.fs.Path(table))
+    val it = fs.listFiles(qroot, true)
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    while (it.hasNext) {
+      val f = it.next().getPath
+      if (f.getName.endsWith(".parquet"))
+        buf += f.getParent.toString.stripPrefix(qroot.toString + "/")
+    }
+    buf.groupBy(identity).map { case (d, files) => d -> files.size }
+  }
+
+  test("merge writers cluster their output: one file per touched month " +
+      "(or month/shard), untouched months byte-identical") {
+    val dir = Files.createTempDirectory("graft_clustered").toFile
+      .getAbsolutePath
+    val keys = Seq("event_id")
+    val months = (1 to 5).map(m => f"2025-$m%02d")
+    val touched = months.take(3)
+    def inTouched(rel: String) =
+      touched.exists(m => rel.startsWith(s"start_month=$m/"))
+    def census(t: String) = fileCensus(t, skip = "").filterNot(e =>
+      inTouched(e._1))
+    // 8 input partitions: without clustering each write task would
+    // emit its own file for every month it holds
+    def spread(docs: Seq[Doc]) = monthDocs(docs).repartition(8)
+    val base = (1 to 60).map(i => (s"e$i", s"t$i", 1, months(i % 5)))
+    // every other key of the touched months re-scraped, plus new keys
+    val batch = base.filter(d => touched.contains(d._4)).zipWithIndex
+      .collect { case ((k, _, _, m), j) if j % 2 == 0 =>
+        (k, s"$k v2", 2, m) } ++
+      (61 to 75).map(i => (s"e$i", s"t$i", 1, touched(i % 3)))
+    val expected = latestWins(base ++ batch)
+    val oneEach = months.map(m => s"start_month=$m" -> 1).toMap
+
+    // upsertParquetByMonth: the creating write and a merge over it
+    val flat = s"$dir/flat"
+    MergeOps.upsertParquetByMonth(spark, flat, spread(base), keys, "version")
+    assert(leafFiles(flat) === oneEach, "the creating merge fragmented")
+    val flatBefore = census(flat)
+    MergeOps.upsertParquetByMonth(spark, flat, spread(batch), keys,
+      "version")
+    assert(leafFiles(flat) === oneEach)
+    assert(census(flat) === flatBefore, "untouched months were rewritten")
+    assert(MergeOps.compactMonths(spark, flat, keys,
+      maxFilesPerMonth = 1) === Nil)
+    assert(readBack(flat) === expected)
+
+    // the sharded merge: one file per (month, shard)
+    val sh = s"$dir/sh"
+    MergeOps.upsertParquetByMonthShard(spark, sh, spread(base), keys,
+      "version", numShards = 4)
+    assert(leafFiles(sh).values.forall(_ == 1),
+      "the creating sharded merge fragmented")
+    val shBefore = census(sh)
+    MergeOps.upsertParquetByMonthShard(spark, sh, spread(batch), keys,
+      "version", numShards = 4)
+    val shLeaves = leafFiles(sh)
+    assert(shLeaves.keys.forall(_.contains("/kshard=")) &&
+      shLeaves.values.forall(_ == 1), shLeaves.toString)
+    assert(touched.forall(m =>
+      shLeaves.keys.count(_.startsWith(s"start_month=$m/")) > 1),
+      "fixture must spread each touched month over several shards")
+    assert(census(sh) === shBefore, "untouched months were rewritten")
+    assert(MergeOps.compactMonths(spark, sh, keys,
+      maxFilesPerMonth = 1) === Nil)
+    assert(readBack(sh) === expected)
+
+    // the cross-month reconcile: stale months start fragmented (a
+    // plain partitioned write), the moved keys' winners live in the
+    // untouched months (one file each)
+    val rec = s"$dir/rec"
+    val stale = (1 to 45).map(i => (s"r$i", s"t$i", 1, touched(i % 3)))
+    val moved = stale.zipWithIndex.collect { case ((k, _, _, _), j)
+      if j % 2 == 0 => (k, s"$k moved", 2, months(3 + (j / 2) % 2)) }
+    val settled =
+      (46 to 55).map(i => (s"r$i", s"t$i", 1, months(3 + i % 2)))
+    spread(stale).write.partitionBy("start_month").parquet(rec)
+    monthDocs(moved ++ settled).coalesce(1)
+      .write.mode("append").partitionBy("start_month").parquet(rec)
+    assert(touched.forall(m => leafFiles(rec)(s"start_month=$m") > 1),
+      "fixture must fragment the stale months")
+    val recBefore = census(rec)
+    assert(MergeOps.reconcileCrossMonthKeys(spark, rec, keys,
+      "version") === touched)
+    assert(leafFiles(rec) === oneEach)
+    assert(census(rec) === recBefore, "untouched months were rewritten")
+    assert(MergeOps.compactMonths(spark, rec, keys,
+      maxFilesPerMonth = 1) === Nil)
+    assert(readBack(rec) === latestWins(stale ++ moved ++ settled))
+  }
+
+  test("a merged month larger than AQE's advisory partition size is " +
+      "written as several files and reads back identical") {
+    val dir = Files.createTempDirectory("graft_clustersplit").toFile
+      .getAbsolutePath
+    val table = s"$dir/events"
+    val conf = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(conf)
+    // hex titles: the shuffle's compressed size must stay well past
+    // the advisory size
+    val docs = (1 to 2000).map(i => (s"e$i",
+      (1 to 3).map(j => java.util.UUID.nameUUIDFromBytes(
+        s"$i/$j".getBytes("UTF-8")).toString).mkString, 1, "2025-01"))
+    spark.conf.set(conf, "4k")
+    try MergeOps.upsertParquetByMonth(spark, table,
+      monthDocs(docs).repartition(8), Seq("event_id"), "version")
+    finally prev match {
+      case Some(v) => spark.conf.set(conf, v)
+      case None => spark.conf.unset(conf)
+    }
+    assert(leafFiles(table)("start_month=2025-01") > 1,
+      "an oversized month must keep writing in parallel")
+    assert(readBack(table) === latestWins(docs))
   }
 }
