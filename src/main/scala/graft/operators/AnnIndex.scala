@@ -596,26 +596,6 @@ object AnnIndex {
     deltas.isEmpty || deltaBytes(fs, genPath, deltas) <= cap
   }
 
-  /** The persisted-index read: base + every committed delta of the
-    * live generation, pruned to `cells` (partition pruning — the scan
-    * unit the whole layout exists for), with only `cols` read (column
-    * pruning: the ADC pass never deserializes `vec`, the rerank never
-    * reads `codes`), then resolved LATEST-WINS: each component
-    * carries its commit number and only each corpus_id's highest-
-    * commit row among the scanned components survives.
-    *
-    * Dedup plan, sized to where the rows are: with no deltas (fresh
-    * or compacted index) there is nothing to resolve and the base
-    * scan streams through untouched — the steady post-compact state
-    * pays NOTHING. With `broadcastDeltaIds` (the caller's one
-    * physical-size check, [[deltasBroadcastable]]), only the DELTAS —
-    * small by the maintenance contract — pay a window sort, and the
-    * base scan sheds superseded rows through a broadcast LEFT ANTI
-    * join on the delta id set: no shuffle, no sort, map-side only —
-    * the base never pays for being large, which is the whole layout's
-    * point. Only a delta backlog past the broadcast bound (a missed
-    * compact) falls back to the spill-safe windowed top-k over the
-    * full pruned scan. */
   /** The broadcast-path delta resolution, computed ONCE per probe
     * over the union of every column the call's component reads need
     * (probe reads the pruned cells twice — codes for ADC, vectors for
@@ -641,6 +621,26 @@ object AnnIndex {
       .localCheckpoint()
   }
 
+  /** The persisted-index read: base + every committed delta of the
+    * live generation, pruned to `cells` (partition pruning — the scan
+    * unit the whole layout exists for), with only `cols` read (column
+    * pruning: the ADC pass never deserializes `vec`, the rerank never
+    * reads `codes`), then resolved LATEST-WINS: each component
+    * carries its commit number and only each corpus_id's highest-
+    * commit row among the scanned components survives.
+    *
+    * Dedup plan, sized to where the rows are: with no deltas (fresh
+    * or compacted index) there is nothing to resolve and the base
+    * scan streams through untouched — the steady post-compact state
+    * pays NOTHING. With `broadcastDeltaIds` (the caller's one
+    * physical-size check, [[deltasBroadcastable]]), only the DELTAS —
+    * small by the maintenance contract — pay a window sort, and the
+    * base scan sheds superseded rows through a broadcast LEFT ANTI
+    * join on the delta id set: no shuffle, no sort, map-side only —
+    * the base never pays for being large, which is the whole layout's
+    * point. Only a delta backlog past the broadcast bound (a missed
+    * compact) falls back to the spill-safe windowed top-k over the
+    * full pruned scan. */
   private def readCells(spark: SparkSession,
       genPath: org.apache.hadoop.fs.Path, deltas: Seq[String],
       cells: Option[Seq[Int]], cols: Seq[String],
@@ -708,85 +708,62 @@ object AnnIndex {
         StructField("cosine", DoubleType)) ++ extra))
   }
 
-  /** Answer an IVF-PQ k-NN join FROM the index — identical semantics
-    * (and bit-identical results) to [[Similarity.knnJoinIvfPq]] over
-    * the same corpus and quantizer, with the corpus-side assignment
-    * and PQ encode replaced by reads of the persisted artifact. The
-    * probed-cell set is collected once (bounded by nlist, never by
-    * data) and pushed into the parquet scans as a partition filter.
-    *
-    * `broadcastQueries` states the BOUNDED-QUERY-BATCH assumption the
-    * default leans on: the query side is shipped to every task twice
-    * (the LUT side at |queries|·nprobe rows of m·ksub doubles, the
-    * rerank side at |queries| raw vectors) — the right plan for the
-    * deployment shape (a bounded probe batch against a huge corpus).
-    * Pass `false` when the query set itself is table-sized: both
-    * joins become shuffle joins, trading the executor-memory bound
-    * for an exchange (note the ADC join's key `_cell` has ≤ nlist
-    * distinct values — the shuffle path leans on AQE skew splitting
-    * and is the escape hatch, not the fast path). */
-  def probe(spark: SparkSession, indexPath: String, queries: DataFrame,
-      idCol: String, vecCol: String, k: Int, nprobe: Int = 2,
-      shortlist: Int = 50, broadcastQueries: Boolean = true): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe — 0 would " +
-      "read as 'no neighbors exist'")
-    val dest = new Path(indexPath)
+  /** What both probes read from the live generation: its quantizer,
+    * the probed-cell set — collected once, ≤ nlist values whatever the
+    * query count, so the scans below are partition-pruned reads of
+    * nprobe/nlist of the table — and, pruned to those cells with one
+    * latest-wins delta resolution shared by both reads, the skeleton's
+    * two sides: codes (_cell, corpus_id, codes, cn) and vectors
+    * (corpus_id, vec, cn). `sides` is None when no cell is probed. */
+  private final case class Probed(genPath: org.apache.hadoop.fs.Path,
+      centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
+      deltas: Seq[String], bcastDeltas: Boolean,
+      sides: Option[(DataFrame, DataFrame)])
+
+  private def probed(spark: SparkSession, indexPath: String,
+      queries: DataFrame, vecCol: String, nprobe: Int): Probed = {
+    val dest = new org.apache.hadoop.fs.Path(indexPath)
     val fs = fsOf(spark, dest)
     val genPath = liveGen(fs, dest)
     val lay = readLayout(fs, genPath)
     val centroids = parseVecs(lay("centroids"))
-    val codebooks = parseBooks(lay("codebooks"))
-    val m = codebooks.length
-    val ksub = codebooks.head.length
     val deltas = deltaDirs(fs, genPath)
     val bcastDeltas = deltasBroadcastable(spark, fs, genPath, deltas)
-    def side(df: DataFrame): DataFrame =
-      if (broadcastQueries) broadcast(df) else df
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", Similarity.norm(col("_qv")))
-      .withColumn("_lut", Similarity.pqLut(col("_qv"), codebooks))
-      .withColumn("_cell",
-        explode(Similarity.ivfProbes(col("_qv"), centroids, nprobe)))
-    // the probed-cell set: ≤ nlist values regardless of query count —
-    // the bounded driver artifact that turns both scans below into
-    // partition-pruned reads of nprobe/nlist of the table
-    val cells = q.select(col("_cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
-    if (cells.isEmpty)
-      return emptyProbeResult(spark, genPath, queries, idCol, Seq.empty)
-    // one delta resolution for both pruned reads (superset columns)
-    val sharedWins =
-      if (deltas.nonEmpty && bcastDeltas)
-        Some(resolveDeltaWins(spark, genPath, deltas, Some(cells),
-          Seq("cell", "corpus_id", "codes", "cn", "vec")))
-      else None
-    val codesSide = readCells(spark, genPath, deltas, Some(cells),
-        Seq("cell", "corpus_id", "codes", "cn"), bcastDeltas,
-        sharedWins)
-      .withColumnRenamed("cell", "_cell")
-    val adc = codesSide
-      .join(side(q.select(col("_cell"), col("query_id"),
-        col("_lut"), col("_qn"))), "_cell")
-      .select(col("query_id"), col("corpus_id"),
-        (Similarity.adcDot(col("_lut"), col("codes"), m, ksub) /
-          (col("cn") * col("_qn"))).as("adc_cosine"))
-    val cand = graft.plans.GroupedTopK.combined(adc, Seq("query_id"),
-      Seq("adc_cosine", "corpus_id"), descending = true, shortlist)
-    val vecSide = readCells(spark, genPath, deltas, Some(cells),
-      Seq("corpus_id", "vec", "cn"), bcastDeltas, sharedWins)
-    val reranked = cand.select(col("query_id"), col("corpus_id"))
-      .join(vecSide, "corpus_id")
-      .join(side(queries
-        .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-        .withColumn("_qn", Similarity.norm(col("_qv")))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        (Similarity.dot(col("vec"), col("_qv")) /
-          (col("cn") * col("_qn"))).as("cosine"))
-    graft.plans.GroupedTopK.combined(reranked, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
+    val cells = queries
+      .select(Similarity.probedCells(col(vecCol), centroids, nprobe))
+      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+    val sides = if (cells.isEmpty) None else {
+      val sharedWins =
+        if (deltas.nonEmpty && bcastDeltas)
+          Some(resolveDeltaWins(spark, genPath, deltas, Some(cells),
+            Seq("cell", "corpus_id", "codes", "cn", "vec")))
+        else None
+      def read(cols: String*) = readCells(spark, genPath, deltas,
+        Some(cells), cols, bcastDeltas, sharedWins)
+      Some((read("cell", "corpus_id", "codes", "cn")
+          .withColumnRenamed("cell", "_cell"),
+        read("corpus_id", "vec", "cn")))
+    }
+    Probed(genPath, centroids, parseBooks(lay("codebooks")), deltas,
+      bcastDeltas, sides)
+  }
+
+  /** Answer an IVF-PQ k-NN join FROM the index — the same path as
+    * [[Similarity.knnJoinIvfPq]] (bit-identical results over the same
+    * corpus and quantizer), with the corpus-side assignment and PQ
+    * encode replaced by partition-pruned reads of the persisted
+    * artifact. The query side broadcasts — a bounded probe batch
+    * against a huge corpus. */
+  def probe(spark: SparkSession, indexPath: String, queries: DataFrame,
+      idCol: String, vecCol: String, k: Int, nprobe: Int = 2,
+      shortlist: Int = 50): DataFrame = {
+    Similarity.requireDials(k, shortlist)
+    val p = probed(spark, indexPath, queries, vecCol, nprobe)
+    p.sides.fold(emptyProbeResult(spark, p.genPath, queries, idCol,
+        Seq.empty)) { case (codes, vecs) =>
+      Similarity.ivfPqJoin(codes, vecs, queries, idCol, vecCol, k,
+        p.centroids, p.codebooks, nprobe, shortlist)
+    }
   }
 
   /** [[probe]] at a DECLARED recall target — the persisted index at
@@ -809,73 +786,30 @@ object AnnIndex {
       queries: DataFrame, idCol: String, vecCol: String, k: Int,
       nprobe: Int = 2, shortlists: Seq[Int] = Seq.empty,
       targetX100: Int = 90, sampleQueries: Int = 0): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    require(targetX100 >= 1 && targetX100 <= 100,
-      s"targetX100 in [1,100], got $targetX100")
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe — 0 would " +
-      "read as 'no neighbors exist'")
-    val ss = (if (shortlists.nonEmpty) shortlists
-      else Seq(k, 2 * k, 4 * k, 8 * k)).distinct.sorted
-    require(ss.head >= k, s"every shortlist must be >= k=$k, got $ss")
+    val ss = Similarity.shortlistLadder(k, shortlists, targetX100)
     // sample branch FIRST: it needs only the ladder — the recursive
-    // calibration and the final probe each do their own layout read,
-    // so parsing the quantizer here would be dead work
-    if (sampleQueries > 0) {
-      val (chosenS, recall) = Similarity.sampleDial(queries, idCol,
-        sampleQueries, "shortlist", ss.last,
-        qs => probeAtRecall(spark, indexPath, qs, idCol, vecCol, k,
-          nprobe, ss, targetX100, 0))
-      return probe(spark, indexPath, queries, idCol, vecCol, k,
-          nprobe, chosenS)
-        .withColumn("shortlist", lit(chosenS).cast("int"))
-        .withColumn("recall_x1000", lit(recall))
-    }
-    val dest = new Path(indexPath)
-    val fs = fsOf(spark, dest)
-    val genPath = liveGen(fs, dest)
-    val lay = readLayout(fs, genPath)
-    val centroids = parseVecs(lay("centroids"))
-    val codebooks = parseBooks(lay("codebooks"))
-    val deltas = deltaDirs(fs, genPath)
-    val bcastDeltas = deltasBroadcastable(spark, fs, genPath, deltas)
-    val cells = queries.select(explode(
-        Similarity.ivfProbes(col(vecCol), centroids, nprobe)).as("_c"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
-    if (cells.isEmpty) {
-      import org.apache.spark.sql.types._
-      return emptyProbeResult(spark, genPath, queries, idCol, Seq(
+    // calibration and the final probe each do their own layout read
+    if (sampleQueries > 0)
+      return Similarity.sampleDial(queries, idCol, sampleQueries,
+        "shortlist", ss.last, qs => probeAtRecall(spark, indexPath, qs,
+          idCol, vecCol, k, nprobe, ss, targetX100, 0))(
+        s => probe(spark, indexPath, queries, idCol, vecCol, k, nprobe, s))
+    val p = probed(spark, indexPath, queries, vecCol, nprobe)
+    import org.apache.spark.sql.types._
+    p.sides.fold(emptyProbeResult(spark, p.genPath, queries, idCol, Seq(
         StructField("shortlist", IntegerType),
-        StructField("recall_x1000", LongType)))
+        StructField("recall_x1000", LongType)))) { case (codes, vecs) =>
+      // the exact baseline is inherently all-corpus: every cell's
+      // stored vectors, renamed back to the caller's column contract
+      val fullVecs = readCells(spark, p.genPath, p.deltas, None,
+          Seq("corpus_id", "vec"), p.bcastDeltas)
+        .withColumnsRenamed(Map("corpus_id" -> idCol, "vec" -> vecCol))
+      Similarity.ivfPqAtRecallCore(codes, vecs,
+        Similarity.knnJoinExact(fullVecs, queries, idCol, vecCol, k)
+          .select(col("query_id"), col("corpus_id")),
+        queries, idCol, vecCol, k, p.centroids, p.codebooks, nprobe, ss,
+        targetX100)
     }
-    // one delta resolution for both pruned reads (superset columns);
-    // the exact baseline below is unpruned and keeps its own
-    val sharedWins =
-      if (deltas.nonEmpty && bcastDeltas)
-        Some(resolveDeltaWins(spark, genPath, deltas, Some(cells),
-          Seq("cell", "corpus_id", "codes", "cn", "vec")))
-      else None
-    val codesSide = readCells(spark, genPath, deltas, Some(cells),
-        Seq("cell", "corpus_id", "codes", "cn"), bcastDeltas,
-        sharedWins)
-      .withColumnRenamed("cell", "_cell")
-      .withColumnRenamed("codes", "_codes")
-      .withColumnRenamed("cn", "_cn")
-    val vecSide = readCells(spark, genPath, deltas, Some(cells),
-        Seq("corpus_id", "vec", "cn"), bcastDeltas, sharedWins)
-      .withColumnRenamed("vec", "_cv")
-      .withColumnRenamed("cn", "_cn")
-    // the exact baseline is inherently all-corpus: every cell's
-    // stored vectors, renamed back to the caller's column contract
-    val fullVecs = readCells(spark, genPath, deltas, None,
-        Seq("corpus_id", "vec"), bcastDeltas)
-      .withColumnRenamed("corpus_id", idCol)
-      .withColumnRenamed("vec", vecCol)
-    val exactPairs = Similarity.knnJoinExact(fullVecs, queries,
-        idCol, vecCol, k)
-      .select(col("query_id"), col("corpus_id"))
-    Similarity.ivfPqAtRecallCore(codesSide, vecSide, exactPairs,
-      queries, idCol, vecCol, k, centroids, codebooks, nprobe, ss,
-      targetX100)
   }
 
   /** Fold every committed delta into a fresh base — the periodic

@@ -5,15 +5,30 @@ import org.apache.spark.sql.functions._
 
 /** Similarity search over embedding columns (Array[Float]).
   *
-  * Two paths, per the training-data-pipeline contract:
-  *  - brute-force cosine top-k — the exact baseline. One scan, per-row
-  *    fold for the dot product (no explode, no shuffle except the final
-  *    top-k, which Spark plans as TakeOrderedAndProject);
-  *  - random-hyperplane LSH buckets — the scale path. Vectors hash to
-  *    sign-pattern buckets; a query probes only its bucket
-  *    (candidates ≈ n / 2^bits), trading recall for a ~2^bits fan-in
-  *    reduction. At 100 TB the bucketed table is written
-  *    partitioned-by-bucket so a probe is one partition-pruned scan.
+  * Single-query top-k ([[cosineTopK]], [[annTopK]], [[ivfTopK]]) is one
+  * scan with a per-row dot-product fold and a final
+  * TakeOrderedAndProject.
+  *
+  * The k-NN joins (every query against the corpus) share one skeleton:
+  * candidate generation, then an optional exact rerank, then a grouped
+  * top-k (partial per-partition GroupedTopK heaps, one exchange, final
+  * heaps). The query side broadcasts; the corpus is scored in place.
+  * The candidate generators:
+  *  - exact: every (corpus, query) pair — [[knnJoinExact]];
+  *  - LSH bucket: pairs sharing a random-hyperplane sign-pattern bucket
+  *    (candidates ≈ n / 2^bits) — [[knnJoinLsh]], its int8-quantized
+  *    corpus form [[knnJoinLshQ8]], and [[knnJoinLshMultiProbe]], which
+  *    also probes every single-bit-flip bucket;
+  *  - IVF cells: each query's `nprobe` nearest coarse cells —
+  *    [[knnJoinIvf]];
+  *  - IVF-PQ ADC: compressed-domain scores inside the probed cells,
+  *    reranked exactly — [[knnJoinIvfPq]], [[knnJoinIvfPqResidual]],
+  *    and the persisted index's [[AnnIndex.probe]];
+  *  - JL projection: exact cosine in a projected space, reranked
+  *    exactly — [[knnJoinRerank]].
+  * The two recall tuners, [[knnJoinIvfAtRecall]] (nprobe dial) and
+  * [[knnJoinIvfPqAtRecall]] (shortlist dial), share one stopping rule
+  * that picks the smallest dial reaching a recall target.
   */
 object Similarity {
 
@@ -53,8 +68,11 @@ object Similarity {
     */
   def randomProjection(df: DataFrame, vecCol: String, k: Int, dim: Int,
       seed: Long = 7L): DataFrame =
-    df.withColumn("proj",
-      array(hyperplanes(k, dim, seed).map(h => dotConst(col(vecCol), h)): _*))
+    df.withColumn("proj", projection(col(vecCol), k, dim, seed))
+
+  private def projection(vec: Column, k: Int, dim: Int,
+      seed: Long): Column =
+    array(hyperplanes(k, dim, seed).map(h => dotConst(vec, h)): _*)
 
   /** Dot product of two vector columns (codegen'd). */
   def dot(a: Column, b: Column): Column =
@@ -76,11 +94,17 @@ object Similarity {
 
   /** Brute-force exact cosine top-k against a query vector. */
   def cosineTopK(embeddings: DataFrame, idCol: String, vecCol: String,
-      query: Seq[Double], k: Int): DataFrame = {
+      query: Seq[Double], k: Int): DataFrame =
+    queryTopK(embeddings, idCol, vecCol, query, k)
+
+  /** Exact cosine of every row against one driver-side query vector,
+    * then the top k by cosine (id ascending on ties), `extra` columns
+    * carried along. */
+  private def queryTopK(df: DataFrame, idCol: String, vecCol: String,
+      query: Seq[Double], k: Int, extra: Column*): DataFrame = {
     val qNorm = math.sqrt(query.map(x => x * x).sum)
-    embeddings.select(col(idCol),
-        (dotConst(col(vecCol), query) / (norm(col(vecCol)) * lit(qNorm)))
-          .as("cosine"))
+    df.select(Seq(col(idCol), (dotConst(col(vecCol), query) /
+        (norm(col(vecCol)) * lit(qNorm))).as("cosine")) ++ extra: _*)
       .orderBy(col("cosine").desc, col(idCol))
       .limit(k)
   }
@@ -108,15 +132,9 @@ object Similarity {
     val qBucket = planes.zipWithIndex.map { case (h, i) =>
       if (h.zip(query).map { case (a, b) => a * b }.sum >= 0.0) 1 << i else 0
     }.reduce(_ | _)
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    withLshBucket(embeddings, vecCol, bits, dim, seed)
-      .filter(col("bucket") === qBucket)
-      .select(col(idCol),
-        (dotConst(col(vecCol), query) / (norm(col(vecCol)) * lit(qNorm)))
-          .as("cosine"),
-        col("bucket"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
+    queryTopK(withLshBucket(embeddings, vecCol, bits, dim, seed)
+      .filter(col("bucket") === qBucket), idCol, vecCol, query, k,
+      col("bucket"))
   }
 
   /** IVF (inverted-file) coarse quantizer, trained on a bounded sample.
@@ -317,6 +335,216 @@ object Similarity {
     }
   }
 
+  // ------------------------------------------------------------------
+  // The kNN-join skeleton. Every knnJoin* (and AnnIndex.probe*) is a
+  // candidate generator composed with these: candidates → optional
+  // exact rerank → grouped top-k, all sides named (corpus_id, _cv, _cn)
+  // and (query_id, _qv, _qn).
+  // ------------------------------------------------------------------
+
+  /** `k ≥ 1` and `shortlist ≥ k`: the dial checks of every join (a join
+    * without a shortlist passes `k`). `nprobe ≥ 1` is checked where the
+    * probes are cut, in [[probedCells]]. */
+  private[operators] def requireDials(k: Int, shortlist: Int): Unit = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
+  }
+
+  /** The corpus side: (corpus_id, _cv, extra…, _cn). `vec` and `extra`
+    * are evaluated over `df`, so a join can bucket the raw vector while
+    * scoring a transformed one. */
+  private def corpusSide(df: DataFrame, idCol: String, vec: Column,
+      extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("corpus_id"), vec.as("_cv")) ++ extra: _*)
+      .withColumn("_cn", norm(col("_cv")))
+
+  /** The query side: (query_id, _qv, extra…, _qn). */
+  private def querySide(df: DataFrame, idCol: String, vec: Column,
+      extra: Column*): DataFrame =
+    df.select(Seq(col(idCol).as("query_id"), vec.as("_qv")) ++ extra: _*)
+      .withColumn("_qn", norm(col("_qv")))
+
+  /** Exact cosine of a joined (corpus, query) pair — per-row norms are
+    * computed once per side, not per pair. */
+  private def exactCosine: Column =
+    (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn"))).as("cosine")
+
+  /** Top `n` rows per group by `score`, `corpus_id` breaking ties, both
+    * descending: a PARTIAL per-partition GroupedTopK heap pass reduces
+    * each partition to ≤ groups×n rows before the single exchange, and
+    * the FINAL pass keeps the true top-n. */
+  private def topK(df: DataFrame, score: String, n: Int,
+      groups: Seq[String] = Seq("query_id")): DataFrame =
+    graft.plans.GroupedTopK.combined(df, groups, Seq(score, "corpus_id"),
+      descending = true, n)
+
+  /** Exact cosine over candidate pairs, top-k per query. */
+  private def topKCosine(pairs: DataFrame, k: Int): DataFrame = {
+    requireDials(k, k)
+    topK(pairs.select(col("query_id"), col("corpus_id"), exactCosine),
+      "cosine", k)
+  }
+
+  /** A shortlist's (query_id, corpus_id, carry…) pairs joined back to
+    * the full vectors and the broadcast query side. `vecSide` is
+    * (corpus_id, vector, norm) in that order, under any names (the
+    * persisted index keeps its stored ones); they are renamed to _cv /
+    * _cn after the join, where the rename costs no operator. */
+  private def withVectors(shortlist: DataFrame, vecSide: DataFrame,
+      qSide: DataFrame, carry: String*): DataFrame = {
+    val Array(_, v, n) = vecSide.columns
+    shortlist.select((Seq("query_id", "corpus_id") ++ carry).map(col): _*)
+      .join(vecSide, "corpus_id")
+      .join(broadcast(qSide), "query_id")
+      .withColumnsRenamed(Map(v -> "_cv", n -> "_cn"))
+  }
+
+  /** The exact rerank: a shortlist rescored with full vectors. */
+  private def rerank(shortlist: DataFrame, vecSide: DataFrame,
+      qSide: DataFrame, k: Int): DataFrame =
+    topKCosine(withVectors(shortlist, vecSide, qSide), k)
+
+  /** A query's `nprobe` nearest cells, one row each — the IVF candidate
+    * cut of every IVF join and of the persisted index's probes. */
+  private[operators] def probedCells(vec: Column,
+      centroids: Seq[Seq[Double]], nprobe: Int): Column = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe — 0 would " +
+      "read as 'no neighbors exist'")
+    explode(ivfProbes(vec, centroids, nprobe))
+  }
+
+  /** The corpus encoded for the inline IVF-PQ joins, as the two sides
+    * [[ivfPqJoin]] takes: codes (_cell, corpus_id, _codes, _cn) and
+    * vectors (corpus_id, _cv, _cn). Residual codes quantize
+    * v − centroid(cell). */
+  private def encodedSides(corpus: DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]],
+      books: Seq[Seq[Seq[Double]]],
+      residual: Boolean): (DataFrame, DataFrame) = {
+    require(centroids.nonEmpty, "centroids must be non-empty")
+    require(books.nonEmpty && books.forall(_.nonEmpty),
+      "codebooks must be non-empty")
+    val cell = ivfAssignment(col(vecCol), centroids)
+    val c =
+      if (!residual) corpusSide(corpus, idCol, col(vecCol), cell.as("_cell"),
+        pqEncode(col(vecCol), books).as("_codes"))
+      else corpusSide(corpus.withColumn("_cell", cell), idCol, col(vecCol),
+        col("_cell"), pqEncode(residualCol(col(vecCol), centroids,
+          col("_cell")), books).as("_codes"))
+    (c.select(col("_cell"), col("corpus_id"), col("_codes"), col("_cn")),
+      c.select(col("corpus_id"), col("_cv"), col("_cn")))
+  }
+
+  /** The broadcast side of the ADC scan: (_cell, query_id, _lut, _qn),
+    * one row per probed cell, with each query's ADC lookup table. The
+    * residual form adds `_qc`, the query's dot with every centroid. */
+  private def adcQueries(queries: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
+      nprobe: Int, residual: Boolean): DataFrame = {
+    val q = querySide(queries, idCol, col(vecCol))
+      .withColumn("_lut", pqLut(col("_qv"), books))
+    val qc = if (!residual) q else q.withColumn("_qc",
+      array(centroids.map(cen => dotConst(col("_qv"), cen)): _*))
+    qc.withColumn("_cell", probedCells(col("_qv"), centroids, nprobe))
+      .select((Seq("_cell", "query_id", "_lut") ++
+        (if (residual) Seq("_qc") else Nil) :+ "_qn").map(col): _*)
+  }
+
+  /** The IVF-PQ candidate scan: `codesSide` — compressed rows only, no
+    * full vectors: (_cell, corpus_id, codes, norm) in that order, the
+    * last two under any names — joined to the broadcast probed-cell
+    * queries, scored adcDot/(|c|·|q|) and cut to each query's top `n`.
+    * `init` is the residual form's query·centroid term. */
+  private def adcShortlist(codesSide: DataFrame, q: DataFrame,
+      books: Seq[Seq[Seq[Double]]], n: Int,
+      init: Column = lit(0.0)): DataFrame = {
+    val Array(_, _, codes, cn) = codesSide.columns
+    topK(codesSide.join(broadcast(q), "_cell")
+        .select(col("query_id"), col("corpus_id"),
+          (adcDot(col("_lut"), col(codes), books.length, books.head.length,
+            init) / (col(cn) * col("_qn"))).as("adc_cosine")),
+      "adc_cosine", n)
+  }
+
+  /** IVF-PQ candidates, then the exact rerank of each query's
+    * `shortlist`, over INJECTED sides — the inline joins pass a freshly
+    * encoded corpus, [[AnnIndex.probe]] partition-pruned reads of its
+    * stored codes and vectors, so the two cannot drift. */
+  private[operators] def ivfPqJoin(codesSide: DataFrame,
+      vecSide: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, centroids: Seq[Seq[Double]],
+      books: Seq[Seq[Seq[Double]]], nprobe: Int, shortlist: Int,
+      residual: Boolean = false): DataFrame = {
+    requireDials(k, shortlist)
+    val init = if (!residual) lit(0.0)
+      else element_at(col("_qc"), (col("_cell") + lit(1)).cast("int"))
+    rerank(adcShortlist(codesSide, adcQueries(queries, idCol, vecCol,
+        centroids, books, nprobe, residual), books, shortlist, init),
+      vecSide, querySide(queries, idCol, col(vecCol)), k)
+  }
+
+  /** The shortlist dial both IVF-PQ recall tuners calibrate over —
+    * `shortlists`, or k, 2k, 4k, 8k — sorted, and validated with the
+    * recall target. */
+  private[operators] def shortlistLadder(k: Int, shortlists: Seq[Int],
+      targetX100: Int): Seq[Int] = {
+    require(targetX100 >= 1 && targetX100 <= 100,
+      s"targetX100 in [1,100], got $targetX100")
+    val ss = (if (shortlists.nonEmpty) shortlists
+      else Seq(k, 2 * k, 4 * k, 8 * k)).distinct.sorted
+    requireDials(k, ss.head)
+    ss
+  }
+
+  /** The stopping rule of every recall tuner: count each dial value's
+    * `curve` pairs that hit the `exact` top-k, choose the SMALLEST dial
+    * whose recall reaches targetX100/100 (else `fallback`, the most
+    * exhaustive), and return its pairs with the measured recall ×1000
+    * (integer-exact). LEFT join + coalesce: a chosen dial with ZERO hits
+    * (possible only on the fallback path — adversarial vectors where
+    * even the most exhaustive setting retrieves none of the true top-k)
+    * has no row in `hits`; an inner join would silently return an EMPTY
+    * result instead of best-effort pairs with recall_x1000 = 0. */
+  private def pickDial(curve: DataFrame, dialCol: String,
+      exact: DataFrame, targetX100: Int, fallback: Int): DataFrame = {
+    val exactN = exact.agg(count(lit(1)).as("_n_exact"))
+    val hits = curve.join(exact, Seq("query_id", "corpus_id"))
+      .groupBy(col(dialCol)).agg(count(lit(1)).as("_hits"))
+    val chosen = hits.crossJoin(broadcast(exactN))
+      .filter(col("_hits") * 100 >=
+        lit(targetX100.toLong) * col("_n_exact"))
+      .agg(coalesce(min(col(dialCol)), lit(fallback)).as("_chosen"))
+    curve.join(broadcast(chosen), col(dialCol) === col("_chosen"))
+      .join(broadcast(hits), Seq(dialCol), "left")
+      .withColumn("_hits", coalesce(col("_hits"), lit(0L)))
+      .crossJoin(broadcast(exactN))
+      .select(col("query_id"), col("corpus_id"), col("cosine"),
+        col(dialCol), expr("_hits * 1000 div _n_exact").as("recall_x1000"))
+  }
+
+  /** The sample mode of every recall tuner (inline IVF, inline IVF-PQ,
+    * and the persisted index's probe): calibrate through the caller's
+    * own in-plan path on a seeded hash-ordered query subset, read the
+    * dial and measured recall off one row (falling back to `fallback`
+    * with recall 0 when the calibration returns nothing), then answer
+    * ALL queries through `join` at that dial, every row carrying the
+    * sample-measured recall. One implementation so the sampling contract
+    * cannot drift between callers. */
+  private[operators] def sampleDial(queries: DataFrame, idCol: String,
+      sampleQueries: Int, dialCol: String, fallback: Int,
+      calibrate: DataFrame => DataFrame)(
+      join: Int => DataFrame): DataFrame = {
+    val qs = queries.orderBy(xxhash64(col(idCol)), col(idCol))
+      .limit(sampleQueries)
+    val (dial, recall) = calibrate(qs)
+      .select(col(dialCol), col("recall_x1000"))
+      .limit(1).collect().headOption
+      .map(r => (r.getInt(0), r.getLong(1)))
+      .getOrElse((fallback, 0L))
+    join(dial).withColumn(dialCol, lit(dial))
+      .withColumn("recall_x1000", lit(recall))
+  }
+
   /** IVF-PQ join at a DECLARED recall target — the shortlist dial
     * turned automatically, the PQ counterpart of
     * [[knnJoinIvfAtRecall]]'s nprobe dial (a user needs "give me
@@ -351,132 +579,58 @@ object Similarity {
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
       nprobe: Int = 2, shortlists: Seq[Int] = Seq.empty,
       targetX100: Int = 90, sampleQueries: Int = 0): DataFrame = {
-    require(targetX100 >= 1 && targetX100 <= 100,
-      s"targetX100 in [1,100], got $targetX100")
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-      "codebooks must be non-empty")
     // the ladder (and its validation) is computed ONCE, above the
     // sample branch — the sample path's fallback must use the same
     // rule as the in-plan path or the two could silently drift
-    val ss = (if (shortlists.nonEmpty) shortlists
-      else Seq(k, 2 * k, 4 * k, 8 * k)).distinct.sorted
-    require(ss.head >= k, s"every shortlist must be >= k=$k, got $ss")
-    val sMax = ss.last
-    if (sampleQueries > 0) {
-      val (chosenS, recall) = sampleDial(queries, idCol, sampleQueries,
-        "shortlist", sMax,
-        qs => knnJoinIvfPqAtRecall(corpus, qs, idCol, vecCol, k,
-          centroids, codebooks, nprobe, ss, targetX100, 0))
-      return knnJoinIvfPq(corpus, queries, idCol, vecCol, k,
-          centroids, codebooks, nprobe, chosenS)
-        .withColumn("shortlist", lit(chosenS).cast("int"))
-        .withColumn("recall_x1000", lit(recall))
-    }
-    val c = corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"))
-      .withColumn("_cell", ivfAssignment(col("_cv"), centroids))
-      .withColumn("_codes", pqEncode(col("_cv"), codebooks))
-      .withColumn("_cn", norm(col("_cv")))
-    ivfPqAtRecallCore(
-      c.select(col("_cell"), col("corpus_id"), col("_codes"), col("_cn")),
-      c.select(col("corpus_id"), col("_cv"), col("_cn")),
+    val ss = shortlistLadder(k, shortlists, targetX100)
+    if (sampleQueries > 0)
+      return sampleDial(queries, idCol, sampleQueries, "shortlist",
+        ss.last, qs => knnJoinIvfPqAtRecall(corpus, qs, idCol, vecCol, k,
+          centroids, codebooks, nprobe, ss, targetX100, 0))(
+        s => knnJoinIvfPq(corpus, queries, idCol, vecCol, k, centroids,
+          codebooks, nprobe, s))
+    val (codes, vecs) = encodedSides(corpus, idCol, vecCol, centroids,
+      codebooks, residual = false)
+    ivfPqAtRecallCore(codes, vecs,
       knnJoinExact(corpus, queries, idCol, vecCol, k)
         .select(col("query_id"), col("corpus_id")),
       queries, idCol, vecCol, k, centroids, codebooks, nprobe, ss,
       targetX100)
   }
 
-  /** The sample-mode dial choice shared by every recall-target join
-    * (inline IVF, inline IVF-PQ, and the persisted index's probe):
-    * seeded hash-ordered query subset, calibrate on it via the
-    * caller's own in-plan path, read the dial + measured recall off
-    * one row, fall back to the most exhaustive config with recall 0
-    * when the calibration returns nothing. One implementation so the
-    * sampling contract cannot drift between callers. */
-  private[operators] def sampleDial(queries: DataFrame, idCol: String,
-      sampleQueries: Int, dialCol: String, fallback: Int,
-      calibrate: DataFrame => DataFrame): (Int, Long) = {
-    val qs = queries.orderBy(xxhash64(col(idCol)), col(idCol))
-      .limit(sampleQueries)
-    calibrate(qs).select(col(dialCol), col("recall_x1000"))
-      .limit(1).collect().headOption
-      .map(r => (r.getInt(0), r.getLong(1)))
-      .getOrElse((fallback, 0L))
-  }
-
   /** The shortlist-dial calibration shared by the inline
     * [[knnJoinIvfPqAtRecall]] and the persisted index's
     * [[AnnIndex.probeAtRecall]] — the encoded corpus, the rerank
-    * vectors, and the exact baseline are INJECTED so the two callers
-    * cannot drift: inline passes a freshly encoded corpus, the index
-    * passes partition-pruned reads of its stored codes/vectors.
-    * `codesSide` = (_cell, corpus_id, _codes, _cn); `vecSide` =
-    * (corpus_id, _cv, _cn); `exactPairs` = the exact top-k
-    * (query_id, corpus_id) baseline over the same corpus. */
+    * vectors, and the exact baseline are INJECTED as in [[ivfPqJoin]].
+    * `codesSide` and `vecSide` as in [[adcShortlist]] and
+    * [[withVectors]]; `exactPairs` = the exact top-k (query_id,
+    * corpus_id) baseline over the same corpus. */
   private[operators] def ivfPqAtRecallCore(codesSide: DataFrame,
       vecSide: DataFrame, exactPairs: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int,
       centroids: Seq[Seq[Double]], codebooks: Seq[Seq[Seq[Double]]],
       nprobe: Int, ss: Seq[Int], targetX100: Int): DataFrame = {
-    val sMax = ss.last
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val qBase = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-    val q = qBase
-      .withColumn("_lut", pqLut(col("_qv"), codebooks))
-      .withColumn("_cell",
-        explode(ivfProbes(col("_qv"), centroids, nprobe)))
-    val adc = codesSide
-      .join(broadcast(q.select(col("_cell"), col("query_id"),
-        col("_lut"), col("_qn"))), "_cell")
-      .select(col("query_id"), col("corpus_id"),
-        (adcDot(col("_lut"), col("_codes"), m, ksub) /
-          (col("_cn") * col("_qn"))).as("adc_cosine"))
-    // rank within the top-sMax candidates only (GroupedTopK bounds
-    // the window's input to |queries|·sMax rows before it runs)
+    // rank within the top-max(ss) candidates only (the ADC shortlist
+    // bounds the window's input to |queries|·max(ss) rows before it runs)
     val rankW = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
       .orderBy(col("adc_cosine").desc, col("corpus_id").desc)
-    val cand = graft.plans.GroupedTopK.combined(adc, Seq("query_id"),
-        Seq("adc_cosine", "corpus_id"), descending = true, sMax)
+    val cand = adcShortlist(codesSide, adcQueries(queries, idCol, vecCol,
+        centroids, codebooks, nprobe, residual = false), codebooks, ss.last)
       .withColumn("adc_rank", row_number().over(rankW))
     // exact cosine ONCE per surviving candidate; every curve point
     // reads this bounded artifact
-    val scored = cand.select(col("query_id"), col("corpus_id"),
-        col("adc_rank"))
-      .join(vecSide, "corpus_id")
-      .join(broadcast(qBase), "query_id")
+    val scored = withVectors(cand, vecSide,
+        querySide(queries, idCol, col(vecCol)), "adc_rank")
       .select(col("query_id"), col("corpus_id"), col("adc_rank"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
+        exactCosine)
       .localCheckpoint()
-    val exact = exactPairs.localCheckpoint()
-    val exactN = exact.agg(count(lit(1)).as("_n_exact"))
-    val curve = scored.withColumn("s",
-        explode(array(ss.map(lit(_)): _*)))
+    val curve = scored.withColumn("s", explode(array(ss.map(lit(_)): _*)))
       .filter(col("adc_rank") <= col("s"))
-    val topk = graft.plans.GroupedTopK.combined(curve,
-      Seq("s", "query_id"), Seq("cosine", "corpus_id"),
-      descending = true, k)
-    val hits = topk.join(exact, Seq("query_id", "corpus_id"))
-      .groupBy(col("s")).agg(count(lit(1)).as("_hits"))
-    val chosen = hits.crossJoin(broadcast(exactN))
-      .filter(col("_hits") * 100 >=
-        lit(targetX100.toLong) * col("_n_exact"))
-      .agg(coalesce(min(col("s")), lit(sMax)).as("_chosen"))
-    // LEFT join + coalesce — same zero-hit fallback contract as
-    // [[knnJoinIvfAtRecall]]: best-effort pairs with recall 0, never
-    // a silently empty result
-    topk.join(broadcast(chosen), col("s") === col("_chosen"))
-      .join(broadcast(hits), Seq("s"), "left")
-      .withColumn("_hits", coalesce(col("_hits"), lit(0L)))
-      .crossJoin(broadcast(exactN))
+    pickDial(topK(curve, "cosine", k, Seq("s", "query_id")), "s",
+        exactPairs.localCheckpoint(), targetX100, ss.last)
       .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("s").cast("int").as("shortlist"),
-        expr("_hits * 1000 div _n_exact").as("recall_x1000"))
+        col("s").cast("int").as("shortlist"), col("recall_x1000"))
   }
 
   /** Residual-encoded IVF-PQ k-NN join — [[knnJoinIvfPq]] with the
@@ -493,48 +647,10 @@ object Similarity {
       idCol: String, vecCol: String, k: Int,
       centroids: Seq[Seq[Double]], resBooks: Seq[Seq[Seq[Double]]],
       nprobe: Int = 2, shortlist: Int = 50): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    require(resBooks.nonEmpty && resBooks.forall(_.nonEmpty),
-      "resBooks must be non-empty")
-    val m = resBooks.length
-    val ksub = resBooks.head.length
-    val c = corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"))
-      .withColumn("_cell", ivfAssignment(col("_cv"), centroids))
-      .withColumn("_codes", pqEncode(
-        residualCol(col("_cv"), centroids, col("_cell")), resBooks))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-      .withColumn("_lut", pqLut(col("_qv"), resBooks))
-      .withColumn("_qc",
-        array(centroids.map(cen => dotConst(col("_qv"), cen)): _*))
-      .withColumn("_cell",
-        explode(ivfProbes(col("_qv"), centroids, nprobe)))
-    val adc = c.select(col("_cell"), col("corpus_id"), col("_codes"),
-        col("_cn"))
-      .join(broadcast(q.select(col("_cell"), col("query_id"),
-        col("_lut"), col("_qc"), col("_qn"))), "_cell")
-      .select(col("query_id"), col("corpus_id"),
-        (adcDot(col("_lut"), col("_codes"), m, ksub,
-          init = element_at(col("_qc"), (col("_cell") + lit(1))
-            .cast("int"))) /
-          (col("_cn") * col("_qn"))).as("adc_cosine"))
-    val cand = graft.plans.GroupedTopK.combined(adc, Seq("query_id"),
-      Seq("adc_cosine", "corpus_id"), descending = true, shortlist)
-    val reranked = cand.select(col("query_id"), col("corpus_id"))
-      .join(c.select(col("corpus_id"), col("_cv"), col("_cn")),
-        "corpus_id")
-      .join(broadcast(queries
-        .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-        .withColumn("_qn", norm(col("_qv")))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(reranked, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
+    val (codes, vecs) = encodedSides(corpus, idCol, vecCol, centroids,
+      resBooks, residual = true)
+    ivfPqJoin(codes, vecs, queries, idCol, vecCol, k, centroids, resBooks,
+      nprobe, shortlist, residual = true)
   }
 
   /** IVF-PQ k-NN join (Jégou et al., TPAMI'11) — the 100 TB ANN
@@ -555,43 +671,10 @@ object Similarity {
       vecCol: String, k: Int, centroids: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]], nprobe: Int = 2,
       shortlist: Int = 50): DataFrame = {
-    require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
-    require(centroids.nonEmpty, "centroids must be non-empty")
-    require(codebooks.nonEmpty && codebooks.forall(_.nonEmpty),
-      "codebooks must be non-empty")
-    val m = codebooks.length
-    val ksub = codebooks.head.length
-    val c = corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"))
-      .withColumn("_cell", ivfAssignment(col("_cv"), centroids))
-      .withColumn("_codes", pqEncode(col("_cv"), codebooks))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-      .withColumn("_lut", pqLut(col("_qv"), codebooks))
-      .withColumn("_cell",
-        explode(ivfProbes(col("_qv"), centroids, nprobe)))
-    val adc = c.select(col("_cell"), col("corpus_id"), col("_codes"),
-        col("_cn"))
-      .join(broadcast(q.select(col("_cell"), col("query_id"),
-        col("_lut"), col("_qn"))), "_cell")
-      .select(col("query_id"), col("corpus_id"),
-        (adcDot(col("_lut"), col("_codes"), m, ksub) /
-          (col("_cn") * col("_qn"))).as("adc_cosine"))
-    val cand = graft.plans.GroupedTopK.combined(adc, Seq("query_id"),
-      Seq("adc_cosine", "corpus_id"), descending = true, shortlist)
-    val reranked = cand.select(col("query_id"), col("corpus_id"))
-      .join(c.select(col("corpus_id"), col("_cv"), col("_cn")),
-        "corpus_id")
-      .join(broadcast(queries
-        .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-        .withColumn("_qn", norm(col("_qv")))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(reranked, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
+    val (codes, vecs) = encodedSides(corpus, idCol, vecCol, centroids,
+      codebooks, residual = false)
+    ivfPqJoin(codes, vecs, queries, idCol, vecCol, k, centroids, codebooks,
+      nprobe, shortlist)
   }
 
   /** Attach the IVF cell assignment — the materialization step
@@ -617,11 +700,6 @@ object Similarity {
     best.getField("i")
   }
 
-  /** IVF ANN top-k: probe the `nprobe` centroids nearest to the query,
-    * exact cosine within those cells only. At 100 TB the assignment
-    * column is materialized once (partitioned-by-cell table) so a
-    * probe is a partition-pruned scan of nprobe/nlist of the data.
-    */
   /** The nprobe cells nearest a concrete (driver-side) query vector —
     * the probe set ivfTopK scans; exposed so sweeps can report the
     * scanned-row cost of each nprobe alongside its recall.
@@ -634,21 +712,18 @@ object Similarity {
       (d, i)
     }.sortBy(_._1).take(nprobe).map(_._2)
 
+  /** IVF ANN top-k: probe the `nprobe` centroids nearest to the query,
+    * exact cosine within those cells only. At 100 TB the assignment
+    * column is materialized once (partitioned-by-cell table) so a
+    * probe is a partition-pruned scan of nprobe/nlist of the data.
+    */
   def ivfTopK(embeddings: DataFrame, idCol: String, vecCol: String,
       query: Seq[Double], k: Int, centroids: Seq[Seq[Double]],
-      nprobe: Int = 2): DataFrame = {
-    val probes = probeCells(query, centroids, nprobe)
-    val qNorm = math.sqrt(query.map(x => x * x).sum)
-    embeddings
+      nprobe: Int = 2): DataFrame =
+    queryTopK(embeddings
       .withColumn("_cell", ivfAssignment(col(vecCol), centroids))
-      .filter(col("_cell").isin(probes: _*))
-      .select(col(idCol),
-        (dotConst(col(vecCol), query) / (norm(col(vecCol)) * lit(qNorm)))
-          .as("cosine"),
-        col("_cell").as("cell"))
-      .orderBy(col("cosine").desc, col(idCol))
-      .limit(k)
-  }
+      .filter(col("_cell").isin(probeCells(query, centroids, nprobe): _*)),
+      idCol, vecCol, query, k, col("_cell").as("cell"))
 
   /** The `nprobe` centroid indices nearest to a vector (ascending
     * distance, index tiebreak) as an array column — the per-QUERY side
@@ -681,23 +756,11 @@ object Similarity {
     */
   def knnJoinIvf(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, centroids: Seq[Seq[Double]],
-      nprobe: Int = 2): DataFrame = {
-    val c = corpus
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"))
-      .withColumn("_cell", ivfAssignment(col("_cv"), centroids))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = queries
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-      .withColumn("_cell",
-        explode(ivfProbes(col("_qv"), centroids, nprobe)))
-    val scored = c.join(broadcast(q), "_cell")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
-  }
+      nprobe: Int = 2): DataFrame =
+    topKCosine(corpusSide(corpus, idCol, col(vecCol),
+        ivfAssignment(col(vecCol), centroids).as("_cell"))
+      .join(broadcast(querySide(queries, idCol, col(vecCol)).withColumn(
+        "_cell", probedCells(col("_qv"), centroids, nprobe))), "_cell"), k)
 
   /** IVF k-NN join at a DECLARED recall target — the nprobe dial
     * turned automatically instead of reported (`sim_recall_report`
@@ -733,43 +796,20 @@ object Similarity {
     require(targetX100 >= 1 && targetX100 <= 100,
       s"targetX100 in [1,100], got $targetX100")
     val nlist = centroids.length
-    if (sampleQueries > 0) {
-      val (chosenNp, recall) = sampleDial(queries, idCol, sampleQueries,
-        "nprobe", nlist,
-        qs => knnJoinIvfAtRecall(corpus, qs, idCol, vecCol, k,
-          centroids, targetX100, 0))
-      return knnJoinIvf(corpus, queries, idCol, vecCol, k, centroids,
-          chosenNp)
-        .withColumn("nprobe", lit(chosenNp))
-        .withColumn("recall_x1000", lit(recall))
-    }
+    if (sampleQueries > 0)
+      return sampleDial(queries, idCol, sampleQueries, "nprobe", nlist,
+        qs => knnJoinIvfAtRecall(corpus, qs, idCol, vecCol, k, centroids,
+          targetX100, 0))(
+        np => knnJoinIvf(corpus, queries, idCol, vecCol, k, centroids, np))
     val exact = knnJoinExact(corpus, queries, idCol, vecCol, k)
       .select(col("query_id"), col("corpus_id"))
       .localCheckpoint()
-    val exactN = exact.agg(count(lit(1)).as("_n_exact"))
     val curve = (1 to nlist).map { np =>
       knnJoinIvf(corpus, queries, idCol, vecCol, k, centroids, np)
         .withColumn("nprobe", lit(np))
     }.reduce(_ unionByName _)
       .localCheckpoint()
-    val hits = curve.join(exact, Seq("query_id", "corpus_id"))
-      .groupBy(col("nprobe")).agg(count(lit(1)).as("_hits"))
-    val chosen = hits.crossJoin(broadcast(exactN))
-      .filter(col("_hits") * 100 >= lit(targetX100.toLong) * col("_n_exact"))
-      .agg(coalesce(min(col("nprobe")), lit(nlist)).as("_chosen"))
-    // LEFT join + coalesce: a chosen config with ZERO exact-topk hits
-    // (possible only on the fallback path — adversarial vectors where
-    // even exhaustive probing retrieves none of the true top-k) has
-    // no row in `hits`; an inner join would silently return an EMPTY
-    // result instead of the documented best-effort pairs with
-    // recall_x1000 = 0
-    curve.join(broadcast(chosen), col("nprobe") === col("_chosen"))
-      .join(broadcast(hits), Seq("nprobe"), "left")
-      .withColumn("_hits", coalesce(col("_hits"), lit(0L)))
-      .crossJoin(broadcast(exactN))
-      .select(col("query_id"), col("corpus_id"), col("cosine"),
-        col("nprobe"),
-        expr("_hits * 1000 div _n_exact").as("recall_x1000"))
+    pickDial(curve, "nprobe", exact, targetX100, nlist)
   }
 
   /** Exact k-NN JOIN: for every query vector, the k nearest corpus
@@ -783,18 +823,9 @@ object Similarity {
     * per row (not per pair).
     */
   def knnJoinExact(corpus: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, k: Int): DataFrame = {
-    val c = corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv"))
-      .withColumn("_qn", norm(col("_qv")))
-    val scored = c.crossJoin(broadcast(q))
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
-  }
+      vecCol: String, k: Int): DataFrame =
+    topKCosine(corpusSide(corpus, idCol, col(vecCol))
+      .crossJoin(broadcast(querySide(queries, idCol, col(vecCol)))), k)
 
   /** LSH-bucketed k-NN join — the scale path: both sides bucket with
     * the SAME hyperplanes, the (small) bucketed query side broadcasts,
@@ -809,21 +840,24 @@ object Similarity {
     */
   def knnJoinLsh(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, bits: Int = 8,
-      seed: Long = 7L): DataFrame = {
-    val c = withLshBucket(corpus, vecCol, bits, dim, seed)
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"),
-        col("bucket"))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = withLshBucket(queries, vecCol, bits, dim, seed)
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        col("bucket"))
-      .withColumn("_qn", norm(col("_qv")))
-    val scored = c.join(broadcast(q), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
+      seed: Long = 7L): DataFrame =
+    lshJoin(corpus, queries, idCol, vecCol, dim, k, bits, seed,
+      col(vecCol), multiProbe = false)
+
+  /** The LSH candidate generator: both sides bucket the RAW vector with
+    * the same hyperplanes and join on bucket; the corpus scores
+    * `corpusVec`, and `multiProbe` widens each query to its own bucket
+    * plus every single-bit flip. */
+  private def lshJoin(corpus: DataFrame, queries: DataFrame, idCol: String,
+      vecCol: String, dim: Int, k: Int, bits: Int, seed: Long,
+      corpusVec: Column, multiProbe: Boolean): DataFrame = {
+    val bucket = lshBucket(col(vecCol), bits, dim, seed).as("bucket")
+    val q = querySide(queries, idCol, col(vecCol), bucket)
+    val probes = if (!multiProbe) q else q.withColumn("bucket",
+      explode(array((col("bucket") +: (0 until bits).map(j =>
+        col("bucket").bitwiseXOR(lit(1 << j)))): _*)))
+    topKCosine(corpusSide(corpus, idCol, corpusVec, bucket)
+      .join(broadcast(probes), "bucket"), k)
   }
 
   /** Symmetric per-vector int8 scalar quantization — the storage
@@ -865,28 +899,14 @@ object Similarity {
     */
   def knnJoinLshQ8(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, dim: Int, k: Int, bits: Int = 8,
-      seed: Long = 7L): DataFrame = {
+      seed: Long = 7L): DataFrame =
     // At scale the table stores (id, int8 payload, bucket) and the
     // read side dequantizes; here the store→read roundtrip is fused
     // into one codegen'd expression (QuantRoundtrip — semantically
     // dequantizeInt8∘quantizeInt8, which as interpreted HOFs cost 7×
     // the whole join; spec pins the bit-equality).
-    val c = withLshBucket(corpus, vecCol, bits, dim, seed)
-      .select(col(idCol).as("corpus_id"),
-        graft.functions.VecOps.quantRoundtrip(col(vecCol)).as("_cv"),
-        col("bucket"))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = withLshBucket(queries, vecCol, bits, dim, seed)
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        col("bucket"))
-      .withColumn("_qn", norm(col("_qv")))
-    val scored = c.join(broadcast(q), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
-  }
+    lshJoin(corpus, queries, idCol, vecCol, dim, k, bits, seed,
+      graft.functions.VecOps.quantRoundtrip(col(vecCol)), multiProbe = false)
 
   /** Multi-probe variant of [[knnJoinLsh]]: each query probes its own
     * bucket PLUS every single-bit-flip neighbor bucket (bits+1 probes)
@@ -901,38 +921,10 @@ object Similarity {
     */
   def knnJoinLshMultiProbe(corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, dim: Int, k: Int, bits: Int = 8,
-      seed: Long = 7L): DataFrame = {
-    val c = withLshBucket(corpus, vecCol, bits, dim, seed)
-      .select(col(idCol).as("corpus_id"), col(vecCol).as("_cv"),
-        col("bucket"))
-      .withColumn("_cn", norm(col("_cv")))
-    val q = withLshBucket(queries, vecCol, bits, dim, seed)
-      .select(col(idCol).as("query_id"), col(vecCol).as("_qv"),
-        col("bucket"))
-      .withColumn("_qn", norm(col("_qv")))
-      // probe set: own bucket + each single-bit flip
-      .withColumn("bucket", explode(array(
-        (Seq(col("bucket")) ++
-          (0 until bits).map(j => col("bucket").bitwiseXOR(lit(1 << j)))): _*)))
-    val scored = c.join(broadcast(q), "bucket")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
-  }
+      seed: Long = 7L): DataFrame =
+    lshJoin(corpus, queries, idCol, vecCol, dim, k, bits, seed,
+      col(vecCol), multiProbe = true)
 
-  /** Embedding-cosine near-duplicate pairs via shared LSH bucket (the
-    * embedding analog of MinHash banding): one shuffle on bucket, exact
-    * cosine verification within buckets.
-    *
-    * Skew control mirrors Dedup.minhashCandidatePairs: a bucket of n
-    * vectors contributes n² pairs, and real encoder output DOES
-    * produce near-constant embeddings for boilerplate, collapsing a
-    * corpus slice into one bucket. Buckets above `maxBucketSize` are
-    * dropped from the pair join — "everything here is the same
-    * boilerplate" is exact-fingerprint-dedup territory, not ANN's.
-    */
   /** SemDeDup-style semantic dedup census (Abbas et al. 2023,
     * arXiv:2303.09540, public method): assign every embedding to its
     * nearest coarse-quantizer centroid, then inside each cluster prune
@@ -1006,34 +998,13 @@ object Similarity {
   def knnJoinRerank(corpus: DataFrame, queries: DataFrame, idCol: String,
       vecCol: String, k: Int, kDim: Int = 16, dim: Int = 64,
       shortlist: Int = 50, seed: Long = 7L): DataFrame = {
-    val cp = randomProjection(
-        corpus.select(col(idCol).as("corpus_id"), col(vecCol).as("_cv")),
-        "_cv", kDim, dim, seed)
-      .select(col("corpus_id"), col("_cv"), col("proj").as("_cp"))
-      .withColumn("_cpn", norm(col("_cp")))
-    val qp = randomProjection(
-        queries.select(col(idCol).as("query_id"), col(vecCol).as("_qv")),
-        "_qv", kDim, dim, seed)
-      .select(col("query_id"), col("_qv"), col("proj").as("_qp"))
-      .withColumn("_qpn", norm(col("_qp")))
-    val scored = cp.select(col("corpus_id"), col("_cp"), col("_cpn"))
-      .crossJoin(broadcast(qp.select(col("query_id"), col("_qp"),
-        col("_qpn"))))
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cp"), col("_qp")) / (col("_cpn") * col("_qpn")))
-          .as("proj_cosine"))
-    val cand = graft.plans.GroupedTopK.combined(scored, Seq("query_id"),
-      Seq("proj_cosine", "corpus_id"), descending = true, shortlist)
-    val reranked = cand.select(col("query_id"), col("corpus_id"))
-      .join(cp.select(col("corpus_id"), col("_cv"))
-        .withColumn("_cn", norm(col("_cv"))), "corpus_id")
-      .join(broadcast(qp.select(col("query_id"), col("_qv"))
-        .withColumn("_qn", norm(col("_qv")))), "query_id")
-      .select(col("query_id"), col("corpus_id"),
-        (dot(col("_cv"), col("_qv")) / (col("_cn") * col("_qn")))
-          .as("cosine"))
-    graft.plans.GroupedTopK.combined(reranked, Seq("query_id"),
-      Seq("cosine", "corpus_id"), descending = true, k)
+    requireDials(k, shortlist)
+    // candidates: the exact join in the projected space
+    val proj = projection(col(vecCol), kDim, dim, seed)
+    rerank(topKCosine(corpusSide(corpus, idCol, proj)
+        .crossJoin(broadcast(querySide(queries, idCol, proj))), shortlist),
+      corpusSide(corpus, idCol, col(vecCol)),
+      querySide(queries, idCol, col(vecCol)), k)
   }
 
   /** One Lloyd iteration of k-means, as a census: assign every vector
@@ -1090,6 +1061,17 @@ object Similarity {
     stats.join(ids, "cell").orderBy(col("cell"))
   }
 
+  /** Embedding-cosine near-duplicate pairs via shared LSH bucket (the
+    * embedding analog of MinHash banding): one shuffle on bucket, exact
+    * cosine verification within buckets.
+    *
+    * Skew control mirrors Dedup.minhashCandidatePairs: a bucket of n
+    * vectors contributes n² pairs, and real encoder output DOES
+    * produce near-constant embeddings for boilerplate, collapsing a
+    * corpus slice into one bucket. Buckets above `maxBucketSize` are
+    * dropped from the pair join — "everything here is the same
+    * boilerplate" is exact-fingerprint-dedup territory, not ANN's.
+    */
   def embeddingNearDupPairs(embeddings: DataFrame, idCol: String,
       vecCol: String, dim: Int, minCosine: Double, bits: Int = 8,
       seed: Long = 7L, maxBucketSize: Int = 500): DataFrame = {

@@ -35,6 +35,12 @@ object PlanDump {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    try dump(spark, outDir, suffix, names, sfDir)
+    finally spark.stop()
+  }
+
+  private def dump(spark: SparkSession, outDir: String, suffix: String,
+      names: Seq[String], sfDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
     def write(name: String, text: String): Unit = {
       java.nio.file.Files.write(
@@ -109,6 +115,5 @@ object PlanDump {
           System.err.println(s"[plandump] $name failed: ${e.getMessage}")
         }
     }
-    spark.stop()
   }
 }

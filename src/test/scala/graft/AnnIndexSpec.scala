@@ -74,24 +74,6 @@ class AnnIndexSpec extends AnyFunSuite {
     assert(rowsOf(again) === rowsOf(inline5))
   }
 
-  test("probe with broadcastQueries=false (the table-sized-query " +
-      "escape hatch) returns the same rows as the broadcast default") {
-    val dir = Files.createTempDirectory("graft_ann_bq").toFile
-      .getAbsolutePath + "/idx"
-    AnnIndex.build(spark, dir, corpus, "vec_id", "embedding",
-      cents, books)
-    AnnIndex.append(spark, dir,
-      corpus.filter($"vec_id" === 1L)
-        .withColumn("vec_id", lit(888888L)), "vec_id", "embedding")
-    val bc = AnnIndex.probe(spark, dir, queries, "vec_id",
-      "embedding", k = 3, nprobe = 2, shortlist = 12)
-    val sh = AnnIndex.probe(spark, dir, queries, "vec_id",
-      "embedding", k = 3, nprobe = 2, shortlist = 12,
-      broadcastQueries = false)
-    assert(rowsOf(bc) === rowsOf(sh),
-      "shuffle-join probe diverged from the broadcast probe")
-  }
-
   test("append encodes ONLY the batch: base and prior deltas are " +
       "byte-identical, probes see the union") {
     val dir = Files.createTempDirectory("graft_ann_app").toFile

@@ -569,6 +569,62 @@ class DedupSimilaritySpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === want)
     assert(got.size === 6 * 4) // 6 queries x k
+    // the joins no other spec calls directly give the same answer once
+    // their candidate cut keeps everything: IVF probing every cell, and
+    // a projection shortlist covering the whole corpus
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cents = Similarity.trainIvfCentroids(all, "vec_id", "embedding",
+      dim = 16, nlist = 4)
+    assert(pairs(Similarity.knnJoinIvf(corpus, queries, "vec_id",
+      "embedding", 4, cents, nprobe = cents.length)) === want)
+    assert(pairs(Similarity.knnJoinRerank(corpus, queries, "vec_id",
+      "embedding", 4, kDim = 4, dim = 16, shortlist = 300)) === want)
+  }
+
+  test("every knn join checks k >= 1, shortlist >= k and nprobe >= 1 " +
+      "before planning") {
+    val rng = new scala.util.Random(31)
+    val all = (0 until 60).map(i =>
+      (i.toLong, Array.fill(16)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val corpus = all.filter($"vec_id" % 10 =!= 0)
+    val queries = all.filter($"vec_id" % 10 === 0)
+    val cents = Similarity.trainIvfCentroids(all, "vec_id", "embedding",
+      dim = 16, nlist = 4)
+    val books = Similarity.trainPqCodebooks(all, "vec_id", "embedding",
+      dim = 16, m = 4, ksub = 4)
+    val resBooks = Similarity.trainPqResidualCodebooks(all, "vec_id",
+      "embedding", dim = 16, cents, m = 4, ksub = 4)
+    def refused(msg: String)(join: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](join)
+      assert(e.getMessage.contains(msg), e.getMessage)
+    }
+    val k0 = "k must be >= 1, got 0"
+    refused(k0)(Similarity.knnJoinExact(corpus, queries, "vec_id",
+      "embedding", 0))
+    refused(k0)(Similarity.knnJoinLsh(corpus, queries, "vec_id",
+      "embedding", dim = 16, k = 0))
+    refused(k0)(Similarity.knnJoinIvfPq(corpus, queries, "vec_id",
+      "embedding", 0, cents, books))
+    // the rerank used to return fewer than k rows per query here
+    refused("shortlist 2 must be >= k 3")(Similarity.knnJoinRerank(
+      corpus, queries, "vec_id", "embedding", 3, kDim = 4, dim = 16,
+      shortlist = 2))
+    refused("shortlist 2 must be >= k 3")(Similarity.knnJoinIvfPq(
+      corpus, queries, "vec_id", "embedding", 3, cents, books,
+      shortlist = 2))
+    // the IVF joins used to return an empty result at nprobe = 0
+    val np0 = "nprobe must be >= 1, got 0"
+    refused(np0)(Similarity.knnJoinIvf(corpus, queries, "vec_id",
+      "embedding", 3, cents, nprobe = 0))
+    refused(np0)(Similarity.knnJoinIvfPq(corpus, queries, "vec_id",
+      "embedding", 3, cents, books, nprobe = 0, shortlist = 6))
+    refused(np0)(Similarity.knnJoinIvfPqResidual(corpus, queries,
+      "vec_id", "embedding", 3, cents, resBooks, nprobe = 0,
+      shortlist = 6))
+    refused(np0)(Similarity.knnJoinIvfPqAtRecall(corpus, queries,
+      "vec_id", "embedding", 3, cents, books, nprobe = 0))
   }
 
   test("LSH knn join returns only same-bucket neighbors, exact within bucket") {
