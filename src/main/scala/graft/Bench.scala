@@ -17,7 +17,7 @@ object Bench {
     * clear the cache, and give the JVM a GC breath — the state-store
     * maintenance threads shut down with their queries.
     */
-  private def teardownStreams(spark: SparkSession): Unit = {
+  private[graft] def teardownStreams(spark: SparkSession): Unit = {
     spark.streams.active.foreach { q =>
       try q.stop() catch { case NonFatal(_) => () }
     }
@@ -188,7 +188,7 @@ object Bench {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def timeOnce(spark: SparkSession, sfDir: String,
+  private[graft] def timeOnce(spark: SparkSession, sfDir: String,
       fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
       name: String): (Double, Boolean) = {
     val t0 = System.nanoTime()
@@ -201,14 +201,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    GraftSession.run()(sweep(_, sfDir))
+  }
+
+  private def sweep(spark: SparkSession, sfDir: String): Unit = {
     // Page-cache pre-lap FIRST (see pretouch's scaladoc): the timed
     // sweep must measure plans, not whichever queries happen to fault
     // the testdata in from disk.
@@ -413,6 +409,5 @@ object Bench {
     try java.nio.file.Files.write(
       java.nio.file.Paths.get("BENCH_LOCAL.json"),
       line.getBytes("UTF-8")) catch { case NonFatal(_) => () }
-    spark.stop()
   }
 }

@@ -31,4 +31,21 @@ object SparkEntry {
     * the same parquet tables. Omitted for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     registry.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
+
+  /** `oracle_sql.json`: a JSON object of name → SQL. Strings escape
+    * backslash, quote and ALL control chars (< 0x20) — a tab or CR in
+    * builder-authored SQL would otherwise make the driver's json.load
+    * fail and silently zero the round's correctness. */
+  def oracleSqlJson(sql: Map[String, String] = oracleSql): String = {
+    def q(s: String): String = "\"" + s.flatMap {
+      case '"'  => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case '\r' => "\\r"
+      case '\t' => "\\t"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    sql.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+  }
 }

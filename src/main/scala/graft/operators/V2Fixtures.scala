@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 import graft.{Tables => T}
 
 /** Deterministic nested-V2 events table derived from `documents`, for
@@ -125,7 +126,7 @@ object V2Fixtures {
     // accumulate dead plans.
     val prefix = s.sparkContext.applicationId + ":"
     cache.keys.filterNot(_.startsWith(prefix)).foreach(cache.remove)
-    cache.getOrElseUpdate(prefix + dir, {
+    val df = cache.getOrElseUpdate(prefix + dir, {
       val host = when(col("doc_id") % 3 =!= 0,
         concat(lit("Host "), (col("doc_id") % 17).cast("string")))
         .otherwise(lit(null).cast("string"))
@@ -162,8 +163,12 @@ object V2Fixtures {
         .withColumn("ticketing", col("ticketing").withField("tiers",
           transform(col("ticketing.tiers"),
             t => t.withField("is_sold_out", soldOut))))
-        .persist()
     })
+    // persisted here, not once at build: `catalog.clearCache()` (the
+    // teardown Bench and tools.Probe run between rows) unpersists the
+    // memoized frame without evicting it, and the next v2 row must
+    // still read the materialized table
+    if (df.storageLevel == StorageLevel.NONE) df.persist() else df
   }
 
   // ---------------------------------------------------------------

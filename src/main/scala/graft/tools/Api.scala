@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.EventQueries
 
@@ -14,28 +13,22 @@ object Api {
   def main(args: Array[String]): Unit = {
     val table = args(0)
     val endpoint = args(1)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val ev = spark.read.parquet(table)
-    val nowIso = date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'")
-    val out = endpoint match {
-      case "events" => EventQueries.events(ev, nowIso,
-        minQuality = args.lift(2).map(_.toDouble).getOrElse(0.7))
-      case "venues" => EventQueries.venues(ev, nowIso)
-      case "stats" => EventQueries.qualityStats(ev)
-      case "top" => EventQueries.topVenues(ev)
-      case "search" => EventQueries.search(ev, args(2), minQuality = 0.0)
-      case "upcoming" => EventQueries.upcoming(ev, nowIso,
-        days = args.lift(2).map(_.toInt).getOrElse(7), minQuality = 0.0)
-      case other => sys.error(s"unknown endpoint: $other " +
-        "(expected events|venues|stats|top|search|upcoming)")
+    graft.GraftSession.run() { spark =>
+      val ev = spark.read.parquet(table)
+      val nowIso = date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss'Z'")
+      val out = endpoint match {
+        case "events" => EventQueries.events(ev, nowIso,
+          minQuality = args.lift(2).map(_.toDouble).getOrElse(0.7))
+        case "venues" => EventQueries.venues(ev, nowIso)
+        case "stats" => EventQueries.qualityStats(ev)
+        case "top" => EventQueries.topVenues(ev)
+        case "search" => EventQueries.search(ev, args(2), minQuality = 0.0)
+        case "upcoming" => EventQueries.upcoming(ev, nowIso,
+          days = args.lift(2).map(_.toInt).getOrElse(7), minQuality = 0.0)
+        case other => sys.error(s"unknown endpoint: $other " +
+          "(expected events|venues|stats|top|search|upcoming)")
+      }
+      out.show(50, truncate = false)
     }
-    out.show(50, truncate = false)
-    spark.stop()
   }
 }

@@ -11,19 +11,9 @@ import java.nio.file.{Files, Paths}
 object DumpOracle {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/verify_out")
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = graft.SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      graft.SparkEntry.oracleSqlJson())
     println(s"wrote $outDir/oracle_sql.json")
   }
 }

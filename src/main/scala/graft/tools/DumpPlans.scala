@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates PLANS.md: the executed (AQE-final) physical plans of
   * the flagship queries, with the scale property each plan is
   * evidence for. Run after plan-affecting changes:
@@ -150,30 +148,25 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("# PLANS — flagship physical plans (generated by " +
-      "graft.tools.DumpPlans)\n\n")
-    sb.append(s"AQE-final executed plans at `$sfDir`, local[32], " +
-      "shuffle.partitions=32. Regenerate with\n" +
-      "`sbt \"runMain graft.tools.DumpPlans\"` after plan-affecting " +
-      "changes.\n")
-    flagships.foreach { case (name, why) =>
-      val df = graft.SparkEntry.registry(name).fn(spark, sfDir)
-      df.collect()
-      val p = df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==")(0).trim
-      sb.append(s"\n## $name\n\n$why\n\n```\n$p\n```\n")
+    graft.GraftSession.run() { spark =>
+      val sb = new StringBuilder
+      sb.append("# PLANS — flagship physical plans (generated by " +
+        "graft.tools.DumpPlans)\n\n")
+      sb.append(s"AQE-final executed plans at `$sfDir`, " +
+        s"${spark.sparkContext.master}, shuffle.partitions=" +
+        s"${spark.conf.get("spark.sql.shuffle.partitions")}. Regenerate with\n" +
+        "`sbt \"runMain graft.tools.DumpPlans\"` after plan-affecting " +
+        "changes.\n")
+      flagships.foreach { case (name, why) =>
+        val df = graft.SparkEntry.registry(name).fn(spark, sfDir)
+        df.collect()
+        val p = df.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==")(0).trim
+        sb.append(s"\n## $name\n\n$why\n\n```\n$p\n```\n")
+      }
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("PLANS.md"), sb.toString)
+      println(s"wrote PLANS.md (${flagships.size} plans)")
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${flagships.size} plans)")
-    spark.stop()
   }
 }

@@ -3,7 +3,6 @@ package graft.tools
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.{Tables => T}
@@ -26,48 +25,42 @@ object PinIvfCentroids {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val out = args(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val emb = T.embeddings(spark, sfDir)
-    val dim = emb.select(col("embedding")).head().getSeq[Float](0).length
-    val centroids = Similarity.trainIvfCentroids(
-      emb, "vec_id", "embedding", dim = dim, nlist = 4, iters = 2)
-    val rows = centroids
-      .map(c => "    Seq(" + c.grouped(6).map(_.mkString(", "))
-        .mkString(",\n      ") + ")")
-      .mkString(",\n")
-    val src =
-      s"""package graft.operators
-         |
-         |/** Pinned IVF coarse-quantizer centroids for the `sim_ann_ivf`
-         |  * registry query — trained once offline by
-         |  * `graft.tools.PinIvfCentroids` ($sfDir, nlist=4, iters=2,
-         |  * hash-ordered bounded sample) and frozen so the Spark query and
-         |  * its DuckDB oracle replay the identical cell assignment at any
-         |  * sf. Production retraining stays on `trainIvfCentroids` under
-         |  * the IVF recall spec. DO NOT EDIT — regenerate with the tool.
-         |  */
-         |object IvfCentroids {
-         |  val dim: Int = $dim
-         |
-         |  val pinned: Seq[Seq[Double]] = Seq(
-         |$rows)
-         |
-         |  /** DuckDB `VALUES (i, [d0, ...])` rows mirroring
-         |    * `Similarity.hyperplaneSqlValues`.
-         |    */
-         |  def sqlValues: String = pinned.zipWithIndex
-         |    .map { case (c, i) => s"($$i, [$${c.mkString(", ")}])" }
-         |    .mkString(", ")
-         |}
-         |""".stripMargin
-    Files.write(Paths.get(out), src.getBytes(StandardCharsets.UTF_8))
-    println(s"wrote $out (${centroids.length} centroids, dim $dim)")
-    spark.stop()
+    graft.GraftSession.run(8) { spark =>
+      val emb = T.embeddings(spark, sfDir)
+      val dim = emb.select(col("embedding")).head().getSeq[Float](0).length
+      val centroids = Similarity.trainIvfCentroids(
+        emb, "vec_id", "embedding", dim = dim, nlist = 4, iters = 2)
+      val rows = centroids
+        .map(c => "    Seq(" + c.grouped(6).map(_.mkString(", "))
+          .mkString(",\n      ") + ")")
+        .mkString(",\n")
+      val src =
+        s"""package graft.operators
+           |
+           |/** Pinned IVF coarse-quantizer centroids for the `sim_ann_ivf`
+           |  * registry query — trained once offline by
+           |  * `graft.tools.PinIvfCentroids` ($sfDir, nlist=4, iters=2,
+           |  * hash-ordered bounded sample) and frozen so the Spark query and
+           |  * its DuckDB oracle replay the identical cell assignment at any
+           |  * sf. Production retraining stays on `trainIvfCentroids` under
+           |  * the IVF recall spec. DO NOT EDIT — regenerate with the tool.
+           |  */
+           |object IvfCentroids {
+           |  val dim: Int = $dim
+           |
+           |  val pinned: Seq[Seq[Double]] = Seq(
+           |$rows)
+           |
+           |  /** DuckDB `VALUES (i, [d0, ...])` rows mirroring
+           |    * `Similarity.hyperplaneSqlValues`.
+           |    */
+           |  def sqlValues: String = pinned.zipWithIndex
+           |    .map { case (c, i) => s"($$i, [$${c.mkString(", ")}])" }
+           |    .mkString(", ")
+           |}
+           |""".stripMargin
+      Files.write(Paths.get(out), src.getBytes(StandardCharsets.UTF_8))
+      println(s"wrote $out (${centroids.length} centroids, dim $dim)")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Unify, V2Fixtures}
@@ -52,19 +52,23 @@ import graft.operators.{Unify, V2Fixtures}
   *   vs its persistent-index layout as the table grows)
   */
 object ScaleProbe {
+
+  /** One measured factor: the probe's count in its unit, the timed
+    * seconds, the probe's extra fields in print order (doubles print
+    * to 10 ms), and the input rows where they are not base × factor.
+    */
+  private final case class Lap(n: Long, sec: Double,
+      extras: Seq[(String, Any)] = Nil, inputRows: Option[Long] = None)
+
   def main(args: Array[String]): Unit = {
     val maxFactor = if (args.nonEmpty) args(0).toInt else 10
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val probe = if (args.length > 2) args(2) else "unify"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.GraftSession.run()(sweep(_, maxFactor, sfDir, probe))
+  }
 
+  private def sweep(spark: SparkSession, maxFactor: Int, sfDir: String,
+      probe: String): Unit = {
     val base = graft.Tables.documents(spark, sfDir)
       .select(col("doc_id"), col("text"))
     val baseRows = base.count()
@@ -81,7 +85,7 @@ object ScaleProbe {
              concat(col("text"), lit(" rep"), col("_rep").cast("string"))
            else col("text")).as("text"))
 
-    def runAt(factor: Int): (Long, Double) = {
+    def runAt(factor: Int): Lap = {
       val raw = V2Fixtures.rawFrom(replicate(factor, perturbText = false))
         .repartition(spark.sparkContext.defaultParallelism)
       val unified = Unify.unify(raw, "ibiza-spotlight",
@@ -92,25 +96,23 @@ object ScaleProbe {
         avg(col("data_quality.overall_score")).as("avg_q"),
         countDistinct(col("venue.name")).as("venues"))
         .collect()(0)
-      val sec = (System.nanoTime() - t0) / 1e9
-      (agg.getLong(0), sec)
+      Lap(agg.getLong(0), (System.nanoTime() - t0) / 1e9)
     }
 
     // near-duplicate replicas through the FULL banded pipeline:
     // signatures, band join (bucket-capped), signature re-join, the
-    // estimated-jaccard filter. Returns (pairs found, seconds).
-    def runMinhashAt(factor: Int): (Long, Double) = {
+    // estimated-jaccard filter. Counts pairs found.
+    def runMinhashAt(factor: Int): Lap = {
       val docs = replicate(factor, perturbText = true)
       val t0 = System.nanoTime()
       val pairs = graft.operators.Dedup.minhashCandidatePairs(
         docs, "doc_id", "text", minEstimate = 0.5).count()
-      (pairs, (System.nanoTime() - t0) / 1e9)
+      Lap(pairs, (System.nanoTime() - t0) / 1e9)
     }
 
     // full funnel: pairs → clusters (rounds recorded) → canonical.
-    // Returns (canonical docs, seconds); rounds ride via lastRounds.
-    var lastRounds = -1
-    def runFunnelAt(factor: Int): (Long, Double) = {
+    // Counts canonical docs; rounds ride along.
+    def runFunnelAt(factor: Int): Lap = {
       val docs = replicate(factor, perturbText = true)
         .withColumn("n_chars", length(col("text")))
       val t0 = System.nanoTime()
@@ -120,8 +122,7 @@ object ScaleProbe {
         graft.operators.Dedup.duplicateClustersWithRounds(pairs)
       val canon = graft.operators.Dedup.canonicalDocuments(
         docs, clusters, "doc_id", "n_chars").count()
-      lastRounds = rounds
-      (canon, (System.nanoTime() - t0) / 1e9)
+      Lap(canon, (System.nanoTime() - t0) / 1e9, Seq("rounds" -> rounds))
     }
 
     // Adversarial-cluster probe: clone ONE document `factor` times
@@ -133,8 +134,7 @@ object ScaleProbe {
     // clone cluster still collapses to ONE canonical doc (clique →
     // star keeps it connected), and the capped-cluster count is the
     // loud report of where the approximation touched.
-    var lastCapped = -1L
-    def runFunnelAdversarialAt(factor: Int): (Long, Double) = {
+    def runFunnelAdversarialAt(factor: Int): Lap = {
       val clones = base.orderBy(col("doc_id")).limit(1)
         .crossJoin(broadcast(spark.range(factor).select(col("id").as("_rep"))))
         .select((lit(20000000L) + col("_rep")).as("doc_id"),
@@ -154,9 +154,9 @@ object ScaleProbe {
         .duplicateClustersCapped(pairs, maxDegree = 8)
       val canon = graft.operators.Dedup.canonicalDocuments(
         corpus, clusters, "doc_id", "n_chars").count()
-      lastRounds = rounds
-      lastCapped = capped
-      (canon, (System.nanoTime() - t0) / 1e9)
+      Lap(canon, (System.nanoTime() - t0) / 1e9,
+        Seq("rounds" -> rounds, "capped_clusters" -> capped),
+        Some(baseRows + factor))
     }
 
     // As-of hot-key probe: ONE user's events replicated ×factor with
@@ -167,9 +167,7 @@ object ScaleProbe {
     // run per factor (naive skipped past 500× where its pair count
     // explodes); the invariant is an identical matched-purchase
     // count.
-    var lastNaiveSec = -1.0
-    def runAsofAt(factor: Int): (Long, Double) = {
-      import org.apache.spark.sql.DataFrame
+    def runAsofAt(factor: Int): Lap = {
       val one = graft.Tables.events(spark, sfDir)
         .filter(col("user_id") === 1)
         .select(col("event_id"), col("event_type"), col("ts"))
@@ -189,7 +187,7 @@ object ScaleProbe {
           purchases, views, Seq("user_id"), "ts", Seq("view_event_id"))
         .filter(col("view_event_id").isNotNull).count()
       val windowSec = (System.nanoTime() - t0) / 1e9
-      lastNaiveSec = -1.0
+      var naiveSec = -1.0
       if (factor <= 500) {
         def naive(p: DataFrame, v: DataFrame): Long = {
           val j = p.join(v.withColumnRenamed("ts", "vts"), Seq("user_id"))
@@ -201,11 +199,11 @@ object ScaleProbe {
         }
         val t1 = System.nanoTime()
         val nMatched = naive(purchases, views)
-        lastNaiveSec = (System.nanoTime() - t1) / 1e9
+        naiveSec = (System.nanoTime() - t1) / 1e9
         require(nMatched == matched,
           s"asof window ($matched) != naive ($nMatched) at factor $factor")
       }
-      (matched, windowSec)
+      Lap(matched, windowSec, Seq("sec_naive" -> naiveSec))
     }
 
     // Month-merge probe: a table of `factor` months (one replica per
@@ -215,8 +213,7 @@ object ScaleProbe {
     // table grows (it reads/writes one month), while the full rewrite
     // grows linearly with table size — the difference between an
     // incremental crawl batch costing O(batch) and O(100 TB).
-    var lastFullSec = -1.0
-    def runMergeAt(factor: Int): (Long, Double) = {
+    def runMergeAt(factor: Int): Lap = {
       import graft.operators.MergeOps
       val dirRoot = new java.io.File(
         s"target/merge_probe/f$factor").getAbsolutePath
@@ -242,9 +239,9 @@ object ScaleProbe {
       val t1 = System.nanoTime()
       MergeOps.upsertParquet(spark, s"$dirRoot/flat",
         batch, Seq("doc_id"), "version")
-      lastFullSec = (System.nanoTime() - t1) / 1e9
+      val fullSec = (System.nanoTime() - t1) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (1000L, monthSec)
+      Lap(1000L, monthSec, Seq("sec_full_rewrite" -> fullSec))
     }
 
     // Sharded-month-merge probe (`mergeshard`): the `merge` probe
@@ -256,8 +253,7 @@ object ScaleProbe {
     // the timed 20-key batch rewrites ≤20 constant-size shards: FLAT
     // in month volume. The comparison line is the unsharded month
     // merge of the same batch, which rewrites the whole month: linear.
-    var lastMonthSec = -1.0
-    def runMergeShardAt(factor: Int): (Long, Double) = {
+    def runMergeShardAt(factor: Int): Lap = {
       import graft.operators.MergeOps
       val dirRoot = new java.io.File(
         s"target/merge_shard_probe/f$factor").getAbsolutePath
@@ -281,9 +277,9 @@ object ScaleProbe {
       val t1 = System.nanoTime()
       MergeOps.upsertParquetByMonth(spark, s"$dirRoot/bymonth", batch,
         Seq("doc_id"), "version")
-      lastMonthSec = (System.nanoTime() - t1) / 1e9
+      val monthSec = (System.nanoTime() - t1) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (20L, shardSec)
+      Lap(20L, shardSec, Seq("sec_month_rewrite" -> monthSec))
     }
 
     // Reshard probe (`reshard`): the drifted deployment the sizing
@@ -296,9 +292,7 @@ object ScaleProbe {
     // size again: flat. sec = the post-reshard merge; extras carry
     // the drifted pre-reshard merge (the linear term the operator
     // removes) and the reshard's own one-off full-rewrite cost.
-    var lastDriftedSec = -1.0
-    var lastReshardSec = -1.0
-    def runReshardAt(factor: Int): (Long, Double) = {
+    def runReshardAt(factor: Int): Lap = {
       import graft.operators.MergeOps
       val dirRoot = new java.io.File(
         s"target/reshard_probe/f$factor").getAbsolutePath
@@ -318,17 +312,18 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       MergeOps.upsertParquetByMonthShard(spark, s"$dirRoot/t",
         b2, Seq("doc_id"), "version", numShards = 2)
-      lastDriftedSec = (System.nanoTime() - t0) / 1e9
+      val driftedSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       MergeOps.reshard(spark, s"$dirRoot/t", 16 * factor)
-      lastReshardSec = (System.nanoTime() - t1) / 1e9
+      val reshardSec = (System.nanoTime() - t1) / 1e9
       val b3 = batch(3)
       val t2 = System.nanoTime()
       MergeOps.upsertParquetByMonthShard(spark, s"$dirRoot/t",
         b3, Seq("doc_id"), "version", numShards = 16 * factor)
       val sec = (System.nanoTime() - t2) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (20L, sec)
+      Lap(20L, sec,
+        Seq("sec_drifted_merge" -> driftedSec, "sec_reshard" -> reshardSec))
     }
 
     // Online-reshard probe (`reshardonline`): month volume scales
@@ -339,9 +334,7 @@ object ScaleProbe {
     // overhead vs the flat read after exit (expected FLAT — the
     // resolver adds O(months) directory listings and one manifest
     // read, never a data term).
-    var lastReadMidSec = -1.0
-    var lastReadFlatSec = -1.0
-    def runReshardOnlineAt(factor: Int): (Long, Double) = {
+    def runReshardOnlineAt(factor: Int): Lap = {
       import graft.operators.MergeOps
       val dirRoot = new java.io.File(
         s"target/rsonline_probe/f$factor").getAbsolutePath
@@ -366,12 +359,11 @@ object ScaleProbe {
         }
       })
       val sec = (System.nanoTime() - t0) / 1e9 - math.max(readMid, 0.0)
-      lastReadMidSec = readMid
       val r1 = System.nanoTime()
       MergeOps.readMonthTable(spark, t).agg(count(lit(1))).head()
-      lastReadFlatSec = (System.nanoTime() - r1) / 1e9
+      val readFlat = (System.nanoTime() - r1) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (4L, sec)
+      Lap(4L, sec, Seq("sec_read_mid" -> readMid, "sec_read_flat" -> readFlat))
     }
 
     // Persisted-ANN probe (`annprobe`): the corpus scales with factor
@@ -382,13 +374,10 @@ object ScaleProbe {
     // the same corpus. The curve the build/probe split exists for:
     // inline grows with the corpus (per-call re-encode), probe grows
     // only with the pruned compressed scan.
-    var lastBuildSec = -1.0
-    var lastInlineSec = -1.0
-    var lastAnnCorpusRows = -1L
-    def runAnnProbeAt(factor: Int): (Long, Double) = {
+    lazy val annCorpusRows = graft.Tables.embeddings(spark, sfDir).count()
+    def runAnnProbeAt(factor: Int): Lap = {
       import graft.operators.{AnnIndex, IvfCentroids, PqCodebooks, Similarity}
       val emb = graft.Tables.embeddings(spark, sfDir)
-      if (lastAnnCorpusRows < 0) lastAnnCorpusRows = emb.count()
       val corpus = (0 until factor).map(i =>
         emb.select((col("vec_id") + lit(i * 10000000L)).as("vec_id"),
           col("embedding"))).reduce(_ unionByName _)
@@ -402,7 +391,7 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       AnnIndex.build(spark, s"$dirRoot/idx", corpus, "vec_id",
         "embedding", IvfCentroids.pinned, PqCodebooks.pinned)
-      lastBuildSec = (System.nanoTime() - t0) / 1e9
+      val buildSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val n = AnnIndex.probe(spark, s"$dirRoot/idx", queries, "vec_id",
         "embedding", k = 3, nprobe = 2, shortlist = 32).count()
@@ -411,9 +400,10 @@ object ScaleProbe {
       Similarity.knnJoinIvfPq(corpus, queries, "vec_id", "embedding",
         k = 3, IvfCentroids.pinned, PqCodebooks.pinned, nprobe = 2,
         shortlist = 32).count()
-      lastInlineSec = (System.nanoTime() - t2) / 1e9
+      val inlineSec = (System.nanoTime() - t2) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (n, probeSec)
+      Lap(n, probeSec, Seq("sec_build" -> buildSec, "sec_inline" -> inlineSec),
+        Some(annCorpusRows * factor))
     }
 
     // Persisted-ANN APPEND (`annappend`): the corpus scales with
@@ -427,17 +417,12 @@ object ScaleProbe {
     // 0 (name/length/mtime equality across the append — the
     // no-re-encode proof at scale) and delta_files is bounded by the
     // batch's cells, not the corpus.
-    var lastAnnBuildSec = -1.0
-    var lastAppend2xSec = -1.0
-    var lastBaseChanged = -1L
-    var lastDeltaFiles = -1L
     def annShift(emb: org.apache.spark.sql.DataFrame, off: Long) =
       emb.select((col("vec_id") + lit(off)).as("vec_id"),
         col("embedding"))
-    def runAnnAppendAt(factor: Int): (Long, Double) = {
+    def runAnnAppendAt(factor: Int): Lap = {
       import graft.operators.{AnnIndex, IvfCentroids, PqCodebooks}
       val emb = graft.Tables.embeddings(spark, sfDir)
-      if (lastAnnCorpusRows < 0) lastAnnCorpusRows = emb.count()
       val corpus = (0 until factor).map(i =>
         annShift(emb, i * 10000000L)).reduce(_ unionByName _)
       val batch = annShift(emb, 900000000L).localCheckpoint()
@@ -453,23 +438,26 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       AnnIndex.build(spark, idx, corpus, "vec_id", "embedding",
         IvfCentroids.pinned, PqCodebooks.pinned)
-      lastAnnBuildSec = (System.nanoTime() - t0) / 1e9
+      val buildSec = (System.nanoTime() - t0) / 1e9
       val gen = AnnIndex.currentGeneration(spark, idx)
       val before = graft.operators.AnnIndex.fileCensus(spark,
         s"$idx/$gen/base")
       val t1 = System.nanoTime()
       AnnIndex.append(spark, idx, batch, "vec_id", "embedding")
       val sec = (System.nanoTime() - t1) / 1e9
-      lastBaseChanged = graft.operators.AnnIndex.fileCensus(spark,
+      val baseChanged = graft.operators.AnnIndex.fileCensus(spark,
         s"$idx/$gen/base").diff(before).size.toLong
-      lastDeltaFiles = graft.operators.AnnIndex.fileCensus(spark,
+      val deltaFiles = graft.operators.AnnIndex.fileCensus(spark,
         s"$idx/$gen/delta-000001")
         .count(_._1.endsWith(".parquet")).toLong
       val t2 = System.nanoTime()
       AnnIndex.append(spark, idx, batch2, "vec_id", "embedding")
-      lastAppend2xSec = (System.nanoTime() - t2) / 1e9
+      val append2xSec = (System.nanoTime() - t2) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (batchRows, sec)
+      Lap(batchRows, sec, Seq("sec_build" -> buildSec,
+          "sec_batch_2x" -> append2xSec, "base_files_changed" -> baseChanged,
+          "delta_files" -> deltaFiles),
+        Some(annCorpusRows * factor))
     }
 
     // Persisted-ANN COMPACT (`anncompact`): the total index size
@@ -479,11 +467,9 @@ object ScaleProbe {
     // work (it moves stored codes; sec_build over the same rows pays
     // the full encode, so the build−compact gap IS the skipped
     // encode). n_folded pins that every delta folded.
-    var lastFolded = -1L
-    def runAnnCompactAt(factor: Int): (Long, Double) = {
+    def runAnnCompactAt(factor: Int): Lap = {
       import graft.operators.{AnnIndex, IvfCentroids, PqCodebooks}
       val emb = graft.Tables.embeddings(spark, sfDir)
-      if (lastAnnCorpusRows < 0) lastAnnCorpusRows = emb.count()
       val corpus = (0 until factor).map(i =>
         annShift(emb, i * 10000000L)).reduce(_ unionByName _)
       val batch = annShift(emb, 900000000L)
@@ -496,14 +482,15 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       AnnIndex.build(spark, idx, corpus, "vec_id", "embedding",
         IvfCentroids.pinned, PqCodebooks.pinned)
-      lastAnnBuildSec = (System.nanoTime() - t0) / 1e9
+      val buildSec = (System.nanoTime() - t0) / 1e9
       AnnIndex.append(spark, idx, batch, "vec_id", "embedding")
-      val total = lastAnnCorpusRows * factor + lastAnnCorpusRows
+      val total = annCorpusRows * factor + annCorpusRows
       val t1 = System.nanoTime()
-      lastFolded = AnnIndex.compact(spark, idx).toLong
+      val folded = AnnIndex.compact(spark, idx).toLong
       val sec = (System.nanoTime() - t1) / 1e9
       fs.delete(new org.apache.hadoop.fs.Path(dirRoot), true)
-      (total, sec)
+      Lap(total, sec, Seq("sec_build" -> buildSec, "n_folded" -> folded),
+        Some(annCorpusRows * factor))
     }
 
     // Prefix-filter similarity-join probe: near-duplicate replicas
@@ -515,8 +502,7 @@ object ScaleProbe {
     // the prefix path indexes only the rarest ~half of each doc's
     // tokens, so its candidate join stays ahead of the full index as
     // the corpus grows.
-    var lastFullPairs = -1L
-    def runPpjoinAt(factor: Int): (Long, Double) = {
+    def runPpjoinAt(factor: Int): Lap = {
       val docs = replicate(factor, perturbText = true)
         .filter(col("doc_id") % 10000000L < 500)
       val t0 = System.nanoTime()
@@ -524,12 +510,13 @@ object ScaleProbe {
         docs, "doc_id", "text", 1, 2).count()
       val prefixSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
-      lastFullPairs = graft.operators.Dedup.ngramJaccardPairs(
+      val fullPairs = graft.operators.Dedup.ngramJaccardPairs(
         docs, "doc_id", "text", n = 1, minJaccard = 0.5).count()
-      lastFullSec = (System.nanoTime() - t1) / 1e9
-      require(lastFullPairs == nPrefix,
-        s"prefix join ($nPrefix) != full index ($lastFullPairs) at ×$factor")
-      (nPrefix, prefixSec)
+      val fullSec = (System.nanoTime() - t1) / 1e9
+      require(fullPairs == nPrefix,
+        s"prefix join ($nPrefix) != full index ($fullPairs) at ×$factor")
+      Lap(nPrefix, prefixSec,
+        Seq("pairs_full" -> fullPairs, "sec_full_index" -> fullSec))
     }
 
     // Zipf-vocabulary variant of the ppjoin probe — the regime prefix
@@ -550,23 +537,25 @@ object ScaleProbe {
             pmod(xxhash64(expr("id div 2"), lit(j)),
               lit(1L << math.min(j, 16))).cast("string")))
           :+ concat(lit("tail_"), col("id").cast("string")): _*).as("text"))
-    def runPpjoinZipfAt(factor: Int): (Long, Double) = {
+    def runPpjoinZipfAt(factor: Int): Lap = {
       val docs = zipfDocs(5000L * factor)
       val t0 = System.nanoTime()
       val nPrefix = graft.operators.Mining.prefixJaccardPairs(
         docs, "doc_id", "text", 1, 2).count()
       val prefixSec = (System.nanoTime() - t0) / 1e9
-      lastFullPairs = -1L
-      lastFullSec = -1.0
+      var fullPairs = -1L
+      var fullSec = -1.0
       if (factor <= 4) {
         val t1 = System.nanoTime()
-        lastFullPairs = graft.operators.Dedup.ngramJaccardPairs(
+        fullPairs = graft.operators.Dedup.ngramJaccardPairs(
           docs, "doc_id", "text", n = 1, minJaccard = 0.5).count()
-        lastFullSec = (System.nanoTime() - t1) / 1e9
-        require(lastFullPairs == nPrefix,
-          s"prefix ($nPrefix) != full ($lastFullPairs) at ×$factor")
+        fullSec = (System.nanoTime() - t1) / 1e9
+        require(fullPairs == nPrefix,
+          s"prefix ($nPrefix) != full ($fullPairs) at ×$factor")
       }
-      (nPrefix, prefixSec)
+      Lap(nPrefix, prefixSec,
+        Seq("pairs_full" -> fullPairs, "sec_full_index" -> fullSec),
+        Some(5000L * factor))
     }
 
     // PageRank iteration-scaling probe: the factor axis is the
@@ -575,7 +564,7 @@ object ScaleProbe {
     // linear in iterations (no plan blowup from the unrolled loop, no
     // recomputation of the checkpointed edges). The checksum is the
     // integral top-50 rank sum — identical on any partitioning.
-    def runPagerankAt(iters: Int): (Long, Double) = {
+    def runPagerankAt(iters: Int): Lap = {
       val b = graft.Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey").as("bk"), col("l_partkey").as("it"))
         .distinct()
@@ -590,19 +579,19 @@ object ScaleProbe {
       val top = graft.operators.Mining.pageRank(edges, "src", "dst", iters)
         .orderBy(col("pr").desc, col("node")).limit(50)
         .agg(sum(col("pr"))).head().getLong(0)
-      (top, (System.nanoTime() - t0) / 1e9)
+      Lap(top, (System.nanoTime() - t0) / 1e9)
     }
 
     // BPE throughput: total subword tokens over the replicated corpus
     // (per-row codegen'd merge loops; zipfian word repetition is what
     // the per-word memo in BpeImpl exploits).
-    def runBpeAt(factor: Int): (Long, Double) = {
+    def runBpeAt(factor: Int): Lap = {
       val docs = replicate(factor, perturbText = false)
       val t0 = System.nanoTime()
       val n = docs.select(graft.operators.TextAnalysis
           .subwordCountBpe(col("text")).as("n"))
         .agg(sum(col("n"))).head().getLong(0)
-      (n, (System.nanoTime() - t0) / 1e9)
+      Lap(n, (System.nanoTime() - t0) / 1e9)
     }
 
     // Rolling 7-day distinct: the register-table path
@@ -616,10 +605,7 @@ object ScaleProbe {
     // how many users exist, while the exact path moves every distinct
     // (day, user) pair ×7 — the divergence that, with real network
     // and real state stores, decides the operator at 100 TB.
-    var lastExactSec = -1.0
-    var lastRegRows = -1L
-    var lastPairRows = -1L
-    def runRollingAt(factor: Int): (Long, Double) = {
+    def runRollingAt(factor: Int): Lap = {
       val ev0 = graft.Tables.events(spark, sfDir)
         .select(expr("unix_millis(ts) div 86400000").as("day"),
           col("user_id"))
@@ -645,10 +631,11 @@ object ScaleProbe {
       exactPairs.groupBy(col("tday"))
         .agg(countDistinct(col("user_id")))
         .count()
-      lastExactSec = (System.nanoTime() - t1) / 1e9
-      lastRegRows = regs.count() * 7  // rolling fan-out rows shuffled
-      lastPairRows = exactPairs.count()
-      (nDays, sketchSec)
+      val exactSec = (System.nanoTime() - t1) / 1e9
+      Lap(nDays, sketchSec, Seq("sec_exact" -> exactSec,
+        // rolling fan-out rows shuffled
+        "sketch_shuffle_rows" -> regs.count() * 7,
+        "exact_shuffle_rows" -> exactPairs.count()))
     }
 
     // LM quality-filter probe (ta_lm_quality_filter): train the bigram
@@ -667,9 +654,7 @@ object ScaleProbe {
     // table is materialized (lm row count doubles as the flat-table
     // evidence), and `sec` is the SCORING pass alone — the per-batch
     // cost a standing filter pays.
-    var lastLmRows = -1L
-    var lastTrainSec = -1.0
-    def runLmAt(factor: Int): (Long, Double) = {
+    def runLmAt(factor: Int): Lap = {
       import graft.operators.LmScore
       val docs = replicate(factor, perturbText = false)
         .select(col("doc_id"),
@@ -678,12 +663,13 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       val lm = LmScore.trainBigramTable(
         LmScore.bigrams(docs.filter(col("doc_id") % 2 === 0)))
-      lastLmRows = lm.count()
-      lastTrainSec = (System.nanoTime() - t0) / 1e9
+      val lmRows = lm.count()
+      val trainSec = (System.nanoTime() - t0) / 1e9
       val t1 = System.nanoTime()
       val nScored = LmScore.scoreDocs(
         LmScore.bigrams(docs.filter(col("doc_id") % 2 === 1)), lm).count()
-      (nScored, (System.nanoTime() - t1) / 1e9)
+      Lap(nScored, (System.nanoTime() - t1) / 1e9,
+        Seq("sec_train" -> trainSec, "lm_table_rows" -> lmRows))
     }
 
     // NB classifier probe (ta_nb_classifier): the same claim as the
@@ -693,8 +679,7 @@ object ScaleProbe {
     // shuffle), with scoring cost linear in eval tokens only. The
     // label here is doc_id-derived (replicas carry no lang column);
     // the label source is irrelevant to the cost shape being measured.
-    var lastNbVocab = -1L
-    def runNbAt(factor: Int): (Long, Double) = {
+    def runNbAt(factor: Int): Lap = {
       import graft.operators.TextClassify
       val docs = replicate(factor, perturbText = false)
         .select(col("doc_id"),
@@ -706,14 +691,15 @@ object ScaleProbe {
       val t0 = System.nanoTime()
       val counts = TextClassify.nbTrainCounts(
         tok.filter(col("doc_id") % 2 === 0))
-      lastNbVocab = counts.count()
-      lastTrainSec = (System.nanoTime() - t0) / 1e9
+      val nbVocab = counts.count()
+      val trainSec = (System.nanoTime() - t0) / 1e9
       val priors = docs.filter(col("doc_id") % 2 === 0)
         .agg(sum(col("y")).as("d1"), sum(lit(1) - col("y")).as("d0"))
       val t1 = System.nanoTime()
       val n = TextClassify.nbPredict(
         tok.filter(col("doc_id") % 2 === 1), counts, priors).count()
-      (n, (System.nanoTime() - t1) / 1e9)
+      Lap(n, (System.nanoTime() - t1) / 1e9,
+        Seq("sec_train" -> trainSec, "nb_vocab_rows" -> nbVocab))
     }
 
     // Standing novelty-gate probe (ev_stream_novelty): the per-batch
@@ -726,8 +712,7 @@ object ScaleProbe {
     // buckets the table by fp prefix (co-located probe) or fronts it
     // with a Bloom bitmap — this probe records the unbucketed
     // baseline the layout exists to beat.
-    var lastTableRows = -1L
-    def runNoveltyAt(factor: Int): (Long, Double) = {
+    def runNoveltyAt(factor: Int): Lap = {
       val out = new java.io.File("target/probe_novelty").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -739,12 +724,13 @@ object ScaleProbe {
           .as("fp"))
         .filter(col("fp").isNotNull).distinct()
         .write.mode("overwrite").parquet(fpTable)
-      lastTableRows = spark.read.parquet(fpTable).count()
+      val tableRows = spark.read.parquet(fpTable).count()
       val t0 = System.nanoTime()
       graft.operators.Dedup.appendNovelFingerprints(
         base.select(col("text")), fpTable)
       val sec = (System.nanoTime() - t0) / 1e9
-      (spark.read.parquet(fpTable).count() - lastTableRows, sec)
+      Lap(spark.read.parquet(fpTable).count() - tableRows, sec,
+        Seq("table_rows" -> tableRows))
     }
 
     // Bucketed novelty-gate probe (the layout the `novelty` baseline
@@ -760,7 +746,7 @@ object ScaleProbe {
     // positives resolve via a driver-collected INSET probe of their
     // buckets, so the measured claim is per-batch cost FLAT in table
     // rows where the unbucketed anti-join's O(table) scan grows.
-    def runNoveltyBucketedAt(factor: Int): (Long, Double) = {
+    def runNoveltyBucketedAt(factor: Int): Lap = {
       val out = new java.io.File("target/probe_noveltyb").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -771,7 +757,7 @@ object ScaleProbe {
         .filter(col("doc_id") >= 10000000L)
         .select(col("text"))
       if (factor > 1) gate.admit(seed)
-      lastTableRows = graft.operators.Dedup
+      val tableRows = graft.operators.Dedup
         .readBucketedFingerprints(spark, tableRoot).count()
       // the seed admit is up to 320× the timed batch — give the JVM a
       // GC breath so the seed's garbage is not billed to the timed
@@ -782,7 +768,7 @@ object ScaleProbe {
       val sec = (System.nanoTime() - t0) / 1e9
       val after = graft.operators.Dedup
         .readBucketedFingerprints(spark, tableRoot).count()
-      (after - lastTableRows, sec)
+      Lap(after - tableRows, sec, Seq("table_rows" -> tableRows))
     }
 
 
@@ -814,7 +800,7 @@ object ScaleProbe {
     // writes verdicts and appends its sigs. O(corpus) per batch in
     // both compute and scan — the cost model NearDupGate's persistent
     // index + bloom front exists to beat.
-    def runNeardupAt(factor: Int): (Long, Double) = {
+    def runNeardupAt(factor: Int): Lap = {
       val out = new java.io.File("target/probe_neardup").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -826,7 +812,7 @@ object ScaleProbe {
               col("text"), 32, 1).as("sig"))
       sigsOf(uniqueSeed(factor))
         .write.mode("overwrite").parquet(s"$out/sigs")
-      lastTableRows = spark.read.parquet(s"$out/sigs").count() * 16
+      val tableRows = spark.read.parquet(s"$out/sigs").count() * 16
       System.gc()
       val t0 = System.nanoTime()
       val batchSigs = sigsOf(scrambled).localCheckpoint()
@@ -853,7 +839,8 @@ object ScaleProbe {
       batchSigs.filter(col("sig").isNotNull)
         .coalesce(1).write.mode("append").parquet(s"$out/sigs")
       val sec = (System.nanoTime() - t0) / 1e9
-      (spark.read.parquet(s"$out/verdicts").count(), sec)
+      Lap(spark.read.parquet(s"$out/verdicts").count(), sec,
+        Seq("table_rows" -> tableRows))
     }
 
     // The standing NearDupGate: band-hash bloom cached across
@@ -861,7 +848,7 @@ object ScaleProbe {
     // 2^26 bits / k=12 holds the 4M-band top factor near the optimal
     // occupancy). Seeded THROUGH the gate; the timed admit is the
     // same novel batch the baseline sees.
-    def runNeardupGateAt(factor: Int): (Long, Double) = {
+    def runNeardupGateAt(factor: Int): Lap = {
       val out = new java.io.File("target/probe_neardupb").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -869,13 +856,14 @@ object ScaleProbe {
       val gate = new graft.operators.NearDupGate(out,
         bits = 1 << 26, k = 12)
       gate.admit(uniqueSeed(factor), "doc_id", "text")
-      lastTableRows = spark.read.parquet(s"$out/bands").count()
+      val tableRows = spark.read.parquet(s"$out/bands").count()
       fs.delete(new org.apache.hadoop.fs.Path(s"$out/verdicts"), true)
       System.gc()
       val t0 = System.nanoTime()
       gate.admit(scrambled, "doc_id", "text")
       val sec = (System.nanoTime() - t0) / 1e9
-      (spark.read.parquet(s"$out/verdicts").count(), sec)
+      Lap(spark.read.parquet(s"$out/verdicts").count(), sec,
+        Seq("table_rows" -> tableRows))
     }
 
     // Hot-band-key adversarial pair: the corpus index holds
@@ -890,9 +878,7 @@ object ScaleProbe {
     // skewed 100 TB corpus would hit; capped (`neardupcap`,
     // bandKeyCap=8) it is batch·bands·cap — flat, with the shed
     // reported in every verdict's n_capped_keys.
-    var lastCappedKeys = -1L
-    var lastEngagedCap = -1L
-    def runHotKeyAt(cap: Int, auto: Boolean = false)(factor: Int): (Long, Double) = {
+    def runHotKeyAt(cap: Int, auto: Boolean = false)(factor: Int): Lap = {
       val out = new java.io.File(
         s"target/probe_neardup_hot$cap").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
@@ -912,7 +898,7 @@ object ScaleProbe {
         .withColumn("bh_b", col("band_hash").bitwiseAND(lit(15L)))
         .repartition(col("bh_b"))
         .write.mode("overwrite").partitionBy("bh_b").parquet(s"$out/bands")
-      lastTableRows = spark.read.parquet(s"$out/bands").count()
+      val tableRows = spark.read.parquet(s"$out/bands").count()
       // auto mode (`neardupauto`): the cap arrives via the SELF-SIZING
       // policy instead of the hand-picked knob — targetKeyLoad=cap,
       // constructor cap 0 (exact). The un-timed compact is where the
@@ -924,11 +910,11 @@ object ScaleProbe {
         if (auto) new graft.operators.NearDupGate(out,
           targetKeyLoad = cap)
         else new graft.operators.NearDupGate(out, bandKeyCap = cap)
-      if (auto) {
+      val engaged = if (!auto) Nil else {
         gate.compact(spark)
-        lastEngagedCap = graft.operators.GateLayout.read(fs,
+        Seq("engaged_cap" -> graft.operators.GateLayout.read(fs,
             new org.apache.hadoop.fs.Path(s"$out/_layout"))
-          .get("band_key_cap").map(_.toLong).getOrElse(0L)
+          .get("band_key_cap").map(_.toLong).getOrElse(0L))
       }
       System.gc()
       val t0 = System.nanoTime()
@@ -937,8 +923,8 @@ object ScaleProbe {
       val v = spark.read.parquet(s"$out/verdicts")
         .agg(count(lit(1)), coalesce(sum(col("n_capped_keys")), lit(0L)))
         .head()
-      lastCappedKeys = v.getLong(1)
-      (v.getLong(0), sec)
+      Lap(v.getLong(0), sec, Seq("table_rows" -> tableRows,
+        "capped_keys_sum" -> v.getLong(1)) ++ engaged)
     }
 
     // The embedding gate's hot-key pair (`embedt` uncapped /
@@ -949,7 +935,7 @@ object ScaleProbe {
     // key expression; the timed admit is 200 more template vectors.
     // Uncapped pair volume = batch × corpus; capped = batch·bands·cap
     // with the shed in every verdict's n_capped_keys.
-    def runEmbedHotAt(cap: Int)(factor: Int): (Long, Double) = {
+    def runEmbedHotAt(cap: Int)(factor: Int): Lap = {
       val out = new java.io.File(
         s"target/probe_embed_hot$cap").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
@@ -969,7 +955,7 @@ object ScaleProbe {
             col("v"), 4, 4, 64, 7L): _*)).as(Seq("band", "bkey")))
         .repartition(col("band")).sortWithinPartitions(col("bkey"))
         .write.mode("overwrite").partitionBy("band").parquet(s"$out/keys")
-      lastTableRows = spark.read.parquet(s"$out/keys").count()
+      val tableRows = spark.read.parquet(s"$out/keys").count()
       val gate = new graft.operators.EmbedNearDupGate(out, dim = 64,
         bands = 4, rowBits = 4, minCosine = 0.5, bandKeyCap = cap)
       System.gc()
@@ -979,8 +965,8 @@ object ScaleProbe {
       val v = spark.read.parquet(s"$out/verdicts")
         .agg(count(lit(1)), coalesce(sum(col("n_capped_keys")), lit(0L)))
         .head()
-      lastCappedKeys = v.getLong(1)
-      (v.getLong(0), sec)
+      Lap(v.getLong(0), sec,
+        Seq("table_rows" -> tableRows, "capped_keys_sum" -> v.getLong(1)))
     }
 
     // Composed-curation probe (`curate` uncapped / `curatecap`
@@ -1001,12 +987,14 @@ object ScaleProbe {
     // diverge them): wipe `out`, seed both gates with the
     // factor-scaled near-dup corpus, record the band-table size,
     // train the shared models (sec_train on record, outside every
-    // timed unit). Returns the seeded gates, the pinned corpus, and
-    // the models.
+    // timed unit). Returns the seeded gates, the pinned corpus, the
+    // models and the setup's extra fields.
+    final case class CurateSetup(ngate: graft.operators.NoveltyGate,
+        ndgate: graft.operators.NearDupGate, corpus: DataFrame,
+        models: graft.streaming.Curation.Models, tableRows: Long,
+        trainSec: Double)
     def curateProbeSetup(out: String, cap: Int, factor: Int)
-        : (graft.operators.NoveltyGate, graft.operators.NearDupGate,
-           org.apache.spark.sql.DataFrame,
-           graft.streaming.Curation.Models) = {
+        : CurateSetup = {
       val fs = new org.apache.hadoop.fs.Path(out)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(out), true)
@@ -1017,13 +1005,13 @@ object ScaleProbe {
         bits = 1 << 26, k = 12, bandKeyCap = cap)
       ngate.admit(corpus)
       ndgate.admit(corpus, "doc_id", "text")
-      lastTableRows = spark.read.parquet(s"$out/nd/bands").count()
+      val tableRows = spark.read.parquet(s"$out/nd/bands").count()
       val t1 = System.nanoTime()
       val models = graft.streaming.Curation.trainModels(
         graft.Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("text"), col("lang")))
-      lastTrainSec = (System.nanoTime() - t1) / 1e9
-      (ngate, ndgate, corpus, models)
+      CurateSetup(ngate, ndgate, corpus, models, tableRows,
+        (System.nanoTime() - t1) / 1e9)
     }
     // the probe micro-batch: half genuinely novel (reversed text),
     // half near-dups of corpus docs
@@ -1034,23 +1022,26 @@ object ScaleProbe {
         .select((col("doc_id") + 900000000L).as("doc_id"),
           reverse(col("text")).as("text")))
       .localCheckpoint()
-    def recordShed(out: String): Unit =
-      lastCappedKeys = spark.read.parquet(s"$out/nd/verdicts")
+    def curateExtras(out: String, setup: CurateSetup) = Seq(
+      "table_rows" -> setup.tableRows,
+      "capped_keys_sum" -> spark.read.parquet(s"$out/nd/verdicts")
         .agg(coalesce(sum(col("n_capped_keys")), lit(0L)))
-        .head().getLong(0)
+        .head().getLong(0),
+      "sec_train" -> setup.trainSec)
 
-    def runCurateAt(cap: Int)(factor: Int): (Long, Double) = {
+    def runCurateAt(cap: Int)(factor: Int): Lap = {
       val out = new java.io.File(
         s"target/probe_curate$cap").getAbsolutePath
-      val (ngate, ndgate, _, models) = curateProbeSetup(out, cap, factor)
+      val setup = curateProbeSetup(out, cap, factor)
       val batch = curateProbeBatch()
       System.gc()
       val t0 = System.nanoTime()
-      graft.streaming.Curation.curateBatch(batch, ngate, ndgate, models)
+      graft.streaming.Curation.curateBatch(batch, setup.ngate, setup.ndgate,
+          setup.models)
         .write.mode("overwrite").parquet(s"$out/scored")
       val sec = (System.nanoTime() - t0) / 1e9
-      recordShed(out)
-      (spark.read.parquet(s"$out/scored").count(), sec)
+      Lap(spark.read.parquet(s"$out/scored").count(), sec,
+        curateExtras(out, setup))
     }
 
     // Composed-INGEST probe (`ingest` uncapped / `ingestcap` capped,
@@ -1068,27 +1059,25 @@ object ScaleProbe {
     // while the batch still touches a fixed 6 — the merge term stays
     // flat. The knee, if any, is month-partition sizing, not the
     // gates; sec_merge on record isolates it from the gate curve.
-    var lastMergeSec = -1.0
-    def runIngestAt(cap: Int, varyMonths: Boolean)(
-        factor: Int): (Long, Double) = {
+    def runIngestAt(cap: Int, varyMonths: Boolean)(factor: Int): Lap = {
       val tag = s"$cap${if (varyMonths) "m" else ""}"
       val out = new java.io.File(s"target/probe_ingest$tag")
         .getAbsolutePath
-      val (ngate, ndgate, corpus, models) =
-        curateProbeSetup(out, cap, factor)
+      val setup = curateProbeSetup(out, cap, factor)
       def monthCol(nMonths: Int) =
         concat(lit("m"), (col("doc_id") % nMonths).cast("string"))
       val seedMonths = if (varyMonths) 6 * factor else 6
       graft.operators.MergeOps.upsertParquetByMonth(spark,
         s"$out/events",
-        corpus.select(col("doc_id"),
+        setup.corpus.select(col("doc_id"),
           monthCol(seedMonths).as("start_month"),
           col("doc_id").as("updated_seq")),
         Seq("doc_id"), "updated_seq")
       val batch = curateProbeBatch()
       System.gc()
       val t0 = System.nanoTime()
-      graft.streaming.Curation.curateBatch(batch, ngate, ndgate, models)
+      graft.streaming.Curation.curateBatch(batch, setup.ngate, setup.ndgate,
+          setup.models)
         .write.mode("append").parquet(s"$out/log")
       val tm = System.nanoTime()
       // the batch always touches 6 months (a micro-batch carries a
@@ -1099,10 +1088,8 @@ object ScaleProbe {
           col("doc_id").as("updated_seq")),
         Seq("doc_id"), "updated_seq")
       val tEnd = System.nanoTime()
-      lastMergeSec = (tEnd - tm) / 1e9
-      val sec = (tEnd - t0) / 1e9
-      recordShed(out)
-      (spark.read.parquet(s"$out/log").count(), sec)
+      Lap(spark.read.parquet(s"$out/log").count(), (tEnd - t0) / 1e9,
+        curateExtras(out, setup) :+ ("sec_merge" -> (tEnd - tm) / 1e9))
     }
 
     // Span-removal probe (etl_span_dedup): near-duplicate replicas
@@ -1112,8 +1099,7 @@ object ScaleProbe {
     // the corpus. The claim measured: wall-clock tracks that mass
     // (explode + two shingle-keyed shuffles + one positions collect),
     // with no all-pairs term; words_cut on record is the mass itself.
-    var lastWordsCut = -1L
-    def runSpanDedupAt(factor: Int): (Long, Double) = {
+    def runSpanDedupAt(factor: Int): Lap = {
       val docs = replicate(factor, perturbText = true)
       val t0 = System.nanoTime()
       val agg = graft.operators.Dedup
@@ -1121,160 +1107,68 @@ object ScaleProbe {
         .agg(count(lit(1)).as("n"),
           coalesce(sum(col("n_words") - col("n_kept")), lit(0L)).as("cut"))
         .head()
-      lastWordsCut = agg.getLong(1)
-      (agg.getLong(0), (System.nanoTime() - t0) / 1e9)
+      Lap(agg.getLong(0), (System.nanoTime() - t0) / 1e9,
+        Seq("words_cut" -> agg.getLong(1)))
     }
 
-    val run: Int => (Long, Double) = probe match {
-      case "minhash"   => runMinhashAt
-      case "funnel"    => runFunnelAt
-      case "funnelcap" => runFunnelAdversarialAt
-      case "asof"      => runAsofAt
-      case "merge"     => runMergeAt
-      case "mergeshard" => runMergeShardAt
-      case "reshard"   => runReshardAt
-      case "reshardonline" => runReshardOnlineAt
-      case "annprobe"  => runAnnProbeAt
-      case "annappend" => runAnnAppendAt
-      case "anncompact" => runAnnCompactAt
-      case "bpe"       => runBpeAt
-      case "ppjoin"    => runPpjoinAt
-      case "ppjoinz"   => runPpjoinZipfAt
-      case "pagerank"  => runPagerankAt
-      case "rolling"   => runRollingAt
-      case "lm"        => runLmAt
-      case "nb"        => runNbAt
-      case "novelty"   => runNoveltyAt
-      case "noveltyb"  => runNoveltyBucketedAt
-      case "neardup"   => runNeardupAt
-      case "neardupb"  => runNeardupGateAt
-      case "neardupt"  => runHotKeyAt(0)
-      case "neardupcap" => runHotKeyAt(8)
-      case "neardupauto" => runHotKeyAt(8, auto = true)
-      case "embedt"    => runEmbedHotAt(0)
-      case "embedcap"  => runEmbedHotAt(8)
-      case "curate"    => runCurateAt(0)
-      case "curatecap" => runCurateAt(8)
-      case "ingest"    => runIngestAt(0, varyMonths = false)
-      case "ingestcap" => runIngestAt(8, varyMonths = false)
-      case "ingestcapm" => runIngestAt(8, varyMonths = true)
-      case "spandedup" => runSpanDedupAt
-      case _           => runAt
-    }
+    val probes: Map[String, (String, String, Int => Lap)] = Map(
+      "unify"       -> ("etl_unify_score", "rows", runAt),
+      "minhash"     -> ("dd_minhash_pairs", "pairs", runMinhashAt),
+      "funnel"      -> ("dedup_funnel", "canonical", runFunnelAt),
+      "funnelcap"   -> ("dedup_funnel_capped", "canonical",
+                        runFunnelAdversarialAt),
+      "asof"        -> ("asof_hotkey", "matched", runAsofAt),
+      "merge"       -> ("month_merge", "batch_rows", runMergeAt),
+      "mergeshard"  -> ("month_merge_sharded", "batch_rows", runMergeShardAt),
+      "reshard"     -> ("merge_after_reshard", "batch_rows", runReshardAt),
+      "reshardonline" -> ("reshard_online", "months", runReshardOnlineAt),
+      "annprobe"    -> ("ann_index_probe", "pairs", runAnnProbeAt),
+      "annappend"   -> ("ann_index_append", "batch_rows", runAnnAppendAt),
+      "anncompact"  -> ("ann_index_compact", "carried_rows", runAnnCompactAt),
+      "bpe"         -> ("ta_subword_bpe", "tokens", runBpeAt),
+      "ppjoin"      -> ("dd_prefix_jaccard", "pairs", runPpjoinAt),
+      "ppjoinz"     -> ("dd_prefix_jaccard_zipf", "pairs", runPpjoinZipfAt),
+      "pagerank"    -> ("pg_pagerank", "top50_pr_sum", runPagerankAt),
+      "rolling"     -> ("ev_rolling_mau", "days", runRollingAt),
+      "lm"          -> ("ta_lm_quality_filter", "scored_docs", runLmAt),
+      "nb"          -> ("ta_nb_classifier", "scored_docs", runNbAt),
+      "novelty"     -> ("ev_stream_novelty", "novel_appended", runNoveltyAt),
+      "noveltyb"    -> ("ev_stream_novelty_bucketed", "novel_appended",
+                        runNoveltyBucketedAt),
+      "neardup"     -> ("ev_stream_neardup_fullscan", "verdicts", runNeardupAt),
+      "neardupb"    -> ("ev_stream_neardup_gate", "verdicts", runNeardupGateAt),
+      "neardupt"    -> ("neardup_hotkey_uncapped", "verdicts", runHotKeyAt(0)),
+      "neardupcap"  -> ("neardup_hotkey_capped", "verdicts", runHotKeyAt(8)),
+      "neardupauto" -> ("neardup_hotkey_selfsized", "verdicts",
+                        runHotKeyAt(8, auto = true)),
+      "embedt"      -> ("embed_neardup_hotkey_uncapped", "verdicts",
+                        runEmbedHotAt(0)),
+      "embedcap"    -> ("embed_neardup_hotkey_capped", "verdicts",
+                        runEmbedHotAt(8)),
+      "curate"      -> ("curate_pipeline_uncapped", "verdicts", runCurateAt(0)),
+      "curatecap"   -> ("curate_pipeline_capped", "verdicts", runCurateAt(8)),
+      "ingest"      -> ("ingest_pipeline_uncapped", "verdicts",
+                        runIngestAt(0, varyMonths = false)),
+      "ingestcap"   -> ("ingest_pipeline_capped", "verdicts",
+                        runIngestAt(8, varyMonths = false)),
+      "ingestcapm"  -> ("ingest_pipeline_capped_monthscaled", "verdicts",
+                        runIngestAt(8, varyMonths = true)),
+      "spandedup"   -> ("etl_span_dedup", "docs", runSpanDedupAt))
+    val (label, unit, run) = probes.getOrElse(probe, sys.error(
+      s"unknown probe $probe; expected one of ${probes.keys.toSeq.sorted.mkString(", ")}"))
     run(1) // warmup: JIT + codegen + parquet footers
     val factors = Seq(1, 2, 5, maxFactor).distinct.filter(_ <= maxFactor)
-    val label = probe match {
-      case "minhash"   => "dd_minhash_pairs"
-      case "funnel"    => "dedup_funnel"
-      case "funnelcap" => "dedup_funnel_capped"
-      case "asof"      => "asof_hotkey"
-      case "merge"     => "month_merge"
-      case "mergeshard" => "month_merge_sharded"
-      case "reshard"   => "merge_after_reshard"
-      case "reshardonline" => "reshard_online"
-      case "annprobe"  => "ann_index_probe"
-      case "annappend" => "ann_index_append"
-      case "anncompact" => "ann_index_compact"
-      case "bpe"       => "ta_subword_bpe"
-      case "ppjoin"    => "dd_prefix_jaccard"
-      case "ppjoinz"   => "dd_prefix_jaccard_zipf"
-      case "pagerank"  => "pg_pagerank"
-      case "rolling"   => "ev_rolling_mau"
-      case "lm"        => "ta_lm_quality_filter"
-      case "nb"        => "ta_nb_classifier"
-      case "novelty"   => "ev_stream_novelty"
-      case "noveltyb"  => "ev_stream_novelty_bucketed"
-      case "neardup"   => "ev_stream_neardup_fullscan"
-      case "neardupb"  => "ev_stream_neardup_gate"
-      case "neardupt"  => "neardup_hotkey_uncapped"
-      case "neardupcap" => "neardup_hotkey_capped"
-      case "neardupauto" => "neardup_hotkey_selfsized"
-      case "embedt"    => "embed_neardup_hotkey_uncapped"
-      case "embedcap"  => "embed_neardup_hotkey_capped"
-      case "curate"    => "curate_pipeline_uncapped"
-      case "curatecap" => "curate_pipeline_capped"
-      case "ingest"    => "ingest_pipeline_uncapped"
-      case "ingestcap" => "ingest_pipeline_capped"
-      case "ingestcapm" => "ingest_pipeline_capped_monthscaled"
-      case "spandedup" => "etl_span_dedup"
-      case _           => "etl_unify_score"
-    }
-    val unit = probe match {
-      case "minhash"   => "pairs"
-      case "funnel" | "funnelcap" => "canonical"
-      case "asof"      => "matched"
-      case "merge" | "mergeshard" | "reshard" => "batch_rows"
-      case "reshardonline" => "months"
-      case "annprobe"  => "pairs"
-      case "annappend" => "batch_rows"
-      case "anncompact" => "carried_rows"
-      case "bpe"       => "tokens"
-      case "ppjoin" | "ppjoinz" => "pairs"
-      case "pagerank"  => "top50_pr_sum"
-      case "rolling"   => "days"
-      case "lm" | "nb" => "scored_docs"
-      case "novelty" | "noveltyb" => "novel_appended"
-      case "neardup" | "neardupb" | "neardupt" | "neardupcap" |
-           "neardupauto" | "embedt" | "embedcap" | "curate" |
-           "curatecap" | "ingest" | "ingestcap" | "ingestcapm" => "verdicts"
-      case "spandedup" => "docs"
-      case _           => "rows"
-    }
     println(f"""{"probe":"$label%s","base_rows":$baseRows%d,"runs":[""")
     val lines = factors.map { f =>
-      val (n, sec) = run(f)
-      val extra =
-        if (probe == "funnel") s""","rounds":$lastRounds"""
-        else if (probe == "funnelcap")
-          s""","rounds":$lastRounds,"capped_clusters":$lastCapped"""
-        else if (probe == "asof")
-          f""","sec_naive":$lastNaiveSec%.2f"""
-        else if (probe == "merge") f""","sec_full_rewrite":$lastFullSec%.2f"""
-        else if (probe == "mergeshard")
-          f""","sec_month_rewrite":$lastMonthSec%.2f"""
-        else if (probe == "reshard")
-          f""","sec_drifted_merge":$lastDriftedSec%.2f,"sec_reshard":$lastReshardSec%.2f"""
-        else if (probe == "reshardonline")
-          f""","sec_read_mid":$lastReadMidSec%.2f,"sec_read_flat":$lastReadFlatSec%.2f"""
-        else if (probe == "annprobe")
-          f""","sec_build":$lastBuildSec%.2f,"sec_inline":$lastInlineSec%.2f"""
-        else if (probe == "annappend")
-          f""","sec_build":$lastAnnBuildSec%.2f,"sec_batch_2x":$lastAppend2xSec%.2f,"base_files_changed":$lastBaseChanged%d,"delta_files":$lastDeltaFiles%d"""
-        else if (probe == "anncompact")
-          f""","sec_build":$lastAnnBuildSec%.2f,"n_folded":$lastFolded%d"""
-        else if (probe == "ppjoin" || probe == "ppjoinz")
-          f""","pairs_full":$lastFullPairs%d,"sec_full_index":$lastFullSec%.2f"""
-        else if (probe == "rolling")
-          f""","sec_exact":$lastExactSec%.2f,"sketch_shuffle_rows":$lastRegRows%d,"exact_shuffle_rows":$lastPairRows%d"""
-        else if (probe == "lm")
-          f""","sec_train":$lastTrainSec%.2f,"lm_table_rows":$lastLmRows%d"""
-        else if (probe == "nb")
-          f""","sec_train":$lastTrainSec%.2f,"nb_vocab_rows":$lastNbVocab%d"""
-        else if (probe == "novelty" || probe == "noveltyb" ||
-                 probe == "neardup" || probe == "neardupb")
-          f""","table_rows":$lastTableRows%d"""
-        else if (probe == "neardupt" || probe == "neardupcap" ||
-                 probe == "embedt" || probe == "embedcap")
-          f""","table_rows":$lastTableRows%d,"capped_keys_sum":$lastCappedKeys%d"""
-        else if (probe == "neardupauto")
-          f""","table_rows":$lastTableRows%d,"capped_keys_sum":$lastCappedKeys%d,"engaged_cap":$lastEngagedCap%d"""
-        else if (probe == "curate" || probe == "curatecap")
-          f""","table_rows":$lastTableRows%d,"capped_keys_sum":$lastCappedKeys%d,"sec_train":$lastTrainSec%.2f"""
-        else if (probe.startsWith("ingest"))
-          f""","table_rows":$lastTableRows%d,"capped_keys_sum":$lastCappedKeys%d,"sec_train":$lastTrainSec%.2f,"sec_merge":$lastMergeSec%.2f"""
-        else if (probe == "spandedup")
-          f""","words_cut":$lastWordsCut%d"""
-        else ""
-      val inRows =
-        if (probe == "funnelcap") baseRows + f
-        else if (probe == "ppjoinz") 5000L * f
-        else if (probe == "annprobe" || probe == "annappend" ||
-                 probe == "anncompact") lastAnnCorpusRows * f
-        else baseRows * f
-      f"""{"factor":$f%d,"input_rows":$inRows%d,"$unit%s":$n%d,"sec":$sec%.2f$extra%s}"""
+      val lap = run(f)
+      val extra = lap.extras.map {
+        case (k, v: Double) => f""","$k%s":$v%.2f"""
+        case (k, v) => s""","$k":$v"""
+      }.mkString
+      val inRows = lap.inputRows.getOrElse(baseRows * f)
+      f"""{"factor":$f%d,"input_rows":$inRows%d,"$unit%s":${lap.n}%d,"sec":${lap.sec}%.2f$extra%s}"""
     }
     println(lines.mkString(",\n"))
     println("]}")
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.QualityScorer
 import graft.schema.EventSchema
@@ -15,22 +14,16 @@ object ScoreEvents {
     val path = args(0)
     val now = if (args.length > 1) lit(args(1)).cast("timestamp")
               else current_timestamp()
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val events = spark.read.schema(EventSchema.schema)
-      .option("multiLine", true).json(path)
-    val scored = QualityScorer.withQuality(events, now)
-      .select(col("event_id"), col("title"),
-        col("data_quality.overall_score").as("overall"),
-        QualityScorer.qualityLevel(col("data_quality.overall_score")).as("level"),
-        size(col("data_quality.validation_flags")).as("n_flags"))
-      .orderBy(col("overall").desc)
-    scored.show(50, truncate = false)
-    spark.stop()
+    graft.GraftSession.run() { spark =>
+      val events = spark.read.schema(EventSchema.schema)
+        .option("multiLine", true).json(path)
+      val scored = QualityScorer.withQuality(events, now)
+        .select(col("event_id"), col("title"),
+          col("data_quality.overall_score").as("overall"),
+          QualityScorer.qualityLevel(col("data_quality.overall_score")).as("level"),
+          size(col("data_quality.validation_flags")).as("n_flags"))
+        .orderBy(col("overall").desc)
+      scored.show(50, truncate = false)
+    }
   }
 }

@@ -220,4 +220,23 @@ class RegistrySmokeSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("Probe rejects unknown rows by name before any session work") {
+    val e = intercept[IllegalArgumentException](graft.tools.Probe.checkRows(
+      Seq("q1_pricing_summary", "q1_pricing_sumary", "no_such_row",
+        graft.tools.Probe.annProbe)))
+    assert(e.getMessage.contains("q1_pricing_sumary"))
+    assert(e.getMessage.contains("no_such_row"))
+    assert(!e.getMessage.contains("q1_pricing_summary"))
+    assert(!e.getMessage.contains(graft.tools.Probe.annProbe))
+    graft.tools.Probe.checkRows(Seq("q1_pricing_summary"))
+  }
+
+  test("Probe measures a registry row with Bench's timing") {
+    val laps = graft.tools.Probe.measure(spark, smallSf,
+      Seq("q1_pricing_summary", graft.tools.Probe.annProbe), reps = 1)
+    assert(laps.map(l => (l.rep, l.row, l.ok)) ==
+      Seq((1, "q1_pricing_summary", true)))
+    assert(laps.head.sec > 0)
+  }
 }
