@@ -331,16 +331,17 @@ object AnnIndex {
     }
   }
 
-  /** Encode a corpus slice with the index's quantizer:
-    * (corpus_id, cell, codes, cn, vec). The one place the encode
-    * arithmetic lives — build and append cannot drift apart. */
+  /** Encode a corpus slice with the index's quantizer —
+    * [[Similarity.encodedCorpus]], the encode the inline IVF-PQ joins
+    * use — under the index's stored names: (corpus_id, vec, cell,
+    * codes, cn). */
   private def encoded(df: DataFrame, idCol: String, vecCol: String,
       centroids: Seq[Seq[Double]],
       codebooks: Seq[Seq[Seq[Double]]]): DataFrame =
-    df.select(col(idCol).as("corpus_id"), col(vecCol).as("vec"))
-      .withColumn("cell", Similarity.ivfAssignment(col("vec"), centroids))
-      .withColumn("codes", Similarity.pqEncode(col("vec"), codebooks))
-      .withColumn("cn", Similarity.norm(col("vec")))
+    Similarity.encodedCorpus(df, idCol, vecCol, centroids, codebooks)
+      .select(col("corpus_id"), col("_cv").as("vec"),
+        col("_cell").as("cell"), col("_codes").as("codes"),
+        col("_cn").as("cn"))
 
   /** Build (or rebuild) the index: encode the full corpus once into a
     * fresh generation, commit by publishing the pointer — probes stay

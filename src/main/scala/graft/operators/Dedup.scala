@@ -924,63 +924,6 @@ object Dedup {
   }
 }
 
-/** The standing novelty gate over the fp-prefix-bucketed fingerprint
-  * table — one instance per ingest stream, driver-side (foreachBatch
-  * closures run on the driver), caching the Bloom bitmap across
-  * batches so the per-batch cost is independent of stream history:
-  * the words load from disk ONCE (restart = one re-read), and each
-  * batch folds its own delta into the cache in-memory.
-  *
-  * Per [[admit]] call:
-  *
-  *  1. distinct batch fingerprints test the cached bitmap;
-  *     bloom-negative fps are DEFINITELY novel — no table I/O, the
-  *     common case for mostly-novel ingest and the reason per-batch
-  *     cost stays flat as the table grows;
-  *  2. the possible-members (false positives + true duplicates, a
-  *     set bounded by `posCap` — beyond it the gate falls back to a
-  *     bucket-scan anti-join, the dup-heavy-batch shape where a scan
-  *     is the right plan anyway) COLLECT to the driver, and one read
-  *     of ONLY their prefix buckets, with the fp list pushed down as
-  *     an INSET filter, resolves which are actually present;
-  *  3. novel = batch fps minus present — a pure expression over the
-  *     batch, no table read, so evaluating it for both the delta and
-  *     the data append costs two batch scans, never two table scans;
-  *  4. the bloom delta (≤ bits/64 grouped words) collects, folds
-  *     into the cache, and lands as one durable file; novel fps then
-  *     append under their prefix partitions, fp-sorted within each
-  *     file so parquet row-group stats can refine future bucket
-  *     probes below directory granularity.
-  *
-  * Bucket-count tradeoff, measured: prefixChars=2 (256 dirs) costs
-  * ~4 s of dynamic-partition commit overhead PER BATCH on a local fs
-  * (256 file creations + renames — the same rename storm that makes
-  * fine-grained dynamic partitioning expensive on object stores), vs
-  * ~0.6 s at prefixChars=1 (16 dirs). The default is therefore 1:
-  * a standing gate pays the commit cost forever, while bucket width
-  * only bounds the (rare, bloom-filtered) probe reads. At petabyte
-  * table sizes, raise the width at [[compact]] time — compaction
-  * pays the many-directory cost once per epoch instead of every
-  * batch.
-  *
-  * Consistency: same at-least-once contract as the unbucketed gate
-  * (Dedup.appendNovelFingerprints scaladoc) — a replayed batch, or a
-  * crash between the bloom append and the data append, can duplicate
-  * table rows or leave bloom bits set for fps not yet stored; both
-  * decay to duplicate rows, which the distinct-first census absorbs.
-  * The delta writes BEFORE the data append so no evaluation of
-  * `novel` can ever observe its own append (and in the common path
-  * `novel` reads no table at all). A saturated bitmap (occupancy
-  * > 50%) warns loudly at load: correctness is unaffected, but every
-  * batch degrades toward the fallback scan — resize via
-  * `compact(newBits)`, or set `growBloomFactor` so compaction
-  * self-sizes the width to the table (k·n·2 ≤ bits). Like the bucket
-  * width, `bits` is LIVE state restored from the layout manifest at
-  * reopen (the persisted width wins over the constructor's — a
-  * smaller value would crash reading the delta file, a larger one
-  * would misposition every stored bit); `k` stays manifest-pinned
-  * fail-fast.
-  */
 /** The tiny durable layout manifest both standing gates keep next to
   * their tables (`<root>/_layout`, k=v lines): the constructor
   * parameters that define how on-disk artifacts were WRITTEN — bloom
@@ -997,39 +940,44 @@ object Dedup {
 private[graft] object GateLayout {
   import org.apache.hadoop.fs.{FileSystem, Path}
 
-  def write(fs: FileSystem, p: Path, kv: Seq[(String, String)]): Unit = {
-    // write-then-rename: a crash mid-write must never leave a
-    // truncated manifest in place (an empty one would pass every
-    // check vacuously, silently disabling the validation)
-    val tmp = new Path(p.getParent, p.getName + "_tmp")
+  /** The one atomic small-file write (manifests, markers, pointers,
+    * swap-unit lists): `text` lands in the sibling `<name><tmpSuffix>`
+    * first, so a crash mid-write never leaves a truncated file in
+    * place (an empty manifest would pass every check vacuously), then
+    * an overwrite-capable rename installs it — NOT
+    * delete-then-rename, whose between-window would leave NO file: the
+    * next open's adoption path would then write the reopening gate's
+    * constructor parameters as disk truth, and a concurrent marker
+    * reader would see none. */
+  def writeAtomic(fs: FileSystem, p: Path, text: String,
+      tmpSuffix: String = "_tmp"): Unit = {
+    val tmp = new Path(p.getParent, p.getName + tmpSuffix)
     val out = fs.create(tmp, true)
-    try out.write(kv.map { case (key, v) => s"$key=$v" }
-      .mkString("\n").getBytes("UTF-8"))
-    finally out.close()
-    // overwrite-capable rename, NOT delete-then-rename: a crash
-    // between the delete and the rename would leave NO manifest, and
-    // the next open's adoption path would then write the reopening
-    // gate's constructor parameters as disk truth — a reopen with
-    // wrong geometry inside that window would silently disable
-    // exactly the fail-fast validation the manifest exists for
+    try out.write(text.getBytes("UTF-8")) finally out.close()
     org.apache.hadoop.fs.FileContext
       .getFileContext(fs.getUri, fs.getConf)
       .rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  def read(fs: FileSystem, p: Path): Map[String, String] = {
+  /** The one small-file read: the whole file, UTF-8. */
+  def readText(fs: FileSystem, p: Path): String = {
     val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.contains("=")).map { l =>
-        val i = l.indexOf('='); l.take(i) -> l.drop(i + 1)
-      }.toMap
+    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
 
+  def write(fs: FileSystem, p: Path, kv: Seq[(String, String)]): Unit =
+    writeAtomic(fs, p, kv.map { case (key, v) => s"$key=$v" }.mkString("\n"))
+
+  def read(fs: FileSystem, p: Path): Map[String, String] =
+    readText(fs, p).linesIterator.filter(_.contains("=")).map { l =>
+      val i = l.indexOf('='); l.take(i) -> l.drop(i + 1)
+    }.toMap
+
   /** Fail fast on a parameter the on-disk artifacts were not written
-    * with — the remedy is a [[NoveltyGate.compact]]-style rebuild,
-    * which rewrites the artifacts at the gate's parameters and
-    * refreshes the manifest. */
+    * with — the gates check these at every first open and before a
+    * fresh object's compaction, so the remedy is to reopen with the
+    * on-disk parameters (or start the gate over in a new root). */
   def check(m: Map[String, String], root: String,
       expect: Seq[(String, String)]): Unit =
     expect.foreach { case (key, v) =>
@@ -1037,8 +985,7 @@ private[graft] object GateLayout {
         throw new IllegalStateException(
           s"gate layout mismatch for $root: $key=$disk on disk but " +
             s"$key=$v requested — reopen with the on-disk parameters, " +
-            "or rebuild via compact() on a gate constructed with the " +
-            "new ones")
+            "or start the gate over in a new root")
       }
     }
 }
@@ -1147,7 +1094,8 @@ private[graft] object GateOps {
     * rename, so data and width can never disagree; the manifest
     * heals from it at the next open.
     *
-    * Written write-tmp-then-rename, NOT overwrite-in-place: markers
+    * Written write-tmp-then-rename ([[GateLayout.writeAtomic]],
+    * staged as `<name>.wtmp`), NOT overwrite-in-place: markers
     * like `_last_commit` gate replay idempotence, and a torn
     * overwrite could leave a prefix of the intended value — UUIDs
     * may start with digits, so a torn "<uuid>:<batch>" can read as a
@@ -1156,18 +1104,9 @@ private[graft] object GateOps {
     * either the old marker, no marker, or the complete new one —
     * every case on the re-run (safe) side. */
   def writeMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
-      name: String, value: String): Unit = {
-    val dst = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val tmp = new org.apache.hadoop.fs.Path(s"$dir/$name.wtmp")
-    val out = fs.create(tmp, true)
-    try out.write(value.getBytes("UTF-8")) finally out.close()
-    // overwrite-capable atomic rename (GateLayout.write's discipline)
-    // — not delete-then-rename, whose between-window would leave NO
-    // marker for a concurrent reader
-    org.apache.hadoop.fs.FileContext
-      .getFileContext(fs.getUri, fs.getConf)
-      .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      name: String, value: String): Unit =
+    GateLayout.writeAtomic(fs, new org.apache.hadoop.fs.Path(s"$dir/$name"),
+      value, ".wtmp")
 
   /** The stable query id from a Structured Streaming checkpoint's
     * `metadata` file — the identity that distinguishes "same
@@ -1186,10 +1125,7 @@ private[graft] object GateOps {
     try {
       if (!fs.exists(p)) None
       else {
-        val in = fs.open(p)
-        val s =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
+        val s = GateLayout.readText(fs, p)
         // anchored to the object's FIRST key being "id" — Spark's
         // StreamMetadata is exactly {"id":"<uuid>"}; an unanchored
         // scan would silently return the wrong field if the format
@@ -1303,12 +1239,7 @@ private[graft] object GateOps {
   def readMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       name: String): Option[String] = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-      finally in.close()
-    }
+    if (!fs.exists(p)) None else Some(GateLayout.readText(fs, p).trim)
   }
 
   /** The verdict-table schema generation the near-dup gates stamp
@@ -1324,7 +1255,7 @@ private[graft] object GateOps {
 
   /** Broadcast-side row ceiling shared by the gate family's
     * measured-count discipline (planner stats on checkpointed
-    * survivor frames cannot be trusted — see NearDupGate.admitInner).
+    * survivor frames cannot be trusted — see BandedGate.runAdmit).
     * A dedicated constant, deliberately NOT a candidate-fetch knob
     * like candCap: raising a fetch cap must never force-broadcast a
     * multi-million-row frame and OOM the driver. */
@@ -1526,13 +1457,518 @@ private[graft] object GateOps {
   }
 }
 
+/** The lifecycle every standing gate shares, written once: the first
+  * open (each durable table's swap-crash recovery, the layout
+  * handshake, the in-memory filter build), the admit scope, the
+  * auto-compaction clock, and the compaction prologue and epilogue.
+  * `tables` are the gate's durable tables under `root`; the first is
+  * the one whose absence leaves nothing to compact. A gate supplies
+  * its layout pieces ([[pins]], [[restoreLayout]], [[writeLayout]]),
+  * its in-memory filter ([[load]]) and its compaction policy. */
+abstract class StandingGate private[operators] (root: String,
+    tables: Seq[String], autoCompactEvery: Int) {
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.spark.sql.SparkSession
+
+  // admits since the last compaction — the maintenance-policy clock.
+  // autoCompactEvery > 0 runs the gate's compaction synchronously
+  // after every N-th admit (inside the same foreachBatch turn, so it
+  // can never race an admit): every admit appends files to the
+  // gate's tables, so probe-time listings degrade O(batches) between
+  // epochs — the policy bounds that at O(N).
+  private var admitsSinceCompact: Int = 0
+
+  /** Whether the first open ran (the in-memory filter is built). */
+  protected def opened: Boolean
+
+  /** The layout entries the on-disk artifacts were written with —
+    * checked fail-fast against the manifest ([[GateLayout.check]]). */
+  protected def pins: Seq[(String, String)]
+
+  /** Restore the LIVE geometry — state a previous process' compaction
+    * persisted, where disk truth wins over the constructor — from the
+    * manifest `m` (None: none on disk yet) and the tables themselves.
+    * True when the manifest is missing or stale and must be
+    * rewritten. */
+  protected def restoreLayout(fs: FileSystem,
+      m: Option[Map[String, String]]): Boolean
+
+  protected def writeLayout(fs: FileSystem): Unit
+
+  /** Build the in-memory filter from the recovered tables. */
+  protected def load(spark: SparkSession, fs: FileSystem): Unit
+
+  /** The gate's compaction at its default arguments. */
+  protected def autoCompact(spark: SparkSession): Unit
+
+  private def fsOf(spark: SparkSession): FileSystem =
+    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  protected final def exists(fs: FileSystem, table: String): Boolean =
+    fs.exists(new Path(s"$root/$table"))
+
+  protected final def layout(
+      fs: FileSystem): Option[Map[String, String]] = {
+    val mp = new Path(s"$root/_layout")
+    if (fs.exists(mp)) Some(GateLayout.read(fs, mp)) else None
+  }
+
+  /** Each table's swap-crash recovery ([[GateOps.recoverGeneration]]),
+    * run BEFORE any existence check: a restart inside a compaction's
+    * generation-swap crash window (live dir at neither cur nor
+    * `_tmp`) must restore the surviving generation, or the gate would
+    * see an empty table and silently re-admit everything. */
+  private def recover(fs: FileSystem): Unit =
+    tables.foreach(GateOps.recoverGeneration(fs, root, _))
+
+  /** The layout handshake: fail fast on a pin mismatch, restore the
+    * live geometry, heal a missing or stale manifest. A manifest-less
+    * table is ADOPTED — its live geometry derived from the tables and
+    * the manifest written — so the validation holds from the next
+    * open onward. */
+  private def syncLayout(fs: FileSystem): Unit = {
+    val m = layout(fs)
+    m.foreach(GateLayout.check(_, root, pins))
+    if (restoreLayout(fs, m)) writeLayout(fs)
+  }
+
+  /** One piece of live geometry, restored marker over manifest over
+    * `cur`. The table generation's own `marker` is ground truth: it
+    * rode the same rename as the data ([[GateOps.writeMarker]]), so it
+    * can never be stale the way the root manifest can after a crash
+    * between a resize's swap and its manifest refresh. The manifest's
+    * `key` is the fallback for pre-marker generations. A persisted
+    * value must pass `valid` — a corrupt one fails fast rather than
+    * being stamped into a fresh manifest. Returns the live value and
+    * whether the manifest disagrees with the marker (heal it). */
+  protected final def restoreGeometry(fs: FileSystem, table: String,
+      marker: String, m: Option[Map[String, String]], key: String,
+      cur: Int)(valid: Int => Boolean, what: String): (Int, Boolean) = {
+    val mk = GateOps.readMarker(fs, s"$root/$table", marker).map(_.toInt)
+    val persisted = mk.orElse(m.flatMap(_.get(key)).map(_.toInt))
+    persisted.foreach(v => require(valid(v), s"persisted $key=$v $what"))
+    (persisted.getOrElse(cur),
+      mk.exists(v => !m.flatMap(_.get(key)).contains(v.toString)))
+  }
+
+  /** One admit: `body` inside the parquet IN-pushdown scope, preceded
+    * on the first call by the first open (recovery, the layout
+    * handshake, the filter build), followed by the auto-compaction
+    * clock.
+    *
+    * The scope: the gates' pruned reads push a collected INSET of
+    * keys / candidate ids into the parquet scan so row-group stats on
+    * the sorted files can skip, and Spark only pushes IN filters up to
+    * `spark.sql.parquet.pushdown.inFilterThreshold` (default 10 —
+    * above it the filter degrades to a min/max range, useless for
+    * scattered keys). It is raised to [[Dedup.inPushdownLimit]], not
+    * to a candidate cap: the pushed form is a recursive OR-chain that
+    * overflows the executor stack past ~1.2k values (the constant's
+    * scaladoc has the measurement), so larger sets keep the range +
+    * post-scan InSet plan. Restored, or unset, on every exit. */
+  protected final def admitting(spark: SparkSession)(
+      body: FileSystem => DataFrame): DataFrame = {
+    val fs = fsOf(spark)
+    val thrKey = "spark.sql.parquet.pushdown.inFilterThreshold"
+    // getAll (explicitly set keys only), not getOption: getOption
+    // reports the default for an unset key, and restoring that would
+    // leave the key explicitly set
+    val priorThr = spark.conf.getAll.get(thrKey)
+    spark.conf.set(thrKey, Dedup.inPushdownLimit.toString)
+    val out = try {
+      if (!opened) {
+        recover(fs)
+        syncLayout(fs)
+        load(spark, fs)
+      }
+      body(fs)
+    } finally priorThr match {
+      case Some(v) => spark.conf.set(thrKey, v)
+      case None => spark.conf.unset(thrKey)
+    }
+    admitsSinceCompact += 1
+    if (autoCompactEvery > 0 && admitsSinceCompact >= autoCompactEvery) {
+      autoCompact(spark)
+      admitsSinceCompact = 0
+    }
+    out
+  }
+
+  /** One compaction — run between admit epochs (it must not race an
+    * admit; the clock satisfies this by running inside the admit
+    * turn). A manual compaction on a fresh object gets the first
+    * open's swap-crash-window recovery, and the layout handshake, so
+    * it compacts at the persisted live geometry rather than its
+    * constructor's. `rewrite` is the gate's policy: it writes
+    * `<table>_tmp` for each table it rewrites and returns the step to
+    * run once they are live. Each rewritten table then swaps in
+    * crash-ordered ([[GateOps.swapGeneration]] — either generation
+    * intact, never neither). After the recovery a `_tmp` beside a
+    * table can only be this rewrite's: recovery promotes a `_tmp`
+    * whose live table is missing, and every policy rewrites each live
+    * table. */
+  protected final def compacting(spark: SparkSession)(
+      rewrite: FileSystem => () => Unit): Unit = {
+    val fs = fsOf(spark)
+    recover(fs)
+    if (!exists(fs, tables.head)) return
+    if (!opened) syncLayout(fs)
+    val after = rewrite(fs)
+    tables.filter(t => exists(fs, s"${t}_tmp"))
+      .foreach(GateOps.swapGeneration(fs, root, _))
+    after()
+  }
+}
+
+/** The admit the two banded near-dup gates share — [[NearDupGate]]
+  * over MinHash band hashes, [[EmbedNearDupGate]] over hyperplane
+  * sign bands. Durable state under `root`: the band `index` (id + the
+  * band-key columns `keyDDL`, partitioned by `indexPart`, sorted by
+  * the last key column within each file), the scored `corpus` (id +
+  * one value), and `verdicts` (id, n_cands, the `bestDDL` column,
+  * is_neardup, n_capped_keys), fronted by an in-memory filter over
+  * the seen band keys.
+  *
+  * A doc is a near-dup iff its `score` against ANY earlier-seen doc
+  * sharing a band key reaches `threshold`: earlier batches via the
+  * index (any indexed doc NOT of this batch — excluding the batch's
+  * own ids is what makes an at-least-once replay harmless, since a
+  * replayed batch finds its own and its batchmates' keys already
+  * indexed), same-batch predecessors via a smaller-id self probe. A
+  * doc with no candidates verdicts `noMatch`. Null values carry no
+  * band keys: they verdict as novel and are never indexed.
+  *
+  * The gate supplies the band scheme ([[keyed]], the filter, the
+  * pruned [[indexRead]]), its live per-key cap and its index
+  * compaction policy; the skeleton never branches on which gate runs
+  * it. */
+abstract class BandedGate private[operators] (root: String,
+    index: String, indexDDL: String, indexPart: String, keyDDL: String,
+    corpus: String, corpusDDL: String, value: Column => Column,
+    score: (Column, Column) => Column, scoreType: String,
+    bestDDL: String, noMatch: Column, threshold: Column,
+    candCap: Int, autoCompactEvery: Int)
+    extends StandingGate(root, Seq(index, corpus, "verdicts"),
+      autoCompactEvery) {
+  import org.apache.hadoop.fs.FileSystem
+  import org.apache.spark.sql.{Row, SparkSession}
+  import org.apache.spark.sql.types.StructType
+
+  protected val keyCols: Seq[String] =
+    StructType.fromDDL(keyDDL).fieldNames.toSeq
+  private val valueCol = StructType.fromDDL(corpusDDL).fieldNames(1)
+  private val best = StructType.fromDDL(bestDDL).fieldNames(0)
+
+  /** The batch's band keys: (id, key columns…) per non-null key, plus
+    * whatever the gate's [[selfProbe]] needs. */
+  protected def keyed(batch: DataFrame): DataFrame
+  /** The columns the in-memory filter tests, collected per batch. */
+  protected def probeCols: Seq[String] = keyCols
+  protected def mightHold(key: Row): Boolean
+  protected def remember(key: Row): Unit
+  /** The index rows that may share the filter-positive keys `pos`
+    * (`bandKeys`: the batch's own keys). */
+  protected def indexRead(spark: SparkSession, pos: Seq[Row],
+      bandKeys: DataFrame): DataFrame
+  /** The live per-band-key candidate cap — 0 = exact. */
+  protected def keyCap: Int
+  /** Index rows as stored, from (id, key columns…). */
+  protected def indexRows(keys: DataFrame): DataFrame =
+    keys.select(("id" +: keyCols).map(col): _*)
+
+  protected final def readIndex(spark: SparkSession): DataFrame =
+    read(spark, index, indexDDL)
+
+  protected final def readCorpus(spark: SparkSession): DataFrame =
+    read(spark, corpus, corpusDDL)
+
+  private def read(spark: SparkSession, table: String,
+      ddl: String): DataFrame =
+    spark.read.schema(StructType.fromDDL(ddl)).parquet(s"$root/$table")
+
+  private def empty(spark: SparkSession, ddl: String): DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](),
+      StructType.fromDDL(ddl))
+
+  private def keyJoin: Column =
+    keyCols.map(k => col(s"q.$k") === col(s"c.$k")).reduce(_ && _)
+
+  protected final def writeIndex(keys: DataFrame, mode: String,
+      dir: String): Unit =
+    indexRows(keys).repartition(col(indexPart))
+      .sortWithinPartitions(col(keyCols.last))
+      .write.mode(mode).partitionBy(indexPart).parquet(s"$root/$dir")
+
+  /** Same-batch candidates, scored: each doc against its smaller-id
+    * batchmates sharing a (capped) key. The kept capped candidates are
+    * each key's smallest ids, so every one still precedes any over-cap
+    * query doc (the c.id < q.id guard keeps exact in-batch order). */
+  protected def selfProbe(keyRows: DataFrame, bandKeys: DataFrame,
+      selfCand: DataFrame, batchVals: DataFrame,
+      maybeBroadcast: DataFrame => DataFrame): DataFrame =
+    bandKeys.as("q")
+      .join(maybeBroadcast(selfCand).as("c"),
+        keyJoin && col("c.id") < col("q.id"))
+      .select(col("q.id").as("id"), col("c.id").as("cid"))
+      .distinct()
+      .join(maybeBroadcast(batchVals.toDF("cid", "cval")), "cid")
+      .join(maybeBroadcast(batchVals.toDF("id", "qval")), "id")
+      .select(col("id"), col("cid"),
+        score(col("qval"), col("cval")).as("score"))
+
+  /** The admit: appends the batch's verdicts and returns them
+    * (localCheckpointed when `pin` — admitScored's caller joins them
+    * again; a plain admit's write is their only consumer). */
+  protected final def runAdmit(batch: DataFrame, idCol: String,
+      srcCol: String, pin: Boolean): DataFrame =
+    admitting(batch.sparkSession) { fs =>
+      val spark = batch.sparkSession
+      val indexExists = exists(fs, index)
+      // guarded independently of indexExists: a crash between the
+      // first-ever index append and the corpus append leaves the index
+      // present but the corpus missing — on restart the filter
+      // rebuilds from the index, every replayed doc is positive, and
+      // an unguarded corpus read would throw on every retry,
+      // permanently wedging the stream. The empty typed frame scores
+      // those candidates absent (never scored → novel), which the
+      // replayed append then heals.
+      val corpusExists = exists(fs, corpus)
+      // 1. the batch's values, pinned once (consumed by the key
+      // collect, both probes, the verdict base and the appends;
+      // bounded by the batch). The id-keyed dedupAtWidth replaces the
+      // round-robin parallelism shuffle: a batch carrying the same id
+      // twice (upstream at-least-once duplication inside one batch)
+      // would otherwise double every pair in the scoring joins and
+      // emit two verdict rows for that id.
+      val batchVals = GateOps.dedupAtWidth(batch.select(
+          col(idCol).as("id"), col(srcCol).as(valueCol)), "id")
+        .select(col("id"), value(col(valueCol)).as(valueCol))
+        .localCheckpoint()
+      // 2. broadcast the batch side by MEASURED count, not planner
+      // stats: a localCheckpoint inherits its ORIGIN plan's size
+      // estimate, and a join-shaped origin (the curate chain's
+      // survivor frames) overestimates by multiplied selectivities
+      // (measured: 5 MB estimated as 16.6 GB) — the static planner
+      // then refuses the broadcast, AQE cannot re-plan a LogicalRDD
+      // leaf, and every probe join degrades to sort-merge with
+      // skew-hot band keys (measured: 38 s vs 4.7 s for the identical
+      // admit). The count is ~free on the checkpointed rows; a
+      // degenerate huge admit keeps the shuffle-join plan instead of
+      // OOMing the driver.
+      val smallBatch = batchVals.count() <= GateOps.broadcastRowCap
+      def maybeBroadcast(df: DataFrame): DataFrame =
+        if (smallBatch) broadcast(df) else df
+      // 3. the batch's distinct keys collect and test the filter
+      // IN-DRIVER (no filter literal ever enters a plan); negative
+      // keys have NO stored collision — for a mostly-novel batch that
+      // is nearly all of them, so the index is not read at all and
+      // per-batch cost is flat in corpus size
+      val keyRows = keyed(batchVals)
+      val bandKeys = keyRows.select(("id" +: keyCols).map(col): _*)
+      val probed = keyRows.select(probeCols.map(col): _*).distinct()
+        .collect()
+      val pos = probed.filter(mightHold).toSeq
+      // per-band-key candidate truncation (cap on): the shared
+      // GateOps.capPerKey earliest-seen rank, shed reported per doc
+      def capPerKey(cand: DataFrame): (DataFrame, DataFrame) =
+        if (keyCap <= 0) (cand, empty(spark, keyDDL))
+        else GateOps.capPerKey(cand, keyCols, "id", keyCap)
+      val (crossScored, crossCapped) =
+        if (pos.isEmpty || !indexExists)
+          (empty(spark, s"id BIGINT, cid BIGINT, score $scoreType"),
+            empty(spark, keyDDL))
+        else {
+          // 4. "earlier-seen" for the cross probe = IN THE INDEX AND
+          // NOT OF THIS BATCH, not smaller-id: an id guard would
+          // encode arrival order as id order, which the file source
+          // does not promise. The anti-join runs BEFORE the per-key
+          // cap so replayed own rows never consume cap slots —
+          // otherwise the kept set, and hence the verdicts, would
+          // differ between a run and its replay. Under id-ordered
+          // arrival the guards coincide, which is why the id-ordered
+          // oracles still replay these verdicts exactly.
+          val (idxCand, capped) = capPerKey(
+            indexRead(spark, pos, bandKeys)
+              .join(batchVals.select(col("id")), Seq("id"), "left_anti"))
+          val pairs = maybeBroadcast(bandKeys).as("q")
+            .join(idxCand.as("c"), keyJoin)
+            .select(col("q.id").as("id"), col("c.id").as("cid"))
+            .distinct()
+            // pinned: consumed by the cid collect AND the scoring
+            // join, and bounded by candCap·batch collisions in the
+            // common path
+            .localCheckpoint()
+          // 5. candidate values are fetched through a collected-id
+          // INSET, never scanned corpus-wide — past candCap, a
+          // semi-join against the pairs instead
+          val cids = pairs.select(col("cid")).distinct()
+            .limit(candCap + 1).collect().map(_.getLong(0))
+          // 6. dropDuplicates carries the at-least-once contract: a
+          // replayed admit appends its values AGAIN, and a duplicated
+          // row would double every matching pair in the scoring join.
+          // Scoped to CANDIDATE rows on both branches.
+          val stored =
+            if (corpusExists) readCorpus(spark) else empty(spark, corpusDDL)
+          val candVals =
+            (if (cids.length <= candCap)
+              stored.filter(col("id").isin(cids.toSeq: _*))
+            else stored.join(pairs.select(col("cid").as("id")).distinct(),
+              Seq("id"), "left_semi"))
+            .dropDuplicates("id")
+          // 7. pairs first, then score: only (id, cid) moves through
+          // the band join, and each DISTINCT pair scores once
+          (pairs.join(candVals.toDF("cid", "cval"), "cid")
+            .join(maybeBroadcast(batchVals.toDF("id", "qval")), "id")
+            .select(col("id"), col("cid"),
+              score(col("qval"), col("cval")).as("score")),
+            capped)
+        }
+      // 8. the self probe through the same per-key cap
+      val (selfCand, selfCapped) = capPerKey(bandKeys)
+      val internal =
+        selfProbe(keyRows, bandKeys, selfCand, batchVals, maybeBroadcast)
+      // 9. cross (cid NOT of this batch, by the pre-cap anti-join) and
+      // internal (cid of this batch) are DISJOINT by construction and
+      // each pair-distinct, so the union needs no (id, cid) re-dedup
+      // before the per-doc rollup. Shed REPORTING (never silent):
+      // n_capped_keys = how many of the doc's band keys had their
+      // candidate list truncated — 0 when the cap is off or never
+      // fired, so the uncapped verdict shape is a strict subset.
+      val matches = crossScored.unionByName(internal)
+        .groupBy(col("id"))
+        .agg(count(lit(1)).as("n_cands"), max(col("score")).as(best))
+      val nCapped = bandKeys
+        .join(crossCapped.unionByName(selfCapped).distinct(), keyCols)
+        .groupBy(col("id")).agg(count(lit(1)).as("n_capped_keys"))
+      // 10. the verdicts
+      val assembled = batchVals.select(col("id"))
+        .join(matches, Seq("id"), "left")
+        .join(nCapped, Seq("id"), "left")
+        .select(col("id"),
+          coalesce(col("n_cands"), lit(0L)).as("n_cands"),
+          coalesce(col(best), noMatch).as(best),
+          coalesce(col("n_capped_keys"), lit(0L)).as("n_capped_keys"))
+        .withColumn("is_neardup", (col(best) >= threshold).cast("int"))
+        .select(col("id"), col("n_cands"), col(best), col("is_neardup"),
+          col("n_capped_keys"))
+      val verdicts = if (pin) assembled.localCheckpoint() else assembled
+      verdicts.write.mode("append").parquet(s"$root/verdicts")
+      // 11. fold the keys into memory, then append keys and values. A
+      // batch of only null values has no keys; skipping the appends
+      // avoids creating EMPTY table directories a later schema read
+      // or restart rebuild would otherwise hit.
+      probed.foreach(remember)
+      if (probed.nonEmpty) {
+        writeIndex(keyRows, "append", index)
+        batchVals.filter(col(valueCol).isNotNull)
+          .coalesce(1).sortWithinPartitions(col("id"))
+          .write.mode("append").parquet(s"$root/$corpus")
+      }
+      verdicts
+    }
+
+  /** The banded gates' epoch maintenance: the gate's `rewriteIndex`
+    * policy writes `<index>_tmp` (one key-sorted, exactly-deduplicated
+    * file per partition) and returns its post-swap step; the corpus
+    * and the verdicts each rewrite to one id-sorted deduplicated file
+    * here — the at-least-once decay (replayed-batch duplicate rows)
+    * repaired and the per-batch file accumulation collapsed, so
+    * probe-time listings stay O(partitions). */
+  protected final def compactBanded(spark: SparkSession)(
+      rewriteIndex: FileSystem => () => Unit): Unit =
+    compacting(spark) { fs =>
+      val after = rewriteIndex(fs)
+      // guarded like admit's corpus read: the index-present /
+      // corpus-missing crash window must not wedge an auto-compaction
+      // fired from a replayed admit
+      rewrite(spark, fs, corpus, corpusDDL)(_.dropDuplicates("id"))
+      // distinct() absorbs at-least-once replays (a replayed batch
+      // rewrites identical verdict rows); pre-n_capped_keys files read
+      // as null under the explicit schema — normalized to 0, the
+      // no-shed value, so the rewrite is uniform. Guarded: a gate that
+      // only ever saw empty batches has no verdicts directory.
+      rewrite(spark, fs, "verdicts",
+        s"id BIGINT, n_cands BIGINT, $bestDDL, is_neardup INT, " +
+          "n_capped_keys BIGINT")(
+        _.withColumn("n_capped_keys",
+          coalesce(col("n_capped_keys"), lit(0L))).distinct())
+      after
+    }
+
+  private def rewrite(spark: SparkSession, fs: FileSystem, table: String,
+      ddl: String)(f: DataFrame => DataFrame): Unit =
+    if (exists(fs, table)) f(read(spark, table, ddl))
+      .coalesce(1).sortWithinPartitions(col("id"))
+      .write.mode("overwrite").parquet(s"$root/${table}_tmp")
+}
+
+/** The standing novelty gate over the fp-prefix-bucketed fingerprint
+  * table — one instance per ingest stream, driver-side (foreachBatch
+  * closures run on the driver), caching the Bloom bitmap across
+  * batches so the per-batch cost is independent of stream history:
+  * the words load from disk ONCE (restart = one re-read), and each
+  * batch folds its own delta into the cache in-memory.
+  *
+  * Per [[admit]] call:
+  *
+  *  1. distinct batch fingerprints test the cached bitmap;
+  *     bloom-negative fps are DEFINITELY novel — no table I/O, the
+  *     common case for mostly-novel ingest and the reason per-batch
+  *     cost stays flat as the table grows;
+  *  2. the possible-members (false positives + true duplicates, a
+  *     set bounded by `posCap` — beyond it the gate falls back to a
+  *     bucket-scan anti-join, the dup-heavy-batch shape where a scan
+  *     is the right plan anyway) COLLECT to the driver, and one read
+  *     of ONLY their prefix buckets, with the fp list pushed down as
+  *     an INSET filter, resolves which are actually present;
+  *  3. novel = batch fps minus present — a pure expression over the
+  *     batch, no table read, so evaluating it for both the delta and
+  *     the data append costs two batch scans, never two table scans;
+  *  4. the bloom delta (≤ bits/64 grouped words) collects, folds
+  *     into the cache, and lands as one durable file; novel fps then
+  *     append under their prefix partitions, fp-sorted within each
+  *     file so parquet row-group stats can refine future bucket
+  *     probes below directory granularity.
+  *
+  * Bucket-count tradeoff, measured: prefixChars=2 (256 dirs) costs
+  * ~4 s of dynamic-partition commit overhead PER BATCH on a local fs
+  * (256 file creations + renames — the same rename storm that makes
+  * fine-grained dynamic partitioning expensive on object stores), vs
+  * ~0.6 s at prefixChars=1 (16 dirs). The default is therefore 1:
+  * a standing gate pays the commit cost forever, while bucket width
+  * only bounds the (rare, bloom-filtered) probe reads. At petabyte
+  * table sizes, raise the width at [[compact]] time — compaction
+  * pays the many-directory cost once per epoch instead of every
+  * batch.
+  *
+  * Consistency: same at-least-once contract as the unbucketed gate
+  * (Dedup.appendNovelFingerprints scaladoc) — a replayed batch, or a
+  * crash between the bloom append and the data append, can duplicate
+  * table rows or leave bloom bits set for fps not yet stored; both
+  * decay to duplicate rows, which the distinct-first census absorbs.
+  * The delta writes BEFORE the data append so no evaluation of
+  * `novel` can ever observe its own append (and in the common path
+  * `novel` reads no table at all). A saturated bitmap (occupancy
+  * > 50%) warns loudly at load: correctness is unaffected, but every
+  * batch degrades toward the fallback scan — resize via
+  * `compact(newBits)`, or set `growBloomFactor` so compaction
+  * self-sizes the width to the table (k·n·2 ≤ bits). Like the bucket
+  * width, `bits` is LIVE state restored from the layout manifest at
+  * reopen (the persisted width wins over the constructor's — a
+  * smaller value would crash reading the delta file, a larger one
+  * would misposition every stored bit); `k` stays manifest-pinned
+  * fail-fast.
+  */
 final class NoveltyGate(tableRoot: String,
     bits: Int = Dedup.noveltyBloomBits, k: Int = Dedup.noveltyBloomK,
     prefixChars: Int = Dedup.fpPrefixChars, posCap: Int = 100000,
     autoCompactEvery: Int = 0, widenBucketBytes: Long = 0L,
-    growBloomFactor: Int = 0) {
-  import org.apache.spark.sql.Row
+    growBloomFactor: Int = 0)
+    extends StandingGate(tableRoot, Seq("data", "bloom"),
+      autoCompactEvery) {
+  import org.apache.spark.sql.{Row, SparkSession}
   import org.apache.spark.sql.types.StructType
+  import org.apache.hadoop.fs.FileSystem
   require(growBloomFactor == 0 ||
     (growBloomFactor >= 2 && Integer.bitCount(growBloomFactor) == 1),
     "growBloomFactor must be 0 (off) or a power of two ≥ 2")
@@ -1544,17 +1980,6 @@ final class NoveltyGate(tableRoot: String,
     s"bits=$bits must be a power of two (bloom positions mask with bits-1)")
 
   private var words: Array[Long] = _
-  // admits since the last compaction — the maintenance-policy clock.
-  // autoCompactEvery > 0 runs [[compact]] synchronously after every
-  // N-th admit (inside the same foreachBatch turn, so it can never
-  // race an admit): each batch appends one bloom-delta file and one
-  // file per touched bucket, so probe-time listings degrade
-  // O(batches) between epochs — the policy bounds that at O(N).
-  // widenBucketBytes > 0 additionally lets an auto-compaction WIDEN
-  // the bucket layout by one hex digit whenever the largest bucket's
-  // data exceeds the threshold — the self-tending form of the
-  // raise-width-at-compaction rule in the admit scaladoc.
-  private var admitsSinceCompact: Int = 0
   // the LIVE bucket width — compact(newPrefixChars) can widen it for
   // a grown table, and every subsequent probe/append must follow.
   // Durable in the layout manifest: an in-memory-only width would
@@ -1572,57 +1997,29 @@ final class NoveltyGate(tableRoot: String,
   // shape (which salted positions mean what), not resizable state.
   private var bitsCur: Int = bits
 
-  /** First-open handshake with the on-disk layout: fail fast on a
-    * `k` mismatch, restore the live bucket width and bloom width a
-    * previous process' compaction persisted (disk truth wins for
-    * state-bearing geometry — the pcCur/rbCur discipline). A
-    * manifest-less table is adopted by deriving the width from the
-    * fp_b= directory names. */
-  private def syncLayout(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$tableRoot/_layout")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the partition DIRECTORIES are ground truth for the live width:
-    // a crash between a widening compaction's data swap and its
-    // manifest refresh leaves the two disagreeing, and following the
-    // stale manifest would mis-prefix every probe (silent dedup
-    // decay) — so the on-disk layout wins and the manifest heals
+  private def isPow2(b: Int): Boolean = b > 0 && Integer.bitCount(b) == 1
+
+  protected def opened: Boolean = words != null
+  protected def pins: Seq[(String, String)] = Seq("k" -> k.toString)
+  protected def autoCompact(spark: SparkSession): Unit = compact(spark)
+
+  /** Live bucket width and bloom width, disk truth first. The
+    * partition DIRECTORIES are ground truth for the bucket width: a
+    * crash between a widening compaction's data swap and its manifest
+    * refresh leaves the two disagreeing, and following the stale
+    * manifest would mis-prefix every probe (silent dedup decay) — so
+    * the on-disk layout wins and the manifest heals. The bloom width
+    * follows the bloom generation's `_bits` marker. */
+  protected def restoreLayout(fs: FileSystem,
+      m: Option[Map[String, String]]): Boolean = {
     val dw = dirWidth(fs)
-    // the bloom generation's own _bits marker is ground truth (it
-    // rode the same rename as the data, so it can never be stale the
-    // way the root manifest can be after a crash mid-resize); the
-    // manifest is the fallback for pre-marker generations and heals
-    // from the marker
-    val markerBits = GateOps
-      .readMarker(fs, s"$tableRoot/bloom", "_bits").map(_.toInt)
-    if (fs.exists(mp)) {
-      val m = GateLayout.read(fs, mp)
-      GateLayout.check(m, tableRoot, Seq("k" -> k.toString))
-      markerBits.orElse(m.get("bits").map(_.toInt))
-        .filter(_ != bitsCur).foreach { b =>
-          require(b > 0 && Integer.bitCount(b) == 1,
-            s"persisted bits=$b is not a power of two")
-          bitsCur = b
-        }
-      pcCur = dw.orElse(m.get("prefix_chars").map(_.toInt))
-        .getOrElse(pcCur)
-      if ((dw.isDefined && m.get("prefix_chars") != dw.map(_.toString)) ||
-          (markerBits.isDefined &&
-            m.get("bits") != markerBits.map(_.toString)))
-        writeLayout(fs)
-    } else {
-      dw.foreach(w => pcCur = w)
-      // same fail-fast as the manifest-present branch: silently
-      // dropping a corrupt marker here would stamp the constructor
-      // default into a fresh manifest and read the bloom at the
-      // wrong width
-      markerBits.foreach { b =>
-        require(b > 0 && Integer.bitCount(b) == 1,
-          s"persisted bits=$b is not a power of two")
-        bitsCur = b
-      }
-      writeLayout(fs)
-    }
+    val (b, bitsStale) = restoreGeometry(fs, "bloom", "_bits", m, "bits",
+      bitsCur)(isPow2, "is not a power of two")
+    bitsCur = b
+    pcCur = dw.orElse(m.flatMap(_.get("prefix_chars")).map(_.toInt))
+      .getOrElse(pcCur)
+    m.isEmpty || bitsStale ||
+      (dw.isDefined && m.flatMap(_.get("prefix_chars")) != dw.map(_.toString))
   }
 
   /** The live bucket width as written on disk — max fp_b= directory
@@ -1638,11 +2035,21 @@ final class NoveltyGate(tableRoot: String,
     if (widths.nonEmpty) Some(widths.max) else None
   }
 
-  private def writeLayout(fs: org.apache.hadoop.fs.FileSystem): Unit =
+  protected def writeLayout(fs: FileSystem): Unit =
     GateLayout.write(fs,
       new org.apache.hadoop.fs.Path(s"$tableRoot/_layout"),
       Seq("bits" -> bitsCur.toString, "k" -> k.toString,
         "prefix_chars" -> pcCur.toString))
+
+  protected def load(spark: SparkSession, fs: FileSystem): Unit = {
+    words = Dedup.readNoveltyBloom(spark, s"$tableRoot/bloom", bitsCur)
+    val occupied =
+      words.foldLeft(0L)((a, w) => a + java.lang.Long.bitCount(w))
+    if (occupied * 2 > bitsCur) System.err.println(
+      s"[novelty-gate] bloom ${occupied * 100 / bitsCur}% occupied " +
+        s"for $tableRoot — probes degrade to bucket scans; resize " +
+        s"via compact(newBits) or set growBloomFactor")
+  }
 
   def admit(batch: DataFrame): Unit = {
     admitFps(batch.sparkSession, batch
@@ -1702,89 +2109,10 @@ final class NoveltyGate(tableRoot: String,
           .otherwise(0).as("is_novel"))
   }
 
-  /** Fingerprint-level core shared by [[admit]] and [[admitScored]]:
-    * probes, updates bloom + table state, and returns the batch's
-    * NOVEL fingerprints, localCheckpointed — one evaluation feeds the
-    * bloom delta and the data append (the pre-refactor lazy frame was
-    * evaluated twice). `fps` must be distinct non-null (fp, owner)
-    * rows; owner (nullable) is stored beside each novel fingerprint
-    * and carries the admitScored ownership contract. */
-  private def admitFps(spark: org.apache.spark.sql.SparkSession,
-      fps: DataFrame): DataFrame = {
-    val dataPath = s"$tableRoot/data"
-    val bloomPath = s"$tableRoot/bloom"
-    // Robustness pair used on every internal read: an existence check
-    // (the bloom commits BEFORE the data append, so a crash window can
-    // leave bloom bits with no data path yet) and an EXPLICIT schema
-    // (a first batch of only null-text docs appends zero rows, and a
-    // schema-inference read of the resulting empty directory throws).
-    val hfs = new org.apache.hadoop.fs.Path(dataPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (words == null) {
-      // BEFORE any existence check: a restart inside compact's
-      // generation-swap crash window must restore the surviving
-      // generation, or this open would treat the table as empty and
-      // silently re-admit everything
-      GateOps.recoverGeneration(hfs, tableRoot, "data")
-      GateOps.recoverGeneration(hfs, tableRoot, "bloom")
-      syncLayout(spark)
-      words = Dedup.readNoveltyBloom(spark, bloomPath, bitsCur)
-      val occupied =
-        words.foldLeft(0L)((a, w) => a + java.lang.Long.bitCount(w))
-      if (occupied * 2 > bitsCur) System.err.println(
-        s"[novelty-gate] bloom ${occupied * 100 / bitsCur}% occupied " +
-          s"for $tableRoot — probes degrade to bucket scans; resize " +
-          s"via compact(newBits) or set growBloomFactor")
-    }
-    val dataExists = hfs.exists(new org.apache.hadoop.fs.Path(dataPath))
-    def readData() = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "fp STRING, fp_b STRING"))
-      .parquet(dataPath)
-    // collected-INSET pushdown: Spark's default threshold of 10
-    // degrades larger IN lists to a useless min/max range at the
-    // parquet scan, so raise it — but only to inPushdownLimit, past
-    // which the pushed OR-chain overflows the executor stack (see the
-    // constant's scaladoc); bigger possible-member sets fall back to
-    // range + post-scan InSet with bucket pruning intact. Scoped +
-    // restored.
-    val thrKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val priorThr = spark.conf.getOption(thrKey)
-    spark.conf.set(thrKey, Dedup.inPushdownLimit.toString)
-    val novelCk = try {
-    val might = Dedup.bloomMight(col("fp"), words, bitsCur, k)
-    val pos = fps.filter(might).select(col("fp")).limit(posCap + 1)
-      .collect().map(_.getString(0))
-    val novel: DataFrame =
-      if (pos.isEmpty || !dataExists) fps
-      else if (pos.length <= posCap) {
-        val prefixes = pos.map(_.take(pcCur)).distinct.toSeq
-        val present = readData()
-          .filter(col("fp_b").isin(prefixes: _*))
-          .filter(col("fp").isin(pos.toSeq: _*))
-          .select(col("fp")).collect().map(_.getString(0)).toSeq
-        if (present.isEmpty) fps
-        else fps.filter(!col("fp").isin(present: _*))
-      } else {
-        // dup-heavy fallback: prefixes of the possible-members (a
-        // bounded ≤ 16^prefixChars driver set), then one anti-join
-        // against just those buckets. Evaluated twice below (delta +
-        // data) — two bucket scans on the rare path, accepted.
-        val prefixes = fps.filter(might)
-          .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
-          .collect().map(_.getString(0)).toSeq
-        val known = readData()
-          .filter(col("fp_b").isin(prefixes: _*))
-          .select(col("fp"))
-        fps.filter(might).join(known, Seq("fp"), "left_anti")
-          .union(fps.filter(!might))
-      }
-    // pin once: the delta write, the data append, and the caller's
-    // verdict join all consume this batch-bounded frame (the fallback
-    // branch reads the table it is ABOUT to append to — materializing
-    // before the append also removes that read-after-write ambiguity)
-    val novelPinned = novel.localCheckpoint()
-    val delta = novelPinned
+  /** The bloom words of `fps`' k salted positions at `bitsCur`:
+    * (word_idx, OR of the word's bits). */
+  private def bloomWords(fps: DataFrame): Array[(Long, Long)] =
+    fps
       .select(posexplode(array((0 until k).map(i =>
         Dedup.bloomPos(col("fp"), i, bitsCur)): _*)).as(Seq("i", "pos")))
       .select((col("pos") / 64).cast("long").as("word_idx"),
@@ -1793,31 +2121,83 @@ final class NoveltyGate(tableRoot: String,
       .groupBy(col("word_idx"))
       .agg(expr("bit_or(m)").as("word"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val deltaRows = new java.util.ArrayList[Row]()
-    delta.foreach { case (i, w) => deltaRows.add(Row(i, w)) }
-    spark.createDataFrame(deltaRows,
+
+  private def writeBloom(spark: SparkSession, ws: Seq[(Long, Long)],
+      mode: String, dir: String): Unit = {
+    val rows = new java.util.ArrayList[Row]()
+    ws.foreach { case (i, w) => rows.add(Row(i, w)) }
+    spark.createDataFrame(rows,
         StructType.fromDDL("word_idx BIGINT, word BIGINT"))
       .coalesce(1)
-      .write.mode("append").parquet(bloomPath)
-    delta.foreach { case (i, w) => words(i.toInt) |= w }
-    novelPinned
-      .select(col("fp"), col("owner"),
-        substring(col("fp"), 1, pcCur).as("fp_b"))
-      .repartition(col("fp_b"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("append").partitionBy("fp_b").parquet(dataPath)
-    novelPinned
-    } finally priorThr match {
-      case Some(v) => spark.conf.set(thrKey, v)
-      case None => spark.conf.unset(thrKey)
-    }
-    admitsSinceCompact += 1
-    if (autoCompactEvery > 0 && admitsSinceCompact >= autoCompactEvery) {
-      compact(spark)
-      admitsSinceCompact = 0
-    }
-    novelCk
+      .write.mode(mode).parquet(s"$tableRoot/$dir")
   }
+
+  /** Fingerprint-level core shared by [[admit]] and [[admitScored]]:
+    * probes, updates bloom + table state, and returns the batch's
+    * NOVEL fingerprints, localCheckpointed — one evaluation feeds the
+    * bloom delta and the data append (the pre-refactor lazy frame was
+    * evaluated twice). `fps` must be distinct non-null (fp, owner)
+    * rows; owner (nullable) is stored beside each novel fingerprint
+    * and carries the admitScored ownership contract. */
+  private def admitFps(spark: SparkSession, fps: DataFrame): DataFrame =
+    admitting(spark) { fs =>
+      val dataPath = s"$tableRoot/data"
+      // Robustness pair used on every internal read: an existence check
+      // (the bloom commits BEFORE the data append, so a crash window can
+      // leave bloom bits with no data path yet) and an EXPLICIT schema
+      // (a first batch of only null-text docs appends zero rows, and a
+      // schema-inference read of the resulting empty directory throws).
+      val dataExists = exists(fs, "data")
+      def readData() = spark.read
+        .schema(org.apache.spark.sql.types.StructType.fromDDL(
+          "fp STRING, fp_b STRING"))
+        .parquet(dataPath)
+      // collected-INSET pushdown inside the admit scope (see
+      // StandingGate.admitting); bigger possible-member sets fall back
+      // to range + post-scan InSet with bucket pruning intact
+      val might = Dedup.bloomMight(col("fp"), words, bitsCur, k)
+      val pos = fps.filter(might).select(col("fp")).limit(posCap + 1)
+        .collect().map(_.getString(0))
+      val novel: DataFrame =
+        if (pos.isEmpty || !dataExists) fps
+        else if (pos.length <= posCap) {
+          val prefixes = pos.map(_.take(pcCur)).distinct.toSeq
+          val present = readData()
+            .filter(col("fp_b").isin(prefixes: _*))
+            .filter(col("fp").isin(pos.toSeq: _*))
+            .select(col("fp")).collect().map(_.getString(0)).toSeq
+          if (present.isEmpty) fps
+          else fps.filter(!col("fp").isin(present: _*))
+        } else {
+          // dup-heavy fallback: prefixes of the possible-members (a
+          // bounded ≤ 16^prefixChars driver set), then one anti-join
+          // against just those buckets. Evaluated twice below (delta +
+          // data) — two bucket scans on the rare path, accepted.
+          val prefixes = fps.filter(might)
+            .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
+            .collect().map(_.getString(0)).toSeq
+          val known = readData()
+            .filter(col("fp_b").isin(prefixes: _*))
+            .select(col("fp"))
+          fps.filter(might).join(known, Seq("fp"), "left_anti")
+            .union(fps.filter(!might))
+        }
+      // pin once: the delta write, the data append, and the caller's
+      // verdict join all consume this batch-bounded frame (the fallback
+      // branch reads the table it is ABOUT to append to — materializing
+      // before the append also removes that read-after-write ambiguity)
+      val novelPinned = novel.localCheckpoint()
+      val delta = bloomWords(novelPinned)
+      writeBloom(spark, delta.toSeq, "append", "bloom")
+      delta.foreach { case (i, w) => words(i.toInt) |= w }
+      novelPinned
+        .select(col("fp"), col("owner"),
+          substring(col("fp"), 1, pcCur).as("fp_b"))
+        .repartition(col("fp_b"))
+        .sortWithinPartitions(col("fp"))
+        .write.mode("append").partitionBy("fp_b").parquet(dataPath)
+      novelPinned
+    }
 
   /** The periodic maintenance pass the bucket-count tradeoff note
     * prescribes — run it between admit epochs (it must not race an
@@ -1842,51 +2222,25 @@ final class NoveltyGate(tableRoot: String,
     * bitmap is rebuilt from the rewritten table so the standing gate
     * continues without a reload.
     */
-  def compact(spark: org.apache.spark.sql.SparkSession,
+  def compact(spark: SparkSession,
       newPrefixChars: Option[Int] = None,
-      newBits: Option[Int] = None): Unit = {
-    val dataPath = s"$tableRoot/data"
-    val bloomPath = s"$tableRoot/bloom"
-    val hp = new org.apache.hadoop.fs.Path(dataPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manual compaction on a fresh gate needs the same
-    // swap-crash-window recovery first open through admit gets
-    GateOps.recoverGeneration(fs, tableRoot, "data")
-    GateOps.recoverGeneration(fs, tableRoot, "bloom")
-    if (!fs.exists(hp)) return
-    // a fresh gate compacting an existing table must not silently
-    // narrow previously-widened live geometry (bucket width, bloom
-    // width) back to its constructor defaults — absent explicit
-    // parameters, the persisted values win
-    val mp = new org.apache.hadoop.fs.Path(s"$tableRoot/_layout")
-    val manifest =
-      if (fs.exists(mp)) GateLayout.read(fs, mp)
-      else Map.empty[String, String]
+      newBits: Option[Int] = None): Unit = compacting(spark) { fs =>
+    val hp = new org.apache.hadoop.fs.Path(s"$tableRoot/data")
     if (newPrefixChars.isEmpty) {
-      // directory ground truth first (see syncLayout) — the manifest
-      // can be one crash behind a widening compaction
-      dirWidth(fs).orElse(manifest.get("prefix_chars").map(_.toInt))
+      // every compaction re-derives the live width from disk,
+      // directory ground truth first (see restoreLayout) — the
+      // manifest can be one crash behind a widening compaction
+      val m = layout(fs)
+      dirWidth(fs).orElse(m.flatMap(_.get("prefix_chars")).map(_.toInt))
         .foreach(w => pcCur = w)
     }
-    if (words == null)
-      // marker ground truth first (see syncLayout), then manifest;
-      // both validated — a corrupt value must fail fast here, not be
-      // rebuilt into a freshly-written broken layout
-      GateOps.readMarker(fs, bloomPath, "_bits").map(_.toInt)
-        .orElse(manifest.get("bits").map(_.toInt))
-        .foreach { b =>
-          require(b > 0 && Integer.bitCount(b) == 1,
-            s"persisted bits=$b is not a power of two")
-          bitsCur = b
-        }
     // bloom resize: explicit newBits wins; otherwise the
     // growBloomFactor policy sizes the width to the table (occupied
     // bits ≤ k·n, so k·n·2 ≤ bits keeps occupancy under ~50% — the
     // probe-degradation threshold the load warning names), bounded
     // at 2^28 (32 MB of driver bitmap)
     newBits.foreach { b =>
-      require(b > 0 && Integer.bitCount(b) == 1,
-        "bits must be a power of two")
+      require(isPow2(b), "bits must be a power of two")
       bitsCur = b
     }
     // self-tending width: when the largest bucket's data has outgrown
@@ -1907,7 +2261,7 @@ final class NoveltyGate(tableRoot: String,
     val fps = spark.read
       .schema(org.apache.spark.sql.types.StructType.fromDDL(
         "fp STRING, owner BIGINT, fp_b STRING"))
-      .parquet(dataPath)
+      .parquet(hp.toString)
       .filter(col("fp").isNotNull)
       // exact dedup preserving OWNERSHIP: min skips nulls, so an
       // at-least-once duplicate keeps its owner and pre-owner legacy
@@ -1929,37 +2283,24 @@ final class NoveltyGate(tableRoot: String,
       .write.mode("overwrite").partitionBy("fp_b")
       .parquet(s"$tableRoot/data_tmp")
     val rebuilt = new Array[Long](bitsCur / 64)
-    fps
-      .select(posexplode(array((0 until k).map(i =>
-        Dedup.bloomPos(col("fp"), i, bitsCur)): _*)).as(Seq("i", "pos")))
-      .select((col("pos") / 64).cast("long").as("word_idx"),
-        element_at(Dedup.bitMasksCol, (col("pos") % 64).cast("int") + 1)
-          .as("m"))
-      .groupBy(col("word_idx"))
-      .agg(expr("bit_or(m)").as("word"))
-      .collect().foreach { r =>
-        rebuilt(r.getLong(0).toInt) = r.getLong(1) }
-    val rebuiltRows = new java.util.ArrayList[Row]()
-    rebuilt.zipWithIndex.foreach { case (w, i) =>
-      if (w != 0L) rebuiltRows.add(Row(i.toLong, w)) }
-    spark.createDataFrame(rebuiltRows,
-        StructType.fromDDL("word_idx BIGINT, word BIGINT"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$tableRoot/bloom_tmp")
+    bloomWords(fps).foreach { case (i, w) => rebuilt(i.toInt) = w }
+    writeBloom(spark, rebuilt.zipWithIndex.collect {
+      case (w, i) if w != 0L => (i.toLong, w) }.toSeq,
+      "overwrite", "bloom_tmp")
     // the width marker rides the generation swap (see
-    // GateOps.writeMarker): a crash between the swaps below and the
+    // GateOps.writeMarker): a crash between the swaps and the
     // manifest refresh must not leave the reopened gate reading the
     // rebuilt file at a stale width
     GateOps.writeMarker(fs, s"$tableRoot/bloom_tmp", "_bits",
       bitsCur.toString)
-    GateOps.swapGeneration(fs, tableRoot, "data")
-    GateOps.swapGeneration(fs, tableRoot, "bloom")
-    words = rebuilt
-    pcCur = pc
     // compaction rewrote every artifact at THIS gate's parameters —
-    // refresh the manifest so a restart opens at the new width (and
-    // so compact() on a new-bits gate is the documented resize path)
-    writeLayout(fs)
+    // refresh the manifest once they are live, so a restart opens at
+    // the new width (and compact(newBits) is the resize path)
+    () => {
+      words = rebuilt
+      pcCur = pc
+      writeLayout(fs)
+    }
   }
 }
 
@@ -2090,9 +2431,19 @@ final class NearDupGate(root: String, numHashes: Int = 32,
     bands: Int = 16, shingleSize: Int = 1, minEq: Int = 16,
     bits: Int = 1 << 22, k: Int = Dedup.noveltyBloomK,
     candCap: Int = 100000, bandKeyCap: Int = 0,
-    autoCompactEvery: Int = 0, targetKeyLoad: Int = 0) {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.StructType
+    autoCompactEvery: Int = 0, targetKeyLoad: Int = 0)
+    extends BandedGate(root,
+      index = "bands",
+      indexDDL = "id BIGINT, band INT, band_hash BIGINT, bh_b BIGINT",
+      indexPart = "bh_b", keyDDL = "band INT, band_hash BIGINT",
+      corpus = "sigs", corpusDDL = "id BIGINT, sig ARRAY<BIGINT>",
+      value = Dedup.minhashSignaturePortable(_, numHashes, shingleSize),
+      score = graft.functions.VecOps.arrayEqCount, scoreType = "INT",
+      bestDDL = "best_eq BIGINT", noMatch = lit(0L),
+      threshold = lit(minEq), candCap = candCap,
+      autoCompactEvery = autoCompactEvery) {
+  import org.apache.hadoop.fs.FileSystem
+  import org.apache.spark.sql.{Row, SparkSession}
   require(numHashes % bands == 0, "bands must divide numHashes")
   require(targetKeyLoad >= 0, "targetKeyLoad must be >= 0")
 
@@ -2114,20 +2465,17 @@ final class NearDupGate(root: String, numHashes: Int = 32,
   // (bandKeyCap=0, targetKeyLoad=0) would then inherit the seed
   // forever via tightest-wins restore.
   private var capPolicy: Int = 0
-  // maintenance-policy clock (the NoveltyGate protocol): each admit
-  // appends one file per touched band bucket, one sigs file, and one
-  // verdicts file, so listings degrade O(batches) between epochs —
-  // autoCompactEvery > 0 runs [[compact]] synchronously after every
-  // N-th admit, bounding that at O(N) without ever racing an admit.
-  private var admitsSinceCompact: Int = 0
 
-  /** Validate the signature shape against the layout manifest at
-    * first open (a numHashes/bands/shingleSize mismatch against
-    * stored sigs+bands is a silent false-negative factory — stored
-    * and fresh signatures would never agree); adopt manifest-less
-    * tables. `bits`/`k` deliberately NOT pinned: the bitmap is
-    * in-memory only, rebuilt from the bands table at construction
-    * through the CURRENT geometry, so resizing it is free here.
+  protected def opened: Boolean = words != null
+  protected def keyCap: Int = capCur
+  protected def autoCompact(spark: SparkSession): Unit = compact(spark)
+
+  /** The signature shape is pinned (a numHashes/bands/shingleSize
+    * mismatch against stored sigs+bands is a silent false-negative
+    * factory — stored and fresh signatures would never agree).
+    * `bits`/`k` deliberately NOT pinned: the bitmap is in-memory only,
+    * rebuilt from the bands table at first open through the CURRENT
+    * geometry, so resizing it is free here.
     *
     * The VERDICT table's schema generation is pinned too
     * ([[GateOps.verdictSchemaVersion]]): a pre-versioning manifest is
@@ -2136,53 +2484,42 @@ final class NearDupGate(root: String, numHashes: Int = 32,
     * on-disk version — files written by a newer generation of this
     * code — fails fast instead of this reader silently truncating
     * columns it does not know. */
-  private def syncLayout(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$root/_layout")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val expect = Seq("num_hashes" -> numHashes.toString,
+  protected def pins: Seq[(String, String)] =
+    Seq("num_hashes" -> numHashes.toString,
       "bands" -> bands.toString, "shingle_size" -> shingleSize.toString,
       "verdict_schema" -> GateOps.verdictSchemaVersion)
-    if (fs.exists(mp)) {
-      val m = GateLayout.read(fs, mp)
-      GateLayout.check(m, root, expect)
-      // band_key_cap is LIVE maintenance state (the pcCur/rbCur
-      // discipline), never fail-fast checked: a targetKeyLoad policy
-      // engagement in a previous process must survive the restart, or
-      // the gate silently runs uncapped until its next compaction.
-      // Tightest-wins against the constructor seed — an explicit
-      // bandKeyCap can only be tightened by the persisted policy
-      // value, never loosened by it.
-      m.get("band_key_cap").flatMap(_.toIntOption)
-        .filter(_ > 0).foreach { c =>
-          // the LIVE cap tightest-wins against the constructor seed;
-          // the POLICY state is the manifest's own value, carried
-          // forward unchanged by later refreshes (a seed may tighten
-          // this process's behavior, never the table's record)
-          capCur = if (capCur > 0) math.min(capCur, c) else c
-          capPolicy = c
-        }
-      if (!m.contains("verdict_schema"))
-        writeLayout(fs, mp)
-    } else writeLayout(fs, mp)
+
+  /** band_key_cap is LIVE maintenance state (the pcCur/rbCur
+    * discipline), never fail-fast checked: a targetKeyLoad policy
+    * engagement in a previous process must survive the restart, or
+    * the gate silently runs uncapped until its next compaction. The
+    * LIVE cap is tightest-wins against the constructor seed (an
+    * explicit bandKeyCap can only be tightened by the persisted
+    * policy value, never loosened by it); the POLICY state is the
+    * manifest's own value, carried forward unchanged by later
+    * refreshes (a seed may tighten this process's behavior, never
+    * the table's record). */
+  protected def restoreLayout(fs: FileSystem,
+      m: Option[Map[String, String]]): Boolean = {
+    m.flatMap(_.get("band_key_cap")).flatMap(_.toIntOption)
+      .filter(_ > 0).foreach { c =>
+        capCur = if (capCur > 0) math.min(capCur, c) else c
+        capPolicy = c
+      }
+    m.forall(!_.contains("verdict_schema"))
   }
 
-  /** Manifest refresh: the fail-fast geometry plus the live cap —
-    * persisted ONLY when it is policy state (a targetKeyLoad
-    * engagement, now or in a prior process), never the constructor
-    * seed: an absent key means "no engagement on record", so exact-
-    * mode reopens stay exact and a one-off explicit bandKeyCap does
-    * not become irreversible table state. */
-  private def writeLayout(fs: org.apache.hadoop.fs.FileSystem,
-      mp: org.apache.hadoop.fs.Path): Unit =
-    GateLayout.write(fs, mp,
-      Seq("num_hashes" -> numHashes.toString,
-        "bands" -> bands.toString,
-        "shingle_size" -> shingleSize.toString,
-        "verdict_schema" -> GateOps.verdictSchemaVersion) ++
-        (if (capPolicy > 0)
-           Seq("band_key_cap" -> capPolicy.toString)
-         else Seq.empty))
+  /** Manifest refresh: the pins plus the live cap — persisted ONLY
+    * when it is policy state (a targetKeyLoad engagement, now or in a
+    * prior process), never the constructor seed: an absent key means
+    * "no engagement on record", so exact-mode reopens stay exact and
+    * a one-off explicit bandKeyCap does not become irreversible table
+    * state. */
+  protected def writeLayout(fs: FileSystem): Unit =
+    GateLayout.write(fs, new org.apache.hadoop.fs.Path(s"$root/_layout"),
+      pins ++ (if (capPolicy > 0)
+          Seq("band_key_cap" -> capPolicy.toString)
+        else Seq.empty))
 
   private def bhPosCol(bh: Column, i: Int): Column =
     xxhash64(lit(i), bh).bitwiseAND(lit((bits - 1).toLong))
@@ -2190,46 +2527,109 @@ final class NearDupGate(root: String, numHashes: Int = 32,
   private def bhPos(bh: Long, i: Int): Long =
     NearDupGate.bhPosDriver(bh, i) & (bits - 1).toLong
 
-  private def mightContain(bh: Long): Boolean =
+  protected def mightHold(key: Row): Boolean =
     (0 until k).forall { i =>
-      val pos = bhPos(bh, i)
+      val pos = bhPos(key.getLong(0), i)
       (words((pos >> 6).toInt) & (1L << (pos & 63))) != 0L
     }
 
-  private def fold(bh: Long): Unit =
+  protected def remember(key: Row): Unit =
     (0 until k).foreach { i =>
-      val pos = bhPos(bh, i)
+      val pos = bhPos(key.getLong(0), i)
       words((pos >> 6).toInt) |= (1L << (pos & 63))
     }
 
-  private def banded(df: DataFrame): DataFrame =
+  // the bloom tests band hashes alone
+  override protected def probeCols: Seq[String] = Seq("band_hash")
+
+  protected def keyed(batch: DataFrame): DataFrame =
     // `_keys` (the doc's full band-hash array) rides along so the
     // uncapped self-probe can emit each candidate pair exactly once —
     // at the pair's FIRST colliding band — instead of once per
     // colliding band followed by a distinct over the (quadratic on a
-    // template clique) pair volume
-    df.select(col("id"), col("sig"),
+    // template clique) pair volume. A null signature has null band
+    // hashes.
+    batch.select(col("id"), col("sig"),
         transform(sequence(lit(0), lit(bands - 1)),
           b => Dedup.bandHashExpr(col("sig"), b, lit(rows)))
           .as("_keys"))
       .select(col("id"), col("sig"), col("_keys"),
         posexplode(col("_keys")).as(Seq("band", "band_hash")))
+      .filter(col("band_hash").isNotNull)
 
-  private def emptyPairs(spark: org.apache.spark.sql.SparkSession) =
-    spark.createDataFrame(new java.util.ArrayList[Row](),
-      StructType.fromDDL("id BIGINT, cid BIGINT, n_eq INT"))
+  override protected def indexRows(keys: DataFrame): DataFrame =
+    keys.select(col("id"), col("band"), col("band_hash"),
+      col("band_hash").bitwiseAND(lit(15L)).as("bh_b"))
+
+  /** Possible-colliding hashes (bounded by candCap) prune the index
+    * read twice over: directory pruning on the low-4-bit bucket, then
+    * a pushed band_hash INSET that parquet row-group stats on the
+    * sorted files resolve below bucket granularity. Past candCap the
+    * index is scanned — the dup-heavy shape where scanning is the
+    * right plan — and, with the cap on, restricted to the batch's own
+    * keys (broadcast semi-join) BEFORE ranking: otherwise the cap
+    * would rank, and report shed for, every hot key in the whole
+    * index rather than the ones this batch probes. */
+  protected def indexRead(spark: SparkSession, pos: Seq[Row],
+      bandKeys: DataFrame): DataFrame = {
+    val hashes = pos.map(_.getLong(0))
+    val idx = readIndex(spark)
+    if (hashes.length <= candCap)
+      idx.filter(col("bh_b").isin(hashes.map(_ & 15L).distinct: _*))
+        .filter(col("band_hash").isin(hashes: _*))
+    else if (capCur > 0)
+      idx.join(bandKeys.select(col("band"), col("band_hash")).distinct(),
+        Seq("band", "band_hash"), "left_semi")
+    else idx
+  }
+
+  /** Uncapped self-probe: the template-clique shape makes the
+    * all-bands pair volume quadratic (sf0.1 fixture: 79M join rows
+    * collapsing to 12.1M distinct pairs through a full hash
+    * aggregation). Emit each pair exactly ONCE instead — at its FIRST
+    * colliding band — via a codegen'd element_at chain over the
+    * band-key arrays both sides already carry (a pair at band b is
+    * kept iff no band b' < b had equal keys; higher-order functions
+    * are deliberately avoided here — ArrayExists/ZipWith don't
+    * codegen and interpret ~16x slower on this volume), and score it
+    * inline from the sigs riding the same join, so neither the
+    * distinct exchange nor the two pair-level sig joins exist. Result
+    * multiset is identical by construction: every colliding pair has
+    * exactly one minimal band. The capped path keeps the shared
+    * distinct shape — its candidate set is "per-KEY rank ≤ cap",
+    * where a pair shed from its minimal band can legitimately survive
+    * via a later band, so first-band emission would change the
+    * (oracle-pinned) capped semantics. */
+  override protected def selfProbe(keyRows: DataFrame,
+      bandKeys: DataFrame, selfCand: DataFrame, batchVals: DataFrame,
+      maybeBroadcast: DataFrame => DataFrame): DataFrame =
+    if (capCur > 0)
+      super.selfProbe(keyRows, bandKeys, selfCand, batchVals,
+        maybeBroadcast)
+    else {
+      val firstBand = (0 until bands - 1).map { i =>
+        (col("q.band") <= i) ||
+          !(element_at(col("q._keys"), i + 1) <=>
+            element_at(col("c._keys"), i + 1))
+      }.reduce(_ && _)
+      keyRows.as("q")
+        .join(maybeBroadcast(keyRows).as("c"),
+          col("q.band") === col("c.band") &&
+            col("q.band_hash") === col("c.band_hash") &&
+            col("c.id") < col("q.id"))
+        .filter(firstBand)
+        .select(col("q.id").as("id"), col("c.id").as("cid"),
+          graft.functions.VecOps.arrayEqCount(
+            col("q.sig"), col("c.sig")).as("score"))
+    }
 
   /** Rebuild the bitmap from the bands table — one aggregation over
     * the distinct stored hashes, folded through the IN-PLAN position
     * expression (the driver replica's parity partner). */
-  private def initBloom(spark: org.apache.spark.sql.SparkSession,
-      bandsPath: String, bandsExist: Boolean): Unit = {
+  protected def load(spark: SparkSession, fs: FileSystem): Unit = {
     words = new Array[Long](bits / 64)
-    if (!bandsExist) return
-    spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "id BIGINT, band INT, band_hash BIGINT, bh_b BIGINT"))
-      .parquet(bandsPath)
+    if (!exists(fs, "bands")) return
+    readIndex(spark)
       .select(col("band_hash")).distinct()
       .select(posexplode(array((0 until k).map(i =>
         bhPosCol(col("band_hash"), i)): _*)).as(Seq("i", "pos")))
@@ -2260,332 +2660,13 @@ final class NearDupGate(root: String, numHashes: Int = 32,
       textCol: String): DataFrame =
     runAdmit(batch, idCol, textCol, pin = true)
 
-  private def runAdmit(batch: DataFrame, idCol: String,
-      textCol: String, pin: Boolean): DataFrame = {
-    val spark = batch.sparkSession
-    // The pruned index/sig reads rely on pushing a collected INSET of
-    // band hashes / candidate ids into the parquet scan so row-group
-    // stats on the sorted files can skip; Spark only pushes IN
-    // filters up to this threshold (default 10 — above it the filter
-    // degrades to a min/max range, useless for scattered hashes).
-    // Raised to inPushdownLimit, NOT candCap: the pushed form is a
-    // recursive OR-chain that overflows the executor stack past ~1.2k
-    // values (the constant's scaladoc has the measurement) — larger
-    // candidate sets keep the range + post-scan InSet plan. Scoped to
-    // the admit call and restored after.
-    val thrKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val priorThr = spark.conf.getOption(thrKey)
-    spark.conf.set(thrKey, Dedup.inPushdownLimit.toString)
-    val verdicts = try admitInner(batch, idCol, textCol, pin)
-    finally priorThr match {
-      case Some(v) => spark.conf.set(thrKey, v)
-      case None => spark.conf.unset(thrKey)
-    }
-    admitsSinceCompact += 1
-    if (autoCompactEvery > 0 && admitsSinceCompact >= autoCompactEvery) {
-      compact(spark)
-      admitsSinceCompact = 0
-    }
-    verdicts
-  }
-
-  private def admitInner(batch: DataFrame, idCol: String,
-      textCol: String, pin: Boolean): DataFrame = {
-    val spark = batch.sparkSession
-    val bandsPath = s"$root/bands"
-    val sigsPath = s"$root/sigs"
-    val hadoopFs = new org.apache.hadoop.fs.Path(bandsPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (words == null) {
-      // BEFORE the existence checks: a restart inside compact's
-      // generation-swap crash window (live dir at neither cur nor
-      // _tmp) must restore the surviving generation, or the bloom
-      // would rebuild empty and every stored doc silently re-admit
-      Seq("bands", "sigs", "verdicts")
-        .foreach(GateOps.recoverGeneration(hadoopFs, root, _))
-      syncLayout(spark)
-      initBloom(spark, bandsPath,
-        hadoopFs.exists(new org.apache.hadoop.fs.Path(bandsPath)))
-    }
-    val bandsExist =
-      hadoopFs.exists(new org.apache.hadoop.fs.Path(bandsPath))
-    // guarded independently of bandsExist: a crash between the
-    // first-ever bands append and the sigs append leaves bands
-    // present but sigs missing — on restart the bloom rebuilds from
-    // bands, every replayed doc is bloom-positive, and an unguarded
-    // sigs read would throw on every retry, permanently wedging the
-    // stream. The empty typed frame scores those candidates absent
-    // (n_eq never computed → novel), which the replayed append then
-    // heals.
-    val sigsExist =
-      hadoopFs.exists(new org.apache.hadoop.fs.Path(sigsPath))
-    // consumed several times (hash collect, both probe sides, verdict
-    // base, appends) — pin the signatures once; bounded by the batch.
-    // The id-keyed dedup REPLACES the round-robin parallelism shuffle
-    // (one exchange either way, hash-partitioned instead): a batch
-    // carrying the same id twice (upstream at-least-once duplication
-    // inside one batch) would otherwise double every pair in the
-    // scoring joins and emit two verdict rows for that id. The
-    // EXPLICIT width matters: a bare dropDuplicates lets AQE coalesce
-    // the small post-aggregation shuffle to ONE partition, and the
-    // checkpoint freezes that — every downstream probe-join OUTPUT
-    // then streams single-core (measured: the 5.9 s admit at 44 s).
-    // A user-specified repartition width is exempt from coalescing
-    // and already satisfies the aggregate's distribution, so the
-    // dedup adds no second exchange.
-    val batchSigs = GateOps.dedupAtWidth(batch
-        .select(col(idCol).as("id"), col(textCol).as("t")), "id")
-      .select(col("id"), Dedup.minhashSignaturePortable(
-        col("t"), numHashes, shingleSize).as("sig"))
-      .localCheckpoint()
-    // Broadcast the batch side by MEASURED count, not planner stats:
-    // a localCheckpoint inherits its ORIGIN plan's size estimate, and
-    // a join-shaped origin (the curate chain's survivor frames)
-    // overestimates by multiplied selectivities (measured: 5 MB
-    // estimated as 16.6 GB) — the static planner then refuses the
-    // broadcast, AQE cannot re-plan a LogicalRDD leaf, and every
-    // probe join degrades to sort-merge with skew-hot band keys
-    // (measured: 38 s vs 4.7 s for the identical admit). The count is
-    // ~free on the checkpointed rows; a degenerate huge admit keeps
-    // the shuffle-join plan instead of OOMing the driver.
-    val smallBatch = batchSigs.count() <= GateOps.broadcastRowCap
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
-    val batchBands = banded(batchSigs).filter(col("band_hash").isNotNull)
-    val bandKeys = batchBands.select(col("id"), col("band"), col("band_hash"))
-    val hashes = batchBands.select(col("band_hash")).distinct()
-      .collect().map(_.getLong(0))
-    val posHashes = hashes.filter(mightContain).toSeq
-    def emptyKeys = spark.createDataFrame(new java.util.ArrayList[Row](),
-      StructType.fromDDL("band INT, band_hash BIGINT"))
-    // per-band-key candidate truncation (cap on): the shared
-    // GateOps.capPerKey earliest-seen rank, cheap on the common
-    // (bucket-+-INSET-pruned) path; on the dup-heavy full-scan
-    // fallback it costs one band-keyed shuffle of the index — the
-    // shape the cap exists for.
-    def capPerKey(cand: DataFrame): (DataFrame, DataFrame) =
-      if (capCur <= 0) (cand, emptyKeys)
-      else GateOps.capPerKey(cand, Seq("band", "band_hash"), "id",
-        capCur)
-    val (crossScored, crossCapped): (DataFrame, DataFrame) =
-      if (posHashes.isEmpty || !bandsExist) (emptyPairs(spark), emptyKeys)
-      else {
-        val idx0 = spark.read
-          .schema(org.apache.spark.sql.types.StructType.fromDDL(
-            "id BIGINT, band INT, band_hash BIGINT, bh_b BIGINT"))
-          .parquet(bandsPath)
-        val idx =
-          if (posHashes.length <= candCap) {
-            val buckets = posHashes.map(h => h & 15L).distinct
-            idx0.filter(col("bh_b").isin(buckets: _*))
-              .filter(col("band_hash").isin(posHashes: _*))
-          } else idx0 // dup-heavy fallback: scan the index
-        // "earlier-seen" for the cross probe = IN THE INDEX AND NOT
-        // OF THIS BATCH, not smaller-id: an id guard (c.id < q.id)
-        // would encode arrival order as id order, which the file
-        // source does not promise — a later-arriving smaller-id doc
-        // would silently never match its earlier-seen larger-id
-        // near-dup. Excluding the batch's own ids keeps an
-        // at-least-once replay harmless (a replayed batch finds its
-        // own and its batchmates' bands in the index; the anti-join
-        // removes exactly those), and it runs BEFORE the per-key cap
-        // so replayed own rows never consume cap slots — otherwise
-        // the kept set, and hence the verdicts, would differ between
-        // the original run and its replay. Under id-ordered arrival
-        // the guards coincide, which is why the id-ordered oracle
-        // still replays these verdicts exactly.
-        val idxOthers = idx.join(batchSigs.select(col("id")),
-          Seq("id"), "left_anti")
-        // on the fallback path, restrict to the batch's own keys
-        // (broadcast semi-join) BEFORE ranking — otherwise the cap
-        // would rank, and report shed for, every hot key in the whole
-        // index rather than the ones this batch probes
-        val (idxCand, capped) =
-          if (capCur > 0 && posHashes.length > candCap)
-            capPerKey(idxOthers.join(
-              bandKeys.select(col("band"), col("band_hash")).distinct(),
-              Seq("band", "band_hash"), "left_semi"))
-          else capPerKey(idxOthers)
-        val pairs = maybeBroadcast(bandKeys).as("q").join(idxCand.as("c"),
-            col("q.band") === col("c.band") &&
-              col("q.band_hash") === col("c.band_hash"))
-          .select(col("q.id").as("id"), col("c.id").as("cid"))
-          .distinct()
-          // pinned: consumed by the cid collect AND the scoring join,
-          // and bounded by candCap·batch collisions in the common path
-          .localCheckpoint()
-        val cids = pairs.select(col("cid")).distinct()
-          .limit(candCap + 1).collect().map(_.getLong(0))
-        def readSigs() =
-          if (sigsExist) spark.read
-            .schema(org.apache.spark.sql.types.StructType.fromDDL(
-              "id BIGINT, sig ARRAY<BIGINT>"))
-            .parquet(sigsPath)
-          else spark.createDataFrame(new java.util.ArrayList[Row](),
-            StructType.fromDDL("id BIGINT, sig ARRAY<BIGINT>"))
-        // dropDuplicates carries the at-least-once contract that the
-        // pair-level re-dedup used to: a replayed admit appends its
-        // sigs AGAIN, and a duplicated sig row would double every
-        // matching pair in the scoring join. The dedup is scoped to
-        // CANDIDATE rows on both branches (the over-cap fallback
-        // semi-joins against the collected pairs first) — never a
-        // full-corpus aggregation of signature arrays.
-        val corpusSigs =
-          (if (cids.length <= candCap)
-            readSigs().filter(col("id").isin(cids.toSeq: _*))
-          else readSigs().join(
-            pairs.select(col("cid").as("id")).distinct(),
-            Seq("id"), "left_semi"))
-          .dropDuplicates("id")
-        (pairs
-          .join(corpusSigs.toDF("cid", "csig"), "cid")
-          .join(maybeBroadcast(batchSigs.toDF("id", "qsig")), "id")
-          .select(col("id"), col("cid"),
-            graft.functions.VecOps.arrayEqCount(col("qsig"), col("csig"))
-              .as("n_eq")),
-          capped)
-      }
-    // pairs-first, then score: only (id, cid) moves through the band
-    // join (not two 32-long sig arrays per colliding row), and the
-    // signature compare runs once per DISTINCT pair instead of up to
-    // `bands` times. On a template-heavy batch the dominant cost is
-    // the pair VOLUME itself (the sf0.1 fixture: 80k band rows over
-    // ~840 distinct hashes → millions of mutual near-dup candidates —
-    // work the exact per-doc verdict semantics genuinely require; a
-    // recall-trading bucket cap like minhashCandidatePairs' is the
-    // knob if a deployment wants to shed it).
-    // self-probe candidate side runs through the same per-key cap:
-    // the kept rows are the key's smallest ids, so every kept
-    // candidate still precedes any over-cap query doc (the c.id <
-    // q.id guard keeps exact in-batch order among them)
-    val (selfCand, selfCapped) = capPerKey(bandKeys)
-    // Uncapped self-probe: the template-clique shape makes the
-    // all-bands pair volume quadratic (sf0.1 fixture: 79M join rows
-    // collapsing to 12.1M distinct pairs through a full hash
-    // aggregation). Emit each pair exactly ONCE instead — at its
-    // FIRST colliding band — via a codegen'd element_at chain over
-    // the band-key arrays both sides already carry (a pair at band b
-    // is kept iff no band b' < b had equal keys; higher-order
-    // functions are deliberately avoided here — ArrayExists/ZipWith
-    // don't codegen and interpret ~16x slower on this volume), and
-    // score it inline from the sigs riding the same join, so neither
-    // the distinct exchange nor the two pair-level sig joins exist.
-    // Result multiset is identical by construction: every colliding
-    // pair has exactly one minimal band. The capped path keeps the
-    // distinct shape — its candidate set is "per-KEY rank ≤ cap",
-    // where a pair shed from its minimal band can legitimately
-    // survive via a later band, so first-band emission would change
-    // the (oracle-pinned) capped semantics.
-    val internal =
-      if (capCur <= 0) {
-        val firstBand = (0 until bands - 1).map { i =>
-          (col("q.band") <= i) ||
-            !(element_at(col("q._keys"), i + 1) <=>
-              element_at(col("c._keys"), i + 1))
-        }.reduce(_ && _)
-        batchBands.as("q")
-          .join(maybeBroadcast(batchBands).as("c"),
-            col("q.band") === col("c.band") &&
-              col("q.band_hash") === col("c.band_hash") &&
-              col("c.id") < col("q.id"))
-          .filter(firstBand)
-          .select(col("q.id").as("id"), col("c.id").as("cid"),
-            graft.functions.VecOps.arrayEqCount(
-              col("q.sig"), col("c.sig")).as("n_eq"))
-      } else bandKeys.as("q")
-        .join(maybeBroadcast(selfCand).as("c"),
-          col("q.band") === col("c.band") &&
-            col("q.band_hash") === col("c.band_hash") &&
-            col("c.id") < col("q.id"))
-        .select(col("q.id").as("id"), col("c.id").as("cid"))
-        .distinct()
-        .join(maybeBroadcast(batchSigs.toDF("cid", "csig")), "cid")
-        .join(maybeBroadcast(batchSigs.toDF("id", "qsig")), "id")
-        .select(col("id"), col("cid"),
-          graft.functions.VecOps.arrayEqCount(col("qsig"), col("csig"))
-            .as("n_eq"))
-    // cross (cid NOT of this batch, by the pre-cap anti-join) and
-    // internal (cid of this batch) are DISJOINT by construction, and
-    // each side is already pair-distinct — so the union needs no
-    // (id, cid) re-dedup pass before the per-doc rollup (dropping it
-    // removes one full hash aggregation over the candidate-pair
-    // volume, the plan's largest intermediate)
-    val matches = crossScored.unionByName(internal)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cands"), max(col("n_eq")).as("best_eq"))
-    // shed REPORTING (never silent): n_capped_keys = how many of this
-    // doc's band keys had their candidate list truncated — 0 when the
-    // cap is off or never fired, so the uncapped verdict shape is a
-    // strict subset
-    val nCapped = bandKeys
-      .join(crossCapped.unionByName(selfCapped).distinct(),
-        Seq("band", "band_hash"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_capped_keys"))
-    // pinned only for admitScored (batch-bounded): consumed by the
-    // table append AND the caller's stage joins
-    val verdicts0 = batchSigs.select(col("id"))
-      .join(matches, Seq("id"), "left")
-      .join(nCapped, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n_cands"), lit(0L)).as("n_cands"),
-        coalesce(col("best_eq"), lit(0L)).as("best_eq"),
-        coalesce(col("n_capped_keys"), lit(0L)).as("n_capped_keys"))
-      .withColumn("is_neardup", (col("best_eq") >= minEq).cast("int"))
-      .select(col("id"), col("n_cands"), col("best_eq"),
-        col("is_neardup"), col("n_capped_keys"))
-    val verdicts = if (pin) verdicts0.localCheckpoint() else verdicts0
-    verdicts.write.mode("append").parquet(s"$root/verdicts")
-    hashes.foreach(fold)
-    // a batch of only null-text docs has no bands and no non-null
-    // sigs (a non-null signature always yields non-null band hashes);
-    // skipping the appends avoids creating EMPTY table directories a
-    // later schema read or restart rebuild would otherwise hit
-    if (hashes.nonEmpty) {
-      batchBands
-        .select(col("id"), col("band"), col("band_hash"),
-          col("band_hash").bitwiseAND(lit(15L)).as("bh_b"))
-        .repartition(col("bh_b"))
-        .sortWithinPartitions(col("band_hash"))
-        .write.mode("append").partitionBy("bh_b").parquet(bandsPath)
-      batchSigs.filter(col("sig").isNotNull)
-        .coalesce(1).sortWithinPartitions(col("id"))
-        .write.mode("append").parquet(sigsPath)
-    }
-    verdicts
-  }
-
-  /** Epoch maintenance, mirroring [[NoveltyGate.compact]]: rewrite
-    * the band index to one band_hash-sorted, exactly-deduplicated
-    * file per bucket, the sig table to one id-sorted file, and the
-    * verdicts table to one id-sorted deduplicated file — the
-    * at-least-once decay (replayed-batch duplicate rows) repaired and
-    * the per-batch file accumulation collapsed, so probe-time
-    * listings stay O(buckets). The cached bloom needs NO rebuild:
-    * deduplication cannot change the distinct band-hash set. Run
-    * between admit epochs (must not race an admit — the
-    * `autoCompactEvery` policy satisfies this by running inside the
-    * admit turn); crash-ordered tmp/old swaps leave either generation
-    * intact, never neither.
-    */
-  def compact(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val bandsPath = s"$root/bands"
-    val sigsPath = s"$root/sigs"
-    val hp = new org.apache.hadoop.fs.Path(bandsPath)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manual compaction on a fresh gate needs the swap-crash-window
-    // recovery the admit-time first open gets
-    Seq("bands", "sigs", "verdicts")
-      .foreach(GateOps.recoverGeneration(fs, root, _))
-    if (!fs.exists(hp)) return
-    // a MANUAL compact on a fresh gate object must restore the live
-    // cap (and run the fail-fast geometry check) the admit-time first
-    // open would have — otherwise the policy below could re-engage
-    // from the constructor seed instead of the persisted state
-    if (words == null) syncLayout(spark)
-    val distinctBands = spark.read
-      .schema(StructType.fromDDL(
-        "id BIGINT, band INT, band_hash BIGINT, bh_b BIGINT"))
-      .parquet(bandsPath)
+  /** Epoch maintenance, mirroring [[NoveltyGate.compact]] through the
+    * shared [[BandedGate]] compaction: the band index rewrites to one
+    * band_hash-sorted, exactly-deduplicated file per bucket. The
+    * cached bloom needs NO rebuild: deduplication cannot change the
+    * distinct band-hash set. */
+  def compact(spark: SparkSession): Unit = compactBanded(spark) { fs =>
+    val distinctBands = readIndex(spark)
       .select(col("id"), col("band"), col("band_hash")).distinct()
       // pinned: consumed by the rewrite AND (policy on) the hot-key
       // load measurement, and the source dirs are about to be swapped
@@ -2612,7 +2693,7 @@ final class NearDupGate(root: String, numHashes: Int = 32,
       if (maxLoad > targetKeyLoad) {
         // monotone policy tightening: a later engagement never
         // loosens what an earlier one (possibly another process's,
-        // restored above) put on record. The live cap stays
+        // restored at open) put on record. The live cap stays
         // tightest-wins against the seed.
         capPolicy =
           if (capPolicy > 0) math.min(capPolicy, targetKeyLoad)
@@ -2625,49 +2706,11 @@ final class NearDupGate(root: String, numHashes: Int = 32,
             s"(> targetKeyLoad=$targetKeyLoad) for $root — engaging " +
             s"bandKeyCap=$capPolicy (live cap $capCur); shed is " +
             "reported per-verdict in n_capped_keys")
-        writeLayout(fs, new org.apache.hadoop.fs.Path(s"$root/_layout"))
+        writeLayout(fs)
       }
     }
-    distinctBands
-      .withColumn("bh_b", col("band_hash").bitwiseAND(lit(15L)))
-      .repartition(col("bh_b"))
-      .sortWithinPartitions(col("band_hash"))
-      .write.mode("overwrite").partitionBy("bh_b")
-      .parquet(s"$root/bands_tmp")
-    // guarded like admit's sigs read: the bands-present/sigs-missing
-    // crash window must not wedge an auto-compaction fired from a
-    // replayed admit
-    val sigsExistC =
-      fs.exists(new org.apache.hadoop.fs.Path(sigsPath))
-    if (sigsExistC) spark.read
-      .schema(StructType.fromDDL("id BIGINT, sig ARRAY<BIGINT>"))
-      .parquet(sigsPath)
-      .dropDuplicates("id")
-      .coalesce(1).sortWithinPartitions(col("id"))
-      .write.mode("overwrite").parquet(s"$root/sigs_tmp")
-    // verdicts accumulate one file per batch too — collapse them to
-    // one id-sorted file, with distinct() absorbing at-least-once
-    // replays (a replayed batch rewrites identical verdict rows).
-    // Guarded: a gate that only ever saw empty batches has no
-    // verdicts directory.
-    val vp = new org.apache.hadoop.fs.Path(s"$root/verdicts")
-    val verdictsExist = fs.exists(vp)
-    if (verdictsExist) spark.read
-      .schema(StructType.fromDDL(
-        "id BIGINT, n_cands BIGINT, best_eq BIGINT, is_neardup INT, " +
-          "n_capped_keys BIGINT"))
-      .parquet(s"$root/verdicts")
-      // pre-n_capped_keys files read as null under the explicit
-      // schema — normalize to 0 (the no-shed value) so the rewrite
-      // is uniform
-      .withColumn("n_capped_keys",
-        coalesce(col("n_capped_keys"), lit(0L)))
-      .distinct()
-      .coalesce(1).sortWithinPartitions(col("id"))
-      .write.mode("overwrite").parquet(s"$root/verdicts_tmp")
-    GateOps.swapGeneration(fs, root, "bands")
-    if (sigsExistC) GateOps.swapGeneration(fs, root, "sigs")
-    if (verdictsExist) GateOps.swapGeneration(fs, root, "verdicts")
+    writeIndex(distinctBands, "overwrite", "bands_tmp")
+    () => ()
   }
 }
 

@@ -175,6 +175,22 @@ object MergeOps {
     fs.delete(retired, true)
   }
 
+  /** The partition values a month-scoped merge may swap: non-null, and
+    * plain `[A-Za-z0-9._-]` — the swap matches directories BY NAME
+    * ("col=value"), so values must round-trip through Hive
+    * partition-path escaping unchanged. Checked before anything is
+    * written. */
+  private def requireMonthValues(partCol: String,
+      values: Seq[String]): Unit = {
+    require(!values.contains(null),
+      s"$partCol must be non-null for a partition-scoped merge — " +
+        "coalesce to a sentinel month (e.g. '0000-00') first")
+    values.find(!_.matches("[A-Za-z0-9._-]+")).foreach(bad =>
+      throw new IllegalArgumentException(
+        s"partition value '$bad' needs path escaping — month values " +
+          "must be plain [A-Za-z0-9._-] strings"))
+  }
+
   /** The month-directory swap machinery shared by the partition-scoped
     * merge and the cross-month reconcile: sibling staging/retired
     * roots, orphan recovery, and the per-month two-rename activation.
@@ -223,21 +239,17 @@ object MergeOps {
       MergeOps.recoverReshard(fs, dest)
       if (fs.exists(retiredRoot)) {
         if (fs.exists(unitsMarker)) {
-          val in = fs.open(unitsMarker)
-          val units =
-            try scala.io.Source.fromInputStream(in, "UTF-8")
-              .getLines().filter(_.nonEmpty).toList
-            finally in.close()
-          units.foreach { rel =>
-            val retired = new Path(retiredRoot, rel)
-            val live = new Path(dest, rel)
-            if (fs.exists(retired) && !fs.exists(live)) {
-              fs.mkdirs(live.getParent)
-              if (!fs.rename(retired, live))
-                throw new java.io.IOException(
-                  s"found orphaned $retired but could not restore it to $live")
+          GateLayout.readText(fs, unitsMarker).linesIterator
+            .filter(_.nonEmpty).foreach { rel =>
+              val retired = new Path(retiredRoot, rel)
+              val live = new Path(dest, rel)
+              if (fs.exists(retired) && !fs.exists(live)) {
+                fs.mkdirs(live.getParent)
+                if (!fs.rename(retired, live))
+                  throw new java.io.IOException(
+                    s"found orphaned $retired but could not restore it to $live")
+              }
             }
-          }
         } else
           // pre-marker on-disk state (or a crash before the marker's
           // atomic rename landed — in which case no unit was swapped
@@ -279,17 +291,11 @@ object MergeOps {
     def activateDirs(dirs: Seq[String]): Unit = {
       fs.mkdirs(dest)
       // record the swap units BEFORE the first rename (write-then-
-      // atomic-rename, same crash discipline as GateLayout.write —
+      // atomic-rename, GateLayout.writeAtomic —
       // raw lines, since the rel paths themselves contain '=') so a
       // crash at ANY later point recovers at this swap's granularity
       fs.mkdirs(retiredRoot)
-      val tmp = new Path(retiredRoot, "_swap_units_tmp")
-      val out = fs.create(tmp, true)
-      try out.write(dirs.mkString("\n").getBytes("UTF-8"))
-      finally out.close()
-      org.apache.hadoop.fs.FileContext
-        .getFileContext(fs.getUri, fs.getConf)
-        .rename(tmp, unitsMarker, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      GateLayout.writeAtomic(fs, unitsMarker, dirs.mkString("\n"))
       dirs.foreach { rel =>
         val staged = new Path(stagingRoot, rel)
         val live = new Path(dest, rel)
@@ -403,15 +409,7 @@ object MergeOps {
     // One row per touched month — bounded by partition count, not rows.
     val monthsRaw = incoming.select(col(partCol).cast("string"))
       .distinct().collect().map(_.getString(0))
-    require(!monthsRaw.contains(null),
-      s"$partCol must be non-null for a partition-scoped merge — " +
-        "coalesce to a sentinel month (e.g. '0000-00') first")
-    // the swap matches directories BY NAME ("col=value"), so values
-    // must round-trip through Hive partition-path escaping unchanged
-    monthsRaw.find(!_.matches("[A-Za-z0-9._-]+")).foreach(bad =>
-      throw new IllegalArgumentException(
-        s"partition value '$bad' needs path escaping — month values " +
-          "must be plain [A-Za-z0-9._-] strings"))
+    requireMonthValues(partCol, monthsRaw.toSeq)
     val months = monthsRaw.sorted
     if (months.isEmpty) return
     val destHasData = fs.exists(dest) &&
@@ -630,13 +628,7 @@ object MergeOps {
     val tgtGen = g("target_gen")
     val monthsRaw = incoming.select(col(partCol).cast("string"))
       .distinct().collect().map(_.getString(0))
-    require(!monthsRaw.contains(null),
-      s"$partCol must be non-null for a partition-scoped merge — " +
-        "coalesce to a sentinel month (e.g. '0000-00') first")
-    monthsRaw.find(!_.matches("[A-Za-z0-9._-]+")).foreach(bad =>
-      throw new IllegalArgumentException(
-        s"partition value '$bad' needs path escaping — month values " +
-          "must be plain [A-Za-z0-9._-] strings"))
+    requireMonthValues(partCol, monthsRaw.toSeq)
     val months = monthsRaw.sorted.toSeq
     if (months.isEmpty) return true
     def route(man: GenManifest, mo: String): (String, Int) =
@@ -723,13 +715,7 @@ object MergeOps {
       .select(col(partCol).cast("string"), col(shardCol))
       .distinct().collect()
       .map(r => (r.getString(0), r.getString(1)))
-    require(!touched.exists(_._1 == null),
-      s"$partCol must be non-null for a partition-scoped merge — " +
-        "coalesce to a sentinel month (e.g. '0000-00') first")
-    touched.map(_._1).find(!_.matches("[A-Za-z0-9._-]+")).foreach(bad =>
-      throw new IllegalArgumentException(
-        s"partition value '$bad' needs path escaping — month values " +
-          "must be plain [A-Za-z0-9._-] strings"))
+    requireMonthValues(partCol, touched.map(_._1).toSeq)
     val pairs = touched.sorted.toSeq
     if (pairs.isEmpty) return
     // Pruned-by-construction read: the touched (month, shard) dirs

@@ -413,24 +413,33 @@ object Similarity {
     explode(ivfProbes(vec, centroids, nprobe))
   }
 
-  /** The corpus encoded for the inline IVF-PQ joins, as the two sides
-    * [[ivfPqJoin]] takes: codes (_cell, corpus_id, _codes, _cn) and
-    * vectors (corpus_id, _cv, _cn). Residual codes quantize
-    * v − centroid(cell). */
-  private def encodedSides(corpus: DataFrame, idCol: String,
+  /** The corpus encoded with an IVF-PQ quantizer —
+    * (corpus_id, _cv, _cell, _codes, _cn) — the ONE encode the inline
+    * IVF-PQ joins and the persisted index's build/append
+    * ([[AnnIndex]]) share, so the two cannot drift. Residual codes
+    * quantize v − centroid(cell). */
+  private[operators] def encodedCorpus(corpus: DataFrame, idCol: String,
       vecCol: String, centroids: Seq[Seq[Double]],
-      books: Seq[Seq[Seq[Double]]],
-      residual: Boolean): (DataFrame, DataFrame) = {
+      books: Seq[Seq[Seq[Double]]], residual: Boolean = false): DataFrame = {
     require(centroids.nonEmpty, "centroids must be non-empty")
     require(books.nonEmpty && books.forall(_.nonEmpty),
       "codebooks must be non-empty")
     val cell = ivfAssignment(col(vecCol), centroids)
-    val c =
-      if (!residual) corpusSide(corpus, idCol, col(vecCol), cell.as("_cell"),
-        pqEncode(col(vecCol), books).as("_codes"))
-      else corpusSide(corpus.withColumn("_cell", cell), idCol, col(vecCol),
-        col("_cell"), pqEncode(residualCol(col(vecCol), centroids,
-          col("_cell")), books).as("_codes"))
+    if (!residual) corpusSide(corpus, idCol, col(vecCol), cell.as("_cell"),
+      pqEncode(col(vecCol), books).as("_codes"))
+    else corpusSide(corpus.withColumn("_cell", cell), idCol, col(vecCol),
+      col("_cell"), pqEncode(residualCol(col(vecCol), centroids,
+        col("_cell")), books).as("_codes"))
+  }
+
+  /** The encoded corpus as the two sides [[ivfPqJoin]] takes: codes
+    * (_cell, corpus_id, _codes, _cn) and vectors (corpus_id, _cv,
+    * _cn). */
+  private def encodedSides(corpus: DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]],
+      books: Seq[Seq[Seq[Double]]],
+      residual: Boolean): (DataFrame, DataFrame) = {
+    val c = encodedCorpus(corpus, idCol, vecCol, centroids, books, residual)
     (c.select(col("_cell"), col("corpus_id"), col("_codes"), col("_cn")),
       c.select(col("corpus_id"), col("_cv"), col("_cn")))
   }
@@ -1165,17 +1174,23 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
     rowBits: Int = 4, minCosine: Double = 0.5, seed: Long = 7L,
     candCap: Int = 100000, autoCompactEvery: Int = 0,
     bandKeyCap: Int = 0, targetKeyLoad: Int = 0,
-    keyLoadWarnBudget: Int = 4096) {
-  import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.StructType
+    keyLoadWarnBudget: Int = 4096)
+    extends BandedGate(root,
+      index = "keys", indexDDL = "id BIGINT, bkey INT, band INT",
+      indexPart = "band", keyDDL = "band INT, bkey INT",
+      corpus = "vecs", corpusDDL = "id BIGINT, v ARRAY<FLOAT>",
+      value = v => v, score = Similarity.cosine, scoreType = "DOUBLE",
+      bestDDL = "best_cos DOUBLE", noMatch = lit(-2.0d),
+      threshold = lit(minCosine), candCap = candCap,
+      autoCompactEvery = autoCompactEvery) {
+  import org.apache.hadoop.fs.FileSystem
+  import org.apache.spark.sql.{Row, SparkSession}
   require(bands * rowBits <= 30, "band keyspace must stay int-sized")
   require(targetKeyLoad >= 0, "targetKeyLoad must be >= 0")
 
   // exact driver memory of the seen (band, bkey) keys — keyspace is
   // bands·2^rowBits, so this is bounded by construction
   private var seen: scala.collection.mutable.Set[Long] = _
-  // the family-standard maintenance clock (NoveltyGate protocol)
-  private var admitsSinceCompact: Int = 0
   // the LIVE row-bits width — compact(newRowBits) can widen it for a
   // grown corpus (the sizing rule: rowBits ≈ log2(corpus /
   // target-candidates-per-band)), and every subsequent key
@@ -1185,80 +1200,72 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
   // restart and silently mis-key every probe after a widening.
   private var rbCur: Int = rowBits
 
+  protected def opened: Boolean = seen != null
+  protected def keyCap: Int = bandKeyCap
+  protected def autoCompact(spark: SparkSession): Unit = compact(spark)
+
   /** Family-standard layout manifest (see [[graft.operators
     * .GateLayout]]): a dim/band/seed mismatch against stored keys +
     * vectors is a silent false-negative factory — fail fast. The
     * verdict schema generation is pinned and healed exactly as in
-    * [[graft.operators.NearDupGate]]'s syncLayout (same version
-    * history: v2 added n_capped_keys). `row_bits` is LIVE maintenance
-    * state rather than a fail-fast parameter (the NoveltyGate
-    * prefix-width discipline): [[compact]] can widen it for a grown
-    * corpus, so first open restores the persisted width instead of
-    * rejecting it. */
-  private def layoutEntries: Seq[(String, String)] =
+    * [[graft.operators.NearDupGate]] (same version history: v2 added
+    * n_capped_keys). `row_bits` is LIVE maintenance state rather than
+    * a fail-fast parameter (the NoveltyGate prefix-width discipline):
+    * [[compact]] can widen it for a grown corpus, so first open
+    * restores the persisted width instead of rejecting it — in the
+    * resize crash window the manifest is legitimately one refresh
+    * behind the keys generation's `_row_bits` marker. */
+  protected def pins: Seq[(String, String)] =
     Seq("dim" -> dim.toString, "bands" -> bands.toString,
-      "row_bits" -> rbCur.toString, "seed" -> seed.toString,
+      "seed" -> seed.toString,
       "verdict_schema" -> GateOps.verdictSchemaVersion)
 
-  private def syncLayout(
-      spark: org.apache.spark.sql.SparkSession): Unit = {
-    val mp = new org.apache.hadoop.fs.Path(s"$root/_layout")
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // the keys generation's own _row_bits marker is ground truth: it
-    // rode the same rename as the re-banded data, so it can never be
-    // stale the way the root manifest can be after a crash between a
-    // widening compact's swap and its manifest refresh (following the
-    // stale manifest would silently mis-key every probe against the
-    // already re-banded table). Manifest = pre-marker fallback; heals.
-    val markerRb = GateOps.readMarker(fs, s"$root/keys", "_row_bits")
-      .map(_.toInt)
-    if (fs.exists(mp)) {
-      val m = graft.operators.GateLayout.read(fs, mp)
-      markerRb.orElse(m.get("row_bits").map(_.toInt))
-        .filter(_ != rbCur).foreach { rb =>
-          require(rb > 0 && bands * rb <= 30,
-            s"persisted row_bits=$rb overflows the int keyspace")
-          rbCur = rb
-        }
-      // row_bits is LIVE state, restored above (marker over manifest)
-      // — never fail-fast-checked: in the resize crash window the
-      // manifest is legitimately one refresh behind the marker
-      graft.operators.GateLayout.check(m, root,
-        layoutEntries.filterNot(_._1 == "row_bits"))
-      if (!m.contains("verdict_schema") || !m.contains("row_bits") ||
-          (markerRb.isDefined &&
-            m.get("row_bits") != markerRb.map(_.toString)))
-        graft.operators.GateLayout.write(fs, mp, layoutEntries)
-    } else {
-      // fail-fast like the manifest-present branch — silently
-      // dropping a corrupt marker would stamp the constructor
-      // default into a fresh manifest and mis-key every probe
-      markerRb.foreach { rb =>
-        require(rb > 0 && bands * rb <= 30,
-          s"persisted row_bits=$rb overflows the int keyspace")
-        rbCur = rb
-      }
-      graft.operators.GateLayout.write(fs, mp, layoutEntries)
-    }
+  protected def restoreLayout(fs: FileSystem,
+      m: Option[Map[String, String]]): Boolean = {
+    val (rb, stale) = restoreGeometry(fs, "keys", "_row_bits", m,
+      "row_bits", rbCur)(rb => rb > 0 && bands * rb <= 30,
+      "overflows the int keyspace")
+    rbCur = rb
+    stale || m.forall(mm =>
+      !mm.contains("verdict_schema") || !mm.contains("row_bits"))
   }
 
-  private def keyOf(band: Int, bkey: Int): Long =
-    band.toLong * (1L << rbCur) + bkey
+  protected def writeLayout(fs: FileSystem): Unit =
+    GateLayout.write(fs, new org.apache.hadoop.fs.Path(s"$root/_layout"),
+      pins :+ ("row_bits" -> rbCur.toString))
 
-  private def keyed(vecs: DataFrame): DataFrame = vecs
+  private def keyOf(key: Row): Long =
+    key.getInt(0).toLong * (1L << rbCur) + key.getInt(1)
+
+  protected def mightHold(key: Row): Boolean = seen(keyOf(key))
+  protected def remember(key: Row): Unit = seen += keyOf(key)
+
+  /** (id, band, bkey) sign-band keys at `rb` row bits per band. */
+  private def keyedAt(vecs: DataFrame, rb: Int): DataFrame = vecs
     .filter(col("v").isNotNull)
     .select(col("id"), posexplode(array(Similarity.signBandKeyCols(
-      col("v"), bands, rbCur, dim, seed): _*)).as(Seq("band", "bkey")))
+      col("v"), bands, rb, dim, seed): _*)).as(Seq("band", "bkey")))
 
-  private def initSeen(spark: org.apache.spark.sql.SparkSession,
-      keysPath: String, keysExist: Boolean): Unit = {
+  protected def keyed(batch: DataFrame): DataFrame =
+    keyedAt(batch, rbCur).localCheckpoint()
+
+  /** Probes prune by band partition + a bkey INSET on sorted files
+    * (Int literals, matching the partition column's type — a Long
+    * literal would wrap the column in a cast and defeat the
+    * partition-directory pruning). */
+  protected def indexRead(spark: SparkSession, pos: Seq[Row],
+      bandKeys: DataFrame): DataFrame =
+    readIndex(spark)
+      .filter(col("band").isin(pos.map(_.getInt(0)).distinct: _*))
+      .filter(col("bkey").isin(pos.map(_.getInt(1)).distinct: _*))
+
+  /** The exact seen-key set, rebuilt from the keys table in one
+    * distinct. */
+  protected def load(spark: SparkSession, fs: FileSystem): Unit = {
     seen = scala.collection.mutable.Set.empty[Long]
-    if (!keysExist) return
-    spark.read
-      .schema(StructType.fromDDL("id BIGINT, bkey INT, band INT"))
-      .parquet(keysPath)
-      .select(col("band"), col("bkey")).distinct()
-      .collect().foreach(r => seen += keyOf(r.getInt(0), r.getInt(1)))
+    if (!exists(fs, "keys")) return
+    readIndex(spark).select(col("band"), col("bkey")).distinct()
+      .collect().foreach(r => seen += keyOf(r))
   }
 
   def admit(batch: DataFrame, idCol: String, vecCol: String): Unit = {
@@ -1273,179 +1280,9 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
       vecCol: String): DataFrame =
     runAdmit(batch, idCol, vecCol, pin = true)
 
-  private def runAdmit(batch: DataFrame, idCol: String,
-      vecCol: String, pin: Boolean): DataFrame = {
-    val spark = batch.sparkSession
-    val thrKey = "spark.sql.parquet.pushdown.inFilterThreshold"
-    val priorThr = spark.conf.getOption(thrKey)
-    spark.conf.set(thrKey, Dedup.inPushdownLimit.toString)
-    val verdicts = try admitInner(batch, idCol, vecCol, pin)
-    finally priorThr match {
-      case Some(v) => spark.conf.set(thrKey, v)
-      case None => spark.conf.unset(thrKey)
-    }
-    admitsSinceCompact += 1
-    if (autoCompactEvery > 0 && admitsSinceCompact >= autoCompactEvery) {
-      compact(spark)
-      admitsSinceCompact = 0
-    }
-    verdicts
-  }
-
-  private def admitInner(batch: DataFrame, idCol: String,
-      vecCol: String, pin: Boolean): DataFrame = {
-    val spark = batch.sparkSession
-    val keysPath = s"$root/keys"
-    val vecsPath = s"$root/vecs"
-    val fs = new org.apache.hadoop.fs.Path(keysPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (seen == null) {
-      // BEFORE the existence checks: a restart inside compact's
-      // generation-swap crash window must restore the surviving
-      // generation, or the seen-key set would rebuild empty and
-      // every stored vector silently re-admit
-      Seq("keys", "vecs", "verdicts")
-        .foreach(GateOps.recoverGeneration(fs, root, _))
-      syncLayout(spark)
-      initSeen(spark, keysPath,
-        fs.exists(new org.apache.hadoop.fs.Path(keysPath)))
-    }
-    val keysExist = fs.exists(new org.apache.hadoop.fs.Path(keysPath))
-    val vecsExist = fs.exists(new org.apache.hadoop.fs.Path(vecsPath))
-    // id-keyed dedup replaces the parallelism shuffle — the shared
-    // explicit-width idiom (GateOps.dedupAtWidth has the AQE rule)
-    val batchVecs = GateOps.dedupAtWidth(batch
-        .select(col(idCol).as("id"), col(vecCol).as("v")), "id")
-      .localCheckpoint()
-    // measured-count broadcast discipline (see NearDupGate: planner
-    // stats on checkpointed survivor frames cannot be trusted). The
-    // threshold is the family's dedicated broadcast-row constant, NOT
-    // candCap: candCap is a candidate-FETCH knob, and a deployment
-    // raising it to millions must not thereby force-broadcast a
-    // multi-million-row vector frame into the driver
-    val smallBatch = batchVecs.count() <= GateOps.broadcastRowCap
-    def maybeBroadcast(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
-    val batchKeys = keyed(batchVecs).localCheckpoint()
-    val keys = batchKeys.select(col("band"), col("bkey")).distinct()
-      .collect().map(r => (r.getInt(0), r.getInt(1)))
-    val posKeys = keys.filter { case (b, bk) => seen(keyOf(b, bk)) }
-    def emptyPairs = spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType.fromDDL("id BIGINT, cid BIGINT"))
-    def emptyKeysDf = spark.createDataFrame(
-      new java.util.ArrayList[Row](),
-      StructType.fromDDL("band INT, bkey INT"))
-    // per-band-key candidate truncation, the NearDupGate discipline:
-    // a sign-band key gets hot exactly like a MinHash band key (every
-    // orthant-mate of a template embedding shares it), so the same
-    // shared earliest-seen-cap + per-doc shed reporting bounds the
-    // pair volume at batch·bands·cap
-    def capPerKey(cand: DataFrame): (DataFrame, DataFrame) =
-      if (bandKeyCap <= 0) (cand, emptyKeysDf)
-      else GateOps.capPerKey(cand, Seq("band", "bkey"), "id",
-        bandKeyCap)
-    val (cross, crossCapped): (DataFrame, DataFrame) =
-      if (posKeys.isEmpty || !keysExist) (emptyPairs, emptyKeysDf)
-      else {
-        // Int literals, matching the partition column's type — a Long
-        // literal would wrap the column in a cast and defeat the
-        // partition-directory pruning
-        val posBands = posKeys.map(_._1).distinct.toSeq
-        val posBkeys = posKeys.map(_._2).distinct.toSeq
-        val idx = spark.read
-          .schema(StructType.fromDDL("id BIGINT, bkey INT, band INT"))
-          .parquet(keysPath)
-          .filter(col("band").isin(posBands: _*))
-          .filter(col("bkey").isin(posBkeys: _*))
-        // own-batch ids excluded BEFORE the per-key cap, so a
-        // replayed batch's own indexed keys never consume cap slots
-        // (NearDupGate's replay-determinism rule)
-        val idxOthers = idx.join(batchVecs.select(col("id")),
-          Seq("id"), "left_anti")
-        val (idxCand, capped) = capPerKey(idxOthers)
-        (maybeBroadcast(batchKeys).as("q").join(idxCand.as("c"),
-            col("q.band") === col("c.band") &&
-              col("q.bkey") === col("c.bkey"))
-          .select(col("q.id").as("id"), col("c.id").as("cid"))
-          .distinct(),
-          capped)
-      }
-    val (selfCand, selfCapped) = capPerKey(batchKeys)
-    val internal = batchKeys.as("q")
-      .join(maybeBroadcast(selfCand).as("c"),
-        col("q.band") === col("c.band") &&
-          col("q.bkey") === col("c.bkey") &&
-          col("c.id") < col("q.id"))
-      .select(col("q.id").as("id"), col("c.id").as("cid"))
-      .distinct()
-      .join(maybeBroadcast(batchVecs.toDF("cid", "cv")), "cid")
-      .join(maybeBroadcast(batchVecs.toDF("id", "qv")), "id")
-      .select(col("id"), col("cid"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-    val crossPinned = cross.localCheckpoint()
-    val cids = crossPinned.select(col("cid")).distinct()
-      .limit(candCap + 1).collect().map(_.getLong(0))
-    def readVecs() =
-      if (vecsExist) spark.read
-        .schema(StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>"))
-        .parquet(vecsPath)
-      else spark.createDataFrame(new java.util.ArrayList[Row](),
-        StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>"))
-    // dropDuplicates carries the at-least-once contract (see
-    // NearDupGate): a replayed admit's re-appended vectors must not
-    // double every matching pair in the scoring join; scoped to
-    // candidate rows on both branches
-    val corpusVecs =
-      (if (cids.length <= candCap)
-        readVecs().filter(col("id").isin(cids.toSeq: _*))
-      else readVecs().join(
-        crossPinned.select(col("cid").as("id")).distinct(),
-        Seq("id"), "left_semi"))
-      .dropDuplicates("id")
-    val crossScored = crossPinned
-      .join(corpusVecs.toDF("cid", "cv"), "cid")
-      .join(maybeBroadcast(batchVecs.toDF("id", "qv")), "id")
-      .select(col("id"), col("cid"),
-        Similarity.cosine(col("qv"), col("cv")).as("cos"))
-    // cross and internal are disjoint in cid (see NearDupGate) and
-    // each pair-distinct — no (id, cid) re-dedup needed
-    val matches = crossScored.unionByName(internal)
-      .groupBy(col("id"))
-      .agg(count(lit(1)).as("n_cands"), max(col("cos")).as("best_cos"))
-    val nCapped = batchKeys
-      .join(crossCapped.unionByName(selfCapped).distinct(),
-        Seq("band", "bkey"))
-      .groupBy(col("id")).agg(count(lit(1)).as("n_capped_keys"))
-    val verdicts = batchVecs.select(col("id"))
-      .join(matches, Seq("id"), "left")
-      .join(nCapped, Seq("id"), "left")
-      .select(col("id"),
-        coalesce(col("n_cands"), lit(0L)).as("n_cands"),
-        coalesce(col("best_cos"), lit(-2.0d)).as("best_cos"),
-        coalesce(col("n_capped_keys"), lit(0L)).as("n_capped_keys"))
-      .withColumn("is_neardup",
-        (col("best_cos") >= minCosine).cast("int"))
-      .select(col("id"), col("n_cands"), col("best_cos"),
-        col("is_neardup"), col("n_capped_keys"))
-    val pinned = if (pin) verdicts.localCheckpoint() else verdicts
-    pinned.write.mode("append").parquet(s"$root/verdicts")
-    keys.foreach { case (b, bk) => seen += keyOf(b, bk) }
-    if (keys.nonEmpty) {
-      batchKeys
-        .repartition(col("band"))
-        .sortWithinPartitions(col("bkey"))
-        .write.mode("append").partitionBy("band").parquet(keysPath)
-      batchVecs.filter(col("v").isNotNull)
-        .coalesce(1).sortWithinPartitions(col("id"))
-        .write.mode("append").parquet(vecsPath)
-    }
-    pinned
-  }
-
   /** Epoch maintenance (the [[graft.operators.NearDupGate.compact]]
-    * contract): dedup + one file per band partition / per table,
-    * crash-ordered tmp/old swaps. The seen-key set needs no rebuild —
+    * contract, through the shared [[BandedGate]] compaction): dedup +
+    * one file per band partition. The seen-key set needs no rebuild —
     * deduplication cannot change the distinct key set.
     *
     * `newRowBits = Some(rb)` additionally WIDENS the band layout —
@@ -1464,18 +1301,8 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
     * its rename, is ground truth at reopen, and heals the root
     * manifest (which alone would have a stale window between the
     * swap and its refresh). */
-  def compact(spark: org.apache.spark.sql.SparkSession,
-      newRowBits: Option[Int] = None): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // manual compaction on a fresh gate needs the swap-crash-window
-    // recovery the admit-time first open gets
-    Seq("keys", "vecs", "verdicts")
-      .foreach(GateOps.recoverGeneration(fs, root, _))
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$root/keys"))) return
-    // a fresh gate compacting an existing table must not silently
-    // re-key at its constructor width — restore the live one first
-    if (seen == null) syncLayout(spark)
+  def compact(spark: SparkSession,
+      newRowBits: Option[Int] = None): Unit = compactBanded(spark) { fs =>
     // self-sizing width (the scaladoc'd sizing rule automated, the
     // novelty gate's growBloomFactor twin): expected candidates per
     // arriving vector ≈ bands · corpus / 2^rowBits, so when the
@@ -1486,15 +1313,12 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
     var vecIdCount: Option[Long] = None
     def distinctVecIds(): Long = {
       if (vecIdCount.isEmpty)
-        vecIdCount = Some(spark.read
-          .schema(StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>"))
-          .parquet(s"$root/vecs")
+        vecIdCount = Some(readCorpus(spark)
           .dropDuplicates("id").filter(col("v").isNotNull).count())
       vecIdCount.get
     }
     val policyBits =
-      if (newRowBits.isEmpty && targetKeyLoad > 0 &&
-          fs.exists(new org.apache.hadoop.fs.Path(s"$root/vecs"))) {
+      if (newRowBits.isEmpty && targetKeyLoad > 0 && exists(fs, "vecs")) {
         val n = distinctVecIds()
         var rb = rbCur
         // exact criterion (no integer-division floor): widen while
@@ -1508,7 +1332,7 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
     widen.foreach { rb =>
       require(rb > 0 && bands * rb <= 30,
         "band keyspace must stay int-sized")
-      require(fs.exists(new org.apache.hadoop.fs.Path(s"$root/vecs")),
+      require(exists(fs, "vecs"),
         "widening re-bands from the vecs table, which is missing")
     }
     widen match {
@@ -1525,30 +1349,17 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
         // diagnostic's only extra job (widens are rare maintenance
         // events); the vecs count reuses the policy's scan when the
         // widen was policy-driven
-        val keyIds = spark.read
-          .schema(StructType.fromDDL("id BIGINT, bkey INT, band INT"))
-          .parquet(s"$root/keys")
+        val keyIds = readIndex(spark)
           .agg(count_distinct(col("id"))).head().getLong(0)
         val vecIds = distinctVecIds()
         if (keyIds > vecIds) System.err.println(
           s"[embed-gate] widening to rowBits=$rb drops " +
             s"${keyIds - vecIds} key-table id(s) absent from vecs " +
             s"(keys-appended/vecs-crashed window) for $root")
-        spark.read
-          .schema(StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>"))
-          .parquet(s"$root/vecs")
-          .dropDuplicates("id").filter(col("v").isNotNull)
-          .select(col("id"), posexplode(array(
-            Similarity.signBandKeyCols(col("v"), bands, rb, dim, seed)
-              : _*)).as(Seq("band", "bkey")))
-          .select(col("id"), col("bkey"), col("band"))
-          .repartition(col("band")).sortWithinPartitions(col("bkey"))
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(s"$root/keys_tmp")
+        writeIndex(keyedAt(readCorpus(spark).dropDuplicates("id"), rb),
+          "overwrite", "keys_tmp")
       case None =>
-        val distinctKeysPlan = spark.read
-          .schema(StructType.fromDDL("id BIGINT, bkey INT, band INT"))
-          .parquet(s"$root/keys")
+        val distinctKeysPlan = readIndex(spark)
           .select(col("id"), col("bkey"), col("band")).distinct()
         // pinned ONLY when the diagnostic below will actually consume
         // it a second time (remedies off, budget on) — with a remedy
@@ -1585,49 +1396,19 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
               "set targetKeyLoad (self-sizing width), bandKeyCap " +
               "(bounded candidates), or raise rowBits")
         }
-        distinctKeys
-          .repartition(col("band")).sortWithinPartitions(col("bkey"))
-          .write.mode("overwrite").partitionBy("band")
-          .parquet(s"$root/keys_tmp")
+        writeIndex(distinctKeys, "overwrite", "keys_tmp")
     }
     // the width marker rides the generation swap (see
     // GateOps.writeMarker): data and width can never disagree even if
     // a crash lands between the swaps and the manifest refresh
     GateOps.writeMarker(fs, s"$root/keys_tmp", "_row_bits",
       widen.getOrElse(rbCur).toString)
-    // guarded like admit's vecs read: keys are appended before vecs,
-    // so a crash between the two first-ever appends must not wedge a
-    // later (auto-)compaction
-    val vecsExistC =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/vecs"))
-    if (vecsExistC) spark.read
-      .schema(StructType.fromDDL("id BIGINT, v ARRAY<FLOAT>"))
-      .parquet(s"$root/vecs")
-      .dropDuplicates("id")
-      .coalesce(1).sortWithinPartitions(col("id"))
-      .write.mode("overwrite").parquet(s"$root/vecs_tmp")
-    val verdictsExist =
-      fs.exists(new org.apache.hadoop.fs.Path(s"$root/verdicts"))
-    if (verdictsExist) spark.read
-      .schema(StructType.fromDDL(
-        "id BIGINT, n_cands BIGINT, best_cos DOUBLE, is_neardup INT, " +
-          "n_capped_keys BIGINT"))
-      .parquet(s"$root/verdicts")
-      .withColumn("n_capped_keys",
-        coalesce(col("n_capped_keys"), lit(0L)))
-      .distinct()
-      .coalesce(1).sortWithinPartitions(col("id"))
-      .write.mode("overwrite").parquet(s"$root/verdicts_tmp")
-    GateOps.swapGeneration(fs, root, "keys")
-    if (vecsExistC) GateOps.swapGeneration(fs, root, "vecs")
-    if (verdictsExist) GateOps.swapGeneration(fs, root, "verdicts")
-    widen.foreach { rb =>
+    () => widen.foreach { rb =>
       rbCur = rb
-      graft.operators.GateLayout.write(fs,
-        new org.apache.hadoop.fs.Path(s"$root/_layout"), layoutEntries)
+      writeLayout(fs)
       // the keyspace changed — the exact seen-key set must rebuild
       // against the re-banded table
-      initSeen(spark, s"$root/keys", keysExist = true)
+      load(spark, fs)
     }
   }
 

@@ -57,6 +57,16 @@ object PinIvfCentroids {
            |  def sqlValues: String = pinned.zipWithIndex
            |    .map { case (c, i) => s"($$i, [$${c.mkString(", ")}])" }
            |    .mkString(", ")
+           |
+           |  /** The centroids at integral ×1e4 grain (floor), as DuckDB VALUES —
+           |    * the shared old-centroid literal table for the k-means shift
+           |    * census (`Similarity.kmeansStepCensus`): computed ONCE here on the
+           |    * JVM so no float op crosses engines.
+           |    */
+           |  def sqlValuesX1e4: String = pinned.zipWithIndex
+           |    .map { case (c, i) =>
+           |      s"($$i, [$${c.map(x => math.floor(x * 10000).toLong).mkString(", ")}])" }
+           |    .mkString(", ")
            |}
            |""".stripMargin
       Files.write(Paths.get(out), src.getBytes(StandardCharsets.UTF_8))

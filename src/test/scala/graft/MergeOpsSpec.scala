@@ -1789,4 +1789,31 @@ class MergeOpsSpec extends AnyFunSuite {
       "an oversized month must keep writing in parallel")
     assert(readBack(table) === latestWins(docs))
   }
+
+  test("month merges reject a null or path-escaping month before " +
+      "touching the table, flat and sharded") {
+    val dir = Files.createTempDirectory("graft_mvalues").toFile.getAbsolutePath
+    val base = monthDocs(Seq(("e1", "jan", 1, "2025-01"),
+      ("e2", "feb", 1, "2025-02")))
+    val merges: Seq[(String, org.apache.spark.sql.DataFrame => Unit)] = Seq(
+      s"$dir/flat" -> (df => MergeOps.upsertParquetByMonth(spark,
+        s"$dir/flat", df, Seq("event_id"), "version")),
+      s"$dir/sh" -> (df => MergeOps.upsertParquetByMonthShard(spark,
+        s"$dir/sh", df, Seq("event_id"), "version", numShards = 4)))
+    for ((table, merge) <- merges) {
+      merge(base)
+      val before = graft.operators.AnnIndex.fileCensus(spark, table)
+      assert(before.nonEmpty)
+      val nullMonth = intercept[IllegalArgumentException](merge(
+        Seq(("e3", "x", 1, null.asInstanceOf[String])).toDF(
+          "event_id", "title", "version", "start_month")))
+      assert(nullMonth.getMessage.contains("must be non-null"), table)
+      val slashMonth = intercept[IllegalArgumentException](merge(
+        monthDocs(Seq(("e4", "y", 1, "2025/01")))))
+      assert(slashMonth.getMessage.contains("'2025/01' needs path escaping"),
+        table)
+      assert(graft.operators.AnnIndex.fileCensus(spark, table) === before,
+        s"a rejected merge touched $table")
+    }
+  }
 }

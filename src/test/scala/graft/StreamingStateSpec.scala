@@ -2670,4 +2670,49 @@ class StreamingStateSpec extends AnyFunSuite {
     }
     assert(eqErr.getMessage.contains("array_eq_count requires"))
   }
+
+  test("every gate's admit leaves the parquet IN-pushdown threshold as " +
+      "it found it — set or unset, whether the admit returns or throws") {
+    val out = new java.io.File("target/test_gate_inthreshold")
+      .getAbsolutePath
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(out), true)
+    val key = "spark.sql.parquet.pushdown.inFilterThreshold"
+    val docs = Seq((1L, "alpha beta"), (2L, "gamma")).toDF("doc_id", "text")
+    val vecs = Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0f, 1f, 0f, 0f)))
+      .toDF("id", "v")
+    // per gate: a normal admit, and one that throws inside the admit
+    // scope — a reopen whose pinned layout disagrees with the disk
+    // fails fast at the first open, which runs inside it
+    val gates: Seq[(String, () => Unit, () => Unit)] = Seq(
+      ("novelty",
+        () => new graft.operators.NoveltyGate(s"$out/nov").admit(docs),
+        () => new graft.operators.NoveltyGate(s"$out/nov", k = 5)
+          .admit(docs)),
+      ("neardup",
+        () => new graft.operators.NearDupGate(s"$out/nd")
+          .admit(docs, "doc_id", "text"),
+        () => new graft.operators.NearDupGate(s"$out/nd", numHashes = 16,
+          bands = 8).admit(docs, "doc_id", "text")),
+      ("embed",
+        () => new graft.operators.EmbedNearDupGate(s"$out/emb", dim = 4)
+          .admit(vecs, "id", "v"),
+        () => new graft.operators.EmbedNearDupGate(s"$out/emb", dim = 4,
+          seed = 9L).admit(vecs, "id", "v")))
+    // getAll holds only EXPLICITLY set keys, so it tells "unset" from
+    // "set to the default"
+    def explicit(): Option[String] = spark.conf.getAll.get(key)
+    val prior = explicit()
+    try {
+      for ((name, ok, bad) <- gates; start <- Seq(Some("37"), None)) {
+        start.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        ok()
+        assert(explicit() === start, s"$name admit from $start")
+        val err = intercept[IllegalStateException](bad())
+        assert(err.getMessage.contains("gate layout mismatch"), name)
+        assert(explicit() === start, s"$name failed admit from $start")
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
