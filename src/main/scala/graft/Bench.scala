@@ -114,10 +114,7 @@ object Bench {
             val commitKey = s"${ckptId()}:$batchId"
             val committed = graft.operators.GateOps.replayCommitted(
               graft.operators.GateOps.readMarker(fs, root,
-                "_last_commit"), commitKey, batchId,
-              graft.operators.GateOps.legacyMarkerGenuine(
-                b.sparkSession.sparkContext.hadoopConfiguration,
-                root, "_last_commit", ckptDir))
+                "_last_commit"), commitKey)
             if (!b.isEmpty && !committed) {
               val pinned = b.localCheckpoint()
               pinned.write.mode("append").parquet(s"$root/out")

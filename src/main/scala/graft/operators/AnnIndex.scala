@@ -90,7 +90,6 @@ object AnnIndex {
   private val deltaStaging = "_delta_staging"
   private val genPrefix = "gen-"
   private val ptrPrefix = "ptr-"
-  private val adoptingMarker = "_adopting"
 
   /** No-op default for the maintenance hooks — [[build]]/[[compact]]
     * fire it at "staged" (new generation fully written, old still
@@ -182,57 +181,6 @@ object AnnIndex {
     liveGen(fsOf(spark, dest), dest).getName
   }
 
-  /** One-time ADOPTION of a pre-generation-layout index (the previous
-    * release's root shape: `_ann_layout` + `base/` + `delta-*`
-    * directly at indexPath): move the components into the first
-    * generation and publish pointer v1 — O(components) metadata
-    * renames, NO data rewrite or re-encode. Writer-entry only (the
-    * single-writer contract is what makes the renames safe); READERS
-    * on a legacy index fail fast naming this remedy instead of
-    * mutating ([[liveGen]]).
-    *
-    * Crash safety: an `_adopting` marker brackets the move — created
-    * before the first rename, deleted after the pointer publish — so
-    * a crashed adoption RESUMES here at the next writer entry (the
-    * marker, not any component's position, is the in-progress
-    * signal), and [[sweep]] skips generation deletion while the
-    * marker exists: without it, a half-adopted generation with no
-    * pointer would be indistinguishable from a crashed first build's
-    * sweepable debris. */
-  private def adoptLegacy(fs: org.apache.hadoop.fs.FileSystem,
-      dest: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.hadoop.fs.Path
-    if (!fs.exists(dest)) return
-    val marker = new Path(dest, adoptingMarker)
-    val rootLayout = new Path(dest, layoutName)
-    val resuming = fs.exists(marker)
-    if (!resuming &&
-      (ptrVersions(fs, dest).nonEmpty || !fs.exists(rootLayout))) return
-    // adoption only ever starts on a root with no published
-    // generations, so the first name is free
-    val gen = f"$genPrefix${1L}%06d"
-    val genPath = new Path(dest, gen)
-    if (!resuming) GateLayout.write(fs, marker, Seq("gen" -> gen))
-    fs.mkdirs(genPath)
-    fs.listStatus(dest).map(_.getPath).foreach { p =>
-      val n = p.getName
-      val isComponent = n == "base" || n == layoutName ||
-        (n.startsWith(deltaPrefix) &&
-          n.stripPrefix(deltaPrefix).forall(_.isDigit))
-      if (isComponent && !fs.rename(p, new Path(genPath, n)))
-        throw new java.io.IOException(
-          s"could not adopt legacy component $p into $genPath")
-    }
-    fs.delete(new Path(dest, deltaStaging), true) // legacy staging debris
-    require(fs.exists(new Path(genPath, layoutName)),
-      s"legacy adoption of $dest carried no $layoutName — the dir " +
-        "is neither a generation-layout nor a legacy-layout index; " +
-        "inspect manually")
-    // a resume landing after a crashed publish must not publish twice
-    if (ptrVersions(fs, dest).isEmpty) publish(fs, dest, gen, noHook)
-    fs.delete(marker, false)
-  }
-
   /** Writer-side sweep, run at writer entry and after each publish:
     * keep the TOP TWO pointer versions (the live one + the one-version
     * reader grace), delete every other pointer, every generation dir
@@ -242,7 +190,10 @@ object AnnIndex {
     * can strand no one), pointer-write temp debris, and append staging
     * inside surviving generations. Writers only — the single-writer
     * contract is what makes deleting an unreferenced generation safe
-    * (no other writer can be mid-stage in it). */
+    * (no other writer can be mid-stage in it). A root holding a
+    * layout manifest outside any generation is a layout this version
+    * does not write: the sweep fails fast on it before deleting
+    * anything. */
   private def sweep(fs: org.apache.hadoop.fs.FileSystem,
       dest: org.apache.hadoop.fs.Path): Unit = {
     import org.apache.hadoop.fs.Path
@@ -259,25 +210,20 @@ object AnnIndex {
     val kept = keep.toSeq.sorted.map { v =>
       GateLayout.read(fs, ptrPath(dest, v))("gen")
     }.toSet
-    fs.listStatus(dest).map(_.getPath).foreach { p =>
+    val entries = fs.listStatus(dest).map(_.getPath)
+    require(!entries.exists(_.getName == layoutName), s"the ANN index " +
+      s"root $dest holds ${GateLayout.found(fs, dest)}: a $layoutName " +
+      "outside any generation is not a layout this version reads")
+    entries.foreach { p =>
       val n = p.getName
-      if (n == adoptingMarker + "_tmp")
-        // a crashed marker write's temp — adoption completed or never
-        // started (writer entry runs adoptLegacy BEFORE this sweep)
-        fs.delete(p, true)
-      else if (n.startsWith(ptrPrefix)) {
+      if (n.startsWith(ptrPrefix)) {
         val core = n.stripPrefix(ptrPrefix)
         if (core.nonEmpty && core.forall(_.isDigit)) {
           if (!keep.contains(core.toLong)) fs.delete(p, false)
         } else fs.delete(p, true) // _tmp debris of a crashed publish
       } else if (n.startsWith(genPrefix)) {
-        // never delete generations mid-adoption (see [[adoptLegacy]]:
-        // a half-adopted gen has no pointer yet but holds the index's
-        // only copy)
-        if (!kept.contains(n)) {
-          if (!fs.exists(new Path(dest, adoptingMarker)))
-            fs.delete(p, true)
-        } else fs.delete(new Path(p, deltaStaging), true)
+        if (!kept.contains(n)) fs.delete(p, true)
+        else fs.delete(new Path(p, deltaStaging), true)
       }
     }
   }
@@ -365,7 +311,6 @@ object AnnIndex {
       s"codebooks cover ${codebooks.length}·$dsub dims, corpus has $dim")
     val dest = new Path(indexPath)
     val fs = fsOf(spark, dest)
-    adoptLegacy(fs, dest)
     sweep(fs, dest)
     val gen = nextGenName(fs, dest)
     val genPath = new Path(dest, gen)
@@ -429,18 +374,8 @@ object AnnIndex {
       dest: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
     resolveGen(fs, dest) match {
       case Some((_, g)) => new org.apache.hadoop.fs.Path(dest, g)
-      case None =>
-        import org.apache.hadoop.fs.Path
-        val legacy = fs.exists(new Path(dest, layoutName)) ||
-          fs.exists(new Path(dest, adoptingMarker))
-        throw new IllegalArgumentException(
-          if (legacy)
-            s"the index at $dest is in the legacy pre-generation " +
-              "layout (or mid-adoption) — run any WRITER op to adopt " +
-              "it in place (e.g. AnnIndex.append with an empty " +
-              "batch: O(components) renames, no re-encode); readers " +
-              "never mutate the artifact"
-          else s"no ANN index at $dest (no pointer)")
+      case None => throw new IllegalArgumentException(s"no ANN index " +
+        s"at $dest (no pointer; found ${GateLayout.found(fs, dest)})")
     }
 
   private def deltaDirs(fs: org.apache.hadoop.fs.FileSystem,
@@ -503,7 +438,6 @@ object AnnIndex {
     import org.apache.hadoop.fs.Path
     val dest = new Path(indexPath)
     val fs = fsOf(spark, dest)
-    adoptLegacy(fs, dest)
     sweep(fs, dest)
     val genPath = liveGen(fs, dest)
     val m = readLayout(fs, genPath)
@@ -517,14 +451,11 @@ object AnnIndex {
     // validation point. The stored types ride in the manifest (zero
     // filesystem I/O; catalogString is nullability-insensitive —
     // parquet round-trips flip containsNull, the contract is the
-    // value type); an ADOPTED legacy index whose manifest predates
-    // the keys falls back to one schema read of the base.
-    lazy val baseSchema = spark.read
-      .parquet(new Path(genPath, "base").toString).schema
+    // value type).
     for ((bCol, key, oCol, oName) <- Seq(
         ("corpus_id", "id_type", idCol, "id"),
         ("vec", "vec_type", vecCol, "vector"))) {
-      val stored = m.getOrElse(key, baseSchema(bCol).dataType.catalogString)
+      val stored = m(key)
       require(stored == batch.schema(oCol).dataType.catalogString,
         s"index at $indexPath stores $oName column $bCol as " +
           s"$stored, append offered " +
@@ -835,50 +766,18 @@ object AnnIndex {
     import org.apache.hadoop.fs.Path
     val dest = new Path(indexPath)
     val fs = fsOf(spark, dest)
-    adoptLegacy(fs, dest)
     sweep(fs, dest)
     val genPath = liveGen(fs, dest)
     val lay = readLayout(fs, genPath)
     val deltas = deltaDirs(fs, genPath)
-    // remediation sweep for PRE-VALIDATION artifacts: cells outside
-    // [0,nlist) hold wrong-dim / null vectors that no probe ever
-    // scans — ingress now refuses them, but an index that took such
-    // a batch before would otherwise re-carry the invisible rows
-    // through every compact forever. Detected from partition dir
-    // names (free); compact proceeds even with no deltas when only
-    // the drop is needed. The fold reads GOOD cells only — pruned
-    // BEFORE latest-wins, so a bad row can never outrank and then
-    // orphan an id's older good row.
-    val nlist = lay("nlist").toInt
-    def cellNames(d: String): Seq[String] =
-      fs.listStatus(new Path(genPath, d)).map(_.getPath.getName)
-        .filter(_.startsWith("cell=")).map(_.stripPrefix("cell=")).toSeq
-    val allCells = ("base" +: deltas).flatMap(cellNames).distinct
-    val (goodCells, badCells) = allCells.partition(c =>
-      c.nonEmpty && c.forall(_.isDigit) && c.length <= 9 && c.toInt < nlist)
-    if (deltas.isEmpty && badCells.isEmpty) return 0
-    if (badCells.nonEmpty) {
-      // count ONLY the bad cell directories, read as explicit paths —
-      // the previous full-table negated filter re-read every GOOD
-      // cell of every component solely for this log line, roughly
-      // doubling a remediating compact's read cost (r20 ADVICE)
-      val badSet = badCells.toSet
-      val badPaths = ("base" +: deltas).flatMap { d =>
-        cellNames(d).filter(badSet.contains)
-          .map(c => new Path(genPath, s"$d/cell=$c").toString)
-      }
-      val dropped = spark.read.parquet(badPaths: _*).count()
-      System.err.println(s"[annindex] compact at $indexPath dropping " +
-        s"$dropped unassignable rows (cells ${badCells.mkString(",")} " +
-        "outside the quantizer's range — a pre-validation artifact); " +
-        "these rows were invisible to every probe")
-    }
+    if (deltas.isEmpty) return 0
     val gen = nextGenName(fs, dest)
     val newGenPath = new Path(dest, gen)
-    // the SAME latest-wins resolution probes apply, over every
-    // in-range cell — one implementation, so probe and compact can
-    // never resolve an update differently
-    readCells(spark, genPath, deltas, Some(goodCells.map(_.toInt).sorted),
+    // the SAME latest-wins resolution probes apply, over every cell
+    // (ingress refuses cells outside [0, nlist)) — one
+    // implementation, so probe and compact can never resolve an
+    // update differently
+    readCells(spark, genPath, deltas, None,
         Seq("cell", "corpus_id", "codes", "cn", "vec"),
         deltasBroadcastable(spark, fs, genPath, deltas))
       .withColumn("cell", col("cell").cast("int"))

@@ -924,18 +924,18 @@ object Dedup {
   }
 }
 
-/** The tiny durable layout manifest both standing gates keep next to
-  * their tables (`<root>/_layout`, k=v lines): the constructor
+/** The tiny durable layout manifest each standing gate keeps next to
+  * its tables (`<root>/_layout`, k=v lines): the constructor
   * parameters that define how on-disk artifacts were WRITTEN — bloom
   * geometry, bucket width, signature shape — so a gate reopened with
   * different parameters fails fast instead of (a) crashing deep in a
   * bloom read with an index-out-of-bounds, or (b) silently degrading
   * (a width mismatch makes every prefix probe miss, decaying the gate
   * to dup appends; a signature-shape mismatch is a false-negative
-  * factory). A manifest-less table (pre-manifest generations) is
-  * ADOPTED: the live bucket width is derived from the partition
-  * directory names and the manifest written, so the validation holds
-  * from the next open onward.
+  * factory). A gate writes its manifest at the first open of a fresh
+  * root, before any table exists; a root whose tables exist without
+  * one is not a layout the gates read, and the first open fails fast
+  * on it ([[StandingGate]]).
   */
 private[graft] object GateLayout {
   import org.apache.hadoop.fs.{FileSystem, Path}
@@ -946,9 +946,8 @@ private[graft] object GateLayout {
     * place (an empty manifest would pass every check vacuously), then
     * an overwrite-capable rename installs it — NOT
     * delete-then-rename, whose between-window would leave NO file: the
-    * next open's adoption path would then write the reopening gate's
-    * constructor parameters as disk truth, and a concurrent marker
-    * reader would see none. */
+    * next open would then refuse the gate's manifest-less tables, and
+    * a concurrent marker reader would see none. */
   def writeAtomic(fs: FileSystem, p: Path, text: String,
       tmpSuffix: String = "_tmp"): Unit = {
     val tmp = new Path(p.getParent, p.getName + tmpSuffix)
@@ -965,6 +964,12 @@ private[graft] object GateLayout {
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString
     finally in.close()
   }
+
+  /** The sorted entry names under `p` ("nothing" when it is missing
+    * or empty) — what a fail-fast on an unknown layout reports. */
+  def found(fs: FileSystem, p: Path): String =
+    if (!fs.exists(p) || fs.listStatus(p).isEmpty) "nothing"
+    else fs.listStatus(p).map(_.getPath.getName).sorted.mkString(", ")
 
   def write(fs: FileSystem, p: Path, kv: Seq[(String, String)]): Unit =
     writeAtomic(fs, p, kv.map { case (key, v) => s"$key=$v" }.mkString("\n"))
@@ -1097,12 +1102,11 @@ private[graft] object GateOps {
     * Written write-tmp-then-rename ([[GateLayout.writeAtomic]],
     * staged as `<name>.wtmp`), NOT overwrite-in-place: markers
     * like `_last_commit` gate replay idempotence, and a torn
-    * overwrite could leave a prefix of the intended value — UUIDs
-    * may start with digits, so a torn "<uuid>:<batch>" can read as a
-    * bare all-digit legacy marker and wrongly match a FUTURE batchId
-    * (silent batch drop). With the rename discipline a crash leaves
-    * either the old marker, no marker, or the complete new one —
-    * every case on the re-run (safe) side. */
+    * overwrite could leave a prefix of the intended value — a torn
+    * "<uuid>:12" reads as "<uuid>:1" and would wrongly match that
+    * batch on a later replay (silent batch drop). With the rename
+    * discipline a crash leaves either the old marker, no marker, or
+    * the complete new one — every case on the re-run (safe) side. */
   def writeMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       name: String, value: String): Unit =
     GateLayout.writeAtomic(fs, new org.apache.hadoop.fs.Path(s"$dir/$name"),
@@ -1176,65 +1180,12 @@ private[graft] object GateOps {
   }
 
   /** Whether a persisted `_last_commit` marker proves THIS batch
-    * already fully committed. Matches the identity-paired form, plus
-    * the legacy bare-batchId form for exactly the upgrade window —
-    * but only for batchId > 0 (a legacy "0" is ambiguous between a
-    * genuine replay and a FRESH checkpoint's first batch over a
-    * reused dir — the silent-drop bug the identity pairing fixed)
-    * AND only when `legacyGenuine` holds. The bare form can only
-    * have been written by pre-identity code, so it is genuine only
-    * for a same-stream in-place upgrade; callers pass
-    * [[legacyMarkerGenuine]] (marker postdates the checkpoint's
-    * metadata), which also closes the residual batchId>0 collision:
-    * a new stream whose batches 0..N-1 were all empty never
-    * overwrites a stale legacy "N", and its first nonempty batch N
-    * would otherwise be silently dropped. Evaluated lazily — the
-    * common paths (identity match, no marker) never pay the stat.
-    * The default keeps the pure three-argument form for tests. */
-  def replayCommitted(marker: Option[String], commitKey: String,
-      batchId: Long, legacyGenuine: => Boolean = true): Boolean =
-    marker.contains(commitKey) ||
-      (batchId > 0 && marker.contains(batchId.toString) &&
-        legacyGenuine)
-
-  /** Whether a legacy bare-batchId `_last_commit` marker can be
-    * GENUINE for the stream at `ckptDir`: only if the marker file
-    * was modified at-or-after the checkpoint's `metadata` file was —
-    * i.e. written while THIS stream existed (the in-place-upgrade
-    * window legacy matching exists for). A marker predating the
-    * checkpoint belongs to an earlier stream over a reused output
-    * dir and must never match. Missing/unreadable either side →
-    * false (the re-run side). Filesystems resolved from each path's
-    * own scheme — the checkpoint may live elsewhere than the
-    * output dir. */
-  def legacyMarkerGenuine(conf: org.apache.hadoop.conf.Configuration,
-      markerDir: String, markerName: String,
-      ckptDir: String): Boolean =
-    try {
-      val mp = new org.apache.hadoop.fs.Path(s"$markerDir/$markerName")
-      val cp = new org.apache.hadoop.fs.Path(s"$ckptDir/metadata")
-      val mfs = mp.getFileSystem(conf)
-      val cfs = cp.getFileSystem(conf)
-      // STRICTLY after, not at-or-after: mtime granularity can be a
-      // full second on object stores, so a stale marker and a fresh
-      // checkpoint created within one quantum would tie — and a tie
-      // must land on the re-run (safe) side, like every other
-      // ambiguity in this guard. The trade is explicit: a GENUINE
-      // legacy marker that ties the checkpoint within one quantum is
-      // treated as stale, so its already-committed batch re-runs —
-      // on a non-idempotent sink (plain parquet append) that is a
-      // DUPLICATE append. Possible duplication beats possible data
-      // loss, and the window is one mtime quantum inside a one-deploy
-      // upgrade path (StreamingStateSpec pins both sides).
-      // Cross-store clock skew can still
-      // defeat the comparison in principle; the in-place-upgrade
-      // window this match exists for spans one deploy, after which
-      // the new-format marker overwrites the legacy one and this
-      // path never runs again.
-      mfs.exists(mp) && cfs.exists(cp) &&
-        mfs.getFileStatus(mp).getModificationTime >
-          cfs.getFileStatus(cp).getModificationTime
-    } catch { case scala.util.control.NonFatal(_) => false }
+    * already fully committed: it holds exactly `commitKey`, the
+    * `<queryId>:<batchId>` a completed batch writes. Any other value —
+    * a different stream's identity, another batch, a bare batchId —
+    * re-runs the batch (the safe side). */
+  def replayCommitted(marker: Option[String], commitKey: String): Boolean =
+    marker.contains(commitKey)
 
   def readMarker(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       name: String): Option[String] = {
@@ -1243,14 +1194,11 @@ private[graft] object GateOps {
   }
 
   /** The verdict-table schema generation the near-dup gates stamp
-    * into their layout manifests. History: v1 = (id, n_cands,
-    * best_eq|best_cos, is_neardup); v2 added n_capped_keys (shed
-    * reporting). Readers are normalize-on-read BACKWARD compatible
-    * (older files' missing columns coalesce to their no-op values),
-    * so a lower-or-absent on-disk version is healed silently; a
-    * HIGHER one means the files were written by newer code and this
-    * reader would silently drop columns — the manifest check turns
-    * that into a fail-fast mixed-generation error. */
+    * into their layout manifests: v2 = (id, n_cands,
+    * best_eq|best_cos, is_neardup, n_capped_keys). A manifest whose
+    * version differs — or that has none — describes verdict files
+    * this reader does not read (a newer generation's would be
+    * silently column-dropped), so the first open fails fast on it. */
   val verdictSchemaVersion: String = "2"
 
   /** Broadcast-side row ceiling shared by the gate family's
@@ -1521,13 +1469,17 @@ abstract class StandingGate private[operators] (root: String,
   private def recover(fs: FileSystem): Unit =
     tables.foreach(GateOps.recoverGeneration(fs, root, _))
 
-  /** The layout handshake: fail fast on a pin mismatch, restore the
-    * live geometry, heal a missing or stale manifest. A manifest-less
-    * table is ADOPTED — its live geometry derived from the tables and
-    * the manifest written — so the validation holds from the next
-    * open onward. */
+  /** The layout handshake: fail fast on a layout this version does
+    * not write (tables with no manifest, a manifest missing a pinned
+    * entry) or on a pin mismatch, restore the live geometry, and
+    * write the manifest when the root is fresh or it is stale. */
   private def syncLayout(fs: FileSystem): Unit = {
     val m = layout(fs)
+    val odd = m.fold(
+      tables.filter(exists(fs, _)).map(_ + " without _layout"))(mm =>
+      pins.map(_._1).filterNot(mm.contains).map("_layout without " + _))
+    require(odd.isEmpty, s"gate root $root holds ${odd.mkString(", ")} — " +
+      "not a layout this version reads; start the gate over in a new root")
     m.foreach(GateLayout.check(_, root, pins))
     if (restoreLayout(fs, m)) writeLayout(fs)
   }
@@ -1536,8 +1488,9 @@ abstract class StandingGate private[operators] (root: String,
     * `cur`. The table generation's own `marker` is ground truth: it
     * rode the same rename as the data ([[GateOps.writeMarker]]), so it
     * can never be stale the way the root manifest can after a crash
-    * between a resize's swap and its manifest refresh. The manifest's
-    * `key` is the fallback for pre-marker generations. A persisted
+    * between a resize's swap and its manifest refresh. Only resizing
+    * compactions write the marker, so the manifest's `key` covers the
+    * generations no resize has marked. A persisted
     * value must pass `valid` — a corrupt one fails fast rather than
     * being stamped into a fresh manifest. Returns the live value and
     * whether the manifest disagrees with the marker (heal it). */
@@ -1883,15 +1836,11 @@ abstract class BandedGate private[operators] (root: String,
       // fired from a replayed admit
       rewrite(spark, fs, corpus, corpusDDL)(_.dropDuplicates("id"))
       // distinct() absorbs at-least-once replays (a replayed batch
-      // rewrites identical verdict rows); pre-n_capped_keys files read
-      // as null under the explicit schema — normalized to 0, the
-      // no-shed value, so the rewrite is uniform. Guarded: a gate that
-      // only ever saw empty batches has no verdicts directory.
+      // rewrites identical verdict rows). Guarded: a gate that only
+      // ever saw empty batches has no verdicts directory.
       rewrite(spark, fs, "verdicts",
         s"id BIGINT, n_cands BIGINT, $bestDDL, is_neardup INT, " +
-          "n_capped_keys BIGINT")(
-        _.withColumn("n_capped_keys",
-          coalesce(col("n_capped_keys"), lit(0L))).distinct())
+          "n_capped_keys BIGINT")(_.distinct())
       after
     }
 
@@ -2023,8 +1972,9 @@ final class NoveltyGate(tableRoot: String,
   }
 
   /** The live bucket width as written on disk — max fp_b= directory
-    * name length (mixed widths can only arise from a crashed
-    * pre-manifest generation; the widest is the freshest). */
+    * name length. It leads the manifest because a crash between a
+    * widening compaction's data swap and its manifest refresh leaves
+    * the manifest one width behind the directories. */
   private def dirWidth(
       fs: org.apache.hadoop.fs.FileSystem): Option[Int] = {
     val dp = new org.apache.hadoop.fs.Path(s"$tableRoot/data")
@@ -2100,8 +2050,8 @@ final class NoveltyGate(tableRoot: String,
         .join(broadcast(docs.filter(col("fp").isNotNull)
           .select(col("fp")).distinct()), Seq("fp"), "left_semi")
         // min ignores NULLs: at-least-once duplicate rows collapse,
-        // and a legacy/plain-admit row (owner null) yields null —
-        // correctly unownable
+        // and a plain-admit row (owner null) yields null — correctly
+        // unownable
         .groupBy(col("fp")).agg(min(col("owner")).as("owner"))
     docs.join(stored, Seq("fp"), "left")
       .select(col("id"),
@@ -2264,8 +2214,8 @@ final class NoveltyGate(tableRoot: String,
       .parquet(hp.toString)
       .filter(col("fp").isNotNull)
       // exact dedup preserving OWNERSHIP: min skips nulls, so an
-      // at-least-once duplicate keeps its owner and pre-owner legacy
-      // rows stay null
+      // at-least-once duplicate keeps its owner and plain-admit rows
+      // stay null
       .groupBy(col("fp")).agg(min(col("owner")).as("owner"))
       .localCheckpoint() // pin: consumed by both rewrites, and the
                          // source dirs are about to be swapped away
@@ -2478,12 +2428,9 @@ final class NearDupGate(root: String, numHashes: Int = 32,
     * geometry, so resizing it is free here.
     *
     * The VERDICT table's schema generation is pinned too
-    * ([[GateOps.verdictSchemaVersion]]): a pre-versioning manifest is
-    * healed in place (its v1 verdict files are the n_capped_keys-less
-    * shape the normalize-on-read path absorbs), while a HIGHER
-    * on-disk version — files written by a newer generation of this
-    * code — fails fast instead of this reader silently truncating
-    * columns it does not know. */
+    * ([[GateOps.verdictSchemaVersion]]): a manifest with another
+    * version, or none, fails fast instead of this reader silently
+    * mis-reading verdict files it does not know. */
   protected def pins: Seq[(String, String)] =
     Seq("num_hashes" -> numHashes.toString,
       "bands" -> bands.toString, "shingle_size" -> shingleSize.toString,
@@ -2506,7 +2453,7 @@ final class NearDupGate(root: String, numHashes: Int = 32,
         capCur = if (capCur > 0) math.min(capCur, c) else c
         capPolicy = c
       }
-    m.forall(!_.contains("verdict_schema"))
+    m.isEmpty
   }
 
   /** Manifest refresh: the pins plus the live cap — persisted ONLY

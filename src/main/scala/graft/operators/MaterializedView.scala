@@ -93,19 +93,11 @@ object MaterializedView {
   def refreshWithRetractions(stored: DataFrame, insertRollup: DataFrame,
       deleteRollup: DataFrame): DataFrame = {
     val wide = DecimalType(28, 4)
-    // Legacy stored states (pre-nv schema, persisted parquet without
-    // the column) are tolerated: synthesize nv from the one
-    // distinction the old schema could express — vsum NULL ⟺ zero
-    // non-null values. Exact for any state built by eventRollup
-    // (whose invariant is vsum NULL iff nv = 0); for a group with a
-    // mix of NULL and non-NULL values it over-counts nv, which only
-    // matters if later retractions drain ALL its non-null rows — the
-    // case the new schema exists to get right going forward.
     def shaped(df: DataFrame) = {
-      val nv = if (df.columns.contains("nv")) col("nv")
-        else when(col("vsum").isNull, lit(0L)).otherwise(col("n"))
+      require(df.columns.contains("nv"), "MV state lacks the nv column " +
+        s"(has ${df.columns.mkString(", ")}); rebuild it with eventRollup")
       df.select(col("event_type"), col("day"),
-        col("n"), nv.as("nv"), col("vsum").cast(wide))
+        col("n"), col("nv"), col("vsum").cast(wide))
     }
     val negated = shaped(deleteRollup).select(col("event_type"), col("day"),
       (-col("n")).as("n"), (-col("nv")).as("nv"),

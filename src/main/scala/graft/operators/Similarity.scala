@@ -1207,14 +1207,14 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
   /** Family-standard layout manifest (see [[graft.operators
     * .GateLayout]]): a dim/band/seed mismatch against stored keys +
     * vectors is a silent false-negative factory — fail fast. The
-    * verdict schema generation is pinned and healed exactly as in
-    * [[graft.operators.NearDupGate]] (same version history: v2 added
-    * n_capped_keys). `row_bits` is LIVE maintenance state rather than
-    * a fail-fast parameter (the NoveltyGate prefix-width discipline):
-    * [[compact]] can widen it for a grown corpus, so first open
-    * restores the persisted width instead of rejecting it — in the
-    * resize crash window the manifest is legitimately one refresh
-    * behind the keys generation's `_row_bits` marker. */
+    * verdict schema generation is pinned exactly as in
+    * [[graft.operators.NearDupGate]]. `row_bits` is LIVE maintenance
+    * state rather than a fail-fast parameter (the NoveltyGate
+    * prefix-width discipline): [[compact]] can widen it for a grown
+    * corpus, so first open restores the persisted width instead of
+    * rejecting it — in the resize crash window the manifest is
+    * legitimately one refresh behind the keys generation's
+    * `_row_bits` marker. */
   protected def pins: Seq[(String, String)] =
     Seq("dim" -> dim.toString, "bands" -> bands.toString,
       "seed" -> seed.toString,
@@ -1226,8 +1226,7 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
       "row_bits", rbCur)(rb => rb > 0 && bands * rb <= 30,
       "overflows the int keyspace")
     rbCur = rb
-    stale || m.forall(mm =>
-      !mm.contains("verdict_schema") || !mm.contains("row_bits"))
+    stale || m.forall(!_.contains("row_bits"))
   }
 
   protected def writeLayout(fs: FileSystem): Unit =

@@ -131,16 +131,18 @@ object Curation {
             "its _layout completion sentinel (a first save is in " +
             "flight or crashed) — retry after the save, or retrain")
       graft.operators.GateOps.recoverGeneration(fs, dir, "current")
-      // legacy adoption (the gate family's manifest-less-table
-      // discipline): a model dir written by the pre-generation flat
-      // layout has its artifacts at the root — read them from there
-      // rather than stranding cadence-trained models until a retrain
-      val base =
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/current")))
-          s"$dir/current"
-        else dir
+      val base = s"$dir/current"
       val mp = new org.apache.hadoop.fs.Path(s"$base/_layout")
-      val m = graft.operators.GateLayout.read(fs, mp)
+      // the one layout save writes: a `current` generation whose
+      // manifest carries a gen_id. Anything else fails fast naming
+      // what the dir holds.
+      val m = if (fs.exists(mp)) graft.operators.GateLayout.read(fs, mp)
+        else Map.empty[String, String]
+      if (!m.contains("gen_id")) throw new IllegalStateException(
+        s"no model generation with a gen_id at $base (found at $dir: " +
+          graft.operators.GateLayout.found(fs, new org.apache.hadoop.fs
+            .Path(dir)) + ") — not a layout this version reads; save " +
+          "the models again")
       def rd(name: String): DataFrame =
         spark.read.parquet(s"$base/$name").localCheckpoint()
       val loaded = Models(rd("nb_counts"), rd("nb_priors"),
@@ -152,8 +154,7 @@ object Curation {
       // old-generation delete turns a read into a loud
       // FileNotFoundException — acceptable; silence is not). The
       // gen_id pin closes the silent path: unchanged across the
-      // reads ⇒ every frame came from one generation. Pre-gen_id
-      // dirs (legacy saves) skip the check.
+      // reads ⇒ every frame came from one generation.
       val mAfter = graft.operators.GateLayout.read(fs, mp)
       if (m.get("gen_id") != mAfter.get("gen_id"))
         throw new IllegalStateException(
@@ -204,7 +205,7 @@ object Curation {
       val mp = new org.apache.hadoop.fs.Path(s"$dir/current/_layout")
       if (fs.exists(mp))
         graft.operators.GateLayout.read(fs, mp).get("gen_id")
-      else None // legacy flat layout: no generations to track
+      else None // mid-swap: current is momentarily missing
     }
 
     /** The held models, re-checked against the dir's current
@@ -567,13 +568,7 @@ object Curation {
         val commitKey = s"${ckptId()}:$batchId"
         val committed = graft.operators.GateOps.replayCommitted(
           graft.operators.GateOps.readMarker(tfs, outDir,
-            "_last_commit"), commitKey, batchId,
-          // legacy bare-batchId markers match only when written
-          // during THIS stream's lifetime (in-place upgrade), never
-          // a stale marker under a fresh checkpoint
-          graft.operators.GateOps.legacyMarkerGenuine(
-            batch.sparkSession.sparkContext.hadoopConfiguration,
-            outDir, "_last_commit", ckptDir))
+            "_last_commit"), commitKey)
         if (!batch.isEmpty && !committed) {
           val (v, shed) = curateBatchWithShed(batch, ngate, ndgate,
             resolveModels())

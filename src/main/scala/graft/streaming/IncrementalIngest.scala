@@ -190,13 +190,7 @@ object IncrementalIngest {
         val commitKey = s"${ckptId()}:$batchId"
         val committed = graft.operators.GateOps.replayCommitted(
           graft.operators.GateOps.readMarker(tfs, tableDir,
-            "_last_commit"), commitKey, batchId,
-          // legacy bare-batchId markers match only when written
-          // during THIS stream's lifetime (in-place upgrade), never
-          // a stale marker under a fresh checkpoint
-          graft.operators.GateOps.legacyMarkerGenuine(
-            batch.sparkSession.sparkContext.hadoopConfiguration,
-            tableDir, "_last_commit", ckptDir))
+            "_last_commit"), commitKey)
         if (!batch.isEmpty && !committed) {
           gate.foreach { g =>
             val payloadCols = batch.columns.filterNot(_ == "scraped_at")

@@ -406,15 +406,9 @@ class AnnIndexSpec extends AnyFunSuite {
     val gen = genOf(dir)
     val expect = rowsOf(AnnIndex.probe(spark, dir, queries, "vec_id",
       "embedding", k = 3, nprobe = 4, shortlist = 12))
-    // simulate rows a pre-validation append misfiled at cell=-1 (the
-    // wrong-dim/null assignment sink): clone stored rows into the
-    // out-of-range partition
-    spark.read.parquet(s"$dir/$gen/base/cell=0").limit(3)
-      .withColumn("corpus_id", col("corpus_id") + 500000L)
-      .write.parquet(s"$dir/$gen/base/cell=-1")
-    // and a stray 'delta-' dir (tooling debris — empty numeric suffix)
+    // a stray 'delta-' dir (tooling debris — empty numeric suffix)
     assert(fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/$gen/delta-")))
-    // probes never scan either
+    // probes never scan it
     assert(rowsOf(AnnIndex.probe(spark, dir, queries, "vec_id",
       "embedding", k = 3, nprobe = 4, shortlist = 12)) === expect)
     // appends keep numbering cleanly past the stray name
@@ -423,93 +417,6 @@ class AnnIndexSpec extends AnyFunSuite {
         .withColumn("vec_id", lit(600000L)), "vec_id", "embedding")
     assert(fs.exists(
       new org.apache.hadoop.fs.Path(s"$dir/$gen/delta-000001")))
-    // compact drops the unassignable rows permanently: storage holds
-    // exactly the live ids, no out-of-range partition survives
-    assert(AnnIndex.compact(spark, dir) === 1)
-    val stored = AnnIndex.census(spark, dir)
-      .agg(sum($"n_vectors")).head().getLong(0)
-    assert(stored === 101L,
-      s"compact must drop the 3 unassignable rows, stored=$stored")
-    assert(!fs.listStatus(new org.apache.hadoop.fs.Path(
-        s"$dir/${genOf(dir)}/base")).map(_.getPath.getName)
-      .contains("cell=-1"))
-  }
-
-  test("a legacy pre-generation index is adopted in place at writer " +
-      "entry (renames only, no re-encode); readers fail fast naming " +
-      "that remedy; a crashed adoption resumes") {
-    val dir = Files.createTempDirectory("graft_ann_leg").toFile
-      .getAbsolutePath + "/idx"
-    val fs = fsFor(dir)
-    AnnIndex.build(spark, dir, corpus.filter($"vec_id" % 7 =!= 3),
-      "vec_id", "embedding", cents, books)
-    AnnIndex.append(spark, dir, corpus.filter($"vec_id" % 7 === 3),
-      "vec_id", "embedding")
-    val expect = rowsOf(AnnIndex.probe(spark, dir, queries, "vec_id",
-      "embedding", k = 3, nprobe = 2, shortlist = 12))
-    // deconstruct into the previous release's root shape: components
-    // at the index root, no pointers
-    val gen = genOf(dir)
-    for (n <- Seq("base", "delta-000001", "_ann_layout"))
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir/$gen/$n"),
-        new org.apache.hadoop.fs.Path(s"$dir/$n")))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$gen"), true)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir))
-      .map(_.getPath).filter(_.getName.startsWith("ptr-"))
-      .foreach(p => fs.delete(p, false))
-    def relCensus() = {
-      val r = fs.makeQualified(new org.apache.hadoop.fs.Path(dir)).toString
-      (AnnIndex.fileCensus(spark, s"$dir") // whole tree
-        .map { case (p, l, m) => (p.stripPrefix(r).split("/").last, l, m) })
-        .filter(_._1.endsWith(".parquet")).sorted
-    }
-    val legacyFiles = relCensus()
-    // a READER on the legacy index fails fast naming the remedy and
-    // mutates nothing
-    val e = intercept[IllegalArgumentException] {
-      AnnIndex.probe(spark, dir, queries, "vec_id", "embedding", k = 3)
-    }
-    assert(e.getMessage.contains("legacy pre-generation"))
-    assert(relCensus() === legacyFiles, "a reader mutated the artifact")
-    // any writer op adopts in place: renames only — every parquet
-    // file keeps its name, length, and mtime
-    AnnIndex.append(spark, dir, corpus.filter($"vec_id" < 0),
-      "vec_id", "embedding")
-    assert(relCensus() === legacyFiles,
-      "adoption re-encoded or rewrote data files")
-    assert(rowsOf(AnnIndex.probe(spark, dir, queries, "vec_id",
-      "embedding", k = 3, nprobe = 2, shortlist = 12)) === expect,
-      "adopted index diverged from the pre-upgrade index")
-    // crash-resume: marker present, base moved, layout still at root
-    val dir2 = Files.createTempDirectory("graft_ann_leg2").toFile
-      .getAbsolutePath + "/idx"
-    AnnIndex.build(spark, dir2, corpus, "vec_id", "embedding",
-      cents, books)
-    val gen2 = genOf(dir2)
-    for (n <- Seq("base", "_ann_layout"))
-      assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir2/$gen2/$n"),
-        new org.apache.hadoop.fs.Path(s"$dir2/$n")))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir2/$gen2"), true)
-    fs.listStatus(new org.apache.hadoop.fs.Path(dir2))
-      .map(_.getPath).filter(_.getName.startsWith("ptr-"))
-      .foreach(p => fs.delete(p, false))
-    // simulate the crash window: marker written, base moved into the
-    // target generation, layout not yet moved, pointer not published
-    val out = fs.create(
-      new org.apache.hadoop.fs.Path(s"$dir2/_adopting"), true)
-    out.write("gen=gen-000001".getBytes("UTF-8")); out.close()
-    assert(fs.mkdirs(new org.apache.hadoop.fs.Path(s"$dir2/gen-000001")))
-    assert(fs.rename(new org.apache.hadoop.fs.Path(s"$dir2/base"),
-      new org.apache.hadoop.fs.Path(s"$dir2/gen-000001/base")))
-    AnnIndex.append(spark, dir2, corpus.filter($"vec_id" < 0),
-      "vec_id", "embedding")
-    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir2/_adopting")),
-      "resume must clear the adoption marker")
-    assert(rowsOf(AnnIndex.probe(spark, dir2, queries, "vec_id",
-      "embedding", k = 3, nprobe = 2, shortlist = 12)) ===
-      rowsOf(Similarity.knnJoinIvfPq(corpus, queries, "vec_id",
-        "embedding", k = 3, cents, books, nprobe = 2, shortlist = 12)),
-      "resumed adoption lost data")
   }
 
   test("append fails fast on column-name, column-TYPE, and vector-" +

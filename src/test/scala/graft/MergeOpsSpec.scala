@@ -614,29 +614,6 @@ class MergeOpsSpec extends AnyFunSuite {
       Seq((3L, 7.00)))
   }
 
-  test("MV refresh tolerates legacy stored state without the nv column") {
-    import graft.operators.MaterializedView
-    val base = mvEvents(Seq(
-      ("view", "2025-03-01 10:00:00", 1.25),
-      ("click", "2025-03-02 07:00:00", 3.33)))
-    // an all-NULL-value legacy group: vsum NULL must synthesize nv = 0
-    val nullGroup = Seq(("ping", "2025-03-01 09:00:00"))
-      .toDF("event_type", "ts_str")
-      .select(col("event_type"), to_timestamp(col("ts_str")).as("ts"),
-        lit(null).cast("double").as("value"))
-    val full = base.unionByName(nullGroup)
-    val legacy = MaterializedView.eventRollup(full).drop("nv")
-    val delta = mvEvents(Seq(("view", "2025-03-01 12:00:00", 4.00)))
-    val got = MaterializedView.refresh(legacy,
-      MaterializedView.eventRollup(delta))
-    val want = MaterializedView.refresh(MaterializedView.eventRollup(full),
-      MaterializedView.eventRollup(delta))
-    assert(got.orderBy("event_type", "day").collect().toSeq ===
-      want.orderBy("event_type", "day").collect().toSeq)
-    val ping = got.filter(col("event_type") === "ping").collect()
-    assert(ping.length === 1 && ping.head.getAs[Any]("vsum") == null)
-  }
-
   test("MV retractions: delete inverts insert, zeroed groups leave") {
     import graft.operators.MaterializedView
     val base = mvEvents(Seq(

@@ -893,10 +893,9 @@ class StreamingStateSpec extends AnyFunSuite {
   }
 
   test("verdict-table schema generation is manifest-pinned: heal older, reject newer") {
-    // the verdict tables evolved (v2 added n_capped_keys) behind a
-    // normalize-on-read path; the manifest entry makes the OTHER
-    // direction — files written by newer code, read by this one —
-    // fail fast instead of silently dropping columns
+    // the manifest entry makes verdict files written by newer code,
+    // read by this one, fail fast instead of silently dropping
+    // columns
     val out = new java.io.File("target/test_verdict_schema")
       .getAbsolutePath
     val fs = new org.apache.hadoop.fs.Path(out)
@@ -909,16 +908,6 @@ class StreamingStateSpec extends AnyFunSuite {
         "doc_id", "text")
     val m0 = graft.operators.GateLayout.read(fs, mp)
     assert(m0.get("verdict_schema") === Some("2"))
-    // a pre-versioning generation (manifest without the entry) is
-    // ADOPTED and healed — its v1 files are what normalize-on-read
-    // already absorbs
-    graft.operators.GateLayout.write(fs, mp,
-      (m0 - "verdict_schema").toSeq)
-    val g2 = new graft.operators.NearDupGate(root)
-    g2.admit(Seq((2L, "delta epsilon zeta")).toDF("doc_id", "text"),
-      "doc_id", "text")
-    assert(graft.operators.GateLayout.read(fs, mp)
-      .get("verdict_schema") === Some("2"), "reopen must heal the manifest")
     // a HIGHER generation's files must not be silently column-dropped
     graft.operators.GateLayout.write(fs, mp,
       m0.updated("verdict_schema", "99").toSeq)
@@ -1963,47 +1952,8 @@ class StreamingStateSpec extends AnyFunSuite {
     graft.operators.GateOps.writeMarker(fs, out, "_last_commit", "8")
     assert(graft.operators.GateOps.readMarker(fs, out, "_last_commit")
       === Some("8"))
-    // legacy genuineness: the bare "8" above can only be honored when
-    // it was written AFTER the checkpoint's metadata (in-place
-    // upgrade); a marker predating the checkpoint is an earlier
-    // stream's leftover over a reused dir and must re-run
-    val ckpt = s"$out/_ckpt"
-    fs.mkdirs(p(ckpt))
-    val md = fs.create(p(s"$ckpt/metadata"), true)
-    try md.write(
-      """{"id":"aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee"}"""
-        .getBytes("UTF-8")) finally md.close()
-    val now = System.currentTimeMillis()
-    fs.setTimes(p(s"$ckpt/metadata"), now, now)
-    fs.setTimes(p(s"$out/_last_commit"), now - 60000L, now - 60000L)
-    val marker = graft.operators.GateOps
-      .readMarker(fs, out, "_last_commit")
-    assert(!graft.operators.GateOps.replayCommitted(marker, "q:8", 8,
-        graft.operators.GateOps.legacyMarkerGenuine(conf, out,
-          "_last_commit", ckpt)),
-      "a stale legacy marker predating the checkpoint matched a " +
-        "future batch — that batch would be silently dropped")
-    fs.setTimes(p(s"$out/_last_commit"), now + 60000L, now + 60000L)
-    assert(graft.operators.GateOps.replayCommitted(marker, "q:8", 8,
-        graft.operators.GateOps.legacyMarkerGenuine(conf, out,
-          "_last_commit", ckpt)),
-      "a genuine same-stream legacy marker (upgrade window) must " +
-        "still be honored")
-    // an mtime TIE (marker and checkpoint created within one mtime
-    // granularity quantum — whole seconds on some object stores) is
-    // ambiguous and must land on the re-run (safe) side
-    fs.setTimes(p(s"$out/_last_commit"), now, now)
-    assert(!graft.operators.GateOps.legacyMarkerGenuine(conf, out,
-        "_last_commit", ckpt),
-      "an mtime tie must not count as genuine")
-    // identity-paired matches never consult the legacy check
-    assert(graft.operators.GateOps.replayCommitted(Some("q:9"), "q:9",
-      9, sys.error("identity match must not evaluate legacy check")))
-    // a missing checkpoint metadata file disables legacy matching on
-    // the safe (re-run) side
-    assert(fs.delete(p(s"$ckpt/metadata"), false))
-    assert(!graft.operators.GateOps.legacyMarkerGenuine(conf, out,
-      "_last_commit", ckpt))
+    // identity-paired markers match
+    assert(graft.operators.GateOps.replayCommitted(Some("q:9"), "q:9"))
   }
 
   test("novelty gate rejects a non-power-of-two bloom width at creation") {
@@ -2196,8 +2146,8 @@ class StreamingStateSpec extends AnyFunSuite {
     // (live cap = min(seed, policy)) must persist the POLICY value,
     // not the min — otherwise the one-off seed tightens durable table
     // state and the exact opt-out inherits it forever. The refresh
-    // trigger here is the pre-versioning-manifest heal path (the only
-    // writeLayout call a seeded, policy-off reopen ever makes).
+    // trigger here is a policy tightening (a target below the
+    // restored policy) in a process whose seed is tighter still.
     val out = new java.io.File("target/test_neardup_polcarry")
       .getAbsolutePath
     val fs = new org.apache.hadoop.fs.Path(out)
@@ -2213,20 +2163,17 @@ class StreamingStateSpec extends AnyFunSuite {
     g.admitScored(docs(1L to 5L), "id", "text")
     assert(layout().get("band_key_cap") === Some("4"),
       "fixture must engage the policy at 4 first")
-    // simulate a pre-versioning manifest so the next open's heal path
-    // refreshes it (syncLayout rewrites when verdict_schema is absent)
-    graft.operators.GateLayout.write(fs, mp,
-      (layout() - "verdict_schema").toSeq)
-    val seeded = new graft.operators.NearDupGate(out, bandKeyCap = 2)
-    seeded.compact(spark) // first table touch → syncLayout → heal
-    assert(layout().get("band_key_cap") === Some("4"),
-      "the heal refresh persisted min(seed, policy) — the one-off " +
+    val seeded = new graft.operators.NearDupGate(out, bandKeyCap = 2,
+      targetKeyLoad = 3)
+    seeded.compact(spark) // restores policy 4, engages 3 → refresh
+    assert(layout().get("band_key_cap") === Some("3"),
+      "the refresh persisted min(seed, policy) — the one-off " +
         "seed must never tighten the durable policy")
     // and the exact opt-out restores the policy, not the seed
     val exact = new graft.operators.NearDupGate(out)
     val v = exact.admitScored(docs(Seq(21L)), "id", "text").head()
-    assert(v.getLong(1) === 4L,
-      "exact reopen must run under the restored policy cap of 4")
+    assert(v.getLong(1) === 3L,
+      "exact reopen must run under the restored policy cap of 3")
     // A seed TIGHTER than the target must not suppress the policy
     // measurement: the live cap is already under budget, but the
     // TABLE has no engagement on record — a hot corpus must still
@@ -2714,5 +2661,83 @@ class StreamingStateSpec extends AnyFunSuite {
         assert(explicit() === start, s"$name failed admit from $start")
       }
     } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("layouts no current writer produces fail fast naming what was " +
+      "found and change no file; a bare batchId marker is never a commit") {
+    val out = Files.createTempDirectory("graft_unknown_layout").toFile
+      .getAbsolutePath
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def p(s: String) = new org.apache.hadoop.fs.Path(s)
+    def moveUp(from: String, to: String): Unit = {
+      fs.listStatus(p(from)).foreach(st =>
+        assert(fs.rename(st.getPath, p(s"$to/${st.getPath.getName}"))))
+      assert(fs.delete(p(from), true))
+    }
+    // one message naming `found`, and not one file of `dir` touched
+    def refused(dir: String, found: String)(call: => Any): Unit = {
+      val before = graft.operators.AnnIndex.fileCensus(spark, dir)
+      val e = intercept[RuntimeException](call)
+      assert(e.getMessage.contains(found), e.getMessage)
+      assert(graft.operators.AnnIndex.fileCensus(spark, dir) === before,
+        s"$dir changed")
+    }
+    // an ANN index whose components sit at the root, with no pointer
+    val rng = new scala.util.Random(7)
+    val vecs = (0 until 40).map(i =>
+        (i.toLong, Array.fill(4)(rng.nextGaussian().toFloat)))
+      .toDF("vec_id", "embedding")
+    val ann = s"$out/ann"
+    graft.operators.AnnIndex.build(spark, ann, vecs, "vec_id", "embedding",
+      graft.operators.Similarity.trainIvfCentroids(vecs, "vec_id",
+        "embedding", dim = 4, nlist = 2, iters = 2),
+      graft.operators.Similarity.trainPqCodebooks(vecs, "vec_id",
+        "embedding", dim = 4, m = 2, ksub = 4, iters = 2))
+    moveUp(s"$ann/${graft.operators.AnnIndex.currentGeneration(spark, ann)}",
+      ann)
+    fs.listStatus(p(ann)).map(_.getPath)
+      .filter(_.getName.startsWith("ptr-")).foreach(fs.delete(_, false))
+    refused(ann, "_ann_layout, base")(graft.operators.AnnIndex.probe(spark,
+      ann, vecs.limit(2), "vec_id", "embedding", k = 3))
+    refused(ann, "_ann_layout, base")(graft.operators.AnnIndex.append(
+      spark, ann, vecs.limit(2), "vec_id", "embedding"))
+    // gate tables with their _layout manifest deleted
+    val docs = Seq((1L, "alpha beta gamma"), (2L, "delta epsilon"))
+      .toDF("doc_id", "text")
+    new graft.operators.NoveltyGate(s"$out/nov").admit(docs)
+    assert(fs.delete(p(s"$out/nov/_layout"), false))
+    refused(s"$out/nov", "data without _layout, bloom without _layout")(
+      new graft.operators.NoveltyGate(s"$out/nov").admit(docs))
+    new graft.operators.NearDupGate(s"$out/nd")
+      .admit(docs, "doc_id", "text")
+    val ndLayout = graft.operators.GateLayout.read(fs,
+      p(s"$out/nd/_layout"))
+    assert(fs.delete(p(s"$out/nd/_layout"), false))
+    refused(s"$out/nd", "bands without _layout, sigs without " +
+        "_layout, verdicts without _layout")(
+      new graft.operators.NearDupGate(s"$out/nd")
+        .admit(docs, "doc_id", "text"))
+    // a near-dup manifest without its verdict_schema entry
+    graft.operators.GateLayout.write(fs, p(s"$out/nd/_layout"),
+      (ndLayout - "verdict_schema").toSeq)
+    refused(s"$out/nd", "_layout without verdict_schema")(
+      new graft.operators.NearDupGate(s"$out/nd")
+        .admit(docs, "doc_id", "text"))
+    // model artifacts and _layout at the dir root, no current/
+    val models = s"$out/models"
+    graft.streaming.Curation.Models.save(graft.streaming.Curation
+      .trainModels(Seq(
+        (900L, "reference corpus tokens for the shared models", "en"),
+        (901L, "andere referenz woerter fuer das geteilte modell", "de"))
+        .toDF("doc_id", "text", "lang")), models)
+    moveUp(s"$models/current", models)
+    refused(models, "_layout")(
+      graft.streaming.Curation.Models.load(spark, models))
+    // a bare batchId marker never counts that batch as committed
+    graft.operators.GateOps.writeMarker(fs, out, "_last_commit", "8")
+    assert(!graft.operators.GateOps.replayCommitted(
+      graft.operators.GateOps.readMarker(fs, out, "_last_commit"),
+      "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee:8"))
   }
 }
