@@ -122,11 +122,6 @@ object ScalarFunctions {
       .otherwise("club_night")
   }
 
-  /** F3 (ibiza variant) — day-name strip + multi-format date parse with
-    * 23:00 default event time, UTC. Output canonical ISO
-    * yyyy-MM-dd'T'HH:mm:ss'Z' (SURVEY §7.3 risk 2).
-    * reference: schema_adapter_enhanced.py:242-270
-    */
   /** Shape-gated format attempt: only run the (expensive,
     * exception-driven-on-failure) DateTimeFormatter when a cheap regex
     * says the string has the right shape. Gates are PERMISSIVE — they
@@ -138,9 +133,23 @@ object ScalarFunctions {
     when(c.rlike(gate), try_to_timestamp(c, lit(fmt)))
       .otherwise(lit(null).cast("timestamp"))
 
-  def parseIbizaDate(timeStr: Column): Column = {
-    val cleaned = trim(regexp_replace(normalizeText(timeStr),
+  /** F3 (ibiza variant) — day-name strip + multi-format date parse with
+    * 23:00 default event time, UTC. Output canonical ISO
+    * yyyy-MM-dd'T'HH:mm:ss'Z' (SURVEY §7.3 risk 2).
+    * reference: schema_adapter_enhanced.py:242-270
+    */
+  def parseIbizaDate(timeStr: Column): Column =
+    parseIbizaCleaned(ibizaDateText(timeStr))
+
+  /** The ibiza parser's input: whitespace-normalized, a leading day
+    * name stripped. */
+  def ibizaDateText(timeStr: Column): Column =
+    trim(regexp_replace(normalizeText(timeStr),
       "(?i)^(monday|tuesday|wednesday|thursday|friday|saturday|sunday)\\s+", ""))
+
+  /** [[parseIbizaDate]] over an [[ibizaDateText]] result — the form for
+    * a caller that computes the cleaned text once per row. */
+  def parseIbizaCleaned(cleaned: Column): Column = {
     val d = coalesce(
       tryFmt(cleaned, "^\\d{1,2} \\p{L}", "d MMMM yyyy"),
       tryFmt(cleaned, "^\\d{1,2} \\p{L}", "d MMM yyyy"),

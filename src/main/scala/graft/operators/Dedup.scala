@@ -1209,6 +1209,16 @@ private[graft] object GateOps {
     * multi-million-row frame and OOM the driver. */
   val broadcastRowCap: Long = 100000L
 
+  /** `df` pinned (localCheckpoint), with its row count measured by the
+    * pin's own jobs: an `observe` on the checkpointed plan, so the
+    * count runs no action of its own (a `count()` on the pinned frame
+    * costs two more jobs). */
+  def pinCounted(df: DataFrame): (DataFrame, Long) = {
+    val seen = org.apache.spark.sql.Observation()
+    val pinned = df.observe(seen, count(lit(1)).as("n")).localCheckpoint()
+    (pinned, seen.get("n").asInstanceOf[Long])
+  }
+
   /** The repo-wide explicit-width batch dedup (one implementation —
     * the AQE rule lives here): a bare dropDuplicates lets AQE
     * coalesce the small post-aggregation shuffle to ONE partition,
@@ -1277,12 +1287,29 @@ private[graft] object GateOps {
     * foreachBatch turn, serialized with the appends). */
   def compactLog(spark: org.apache.spark.sql.SparkSession,
       parent: String, name: String, sortCol: String,
-      maxMergeBytes: Long = 0L): Unit = {
+      maxMergeBytes: Long = 0L): Unit =
+    writeLog(spark, parent, name, sortCol, None, tick = true,
+      maxMergeBytes)
+
+  /** One batch's write to a pipeline log: an append, or on a `tick`
+    * of the log's compaction clock the [[compactLog]] pass — with the
+    * batch's `rows` folded in. The wholesale tier then writes the
+    * batch once, inside its (stored ∪ batch) distinct sorted rewrite,
+    * instead of appending it and reading it straight back; the
+    * incremental tier appends, then merges. */
+  def writeLog(spark: org.apache.spark.sql.SparkSession, parent: String,
+      name: String, sortCol: String, rows: Option[DataFrame],
+      tick: Boolean, maxMergeBytes: Long): Unit = {
+    val path = s"$parent/$name"
+    if (!tick || maxMergeBytes > 0L)
+      rows.foreach(_.write.mode("append").parquet(path))
+    if (!tick) return
     val fs = new org.apache.hadoop.fs.Path(parent)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverGeneration(fs, parent, name)
-    val dirPath = new org.apache.hadoop.fs.Path(s"$parent/$name")
-    if (!fs.exists(dirPath)) return
+    val dirPath = new org.apache.hadoop.fs.Path(path)
+    val stored = fs.exists(dirPath)
+    if (!stored && (maxMergeBytes > 0L || rows.isEmpty)) return
     // either tier owns the other's leftover: a crash inside the
     // incremental tier's write can strand ${name}_merge_tmp, which
     // recoverGeneration knows nothing about — clear it here so a
@@ -1292,7 +1319,8 @@ private[graft] object GateOps {
       new org.apache.hadoop.fs.Path(s"$parent/${name}_merge_tmp")
     fs.delete(mergeTmp, true)
     if (maxMergeBytes <= 0L) {
-      spark.read.parquet(s"$parent/$name")
+      (Option.when(stored)(spark.read.parquet(path)) ++ rows)
+        .reduce(_ unionByName _)
         .distinct()
         .coalesce(1).sortWithinPartitions(col(sortCol))
         .write.mode("overwrite").parquet(s"$parent/${name}_tmp")
@@ -1417,14 +1445,21 @@ abstract class StandingGate private[operators] (root: String,
     tables: Seq[String], autoCompactEvery: Int) {
   import org.apache.hadoop.fs.{FileSystem, Path}
   import org.apache.spark.sql.SparkSession
+  import org.apache.spark.sql.types.StructType
 
   // admits since the last compaction — the maintenance-policy clock.
-  // autoCompactEvery > 0 runs the gate's compaction synchronously
-  // after every N-th admit (inside the same foreachBatch turn, so it
-  // can never race an admit): every admit appends files to the
-  // gate's tables, so probe-time listings degrade O(batches) between
-  // epochs — the policy bounds that at O(N).
+  // autoCompactEvery > 0 makes every N-th admit a TICK: the gate's
+  // compaction runs inside that admit (the same foreachBatch turn, so
+  // it can never race another admit) and folds the admit's own rows
+  // into its rewrite instead of appending them first. Every other
+  // admit appends files to the gate's tables, so probe-time listings
+  // degrade O(batches) between epochs — the policy bounds that at
+  // O(N).
   private var admitsSinceCompact: Int = 0
+
+  // the rows the running tick folds into its rewrite, per table —
+  // empty outside a tick's rewrite
+  private var folded: Map[String, DataFrame] = Map.empty
 
   /** Whether the first open ran (the in-memory filter is built). */
   protected def opened: Boolean
@@ -1446,14 +1481,36 @@ abstract class StandingGate private[operators] (root: String,
   /** Build the in-memory filter from the recovered tables. */
   protected def load(spark: SparkSession, fs: FileSystem): Unit
 
-  /** The gate's compaction at its default arguments. */
-  protected def autoCompact(spark: SparkSession): Unit
-
-  private def fsOf(spark: SparkSession): FileSystem =
+  protected final def fsOf(spark: SparkSession): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** Run a tick's `compact` with the tick's own rows per table folded
+    * into its rewrite: the tick writes its batch once, in the new
+    * generation, instead of appending it and reading it straight back.
+    * A crash before the swap leaves nothing of the batch on disk (the
+    * caller's replay guard re-runs it). */
+  protected final def ticking(rows: Map[String, DataFrame])(
+      compact: => Unit): Unit = {
+    folded = rows
+    try compact finally folded = Map.empty
+  }
+
+  /** Whether `table` holds rows: on disk, or folded in by the running
+    * tick. */
   protected final def exists(fs: FileSystem, table: String): Boolean =
-    fs.exists(new Path(s"$root/$table"))
+    folded.contains(table) || fs.exists(new Path(s"$root/$table"))
+
+  /** `table` as a compaction rewrites it: `stored` (read only when the
+    * table is on disk) ∪ the rows the running tick folds in, cast to
+    * `ddl`. Outside a tick, `stored`. */
+  protected final def withFolded(fs: FileSystem, table: String,
+      ddl: String)(stored: => DataFrame): DataFrame =
+    folded.get(table).fold(stored) { rows =>
+      val cast = rows.select(
+        StructType.fromDDL(ddl).map(f => col(f.name).cast(f.dataType)): _*)
+      if (fs.exists(new Path(s"$root/$table"))) stored.unionByName(cast)
+      else cast
+    }
 
   protected final def layout(
       fs: FileSystem): Option[Map[String, String]] = {
@@ -1506,8 +1563,10 @@ abstract class StandingGate private[operators] (root: String,
 
   /** One admit: `body` inside the parquet IN-pushdown scope, preceded
     * on the first call by the first open (recovery, the layout
-    * handshake, the filter build), followed by the auto-compaction
-    * clock.
+    * handshake, the filter build). `body` learns whether this admit is
+    * a tick of the auto-compaction clock; a tick's body runs the
+    * compaction itself, with its own rows folded in ([[ticking]]),
+    * instead of appending them.
     *
     * The scope: the gates' pruned reads push a collected INSET of
     * keys / candidate ids into the parquet scan so row-group stats on
@@ -1519,8 +1578,8 @@ abstract class StandingGate private[operators] (root: String,
     * overflows the executor stack past ~1.2k values (the constant's
     * scaladoc has the measurement), so larger sets keep the range +
     * post-scan InSet plan. Restored, or unset, on every exit. */
-  protected final def admitting(spark: SparkSession)(
-      body: FileSystem => DataFrame): DataFrame = {
+  protected final def admitting[A](spark: SparkSession)(
+      body: (FileSystem, Boolean) => A): A = {
     val fs = fsOf(spark)
     val thrKey = "spark.sql.parquet.pushdown.inFilterThreshold"
     // getAll (explicitly set keys only), not getOption: getOption
@@ -1528,30 +1587,28 @@ abstract class StandingGate private[operators] (root: String,
     // leave the key explicitly set
     val priorThr = spark.conf.getAll.get(thrKey)
     spark.conf.set(thrKey, Dedup.inPushdownLimit.toString)
+    val tick = autoCompactEvery > 0 &&
+      admitsSinceCompact + 1 >= autoCompactEvery
     val out = try {
       if (!opened) {
         recover(fs)
         syncLayout(fs)
         load(spark, fs)
       }
-      body(fs)
+      body(fs, tick)
     } finally priorThr match {
       case Some(v) => spark.conf.set(thrKey, v)
       case None => spark.conf.unset(thrKey)
     }
-    admitsSinceCompact += 1
-    if (autoCompactEvery > 0 && admitsSinceCompact >= autoCompactEvery) {
-      autoCompact(spark)
-      admitsSinceCompact = 0
-    }
+    admitsSinceCompact = if (tick) 0 else admitsSinceCompact + 1
     out
   }
 
   /** One compaction — run between admit epochs (it must not race an
-    * admit; the clock satisfies this by running inside the admit
-    * turn). A manual compaction on a fresh object gets the first
-    * open's swap-crash-window recovery, and the layout handshake, so
-    * it compacts at the persisted live geometry rather than its
+    * admit; a tick satisfies this by running inside the admit turn).
+    * A manual compaction on a fresh object gets the first open's
+    * swap-crash-window recovery, and the layout handshake, so it
+    * compacts at the persisted live geometry rather than its
     * constructor's. `rewrite` is the gate's policy: it writes
     * `<table>_tmp` for each table it rewrites and returns the step to
     * run once they are live. Each rewritten table then swaps in
@@ -1559,17 +1616,26 @@ abstract class StandingGate private[operators] (root: String,
     * intact, never neither). After the recovery a `_tmp` beside a
     * table can only be this rewrite's: recovery promotes a `_tmp`
     * whose live table is missing, and every policy rewrites each live
-    * table. */
+    * table.
+    *
+    * Inside [[ticking]] the rewrite reads the tick's own rows beside
+    * the stored ones ([[exists]], [[withFolded]]). */
   protected final def compacting(spark: SparkSession)(
       rewrite: FileSystem => () => Unit): Unit = {
     val fs = fsOf(spark)
     recover(fs)
-    if (!exists(fs, tables.head)) return
-    if (!opened) syncLayout(fs)
-    val after = rewrite(fs)
-    tables.filter(t => exists(fs, s"${t}_tmp"))
-      .foreach(GateOps.swapGeneration(fs, root, _))
-    after()
+    val after = try {
+      if (!exists(fs, tables.head)) None
+      else {
+        if (!opened) syncLayout(fs)
+        Some(rewrite(fs))
+      }
+    } finally folded = Map.empty // the swaps and the step see disk alone
+    after.foreach { step =>
+      tables.filter(t => exists(fs, s"${t}_tmp"))
+        .foreach(GateOps.swapGeneration(fs, root, _))
+      step()
+    }
   }
 }
 
@@ -1625,6 +1691,8 @@ abstract class BandedGate private[operators] (root: String,
       bandKeys: DataFrame): DataFrame
   /** The live per-band-key candidate cap — 0 = exact. */
   protected def keyCap: Int
+  /** The gate's compaction at its default arguments. */
+  protected def autoCompact(spark: SparkSession): Unit
   /** Index rows as stored, from (id, key columns…). */
   protected def indexRows(keys: DataFrame): DataFrame =
     keys.select(("id" +: keyCols).map(col): _*)
@@ -1637,7 +1705,8 @@ abstract class BandedGate private[operators] (root: String,
 
   private def read(spark: SparkSession, table: String,
       ddl: String): DataFrame =
-    spark.read.schema(StructType.fromDDL(ddl)).parquet(s"$root/$table")
+    withFolded(fsOf(spark), table, ddl)(
+      spark.read.schema(StructType.fromDDL(ddl)).parquet(s"$root/$table"))
 
   private def empty(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(new java.util.ArrayList[Row](),
@@ -1671,10 +1740,12 @@ abstract class BandedGate private[operators] (root: String,
 
   /** The admit: appends the batch's verdicts and returns them
     * (localCheckpointed when `pin` — admitScored's caller joins them
-    * again; a plain admit's write is their only consumer). */
+    * again; a plain admit's write is their only consumer). A tick
+    * folds the batch's verdicts, keys and values into its compaction
+    * instead of appending them. */
   protected final def runAdmit(batch: DataFrame, idCol: String,
       srcCol: String, pin: Boolean): DataFrame =
-    admitting(batch.sparkSession) { fs =>
+    admitting(batch.sparkSession) { (fs, tick) =>
       val spark = batch.sparkSession
       val indexExists = exists(fs, index)
       // guarded independently of indexExists: a crash between the
@@ -1693,10 +1764,10 @@ abstract class BandedGate private[operators] (root: String,
       // twice (upstream at-least-once duplication inside one batch)
       // would otherwise double every pair in the scoring joins and
       // emit two verdict rows for that id.
-      val batchVals = GateOps.dedupAtWidth(batch.select(
+      val (batchVals, nBatch) = GateOps.pinCounted(
+        GateOps.dedupAtWidth(batch.select(
           col(idCol).as("id"), col(srcCol).as(valueCol)), "id")
-        .select(col("id"), value(col(valueCol)).as(valueCol))
-        .localCheckpoint()
+        .select(col("id"), value(col(valueCol)).as(valueCol)))
       // 2. broadcast the batch side by MEASURED count, not planner
       // stats: a localCheckpoint inherits its ORIGIN plan's size
       // estimate, and a join-shaped origin (the curate chain's
@@ -1705,10 +1776,10 @@ abstract class BandedGate private[operators] (root: String,
       // then refuses the broadcast, AQE cannot re-plan a LogicalRDD
       // leaf, and every probe join degrades to sort-merge with
       // skew-hot band keys (measured: 38 s vs 4.7 s for the identical
-      // admit). The count is ~free on the checkpointed rows; a
-      // degenerate huge admit keeps the shuffle-join plan instead of
-      // OOMing the driver.
-      val smallBatch = batchVals.count() <= GateOps.broadcastRowCap
+      // admit). The pin's own jobs measure the count; a degenerate
+      // huge admit keeps the shuffle-join plan instead of OOMing the
+      // driver.
+      val smallBatch = nBatch <= GateOps.broadcastRowCap
       def maybeBroadcast(df: DataFrame): DataFrame =
         if (smallBatch) broadcast(df) else df
       // 3. the batch's distinct keys collect and test the filter
@@ -1741,8 +1812,9 @@ abstract class BandedGate private[operators] (root: String,
           // arrival the guards coincide, which is why the id-ordered
           // oracles still replay these verdicts exactly.
           val (idxCand, capped) = capPerKey(
-            indexRead(spark, pos, bandKeys)
-              .join(batchVals.select(col("id")), Seq("id"), "left_anti"))
+            indexRead(spark, pos, bandKeys).join(
+              maybeBroadcast(batchVals.select(col("id"))), Seq("id"),
+              "left_anti"))
           val pairs = maybeBroadcast(bandKeys).as("q")
             .join(idxCand.as("c"), keyJoin)
             .select(col("q.id").as("id"), col("c.id").as("cid"))
@@ -1793,10 +1865,12 @@ abstract class BandedGate private[operators] (root: String,
       val nCapped = bandKeys
         .join(crossCapped.unionByName(selfCapped).distinct(), keyCols)
         .groupBy(col("id")).agg(count(lit(1)).as("n_capped_keys"))
-      // 10. the verdicts
+      // 10. the verdicts. Both joined sides are bounded by the batch,
+      // but `matches` inherits a checkpointed origin's size estimate —
+      // broadcast by the measured count, like the probes
       val assembled = batchVals.select(col("id"))
-        .join(matches, Seq("id"), "left")
-        .join(nCapped, Seq("id"), "left")
+        .join(maybeBroadcast(matches), Seq("id"), "left")
+        .join(maybeBroadcast(nCapped), Seq("id"), "left")
         .select(col("id"),
           coalesce(col("n_cands"), lit(0L)).as("n_cands"),
           coalesce(col(best), noMatch).as(best),
@@ -1805,17 +1879,25 @@ abstract class BandedGate private[operators] (root: String,
         .select(col("id"), col("n_cands"), col(best), col("is_neardup"),
           col("n_capped_keys"))
       val verdicts = if (pin) assembled.localCheckpoint() else assembled
-      verdicts.write.mode("append").parquet(s"$root/verdicts")
-      // 11. fold the keys into memory, then append keys and values. A
-      // batch of only null values has no keys; skipping the appends
-      // avoids creating EMPTY table directories a later schema read
-      // or restart rebuild would otherwise hit.
+      // 11. fold the keys into memory, then write verdicts, keys and
+      // values. A batch of only null values has no keys; skipping the
+      // key and value writes avoids creating EMPTY table directories a
+      // later schema read or restart rebuild would otherwise hit — and
+      // with no index yet there is nothing for a tick to compact.
       probed.foreach(remember)
-      if (probed.nonEmpty) {
-        writeIndex(keyRows, "append", index)
-        batchVals.filter(col(valueCol).isNotNull)
-          .coalesce(1).sortWithinPartitions(col("id"))
-          .write.mode("append").parquet(s"$root/$corpus")
+      val values = batchVals.filter(col(valueCol).isNotNull)
+      if (tick && (indexExists || probed.nonEmpty))
+        ticking(Map("verdicts" -> verdicts) ++
+          (if (probed.isEmpty) Map.empty
+          else Map(index -> indexRows(keyRows), corpus -> values)))(
+          autoCompact(spark))
+      else {
+        verdicts.write.mode("append").parquet(s"$root/verdicts")
+        if (probed.nonEmpty) {
+          writeIndex(keyRows, "append", index)
+          values.coalesce(1).sortWithinPartitions(col("id"))
+            .write.mode("append").parquet(s"$root/$corpus")
+        }
       }
       verdicts
     }
@@ -1878,6 +1960,12 @@ abstract class BandedGate private[operators] (root: String,
   *     append under their prefix partitions, fp-sorted within each
   *     file so parquet row-group stats can refine future bucket
   *     probes below directory granularity.
+  *
+  * A tick of the auto-compaction clock (every `autoCompactEvery`-th
+  * admit) skips steps 1-4: its [[compact]] reads the stored table
+  * beside the batch's fingerprints — a stored fingerprint keeps its
+  * stored owner, the others are novel and take the batch's — and
+  * writes table and bloom once, in the new generation.
   *
   * Bucket-count tradeoff, measured: prefixChars=2 (256 dirs) costs
   * ~4 s of dynamic-partition commit overhead PER BATCH on a local fs
@@ -1950,7 +2038,6 @@ final class NoveltyGate(tableRoot: String,
 
   protected def opened: Boolean = words != null
   protected def pins: Seq[(String, String)] = Seq("k" -> k.toString)
-  protected def autoCompact(spark: SparkSession): Unit = compact(spark)
 
   /** Live bucket width and bloom width, disk truth first. The
     * partition DIRECTORIES are ground truth for the bucket width: a
@@ -2024,6 +2111,8 @@ final class NoveltyGate(tableRoot: String,
     * table-known, but the stored owner ids still name the first
     * attempt's winners, so the replay reproduces its verdicts
     * bit-for-bit instead of flipping first occurrences to is_novel=0.
+    * On a tick the rewrite's pinned (fp, owner) relation IS the table
+    * after the admit, so ownership comes from it without a re-read.
     * A null-text doc has no identity and verdicts 0, landing in the
     * duplicates remainder exactly as the novelty census counts it. */
   def admitScored(batch: DataFrame, idCol: String,
@@ -2032,27 +2121,31 @@ final class NoveltyGate(tableRoot: String,
     val docs = batch.select(col(idCol).as("id"),
       Dedup.exactFingerprint(col(textCol)).as("fp"))
       .localCheckpoint()
-    admitFps(spark, docs.filter(col("fp").isNotNull)
-      .groupBy(col("fp")).agg(min(col("id")).as("owner")))
-    // bounded driver set: distinct batch prefixes (≤ 16^pcCur)
-    val prefixes = docs.filter(col("fp").isNotNull)
-      .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    val stored =
-      if (prefixes.isEmpty) spark.createDataFrame(
-        new java.util.ArrayList[Row](),
-        StructType.fromDDL("fp STRING, owner BIGINT"))
-      else spark.read
-        .schema(StructType.fromDDL(
-          "fp STRING, owner BIGINT, fp_b STRING"))
-        .parquet(s"$tableRoot/data")
-        .filter(col("fp_b").isin(prefixes: _*))
-        .join(broadcast(docs.filter(col("fp").isNotNull)
-          .select(col("fp")).distinct()), Seq("fp"), "left_semi")
-        // min ignores NULLs: at-least-once duplicate rows collapse,
-        // and a plain-admit row (owner null) yields null — correctly
-        // unownable
-        .groupBy(col("fp")).agg(min(col("owner")).as("owner"))
+    val docFps = docs.filter(col("fp").isNotNull)
+    val batchFps = broadcast(docFps.select(col("fp")).distinct())
+    val tickOwners = admitFps(spark,
+      docFps.groupBy(col("fp")).agg(min(col("id")).as("owner")))
+    val stored = tickOwners match {
+      case Some(all) => all.join(batchFps, Seq("fp"), "left_semi")
+      case None =>
+        // bounded driver set: distinct batch prefixes (≤ 16^pcCur)
+        val ps = docFps
+          .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
+          .collect().map(_.getString(0)).toSeq
+        if (ps.isEmpty) spark.createDataFrame(
+          new java.util.ArrayList[Row](),
+          StructType.fromDDL("fp STRING, owner BIGINT"))
+        else spark.read
+          .schema(StructType.fromDDL(
+            "fp STRING, owner BIGINT, fp_b STRING"))
+          .parquet(s"$tableRoot/data")
+          .filter(col("fp_b").isin(ps: _*))
+          .join(batchFps, Seq("fp"), "left_semi")
+          // min ignores NULLs: at-least-once duplicate rows collapse,
+          // and a plain-admit row (owner null) yields null — correctly
+          // unownable
+          .groupBy(col("fp")).agg(min(col("owner")).as("owner"))
+    }
     docs.join(stored, Seq("fp"), "left")
       .select(col("id"),
         when(col("owner").isNotNull && col("owner") === col("id"), 1)
@@ -2083,71 +2176,79 @@ final class NoveltyGate(tableRoot: String,
   }
 
   /** Fingerprint-level core shared by [[admit]] and [[admitScored]]:
-    * probes, updates bloom + table state, and returns the batch's
-    * NOVEL fingerprints, localCheckpointed — one evaluation feeds the
-    * bloom delta and the data append (the pre-refactor lazy frame was
-    * evaluated twice). `fps` must be distinct non-null (fp, owner)
-    * rows; owner (nullable) is stored beside each novel fingerprint
-    * and carries the admitScored ownership contract. */
-  private def admitFps(spark: SparkSession, fps: DataFrame): DataFrame =
-    admitting(spark) { fs =>
-      val dataPath = s"$tableRoot/data"
-      // Robustness pair used on every internal read: an existence check
-      // (the bloom commits BEFORE the data append, so a crash window can
-      // leave bloom bits with no data path yet) and an EXPLICIT schema
-      // (a first batch of only null-text docs appends zero rows, and a
-      // schema-inference read of the resulting empty directory throws).
-      val dataExists = exists(fs, "data")
-      def readData() = spark.read
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "fp STRING, fp_b STRING"))
-        .parquet(dataPath)
-      // collected-INSET pushdown inside the admit scope (see
-      // StandingGate.admitting); bigger possible-member sets fall back
-      // to range + post-scan InSet with bucket pruning intact
-      val might = Dedup.bloomMight(col("fp"), words, bitsCur, k)
-      val pos = fps.filter(might).select(col("fp")).limit(posCap + 1)
-        .collect().map(_.getString(0))
-      val novel: DataFrame =
-        if (pos.isEmpty || !dataExists) fps
-        else if (pos.length <= posCap) {
-          val prefixes = pos.map(_.take(pcCur)).distinct.toSeq
-          val present = readData()
-            .filter(col("fp_b").isin(prefixes: _*))
-            .filter(col("fp").isin(pos.toSeq: _*))
-            .select(col("fp")).collect().map(_.getString(0)).toSeq
-          if (present.isEmpty) fps
-          else fps.filter(!col("fp").isin(present: _*))
-        } else {
-          // dup-heavy fallback: prefixes of the possible-members (a
-          // bounded ≤ 16^prefixChars driver set), then one anti-join
-          // against just those buckets. Evaluated twice below (delta +
-          // data) — two bucket scans on the rare path, accepted.
-          val prefixes = fps.filter(might)
-            .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
-            .collect().map(_.getString(0)).toSeq
-          val known = readData()
-            .filter(col("fp_b").isin(prefixes: _*))
-            .select(col("fp"))
-          fps.filter(might).join(known, Seq("fp"), "left_anti")
-            .union(fps.filter(!might))
-        }
-      // pin once: the delta write, the data append, and the caller's
-      // verdict join all consume this batch-bounded frame (the fallback
-      // branch reads the table it is ABOUT to append to — materializing
-      // before the append also removes that read-after-write ambiguity)
-      val novelPinned = novel.localCheckpoint()
-      val delta = bloomWords(novelPinned)
-      writeBloom(spark, delta.toSeq, "append", "bloom")
-      delta.foreach { case (i, w) => words(i.toInt) |= w }
-      novelPinned
-        .select(col("fp"), col("owner"),
-          substring(col("fp"), 1, pcCur).as("fp_b"))
-        .repartition(col("fp_b"))
-        .sortWithinPartitions(col("fp"))
-        .write.mode("append").partitionBy("fp_b").parquet(dataPath)
-      novelPinned
+    * probes, then updates bloom + table state. `fps` must be distinct
+    * non-null (fp, owner) rows; owner (nullable) is stored beside each
+    * novel fingerprint and carries the admitScored ownership contract.
+    * A tick skips the probe and the appends: its compaction derives
+    * the novel set itself (a fingerprint no stored row holds) and
+    * writes it once, in the new generation. Returns the tick's pinned
+    * (fp, owner) table relation; None on other admits. */
+  private def admitFps(spark: SparkSession,
+      fps: DataFrame): Option[DataFrame] =
+    admitting(spark) { (fs, tick) =>
+      if (tick) compactWith(spark, Some(fps), None, None)
+      else { appendFps(spark, fs, fps); None }
     }
+
+  /** A non-tick admit: the probe, the bloom delta, the data append. */
+  private def appendFps(spark: SparkSession, fs: FileSystem,
+      fps: DataFrame): Unit = {
+    val dataPath = s"$tableRoot/data"
+    // Robustness pair used on every internal read: an existence check
+    // (the bloom commits BEFORE the data append, so a crash window can
+    // leave bloom bits with no data path yet) and an EXPLICIT schema
+    // (a first batch of only null-text docs appends zero rows, and a
+    // schema-inference read of the resulting empty directory throws).
+    val dataExists = exists(fs, "data")
+    def readData() = spark.read
+      .schema(org.apache.spark.sql.types.StructType.fromDDL(
+        "fp STRING, fp_b STRING"))
+      .parquet(dataPath)
+    // collected-INSET pushdown inside the admit scope (see
+    // StandingGate.admitting); bigger possible-member sets fall back
+    // to range + post-scan InSet with bucket pruning intact
+    val might = Dedup.bloomMight(col("fp"), words, bitsCur, k)
+    val pos = fps.filter(might).select(col("fp")).limit(posCap + 1)
+      .collect().map(_.getString(0))
+    val novel: DataFrame =
+      if (pos.isEmpty || !dataExists) fps
+      else if (pos.length <= posCap) {
+        val prefixes = pos.map(_.take(pcCur)).distinct.toSeq
+        val present = readData()
+          .filter(col("fp_b").isin(prefixes: _*))
+          .filter(col("fp").isin(pos.toSeq: _*))
+          .select(col("fp")).collect().map(_.getString(0)).toSeq
+        if (present.isEmpty) fps
+        else fps.filter(!col("fp").isin(present: _*))
+      } else {
+        // dup-heavy fallback: prefixes of the possible-members (a
+        // bounded ≤ 16^prefixChars driver set), then one anti-join
+        // against just those buckets. Evaluated twice below (delta +
+        // data) — two bucket scans on the rare path, accepted.
+        val prefixes = fps.filter(might)
+          .select(substring(col("fp"), 1, pcCur).as("p")).distinct()
+          .collect().map(_.getString(0)).toSeq
+        val known = readData()
+          .filter(col("fp_b").isin(prefixes: _*))
+          .select(col("fp"))
+        fps.filter(might).join(known, Seq("fp"), "left_anti")
+          .union(fps.filter(!might))
+      }
+    // pin once: the delta write and the data append both consume
+    // this batch-bounded frame (the fallback branch reads the table
+    // it is ABOUT to append to — materializing before the append
+    // also removes that read-after-write ambiguity)
+    val novelPinned = novel.localCheckpoint()
+    val delta = bloomWords(novelPinned)
+    writeBloom(spark, delta.toSeq, "append", "bloom")
+    delta.foreach { case (i, w) => words(i.toInt) |= w }
+    novelPinned
+      .select(col("fp"), col("owner"),
+        substring(col("fp"), 1, pcCur).as("fp_b"))
+      .repartition(col("fp_b"))
+      .sortWithinPartitions(col("fp"))
+      .write.mode("append").partitionBy("fp_b").parquet(dataPath)
+  }
 
   /** The periodic maintenance pass the bucket-count tradeoff note
     * prescribes — run it between admit epochs (it must not race an
@@ -2174,83 +2275,105 @@ final class NoveltyGate(tableRoot: String,
     */
   def compact(spark: SparkSession,
       newPrefixChars: Option[Int] = None,
-      newBits: Option[Int] = None): Unit = compacting(spark) { fs =>
-    val hp = new org.apache.hadoop.fs.Path(s"$tableRoot/data")
-    if (newPrefixChars.isEmpty) {
-      // every compaction re-derives the live width from disk,
-      // directory ground truth first (see restoreLayout) — the
-      // manifest can be one crash behind a widening compaction
-      val m = layout(fs)
-      dirWidth(fs).orElse(m.flatMap(_.get("prefix_chars")).map(_.toInt))
-        .foreach(w => pcCur = w)
-    }
-    // bloom resize: explicit newBits wins; otherwise the
-    // growBloomFactor policy sizes the width to the table (occupied
-    // bits ≤ k·n, so k·n·2 ≤ bits keeps occupancy under ~50% — the
-    // probe-degradation threshold the load warning names), bounded
-    // at 2^28 (32 MB of driver bitmap)
-    newBits.foreach { b =>
-      require(isPow2(b), "bits must be a power of two")
-      bitsCur = b
-    }
-    // self-tending width: when the largest bucket's data has outgrown
-    // the configured threshold, this compaction widens the layout by
-    // one hex digit (16× more, 1/16-sized buckets) — paying the
-    // many-directory write here, once per epoch, exactly as the
-    // bucket-count tradeoff note prescribes. Bounded at 4 hex chars
-    // (65536 dirs) — past that the commit storm outweighs any probe
-    // win on every filesystem this was measured on.
-    val autoWiden = newPrefixChars.isEmpty && widenBucketBytes > 0L &&
-      pcCur < 4 && {
-        val dirs = fs.listStatus(hp).filter(_.isDirectory)
-        dirs.nonEmpty && dirs.map(d =>
-          fs.listStatus(d.getPath).filter(_.isFile).map(_.getLen).sum)
-          .max > widenBucketBytes
+      newBits: Option[Int] = None): Unit = {
+    compactWith(spark, None, newPrefixChars, newBits)
+    ()
+  }
+
+  /** [[compact]], folding in a tick's (fp, owner) `batch` rows; returns
+    * the pinned (fp, owner) relation it wrote (None when there was
+    * nothing to compact). */
+  private def compactWith(spark: SparkSession, batch: Option[DataFrame],
+      newPrefixChars: Option[Int],
+      newBits: Option[Int]): Option[DataFrame] = {
+    var written: Option[DataFrame] = None
+    ticking(batch.map("data" -> _).toMap)(compacting(spark) { fs =>
+      val hp = new org.apache.hadoop.fs.Path(s"$tableRoot/data")
+      val onDisk = fs.exists(hp)
+      if (newPrefixChars.isEmpty) {
+        // every compaction re-derives the live width from disk,
+        // directory ground truth first (see restoreLayout) — the
+        // manifest can be one crash behind a widening compaction
+        val m = layout(fs)
+        dirWidth(fs).orElse(m.flatMap(_.get("prefix_chars")).map(_.toInt))
+          .foreach(w => pcCur = w)
       }
-    val pc = newPrefixChars.getOrElse(if (autoWiden) pcCur + 1 else pcCur)
-    val fps = spark.read
-      .schema(org.apache.spark.sql.types.StructType.fromDDL(
-        "fp STRING, owner BIGINT, fp_b STRING"))
-      .parquet(hp.toString)
-      .filter(col("fp").isNotNull)
-      // exact dedup preserving OWNERSHIP: min skips nulls, so an
-      // at-least-once duplicate keeps its owner and plain-admit rows
-      // stay null
-      .groupBy(col("fp")).agg(min(col("owner")).as("owner"))
-      .localCheckpoint() // pin: consumed by both rewrites, and the
-                         // source dirs are about to be swapped away
-    if (newBits.isEmpty && growBloomFactor >= 2) {
-      val n = fps.count() // ~free on the pinned frame
-      while (k.toLong * n * 2 > bitsCur && bitsCur < (1 << 28))
-        bitsCur = math.min(bitsCur.toLong * growBloomFactor,
-          (1 << 28).toLong).toInt
-    }
-    fps
-      .select(col("fp"), col("owner"),
-        substring(col("fp"), 1, pc).as("fp_b"))
-      .repartition(col("fp_b"))
-      .sortWithinPartitions(col("fp"))
-      .write.mode("overwrite").partitionBy("fp_b")
-      .parquet(s"$tableRoot/data_tmp")
-    val rebuilt = new Array[Long](bitsCur / 64)
-    bloomWords(fps).foreach { case (i, w) => rebuilt(i.toInt) = w }
-    writeBloom(spark, rebuilt.zipWithIndex.collect {
-      case (w, i) if w != 0L => (i.toLong, w) }.toSeq,
-      "overwrite", "bloom_tmp")
-    // the width marker rides the generation swap (see
-    // GateOps.writeMarker): a crash between the swaps and the
-    // manifest refresh must not leave the reopened gate reading the
-    // rebuilt file at a stale width
-    GateOps.writeMarker(fs, s"$tableRoot/bloom_tmp", "_bits",
-      bitsCur.toString)
-    // compaction rewrote every artifact at THIS gate's parameters —
-    // refresh the manifest once they are live, so a restart opens at
-    // the new width (and compact(newBits) is the resize path)
-    () => {
-      words = rebuilt
-      pcCur = pc
-      writeLayout(fs)
-    }
+      // bloom resize: explicit newBits wins; otherwise the
+      // growBloomFactor policy sizes the width to the table (occupied
+      // bits ≤ k·n, so k·n·2 ≤ bits keeps occupancy under ~50% — the
+      // probe-degradation threshold the load warning names), bounded
+      // at 2^28 (32 MB of driver bitmap)
+      newBits.foreach { b =>
+        require(isPow2(b), "bits must be a power of two")
+        bitsCur = b
+      }
+      // self-tending width: when the largest bucket's data has outgrown
+      // the configured threshold, this compaction widens the layout by
+      // one hex digit (16× more, 1/16-sized buckets) — paying the
+      // many-directory write here, once per epoch, exactly as the
+      // bucket-count tradeoff note prescribes. Bounded at 4 hex chars
+      // (65536 dirs) — past that the commit storm outweighs any probe
+      // win on every filesystem this was measured on.
+      val autoWiden = newPrefixChars.isEmpty && widenBucketBytes > 0L &&
+        pcCur < 4 && onDisk && {
+          val dirs = fs.listStatus(hp).filter(_.isDirectory)
+          dirs.nonEmpty && dirs.map(d =>
+            fs.listStatus(d.getPath).filter(_.isFile).map(_.getLen).sum)
+            .max > widenBucketBytes
+        }
+      val pc = newPrefixChars.getOrElse(if (autoWiden) pcCur + 1 else pcCur)
+      val stored = Option.when(onDisk)(spark.read
+        .schema(StructType.fromDDL("fp STRING, owner BIGINT, fp_b STRING"))
+        .parquet(hp.toString)
+        .select(col("fp"), col("owner"), lit(true).as("stored")))
+      val rows = (stored ++ batch.map(_.select(col("fp"), col("owner"),
+        lit(false).as("stored")))).reduce(_ unionByName _)
+      // exact dedup preserving OWNERSHIP: a stored fingerprint keeps its
+      // stored owner (min skips nulls, so an at-least-once duplicate
+      // keeps its owner and plain-admit rows stay null) — the batch's
+      // holders of it were seen after it; a fingerprint only the batch
+      // holds is novel and takes the batch's owner. Pinned: consumed by
+      // both rewrites, and the source dirs are about to be swapped away.
+      val (fps, n) = GateOps.pinCounted(rows
+        .filter(col("fp").isNotNull)
+        .groupBy(col("fp"))
+        .agg(when(max(col("stored")),
+            min(when(col("stored"), col("owner"))))
+          .otherwise(min(col("owner"))).as("owner")))
+      written = Some(fps)
+      if (newBits.isEmpty && growBloomFactor >= 2) {
+        while (k.toLong * n * 2 > bitsCur && bitsCur < (1 << 28))
+          bitsCur = math.min(bitsCur.toLong * growBloomFactor,
+            (1 << 28).toLong).toInt
+      }
+      fps
+        .select(col("fp"), col("owner"),
+          substring(col("fp"), 1, pc).as("fp_b"))
+        .repartition(col("fp_b"))
+        .sortWithinPartitions(col("fp"))
+        .write.mode("overwrite").partitionBy("fp_b")
+        .parquet(s"$tableRoot/data_tmp")
+      val rebuilt = new Array[Long](bitsCur / 64)
+      bloomWords(fps).foreach { case (i, w) => rebuilt(i.toInt) = w }
+      writeBloom(spark, rebuilt.zipWithIndex.collect {
+        case (w, i) if w != 0L => (i.toLong, w) }.toSeq,
+        "overwrite", "bloom_tmp")
+      // the width marker rides the generation swap (see
+      // GateOps.writeMarker): a crash between the swaps and the
+      // manifest refresh must not leave the reopened gate reading the
+      // rebuilt file at a stale width
+      GateOps.writeMarker(fs, s"$tableRoot/bloom_tmp", "_bits",
+        bitsCur.toString)
+      // compaction rewrote every artifact at THIS gate's parameters —
+      // refresh the manifest once they are live, so a restart opens at
+      // the new width (and compact(newBits) is the resize path)
+      () => {
+        words = rebuilt
+        pcCur = pc
+        writeLayout(fs)
+      }
+    })
+    written
   }
 }
 
@@ -2313,7 +2436,8 @@ final class NoveltyGate(tableRoot: String,
   *     fetched for the few candidates, never scanned corpus-wide);
   *  4. per-doc verdicts (id, n_cands, best_eq, is_neardup) append,
   *     the batch hashes fold into the bitmap, then bands and sigs
-  *     append.
+  *     append — on a tick of the auto-compaction clock, all three
+  *     fold into the compaction's rewrite instead.
   *
   * Driver/plan hash parity: the in-driver fold and probe use
   * [[NearDupGate.bhPosDriver]], a bit-exact replica of the

@@ -246,37 +246,50 @@ object QualityScorer {
 
   /** Full data_quality struct (EventSchema.dataQuality shape). */
   def dataQuality(title: Column, venue: Column, dt: Column, acts: Column,
-      ticketing: Column, now: Column): Column = {
-    val st = scoreTitle(title)
-    val sv = scoreVenue(venue)
-    val sd = scoreDatetime(dt, now)
-    val sa = scoreActs(acts)
-    val sk = scoreTicketing(ticketing)
-    val tagged = (s: Column, f: String) =>
-      transform(s.getField("flags"),
-        x => struct(lit(f).as("field"), x.as("issue")))
+      ticketing: Column, now: Column): Column =
+    assemble(fieldScores(title, venue, dt, acts, ticketing, now).map(_._2))
+
+  private val scoredFields =
+    Seq("title", "venue", "datetime", "acts", "ticketing")
+
+  /** Each field's (score, flags) struct, in [[scoredFields]] order. */
+  private def fieldScores(title: Column, venue: Column, dt: Column,
+      acts: Column, ticketing: Column, now: Column): Seq[(String, Column)] =
+    scoredFields.zip(Seq(scoreTitle(title), scoreVenue(venue),
+      scoreDatetime(dt, now), scoreActs(acts), scoreTicketing(ticketing)))
+
+  /** The data_quality struct from the per-field (score, flags) structs,
+    * in [[scoredFields]] order. */
+  private def assemble(scores: Seq[Column]): Column = {
+    val fields = scoredFields.zip(scores)
+    val Seq(t, v, d, a, k) = scores.map(_.getField("score"))
     struct(
-      overallScore(st.getField("score"), sv.getField("score"),
-        sd.getField("score"), sa.getField("score"), sk.getField("score"))
-        .as("overall_score"),
-      struct(
-        st.getField("score").as("title"),
-        sv.getField("score").as("venue"),
-        sd.getField("score").as("datetime"),
-        sa.getField("score").as("acts"),
-        sk.getField("score").as("ticketing")).as("field_quality_scores"),
-      concat(tagged(st, "title"), tagged(sv, "venue"), tagged(sd, "datetime"),
-        tagged(sa, "acts"), tagged(sk, "ticketing")).as("validation_flags"),
+      overallScore(t, v, d, a, k).as("overall_score"),
+      struct(fields.map { case (f, s) => s.getField("score").as(f) }: _*)
+        .as("field_quality_scores"),
+      concat(fields.map { case (f, s) => transform(s.getField("flags"),
+        x => struct(lit(f).as("field"), x.as("issue"))) }: _*)
+        .as("validation_flags"),
       struct(lit(false).as("is_verified"),
         lit(null).cast("string").as("verified_by"),
         lit(null).cast("string").as("verified_at")).as("manual_verification"))
   }
 
-  /** Attach/recompute the data_quality column on a V2 events DataFrame. */
-  def withQuality(df: DataFrame, now: Column = current_timestamp()): DataFrame =
-    df.withColumn("data_quality",
-      dataQuality(col("title"), col("venue"), col("datetime"),
-        col("acts"), col("ticketing"), now))
+  /** Attach/recompute the data_quality column on a V2 events DataFrame.
+    * Each field's score and flags are computed once per row, in a
+    * staged projection: the struct reads every score twice, and inlined
+    * it would evaluate each scorer twice. */
+  def withQuality(df: DataFrame, now: Column = current_timestamp()): DataFrame = {
+    def name(f: String, part: String) = s"__quality_${f}_$part"
+    val parts = Seq("score", "flags")
+    val staged = fieldScores(col("title"), col("venue"), col("datetime"),
+      col("acts"), col("ticketing"), now).flatMap { case (f, s) =>
+      parts.map(p => s.getField(p).as(name(f, p))) }
+    df.select(col("*") +: staged: _*)
+      .withColumn("data_quality", assemble(scoredFields.map(f =>
+        struct(parts.map(p => col(name(f, p)).as(p)): _*))))
+      .drop(scoredFields.flatMap(f => parts.map(name(f, _))): _*)
+  }
 
   /** Quality summary bands + recommendation
     * (reference: quality_scorer.py:412-451).

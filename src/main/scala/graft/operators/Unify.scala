@@ -199,27 +199,32 @@ object Unify {
     def lf(a: Column, f: String): Column =
       if (lineupFields.contains(f)) a.getField(f) else lit(null).cast("string")
 
-    val title = coalesce(normalizeText(titleRaw), lit("Untitled Event"))
-    val venueName = coalesce(normalizeVenueName(normalizeText(venueRaw)),
-      lit("Unknown Venue"))
-    val startDate =
-      if (mapping.ibizaDates) parseIbizaDate(timeRaw)
-      else parseDateTimeMulti(timeRaw)
+    // Each derived field is computed ONCE per row, in staged
+    // projections the output reads as columns. Inlined at every use,
+    // the date ladder, the text normalizers and the ids re-evaluate per
+    // reference (hundreds of regex nodes per row). CollapseProject
+    // keeps a non-cheap alias its consumer reads more than once, so the
+    // stages survive optimization.
+    def staged(name: String): Column = col(s"__unify_$name")
+    val title = staged("title")
+    val venueName = staged("venue")
+    val startDate = staged("start")
+    val url = staged("url")
+    val price = staged("price")
+    val genres = staged("genres")
+    // Lineup → top-level acts + stage references; first artist is the
+    // headliner, billing_order is position (reference:
+    // schema_adapter_enhanced.py:646-683).
+    val validLineup = staged("lineup")
+    // _process_lineup (schema_adapter_enhanced.py:290-310): INFO per
+    // truthy-named artist whose stripped name is shorter than 2 chars.
+    val shortNamed = staged("short_named")
     // The reference records the raw date string only when it parses
     // (schema_adapter_enhanced.py:206-213) — it feeds the event id and
     // recurring.pattern_description, unmodified.
     val rawDateString = when(startDate.isNotNull, timeRaw)
       .otherwise(lit(null).cast("string"))
-    val url = normalizeUrl(urlRaw)
-    val price = extractPrice(priceRaw)
-    val eventId = entityId(sourcePlatform,
-      concat(title, lit("_"), coalesce(rawDateString, lit(""))))
 
-    // Lineup → top-level acts + stage references; first artist is the
-    // headliner, billing_order is position (reference:
-    // schema_adapter_enhanced.py:646-683).
-    val validLineup = filter(lineupRaw,
-      a => lf(a, "name").isNotNull && trim(lf(a, "name")) =!= "")
     val acts = coalesce(transform(validLineup, a => struct(
       entityId("artist", trim(lf(a, "name"))).as("act_id"),
       trim(lf(a, "name")).as("act_name"),
@@ -237,9 +242,6 @@ object Unify {
       (i + 1).cast("int").as("billing_order"),
       (i === 0).as("is_headliner"))),
       array().cast("array<struct<act_id:string,set_time:struct<start:string,end:string,duration_minutes:int>,billing_order:int,is_headliner:boolean>>"))
-
-    val genres = transform(coalesce(genresRaw, array().cast("array<string>")),
-      g => normalizeGenre(g))
 
     // Validation metadata — the reference's ValidationResult bookkeeping
     // (schema_adapter_enhanced.py:36-69): each issue both lands in the
@@ -269,25 +271,49 @@ object Unify {
       (titleShort, lit("Title too short"), "title", "warning"),
       (venueMissing, lit("Missing venue information"), "venue", "warning"),
       (urlInvalid, lit("Invalid URL format"), "url", "warning"))
-    // _process_lineup (schema_adapter_enhanced.py:290-310): INFO per
-    // truthy-named artist whose stripped name is shorter than 2 chars.
-    val shortNamed = filter(lineupRaw, a =>
-      lf(a, "name").isNotNull && lf(a, "name") =!= "" &&
-        length(trim(lf(a, "name"))) < 2)
     val vInfo = coalesce(
       transform(shortNamed, a => issue("artists",
         concat(lit("Very short artist name: "), trim(lf(a, "name"))), "info")),
       array().cast("array<struct<field:string,message:string,level:string>>"))
-    val confBase = lit(1.0) *
-      when(titleMissing, 0.7).when(titleShort, 0.9).otherwise(1.0) *
-      when(dateInvalid, 0.7).otherwise(1.0) *
-      when(venueMissing, 0.9).otherwise(1.0) *
-      when(urlInvalid, 0.9).otherwise(1.0)
+    val confBase = staged("conf_base")
     val confidence = coalesce(
       aggregate(shortNamed, confBase, (acc, _) => acc * lit(0.95)),
       confBase)
+    val eventId = staged("id")
 
-    raw.select(Seq(
+    val stages = Seq(
+      Seq(
+        "title" -> coalesce(normalizeText(titleRaw), lit("Untitled Event")),
+        "venue" -> coalesce(normalizeVenueName(normalizeText(venueRaw)),
+          lit("Unknown Venue")),
+        "time" -> (if (mapping.ibizaDates) ibizaDateText(timeRaw)
+          else timeRaw),
+        "url" -> normalizeUrl(urlRaw),
+        "price" -> extractPrice(priceRaw),
+        "genres" -> transform(
+          coalesce(genresRaw, array().cast("array<string>")),
+          g => normalizeGenre(g)),
+        "lineup" -> filter(lineupRaw,
+          a => lf(a, "name").isNotNull && trim(lf(a, "name")) =!= ""),
+        "short_named" -> filter(lineupRaw, a =>
+          lf(a, "name").isNotNull && lf(a, "name") =!= "" &&
+            length(trim(lf(a, "name"))) < 2)),
+      Seq("start" -> (if (mapping.ibizaDates)
+        parseIbizaCleaned(staged("time"))
+        else parseDateTimeMulti(staged("time")))),
+      Seq(
+        "id" -> entityId(sourcePlatform,
+          concat(title, lit("_"), coalesce(rawDateString, lit("")))),
+        "conf_base" -> lit(1.0) *
+          when(titleMissing, 0.7).when(titleShort, 0.9).otherwise(1.0) *
+          when(dateInvalid, 0.7).otherwise(1.0) *
+          when(venueMissing, 0.9).otherwise(1.0) *
+          when(urlInvalid, 0.9).otherwise(1.0)))
+    val parsed = stages.foldLeft(raw) { (df, stage) =>
+      df.select(col("*") +: stage.map { case (n, c) => c.as(s"__unify_$n") }: _*)
+    }
+
+    parsed.select(Seq(
       eventId.as("event_id"),
       eventId.as("canonical_id"),
       title.as("title"),

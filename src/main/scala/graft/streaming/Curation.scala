@@ -296,18 +296,17 @@ object Curation {
     // multiply rows through every stage join and double nbPredict's
     // per-doc bit sums while the priors stay single, which can flip
     // quality_kept for that doc vs batch semantics
-    val b = graft.operators.GateOps.dedupAtWidth(
-        batch.select(col("doc_id"), col("text")), "doc_id")
-      .localCheckpoint()
+    val (b, nBatch) = graft.operators.GateOps.pinCounted(
+      graft.operators.GateOps.dedupAtWidth(
+        batch.select(col("doc_id"), col("text")), "doc_id"))
     // measured-count broadcast discipline for every doc_id-keyed
     // stage/assembly join (the gates' rule: planner stats on
     // checkpointed survivor frames cannot be trusted — a join-shaped
     // origin overestimates and silently degrades all six assembly
     // joins to sort-merge). Every broadcast side below is bounded by
-    // the batch (verdict/id frames), so one measured count on the
-    // pinned batch gates them all.
-    val smallBatch =
-      b.count() <= graft.operators.GateOps.broadcastRowCap
+    // the batch (verdict/id frames), so one count, measured by the
+    // batch pin's own jobs, gates them all.
+    val smallBatch = nBatch <= graft.operators.GateOps.broadcastRowCap
     def mb(df: DataFrame): DataFrame =
       if (smallBatch) broadcast(df) else df
     // Pinning discipline (measured, r21): the SMALL per-doc verdict
@@ -447,8 +446,8 @@ object Curation {
     // building it eagerly would Models.load an unpopulated dir and
     // crash the stream at start(), exactly the cold-start window the
     // fallback exists for. The gate is "a COMPLETE generation
-    // exists" — the `_layout` completion sentinel at any of the
-    // three layouts Models.load accepts — NOT mere non-emptiness: a
+    // exists" — the `_layout` completion sentinel of `current` or of
+    // a finished save's `current_tmp` — NOT mere non-emptiness: a
     // first save IN FLIGHT (artifacts landing under current_tmp
     // before its sentinel) or a torn first save makes the dir
     // non-empty but unloadable, and building the handle then would
@@ -462,9 +461,18 @@ object Curation {
       case Some(d) =>
         val dfs = new org.apache.hadoop.fs.Path(d)
           .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a flat `<d>/_layout` is a layout Models.load no longer reads:
+        // fail at start, naming it, rather than warn and fall back on
+        // every batch
+        if (dfs.exists(new org.apache.hadoop.fs.Path(s"$d/_layout")))
+          throw new IllegalStateException(
+            s"models dir $d holds a flat _layout (found: " +
+              graft.operators.GateLayout.found(dfs,
+                new org.apache.hadoop.fs.Path(d)) +
+              ") — not a layout this version reads; save the models " +
+              "again")
         def complete(): Boolean = Seq(
-          s"$d/current/_layout", s"$d/current_tmp/_layout",
-          s"$d/_layout").exists(p =>
+          s"$d/current/_layout", s"$d/current_tmp/_layout").exists(p =>
           dfs.exists(new org.apache.hadoop.fs.Path(p)))
         var h: Option[ModelsHandle] = None
         () => {
@@ -570,13 +578,18 @@ object Curation {
           graft.operators.GateOps.readMarker(tfs, outDir,
             "_last_commit"), commitKey)
         if (!batch.isEmpty && !committed) {
+          // a tick of the logs' clock folds the batch's rows into the
+          // log compaction instead of appending them first
+          val tick = autoCompactEvery > 0 &&
+            batchesSinceCompact + 1 >= autoCompactEvery
           val (v, shed) = curateBatchWithShed(batch, ngate, ndgate,
             resolveModels())
-          // pinned once: consumed by both the scored append and the
+          // pinned once: consumed by both the scored write and the
           // tick census below — without the pin the census would
           // re-run the whole five-gate assembly
           val verdicts = v.localCheckpoint()
-          verdicts.write.mode("append").parquet(s"$outDir/scored")
+          graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
+            "scored", "doc_id", Some(verdicts), tick, logMergeBytes)
           // the STANDING census: the same per-stage arithmetic as the
           // post-hoc [[curationReport]], over just this tick's
           // verdicts, appended to a `report` log — a sustained-ingest
@@ -591,25 +604,16 @@ object Curation {
           // (a doc duplicated within one batch was already collapsed
           // by curateBatch's dedupAtWidth, so it is a no-op here by
           // construction, kept for the shared-arithmetic guarantee).
-          censusStages(verdicts.distinct(), shed)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("append").parquet(s"$outDir/report")
+          // It self-tends on the scored log's cadence, sorted by tick,
+          // always in the wholesale tier (6 rows per tick).
+          graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
+            "report", "batch_id", Some(censusStages(verdicts.distinct(),
+              shed).withColumn("batch_id", lit(batchId))), tick, 0L)
           // commit point for the replay guard above — written only
-          // after BOTH appends landed
+          // after BOTH log writes landed
           graft.operators.GateOps.writeMarker(tfs, outDir,
             "_last_commit", commitKey)
-          batchesSinceCompact += 1
-          if (autoCompactEvery > 0 &&
-              batchesSinceCompact >= autoCompactEvery) {
-            graft.operators.GateOps.compactLog(batch.sparkSession,
-              outDir, "scored", "doc_id", logMergeBytes)
-            // the census log accumulates one file set per tick like
-            // the scored log — same cadence, sorted by tick (6 rows
-            // per tick: always the wholesale tier, it is report-sized)
-            graft.operators.GateOps.compactLog(batch.sparkSession,
-              outDir, "report", "batch_id", 0L)
-            batchesSinceCompact = 0
-          }
+          batchesSinceCompact = if (tick) 0 else batchesSinceCompact + 1
         }
       }
       .start()

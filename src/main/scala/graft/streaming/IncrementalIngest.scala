@@ -192,13 +192,20 @@ object IncrementalIngest {
           graft.operators.GateOps.readMarker(tfs, tableDir,
             "_last_commit"), commitKey)
         if (!batch.isEmpty && !committed) {
+          // a tick of the logs' clock folds the batch's log rows into
+          // the log compaction instead of appending them first
+          val tick = autoCompactEvery > 0 &&
+            batchesSinceCompact + 1 >= autoCompactEvery
+          def writeLog(name: String, rows: DataFrame): Unit =
+            graft.operators.GateOps.writeLog(batch.sparkSession, tableDir,
+              name, "ingest_id", Some(rows), tick, logMergeBytes)
           gate.foreach { g =>
             val payloadCols = batch.columns.filterNot(_ == "scraped_at")
             val prepared = batch.select(
               xxhash64(to_json(struct(batch.columns.map(col): _*)))
                 .as("ingest_id"),
               to_json(struct(payloadCols.map(col): _*)).as("payload"))
-            g.admitScored(
+            writeLog("novelty_log", g.admitScored(
               // ingest_id hashes the FULL record incl. scraped_at, so
               // two byte-identical raw rows in one landing file share
               // it — without this dedup admitScored would emit two
@@ -207,8 +214,7 @@ object IncrementalIngest {
               // GateOps.dedupAtWidth has the AQE rule)
               graft.operators.GateOps.dedupAtWidth(prepared, "ingest_id"),
               "ingest_id", "payload")
-              .withColumnRenamed("id", "ingest_id")
-              .write.mode("append").parquet(s"$tableDir/novelty_log")
+              .withColumnRenamed("id", "ingest_id"))
           }
           curModels.foreach { getModels =>
             // per-batch generation check (no-op unless a retrain
@@ -225,9 +231,9 @@ object IncrementalIngest {
               xxhash64(to_json(struct(batch.columns.map(col): _*)))
                 .as("doc_id"),
               to_json(struct(payloadCols.map(col): _*)).as("text"))
-            Curation.curateBatch(docs, cng, cnd, models)
-              .withColumnRenamed("doc_id", "ingest_id")
-              .write.mode("append").parquet(s"$tableDir/curation_log")
+            writeLog("curation_log",
+              Curation.curateBatch(docs, cng, cnd, models)
+                .withColumnRenamed("doc_id", "ingest_id"))
           }
           // Month partition (the TableLayout key) must be STABLE per
           // event_id across re-scrapes, or the partition-pruned merge
@@ -261,22 +267,12 @@ object IncrementalIngest {
           MergeOps.upsertParquetByMonth(batch.sparkSession,
             s"$tableDir/events", unified, Seq("event_id"), "updated_at")
           // commit point for the replay guard above — written only
-          // after every append and the merge landed
+          // after every log write and the merge landed
           graft.operators.GateOps.writeMarker(tfs, tableDir,
             "_last_commit", commitKey)
           // the logs self-tend on the gates' cadence: one file set per
           // batch otherwise accumulates forever at sustained ingest
-          batchesSinceCompact += 1
-          if (autoCompactEvery > 0 &&
-              batchesSinceCompact >= autoCompactEvery) {
-            if (gate.isDefined)
-              graft.operators.GateOps.compactLog(batch.sparkSession,
-                tableDir, "novelty_log", "ingest_id", logMergeBytes)
-            if (curModels.isDefined)
-              graft.operators.GateOps.compactLog(batch.sparkSession,
-                tableDir, "curation_log", "ingest_id", logMergeBytes)
-            batchesSinceCompact = 0
-          }
+          batchesSinceCompact = if (tick) 0 else batchesSinceCompact + 1
         }
       }
       .start()

@@ -704,8 +704,8 @@ object StreamingQueries {
     // that outlives the stream, which is how corpus ingest actually
     // remembers history across runs. Since r12 the table runs the
     // 100 TB layout its scaladoc always prescribed: fp-prefix
-    // PARTITIONED data behind a Bloom bitmap front
-    // (Dedup.appendNovelFingerprintsBucketed), so a batch probe costs
+    // PARTITIONED data behind a Bloom bitmap front (the standing
+    // graft.operators.NoveltyGate below), so a batch probe costs
     // O(batch) bloom tests plus only its possible-members' co-located
     // buckets — the ScaleProbe `noveltyb` row measures the per-batch
     // cost flat where the unbucketed baseline grew linearly. The final

@@ -2740,4 +2740,32 @@ class StreamingStateSpec extends AnyFunSuite {
       graft.operators.GateOps.readMarker(fs, out, "_last_commit"),
       "aaaaaaaa-bbbb-cccc-dddd-eeeeeeeeeeee:8"))
   }
+
+  test("Curation.start refuses a flat models dir at start, naming its " +
+      "_layout, instead of falling back on every batch") {
+    val out = Files.createTempDirectory("graft_flat_models").toFile
+      .getAbsolutePath
+    val models = graft.streaming.Curation.trainModels(Seq(
+      (900L, "reference corpus tokens for the shared models", "en"),
+      (901L, "andere referenz woerter fuer das geteilte modell", "de"))
+      .toDF("doc_id", "text", "lang"))
+    graft.streaming.Curation.Models.save(models, s"$out/models")
+    val fs = new org.apache.hadoop.fs.Path(out)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the flat layout: the generation's files at the dir root
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$out/models/current"))
+      .foreach(st => assert(fs.rename(st.getPath,
+        new org.apache.hadoop.fs.Path(s"$out/models/${st.getPath.getName}"))))
+    assert(fs.delete(new org.apache.hadoop.fs.Path(s"$out/models/current"),
+      true))
+    Seq((1L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text")
+      .write.parquet(s"$out/src")
+    val e = intercept[IllegalStateException](graft.streaming.Curation.start(
+      spark, s"$out/src", spark.read.parquet(s"$out/src").schema,
+      s"$out/cur", models, modelsDir = Some(s"$out/models")))
+    assert(e.getMessage.contains("flat _layout") &&
+      e.getMessage.contains("_layout, eval_grams"), e.getMessage)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$out/cur")),
+      "start must refuse before it writes anything")
+  }
 }
