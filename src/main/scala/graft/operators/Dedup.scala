@@ -93,37 +93,6 @@ object Dedup {
   def exactFingerprint(text: Column): Column =
     md5(trim(regexp_replace(text, "\\s+", " ")))
 
-  /** foreachBatch body of the UNBUCKETED novelty gate — the linear
-    * baseline [[appendNovelFingerprintsBucketed]] exists to beat (the
-    * ScaleProbe `novelty` row records its per-batch cost growing with
-    * the table; the `noveltyb` row records the bucketed layout flat).
-    * The batch's distinct exact fingerprints anti-join the persistent
-    * parquet table and the novel ones append.
-    *
-    * Consistency contract (both gate variants): the table is
-    * AT-LEAST-ONCE, not exactly-once — foreachBatch can replay a
-    * batch whose append already committed, re-appending the same
-    * fingerprints, so dedup is enforced at READ time (the census is
-    * distinct-first), never assumed of the stored rows. The
-    * read-then-append against one path in a single invocation is safe
-    * only because spark.read.parquet snapshots the file listing
-    * eagerly — the probe never sees its own append; a refactor to a
-    * lazily-listed source must split the paths.
-    *
-    * fp.isNotNull: a null-text doc has a NULL fingerprint, and NULL
-    * join keys never match — without the filter every batch (and
-    * every RUN against the standing table) would re-append a NULL
-    * row. Null docs carry no identity to remember; they count as
-    * non-novel.
-    */
-  def appendNovelFingerprints(batch: DataFrame, fpTable: String): Unit = {
-    val known = batch.sparkSession.read.parquet(fpTable)
-    batch.select(exactFingerprint(col("text")).as("fp")).distinct()
-      .filter(col("fp").isNotNull)
-      .join(known, Seq("fp"), "left_anti")
-      .write.mode("append").parquet(fpTable)
-  }
-
   // ---- fp-prefix-bucketed novelty gate --------------------------------
 
   /** Layout constants of the bucketed fingerprint table: data rows are
@@ -215,14 +184,6 @@ object Dedup {
   }
 
   private[operators] def bitMasksCol: Column = bitMasks
-
-  /** One-shot form of the bucketed gate for callers without a
-    * standing [[NoveltyGate]] — pays the bloom load on every call.
-    */
-  def appendNovelFingerprintsBucketed(batch: DataFrame, tableRoot: String,
-      bits: Int = noveltyBloomBits, k: Int = noveltyBloomK,
-      prefixChars: Int = fpPrefixChars): Unit =
-    new NoveltyGate(tableRoot, bits, k, prefixChars).admit(batch)
 
   /** The bucketed table's fingerprints for read-side censuses — an
     * empty typed frame when no batch ever appended (the all-empty
@@ -856,19 +817,6 @@ object Dedup {
       .withColumn("is_neardup", (col("best_eq") >= minEq).cast("int"))
   }
 
-  /** One-shot form of the standing NEAR-dup gate
-    * (`ev_stream_neardup`) — delegates to [[NearDupGate]], the
-    * persistent-band-index sibling of [[NoveltyGate]]; see there for
-    * the layout, semantics, and scale argument. Callers with a
-    * standing stream should hold ONE NearDupGate instance instead so
-    * the band-hash Bloom loads once per stream, not once per batch.
-    */
-  def appendNearDupVerdicts(batch: DataFrame, root: String,
-      idCol: String, textCol: String, numHashes: Int = 32,
-      bands: Int = 16, shingleSize: Int = 1, minEq: Int = 16): Unit =
-    new NearDupGate(root, numHashes, bands, shingleSize, minEq)
-      .admit(batch, idCol, textCol)
-
   /** Span-REMOVAL dedup (Lee et al. 2022, "Deduplicating Training
     * Data Makes Language Models Better"): the transform real
     * pipelines run after the span census (`dd_dup_span_fraction`
@@ -1234,7 +1182,7 @@ private[graft] object GateOps {
 
   /** Pipeline-level log/verdict-sink compaction — the gate verdict
     * tables' epoch maintenance applied to the sinks OUTSIDE the gates
-    * (Curation.start's `scored`, IncrementalIngest's `novelty_log` /
+    * (Curation.start's `scored` / `report`, IncrementalIngest's
     * `curation_log`), which otherwise accumulate one file set per
     * batch forever at sustained ingest: read, distinct, rewrite as
     * one `sortCol`-sorted file, crash-ordered generation swap. Same
@@ -1978,11 +1926,12 @@ abstract class BandedGate private[operators] (root: String,
   * pays the many-directory cost once per epoch instead of every
   * batch.
   *
-  * Consistency: same at-least-once contract as the unbucketed gate
-  * (Dedup.appendNovelFingerprints scaladoc) — a replayed batch, or a
-  * crash between the bloom append and the data append, can duplicate
-  * table rows or leave bloom bits set for fps not yet stored; both
-  * decay to duplicate rows, which the distinct-first census absorbs.
+  * Consistency: the table is AT-LEAST-ONCE, not exactly-once — a
+  * replayed batch, or a crash between the bloom append and the data
+  * append, can duplicate table rows or leave bloom bits set for fps
+  * not yet stored; both decay to duplicate rows, so dedup is enforced
+  * at READ time (the census is distinct-first), never assumed of the
+  * stored rows.
   * The delta writes BEFORE the data append so no evaluation of
   * `novel` can ever observe its own append (and in the common path
   * `novel` reads no table at all). A saturated bitmap (occupancy

@@ -1222,11 +1222,15 @@ final class EmbedNearDupGate(root: String, dim: Int, bands: Int = 4,
 
   protected def restoreLayout(fs: FileSystem,
       m: Option[Map[String, String]]): Boolean = {
+    // every manifest this gate writes carries row_bits
+    require(m.forall(_.contains("row_bits")), s"gate root $root holds " +
+      "_layout without row_bits — not a layout this version reads; " +
+      "start the gate over in a new root")
     val (rb, stale) = restoreGeometry(fs, "keys", "_row_bits", m,
       "row_bits", rbCur)(rb => rb > 0 && bands * rb <= 30,
       "overflows the int keyspace")
     rbCur = rb
-    stale || m.forall(!_.contains("row_bits"))
+    m.isEmpty || stale
   }
 
   protected def writeLayout(fs: FileSystem): Unit =

@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 import graft.operators.{Dedup, EmbedNearDupGate, LmScore, NearDupGate,
   NoveltyGate, TextAnalysis, TextClassify}
 
@@ -164,78 +165,114 @@ object Curation {
     }
   }
 
-  /** The retrain-cadence pickup for a LIVE stream: holds the current
-    * [[Models]] generation and, once per batch ([[refresh]]), re-reads
-    * the save dir's manifest — one tiny k=v file — reloading only when
-    * the generation actually moved. This is what closes the cadence
-    * loop end-to-end: a batch retrain job [[Models.save]]s a new
-    * generation at any time (atomic swap); the in-flight micro-batch
-    * KEEPS the generation it started with (its verdicts stay
-    * internally consistent — a mid-batch model change would mix
-    * generations within one batch's verdicts); the NEXT batch's
-    * refresh sees the moved gen_id and picks the swap up.
+  /** The one models rule of the curated streams ([[start]],
+    * [[IncrementalIngest.start]]), resolved through [[resolver]]:
+    *  - explicit models only: fixed for the stream's lifetime (no
+    *    handle);
+    *  - a dir only (`fallback = None`): loaded at construction — a
+    *    stream that cannot load a complete generation at start fails
+    *    loudly, it never runs model-less;
+    *  - both (`fallback = Some(models)`): the explicit models run until
+    *    the dir holds a COMPLETE generation — the `_layout` completion
+    *    sentinel of `current` or of a finished save's `current_tmp`,
+    *    not mere non-emptiness (a first save in flight or torn makes
+    *    the dir non-empty but unloadable) — and the dir's generations
+    *    from then on. Nothing is loaded at construction, so a stream
+    *    can start before the dir's first save lands.
+    * A flat `<dir>/_layout` (a layout [[Models.load]] no longer reads)
+    * fails at construction, naming what the dir holds.
+    *
+    * Once a generation is held, [[refresh]] re-reads the save dir's
+    * manifest once per batch — one tiny k=v file — reloading only when
+    * the generation actually moved: a batch retrain job
+    * [[Models.save]]s a new generation at any time (atomic swap); the
+    * in-flight micro-batch KEEPS the generation it started with (a
+    * mid-batch model change would mix generations within one batch's
+    * verdicts); the NEXT batch's refresh picks the swap up.
     *
     * Failure posture: a refresh whose [[Models.load]] races the NEXT
     * swap (the gen_id pin throws) or hits a transient read failure
-    * KEEPS the held generation — verdicts remain valid, just one
-    * cadence late — warns on stderr, and retries at the next batch. A
-    * standing ingest stream can therefore never be stalled or torn by
-    * a retrain. The constructor load is NOT softened: a stream that
-    * cannot load any complete generation at start must fail loudly,
-    * not run model-less.
+    * keeps what this batch held — the held generation, else the
+    * explicit models — warns on stderr, and retries at the next batch.
+    * A standing stream can therefore never be stalled or torn by a
+    * retrain.
     *
     * One redundant-reload edge is tolerated by design: if a swap lands
-    * between refresh's manifest read and load's own, load succeeds
-    * under the NEWER generation while heldGen records the older id —
-    * the next refresh re-loads the same generation once (idempotent)
-    * and re-synchronizes. */
-  final class ModelsHandle(spark: SparkSession, dir: String) {
-    // gen read BEFORE load (the same order refresh uses): a swap
-    // landing between the two then makes heldGen OLDER than the
-    // loaded generation, which the next refresh heals with one
-    // redundant reload. The inverted order would record a NEWER gen
-    // than what was loaded — a silent, unbounded pin to the stale
-    // generation until some third retrain moved the id again.
-    private var heldGen: Option[String] = readGen()
-    private var held: Models = Models.load(spark, dir)
+    * between the manifest read and load's own, load succeeds under the
+    * NEWER generation while heldGen records the older id — the next
+    * refresh re-loads the same generation once (idempotent) and
+    * re-synchronizes. The inverted order (load, then read the gen)
+    * would record a NEWER gen than what was loaded — a silent,
+    * unbounded pin to the stale generation. */
+  final class ModelsHandle(spark: SparkSession, dir: String,
+      fallback: Option[Models] = None) {
+    private val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_layout")))
+      throw new IllegalStateException(
+        s"models dir $dir holds a flat _layout (found: " +
+          graft.operators.GateLayout.found(fs,
+            new org.apache.hadoop.fs.Path(dir)) +
+          ") — not a layout this version reads; save the models again")
+    private var heldGen: Option[String] = None
+    private var held: Option[Models] = None
+    if (fallback.isEmpty) adopt(readGen())
+
+    private def adopt(gen: Option[String]): Unit = {
+      held = Some(Models.load(spark, dir))
+      heldGen = gen
+    }
 
     private def readGen(): Option[String] = {
-      val fs = new org.apache.hadoop.fs.Path(dir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
       val mp = new org.apache.hadoop.fs.Path(s"$dir/current/_layout")
       if (fs.exists(mp))
         graft.operators.GateLayout.read(fs, mp).get("gen_id")
       else None // mid-swap: current is momentarily missing
     }
 
-    /** The held models, re-checked against the dir's current
-      * generation — call once at the top of each micro-batch. */
+    /** The models for this batch — call once at the top of each
+      * micro-batch. */
     def refresh(): Models = {
       try {
-        val g = readGen()
-        if (g.isDefined && g != heldGen) {
-          held = Models.load(spark, dir)
-          heldGen = g
-          System.err.println(
-            s"[curation-models] picked up generation ${g.get} from $dir")
+        if (held.isEmpty) {
+          if (Seq("current", "current_tmp").exists(g =>
+              fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$g/_layout"))))
+            adopt(readGen())
+        } else {
+          val g = readGen()
+          if (g.isDefined && g != heldGen) {
+            adopt(g)
+            System.err.println(
+              s"[curation-models] picked up generation ${g.get} from $dir")
+          }
         }
       } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(
             s"[curation-models] refresh against $dir failed " +
-              s"(${e.getMessage}) — keeping the held generation " +
-              "this batch, retrying next batch")
+              s"(${e.getMessage}) — keeping this batch on the " +
+              s"${if (held.isEmpty) "explicit models" else "held generation"}, " +
+              "retrying next batch")
       }
-      held
+      held.orElse(fallback).get
     }
   }
+
+  /** The per-batch models of a curated stream under the one rule
+    * [[ModelsHandle]] states; None when neither is given. */
+  private[streaming] def resolver(spark: SparkSession,
+      models: Option[Models], dir: Option[String]): Option[() => Models] =
+    dir.map { d =>
+      val h = new ModelsHandle(spark, d, models)
+      () => h.refresh()
+    }.orElse(models.map(m => () => m))
 
   /** Zero-row frame with the given DDL schema — the shared empty-
     * seed/empty-placeholder construction (one definition; the seed
     * and both census fallbacks use it). */
   private def emptyFrame(spark: SparkSession, ddl: String): DataFrame =
     spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
+      new java.util.ArrayList[Row](),
       org.apache.spark.sql.types.StructType.fromDDL(ddl))
 
   /** Per-doc distinct 13-gram md5s (array_distinct — a per-row fold,
@@ -399,6 +436,13 @@ object Curation {
     * `outDir/nov` and `outDir/nd`. `models` are typically
     * [[trainModels]] over the reference corpus.
     *
+    * Models follow the one rule of both curated entries
+    * ([[ModelsHandle]]): `models` alone stay fixed for the stream's
+    * lifetime; with `modelsDir` as well, batches run on `models` until
+    * the dir holds a complete generation and on the dir's current
+    * generation from then on, a retrain being picked up at the next
+    * batch. A flat `<modelsDir>/_layout` fails at start.
+    *
     * `bandKeyCap`/`candCap` pass straight through to the stage-2
     * [[NearDupGate]] — the production entry point must be able to
     * enable its own scale remedy (a hot band key otherwise makes
@@ -433,190 +477,153 @@ object Curation {
       logMergeBytes: Long = 0L, targetKeyLoad: Int = 64,
       trigger: Trigger = Trigger.AvailableNow(),
       modelsDir: Option[String] = None): StreamingQuery = {
-    // retrain-cadence parity with IncrementalIngest.start: explicit
-    // `models` are FIXED for the stream's lifetime; a modelsDir opts
-    // into per-batch generation re-checks through a [[ModelsHandle]]
-    // (one manifest read per batch; a mid-stream retrain save is
-    // picked up at the NEXT batch, the in-flight batch keeping the
-    // generation it started with — no mixed-generation verdicts).
-    // `models` here is REQUIRED (unlike the ingest entry point's
-    // Option), so the two compose rather than compete: batches run on
-    // `models` until the dir's FIRST save lands, and on the dir's
-    // current generation from then on. The handle is built lazily —
-    // building it eagerly would Models.load an unpopulated dir and
-    // crash the stream at start(), exactly the cold-start window the
-    // fallback exists for. The gate is "a COMPLETE generation
-    // exists" — the `_layout` completion sentinel of `current` or of
-    // a finished save's `current_tmp` — NOT mere non-emptiness: a
-    // first save IN FLIGHT (artifacts landing under current_tmp
-    // before its sentinel) or a torn first save makes the dir
-    // non-empty but unloadable, and building the handle then would
-    // kill the live stream in exactly the window the fallback covers.
-    // A dir whose sentinel IS present but fails to load (a swap race,
-    // a torn store) degrades the batch to the explicit models WITH a
-    // per-batch stderr warning — a live stream prefers
-    // degraded-but-loud over death, matching refresh()'s own failure
-    // posture.
-    val resolveModels: () => Models = modelsDir match {
-      case Some(d) =>
-        val dfs = new org.apache.hadoop.fs.Path(d)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a flat `<d>/_layout` is a layout Models.load no longer reads:
-        // fail at start, naming it, rather than warn and fall back on
-        // every batch
-        if (dfs.exists(new org.apache.hadoop.fs.Path(s"$d/_layout")))
-          throw new IllegalStateException(
-            s"models dir $d holds a flat _layout (found: " +
-              graft.operators.GateLayout.found(dfs,
-                new org.apache.hadoop.fs.Path(d)) +
-              ") — not a layout this version reads; save the models " +
-              "again")
-        def complete(): Boolean = Seq(
-          s"$d/current/_layout", s"$d/current_tmp/_layout").exists(p =>
-          dfs.exists(new org.apache.hadoop.fs.Path(p)))
-        var h: Option[ModelsHandle] = None
-        () => {
-          if (h.isEmpty && complete())
-            // failure-tolerant like refresh() itself: the handle's
-            // eager constructor load can race the first save's
-            // sentinel-to-swap window (or the NEXT save's swap) and
-            // throw — that must degrade this batch to the explicit
-            // models and retry next batch, not escape foreachBatch
-            // and kill the live stream. Loud on stderr every batch it
-            // persists, so a permanently-unloadable dir cannot hide.
-            h =
-              try Some(new ModelsHandle(spark, d))
-              catch { case scala.util.control.NonFatal(e) =>
-                System.err.println(
-                  s"[curation] models dir $d looks complete but did " +
-                    s"not load (${e.getMessage}) — this batch runs " +
-                    "on the explicit models; retrying next batch")
-                None
-              }
-          h.map(_.refresh()).getOrElse(models)
-        }
-      case None => () => models
-    }
-    // a crash inside a previous run's scored-log compaction can leave
-    // the table mid-generation-swap — heal before seeding/appending
-    val tfs = new org.apache.hadoop.fs.Path(outDir).getFileSystem(
+    val getModels = resolver(spark, Some(models), modelsDir).get
+    val (ngate, ndgate) = gates(outDir, autoCompactEvery, bandKeyCap,
+      candCap, targetKeyLoad)
+    // the verdict table and the standing per-tick census log beside
+    // it, both seeded with their zero-row schema
+    guardedStream(spark.readStream.schema(schema).parquet(docsGlob),
+        outDir, s"$outDir/_ckpt", Seq("scored" -> Some(verdictDdl),
+          "report" -> Some("stage STRING, n_evaluated BIGINT, " +
+            "n_kept BIGINT, n_dropped BIGINT, shed_keys BIGINT, " +
+            "batch_id BIGINT")),
+        "graft_stream_curate", trigger, autoCompactEvery) {
+      (batch, batchId, tick) =>
+        val (v, shed) = curateBatchWithShed(batch, ngate, ndgate,
+          getModels())
+        // pinned once: consumed by both the scored write and the tick
+        // census below — without the pin the census would re-run the
+        // whole five-gate assembly
+        val verdicts = v.localCheckpoint()
+        graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
+          "scored", "doc_id", Some(verdicts), tick, logMergeBytes)
+        // the STANDING census: the same per-stage arithmetic as the
+        // post-hoc [[curationReport]], over just this tick's verdicts,
+        // appended to a `report` log — a sustained-ingest operator
+        // watches the census as a stream instead of re-scanning the
+        // whole scored log per look. Replay-stable: a checkpoint retry
+        // re-runs the same batch to the same verdicts (curateBatch's
+        // contract) and the same batch_id, so the re-appended rows are
+        // byte-identical and the read-side distinct absorbs them —
+        // including a crash BETWEEN the scored append and this one.
+        // distinct() on the tick's own verdicts mirrors the post-hoc
+        // read discipline (a doc duplicated within one batch was
+        // already collapsed by curateBatch's dedupAtWidth, so it is a
+        // no-op here by construction, kept for the shared-arithmetic
+        // guarantee). It self-tends on the scored log's cadence,
+        // sorted by tick, always in the wholesale tier (6 rows per
+        // tick).
+        graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
+          "report", "batch_id", Some(censusStages(verdicts.distinct(),
+            shed).withColumn("batch_id", lit(batchId))), tick, 0L)
+    }.start()
+  }
+
+  /** The per-doc verdict frame's schema ([[curateBatch]]'s output). */
+  private[streaming] val verdictDdl: String =
+    "doc_id BIGINT, is_novel INT, is_neardup INT, quality_kept INT, " +
+      "decontam_kept INT, lm_kept INT, kept INT"
+
+  /** The curated streams' stage-1/stage-2 gate pair under `root`
+    * (`root/nov`, `root/nd`), self-tending on `autoCompactEvery`: every
+    * N-th admit compacts the gates' per-batch file accumulation inside
+    * the admit turn (single-batch fixture runs never reach it). The
+    * novelty gate's PERFORMANCE geometry also self-sizes at those
+    * compactions (bloom grows to k·n·2 ≤ bits, buckets widen past
+    * 256 MB) — both verdict-invariant, unlike the embedding gate's
+    * band width, which changes collision semantics and therefore stays
+    * opt-in. One pair per stream (driver-side foreachBatch closure):
+    * the cached filters load once and fold per-batch deltas in
+    * memory. */
+  private[streaming] def gates(root: String, autoCompactEvery: Int = 16,
+      bandKeyCap: Int = 0, candCap: Int = 100000,
+      targetKeyLoad: Int = 64): (NoveltyGate, NearDupGate) =
+    (new NoveltyGate(s"$root/nov", autoCompactEvery = autoCompactEvery,
+        growBloomFactor = 2, widenBucketBytes = 256L << 20),
+      new NearDupGate(s"$root/nd", candCap = candCap,
+        bandKeyCap = bandKeyCap, autoCompactEvery = autoCompactEvery,
+        targetKeyLoad = targetKeyLoad))
+
+  /** The one replay-guarded micro-batch loop of the curated streams
+    * ([[start]], [[IncrementalIngest.start]] and the ingest-curated
+    * registry rows). At start it heals each of the caller's `logs`
+    * under `root` — a crash inside a previous run's log compaction can
+    * leave one mid-generation-swap — and then seeds those given a DDL
+    * with their zero-row schema, so a stream that drains with no
+    * non-empty batch still leaves them readable. Per non-empty batch
+    * it runs `body(batch, batchId, tick)` and then writes the
+    * `_last_commit` marker under `root`. `tick` is the logs'
+    * compaction clock on the gates' cadence, every
+    * `autoCompactEvery`-th batch: a tick's log write folds the batch's
+    * rows into [[graft.operators.GateOps.compactLog]] instead of
+    * appending them, so the logs do not accumulate one file set per
+    * batch forever at sustained ingest.
+    *
+    * Replay idempotence under a LIVE models dir: a crash after the
+    * body completed but before Spark committed the batch's offsets
+    * replays the batch — and if a retrain landed in the restart
+    * window, the replay would re-curate under the NEW generation and
+    * append log rows that differ from the first run's (read-side
+    * distinct() keeps both, breaking the census sum property). Spark
+    * replays only the LAST in-flight batch, so ONE marker suffices:
+    * the body is skipped when `_last_commit` already records this
+    * batch (the first run fully committed — gate state, logs and
+    * merge all landed before the marker did). Residual window: a
+    * crash BETWEEN the appends and the marker write replays a torn
+    * batch; same-generation replays stay byte-identical (absorbed as
+    * before), and only a retrain landing in that exact window can
+    * still produce conflicting rows — the narrow, documented remainder
+    * of a non-transactional log. The marker pairs the batchId with
+    * the CHECKPOINT's stable query id
+    * ([[graft.operators.GateOps.commitIdentity]]: checkpoint-side fs,
+    * success-only caching, loud degradation): a reused root under a
+    * FRESH checkpoint restarts batchIds at 0, which a bare-batchId
+    * marker would wrongly match whenever the prior run's last batch
+    * was 0 (the AvailableNow common case) — silently dropping the new
+    * stream's first batch. A fresh checkpoint has a fresh id, so it
+    * never matches; an unreadable metadata file degrades to a
+    * per-process random id, i.e. the guard turns off on the safe
+    * (re-run) side.
+    *
+    * Returns the writer; the caller starts it. Spark pins the call site
+    * of every job a streaming query runs to its start() call, so
+    * starting it in the caller keeps the batch's jobs named after the
+    * caller's code, not after this loop. */
+  private[streaming] def guardedStream(stream: DataFrame, root: String,
+      ckptDir: String, logs: Seq[(String, Option[String])],
+      queryName: String, trigger: Trigger, autoCompactEvery: Int)(
+      body: (DataFrame, Long, Boolean) => Unit): DataStreamWriter[Row] = {
+    val spark = stream.sparkSession
+    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
       spark.sparkContext.hadoopConfiguration)
-    graft.operators.GateOps.recoverGeneration(tfs, outDir, "scored")
-    graft.operators.GateOps.recoverGeneration(tfs, outDir, "report")
-    // seed the verdict table with its zero-row schema so a stream
-    // that drains with no non-empty batch still leaves a readable
-    // scored path (the repo-wide empty-replay discipline)
-    emptyFrame(spark,
-      "doc_id BIGINT, is_novel INT, is_neardup INT, " +
-        "quality_kept INT, decontam_kept INT, lm_kept INT, kept INT")
-      .write.mode("ignore").parquet(s"$outDir/scored")
-    // … and the standing per-tick census log beside it (same
-    // discipline; see the foreachBatch emit below)
-    emptyFrame(spark,
-      "stage STRING, n_evaluated BIGINT, n_kept BIGINT, " +
-        "n_dropped BIGINT, shed_keys BIGINT, batch_id BIGINT")
-      .write.mode("ignore").parquet(s"$outDir/report")
-    // a PRODUCTION stream self-tends by default: every 16th batch the
-    // gates compact their per-batch file accumulation (verdicts, band
-    // buckets, fingerprint buckets) inside the admit turn — the
-    // fixture's single-batch runs never reach the threshold, so the
-    // oracle rows are unaffected. The novelty gate's PERFORMANCE
-    // geometry also self-sizes at those compactions (bloom grows to
-    // k·n·2 ≤ bits, buckets widen past 256 MB) — both are
-    // verdict-invariant, unlike the embedding gate's band width,
-    // which changes collision semantics and therefore stays opt-in
-    val ngate = new NoveltyGate(s"$outDir/nov",
-      autoCompactEvery = autoCompactEvery,
-      growBloomFactor = 2, widenBucketBytes = 256L << 20)
-    val ndgate = new NearDupGate(s"$outDir/nd", candCap = candCap,
-      bandKeyCap = bandKeyCap, autoCompactEvery = autoCompactEvery,
-      targetKeyLoad = targetKeyLoad)
-    // the PIPELINE-LEVEL sink self-tends on the same cadence as the
-    // gates' state tables: without this the scored log accumulates
-    // one file set per batch forever at sustained ingest (the gate
-    // verdicts dirs compact inside autoCompactEvery; this is their
-    // counterpart for the sink the gates don't own). Driver-side
-    // counter, same one-per-stream discipline as the gates.
-    var batchesSinceCompact = 0
-    // checkpoint identity for the replay guard (shared resolver:
-    // checkpoint-side fs, success-only caching, loud degradation)
-    val ckptDir = s"$outDir/_ckpt"
+    logs.foreach { case (name, ddl) =>
+      graft.operators.GateOps.recoverGeneration(fs, root, name)
+      ddl.foreach(emptyFrame(spark, _).write.mode("ignore")
+        .parquet(s"$root/$name"))
+    }
     val ckptId = graft.operators.GateOps.commitIdentity(
       spark.sparkContext.hadoopConfiguration, ckptDir)
-    spark.readStream.schema(schema).parquet(docsGlob)
-      .writeStream.queryName("graft_stream_curate")
+    // driver-side, one per stream (the gates keep their own clocks)
+    var batchesSinceCompact = 0
+    stream.writeStream.queryName(queryName)
       .option("checkpointLocation", ckptDir)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // Replay idempotence under a LIVE models dir: a crash after
-        // this body completed but before Spark committed the batch's
-        // offsets replays the batch — and if a retrain landed in the
-        // restart window, the replay would re-curate under the NEW
-        // generation and append verdict/census rows that differ from
-        // the first run's (read-side distinct() keeps both, breaking
-        // the census sum property). Spark replays only the LAST
-        // in-flight batch, so ONE marker suffices: the body is
-        // skipped when `_last_commit` already records this batchId
-        // (the first run fully committed — gate state, scored, and
-        // census all landed before the marker did). Residual window:
-        // a crash BETWEEN the appends and the marker write replays a
-        // torn batch; same-generation replays stay byte-identical
-        // (absorbed as before), and only a retrain landing in that
-        // exact window can still produce conflicting rows — the
-        // narrow, documented remainder of a non-transactional log.
-        // The marker pairs the batchId with the CHECKPOINT's stable
-        // query id: a reused outDir under a FRESH checkpoint restarts
-        // batchIds at 0, which a bare-batchId marker would wrongly
-        // match whenever the prior run's last batch was 0 (the
-        // AvailableNow common case) — silently dropping the new
-        // stream's first batch. A fresh checkpoint has a fresh id, so
-        // it never matches; an unreadable metadata file degrades to a
-        // per-process random id, i.e. the guard turns off on the safe
-        // (re-run) side.
         val commitKey = s"${ckptId()}:$batchId"
         val committed = graft.operators.GateOps.replayCommitted(
-          graft.operators.GateOps.readMarker(tfs, outDir,
-            "_last_commit"), commitKey)
+          graft.operators.GateOps.readMarker(fs, root, "_last_commit"),
+          commitKey)
         if (!batch.isEmpty && !committed) {
-          // a tick of the logs' clock folds the batch's rows into the
-          // log compaction instead of appending them first
           val tick = autoCompactEvery > 0 &&
             batchesSinceCompact + 1 >= autoCompactEvery
-          val (v, shed) = curateBatchWithShed(batch, ngate, ndgate,
-            resolveModels())
-          // pinned once: consumed by both the scored write and the
-          // tick census below — without the pin the census would
-          // re-run the whole five-gate assembly
-          val verdicts = v.localCheckpoint()
-          graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
-            "scored", "doc_id", Some(verdicts), tick, logMergeBytes)
-          // the STANDING census: the same per-stage arithmetic as the
-          // post-hoc [[curationReport]], over just this tick's
-          // verdicts, appended to a `report` log — a sustained-ingest
-          // operator watches the census as a stream instead of
-          // re-scanning the whole scored log per look. Replay-stable:
-          // a checkpoint retry re-runs the same batch to the same
-          // verdicts (curateBatch's contract) and the same batch_id,
-          // so the re-appended rows are byte-identical and the
-          // read-side distinct absorbs them — including a crash
-          // BETWEEN the scored append and this one. distinct() on the
-          // tick's own verdicts mirrors the post-hoc read discipline
-          // (a doc duplicated within one batch was already collapsed
-          // by curateBatch's dedupAtWidth, so it is a no-op here by
-          // construction, kept for the shared-arithmetic guarantee).
-          // It self-tends on the scored log's cadence, sorted by tick,
-          // always in the wholesale tier (6 rows per tick).
-          graft.operators.GateOps.writeLog(batch.sparkSession, outDir,
-            "report", "batch_id", Some(censusStages(verdicts.distinct(),
-              shed).withColumn("batch_id", lit(batchId))), tick, 0L)
-          // commit point for the replay guard above — written only
-          // after BOTH log writes landed
-          graft.operators.GateOps.writeMarker(tfs, outDir,
-            "_last_commit", commitKey)
+          body(batch, batchId, tick)
+          // commit point for the replay guard — written only after
+          // everything the body wrote landed
+          graft.operators.GateOps.writeMarker(fs, root, "_last_commit",
+            commitKey)
           batchesSinceCompact = if (tick) 0 else batchesSinceCompact + 1
         }
       }
-      .start()
   }
 
   /** The census a sustained-ingest operator actually watches, read

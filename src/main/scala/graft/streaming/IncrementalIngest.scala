@@ -29,52 +29,32 @@ object IncrementalIngest {
     * Trigger.AvailableNow drains what's there and stops — the batch
     * refresh pattern; swap the trigger for continuous ingest.
     *
-    * `noveltyGate = true` routes every batch through a standing
-    * [[graft.operators.NoveltyGate]] (table under
-    * `tableDir/novelty`) in FLAG-DON'T-DROP mode — the production
-    * topology where the gate family meets the merge path: each raw
-    * record's crawl-invariant payload (every field except
-    * scraped_at, as canonical JSON) is fingerprinted and the per-
-    * record verdict logged to `tableDir/novelty_log` BEFORE the
-    * unify+merge, which still processes the full batch. A re-crawl
-    * of byte-identical content thus flags is_novel=0 while the
-    * keyed upsert independently converges the table — the agreement
-    * the ingest spec asserts. Flagging, not dropping, is deliberate:
-    * the merge's latest-wins semantics must still see re-scrapes
-    * whose MUTABLE envelope (scraped_at, url) moved, and a
-    * downstream compaction can use the log to skip re-scoring
-    * unchanged payloads.
-    *
-    * `curation = Some(models)` generalizes that to the COMPLETE
-    * five-gate chain ([[Curation.curateBatch]]: exact-novelty →
-    * near-dup → quality → decontam → LM perplexity) in the same
-    * flag-don't-drop posture: each record's crawl-invariant payload
-    * JSON is the document (id = the full-record hash, so the log
-    * keys line up with novelty_log's), the per-record verdict frame
-    * lands in `tableDir/curation_log` BEFORE the unify+merge, and
-    * the merge still processes the full batch. Gate state lives
-    * under `tableDir/curation/{nov,nd}` — self-tending like the
-    * novelty mode. The two modes are independent knobs (curation
-    * subsumes the novelty flag's information but keeps its own
-    * state, so enabling both is supported and simply redundant).
+    * `curation = Some(models)` runs the COMPLETE five-gate chain
+    * ([[Curation.curateBatch]]: exact-novelty → near-dup → quality →
+    * decontam → LM perplexity) in FLAG-DON'T-DROP posture: each raw
+    * record's crawl-invariant payload (every field except scraped_at,
+    * as canonical JSON) is the document, its id the full-record hash;
+    * the per-record verdict frame lands in `tableDir/curation_log`
+    * BEFORE the unify+merge, and the merge still processes the full
+    * batch. A re-crawl of byte-identical content thus flags
+    * is_novel=0 while the keyed upsert independently converges the
+    * table. Flagging, not dropping, is deliberate: the merge's
+    * latest-wins semantics must still see re-scrapes whose MUTABLE
+    * envelope (scraped_at, url) moved. Gate state lives under
+    * `tableDir/curation/{nov,nd}` ([[Curation.gates]]).
     *
     * `curationModelsDir` is the PRODUCTION form of the same knob: a
     * [[Curation.Models.save]] directory maintained on a retrain
-    * cadence by a batch job — an ingest worker never constructs
-    * models in the driver by hand. The dir is loaded at start (fail
-    * loud if no complete generation exists) and then tracked LIVE
-    * through a [[Curation.ModelsHandle]]: each batch re-checks the
-    * dir's generation (one manifest read) and a mid-stream retrain
-    * swap is picked up at the NEXT batch, the in-flight batch keeping
-    * the generation it started with — verdicts are bit-stable per
-    * generation (spec-pinned), never mixed within a batch. A load
-    * racing a swap fails loudly inside Models.load (the gen_id pin);
-    * the handle then keeps the held generation and retries next
-    * batch, so a retrain can neither stall nor tear the stream.
+    * cadence by a batch job. Models follow the one rule of both
+    * curated entries ([[Curation.ModelsHandle]]): explicit models
+    * alone stay fixed for the stream's lifetime; a dir alone is loaded
+    * at start (fail loud if no complete generation exists) and
+    * re-checked once per batch (one manifest read), a mid-stream
+    * retrain swap being picked up at the NEXT batch while the
+    * in-flight batch keeps the generation it started with; both run
+    * the explicit models until the dir holds a complete generation.
     * Verdicts under a loaded dir equal verdicts under the in-memory
-    * models bit-exactly (spec-pinned). Supplying both prefers the
-    * explicit `curation` value, which stays FIXED for the stream's
-    * lifetime.
+    * models bit-exactly (spec-pinned).
     *
     * `bandKeyCap`/`candCap` pass straight through to the curation
     * mode's stage-2 [[graft.operators.NearDupGate]] — the production
@@ -95,19 +75,19 @@ object IncrementalIngest {
     *
     * `autoCompactEvery` is the shared self-tending cadence: the
     * gates' state tables compact themselves inside every N-th admit,
-    * and the PIPELINE-LEVEL logs (`novelty_log`, `curation_log`) —
-    * which otherwise accumulate one file set per batch forever at
-    * sustained ingest — compact on the same clock
+    * and the PIPELINE-LEVEL `curation_log` — which otherwise
+    * accumulates one file set per batch forever at sustained ingest —
+    * compacts on the same clock
     * ([[graft.operators.GateOps.compactLog]]: distinct-absorbed
     * replays, one sorted file, crash-ordered swap). `logMergeBytes`
-    * > 0 switches the log compactions to compactLog's bounded
+    * > 0 switches the log compaction to compactLog's bounded
     * INCREMENTAL tier (per-tick cost stops growing with stream age
     * once merged epochs seal at the threshold); 0 keeps the
-    * wholesale rewrite. */
+    * wholesale rewrite. Each batch runs under the curated streams'
+    * `_last_commit` replay guard ([[Curation.guardedStream]]). */
   def start(spark: SparkSession, landingDir: String, tableDir: String,
       platform: String = "ibiza-spotlight",
       checkpoint: Option[String] = None,
-      noveltyGate: Boolean = false,
       curation: Option[Curation.Models] = None,
       curationModelsDir: Option[String] = None,
       bandKeyCap: Int = 0, candCap: Int = 100000,
@@ -115,167 +95,67 @@ object IncrementalIngest {
       logMergeBytes: Long = 0L,
       targetKeyLoad: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery = {
-    // explicit models are FIXED for the stream's lifetime; a models
-    // DIR is the retrain-cadence form — a ModelsHandle re-checks the
-    // dir's generation once per batch (one manifest read) and picks a
-    // mid-stream retrain swap up at the NEXT batch, the in-flight
-    // batch keeping the generation it started with
-    // (Curation.ModelsHandle has the full contract)
-    val curModels: Option[() => Curation.Models] =
-      curation.map(m => () => m).orElse(curationModelsDir.map { d =>
-        val h = new Curation.ModelsHandle(spark, d)
-        () => h.refresh()
-      })
+    val curate = Curation.resolver(spark, curation, curationModelsDir)
+      .map(_ -> Curation.gates(s"$tableDir/curation", autoCompactEvery,
+        bandKeyCap, candCap, targetKeyLoad))
     val stream = spark.readStream
       .schema(rawSchema)
       .option("multiLine", true)
       .json(landingDir)
-    // a crash inside a previous run's log compaction can leave either
-    // log mid-generation-swap — heal before any append
-    val tfs = new org.apache.hadoop.fs.Path(tableDir).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    Seq("novelty_log", "curation_log").foreach(
-      graft.operators.GateOps.recoverGeneration(tfs, tableDir, _))
-    // ONE gate per stream (driver-side foreachBatch closure): the
-    // cached bloom loads once and folds per-batch deltas in memory
-    val gate = if (noveltyGate)
-      // self-tending default: compact the fingerprint table's
-      // per-batch accumulation every N-th batch (inside the admit
-      // turn — never racing one), with the verdict-invariant
-      // performance geometry self-sizing at those compactions
-      // (bloom to k·n·2 ≤ bits, buckets widening past 256 MB)
-      Some(new graft.operators.NoveltyGate(s"$tableDir/novelty",
-        autoCompactEvery = autoCompactEvery, growBloomFactor = 2,
-        widenBucketBytes = 256L << 20))
-    else None
-    // the composed-curation gates follow the same one-per-stream,
-    // driver-side, self-tending discipline
-    val curGates = curModels.map { _ =>
-      (new graft.operators.NoveltyGate(s"$tableDir/curation/nov",
-          autoCompactEvery = autoCompactEvery, growBloomFactor = 2,
-          widenBucketBytes = 256L << 20),
-        new graft.operators.NearDupGate(s"$tableDir/curation/nd",
-          candCap = candCap, bandKeyCap = bandKeyCap,
-          autoCompactEvery = autoCompactEvery,
-          targetKeyLoad = targetKeyLoad))
-    }
-    // pipeline-level log cadence (the gates keep their own clocks)
-    var batchesSinceCompact = 0
-    // checkpoint identity for the replay guard (shared resolver:
-    // checkpoint-side fs — an explicit checkpoint may live on a
-    // DIFFERENT filesystem than tableDir — success-only caching,
-    // loud degradation)
-    val ckptDir = checkpoint.getOrElse(s"$tableDir/_checkpoint")
-    val ckptId = graft.operators.GateOps.commitIdentity(
-      spark.sparkContext.hadoopConfiguration, ckptDir)
-    stream.writeStream
-      .queryName("graft-incremental-ingest")
-      .option("checkpointLocation", ckptDir)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // replay idempotence under a LIVE models dir (Curation.start's
-        // _last_commit discipline, same rationale there): a replayed
-        // fully-committed batch must not re-curate under a newer
-        // generation and append conflicting curation_log rows. Spark
-        // replays only the last in-flight batch, so one marker
-        // suffices. The marker pairs the batchId with the
-        // checkpoint's stable query id (GateOps.checkpointQueryId):
-        // a reused tableDir under a FRESH checkpoint restarts
-        // batchIds at 0, which a bare-batchId marker would wrongly
-        // match whenever the prior run's last batch was 0 — silently
-        // dropping the new stream's first batch. The merge's own
-        // replay was already idempotent (latest-wins re-merge of an
-        // applied month is a no-op) — the guard closes the LOG
-        // appends, which were only same-generation-idempotent.
-        val commitKey = s"${ckptId()}:$batchId"
-        val committed = graft.operators.GateOps.replayCommitted(
-          graft.operators.GateOps.readMarker(tfs, tableDir,
-            "_last_commit"), commitKey)
-        if (!batch.isEmpty && !committed) {
-          // a tick of the logs' clock folds the batch's log rows into
-          // the log compaction instead of appending them first
-          val tick = autoCompactEvery > 0 &&
-            batchesSinceCompact + 1 >= autoCompactEvery
-          def writeLog(name: String, rows: DataFrame): Unit =
-            graft.operators.GateOps.writeLog(batch.sparkSession, tableDir,
-              name, "ingest_id", Some(rows), tick, logMergeBytes)
-          gate.foreach { g =>
-            val payloadCols = batch.columns.filterNot(_ == "scraped_at")
-            val prepared = batch.select(
-              xxhash64(to_json(struct(batch.columns.map(col): _*)))
-                .as("ingest_id"),
-              to_json(struct(payloadCols.map(col): _*)).as("payload"))
-            writeLog("novelty_log", g.admitScored(
-              // ingest_id hashes the FULL record incl. scraped_at, so
-              // two byte-identical raw rows in one landing file share
-              // it — without this dedup admitScored would emit two
-              // log rows for them and log-count accounting
-              // over-counts (shared explicit-width idiom:
-              // GateOps.dedupAtWidth has the AQE rule)
-              graft.operators.GateOps.dedupAtWidth(prepared, "ingest_id"),
-              "ingest_id", "payload")
-              .withColumnRenamed("id", "ingest_id"))
-          }
-          curModels.foreach { getModels =>
-            // per-batch generation check (no-op unless a retrain
-            // landed since the last batch)
-            val models = getModels()
-            val (cng, cnd) = curGates.get
-            val payloadCols = batch.columns.filterNot(_ == "scraped_at")
-            // id = full-record hash (novelty_log's key), document =
-            // the crawl-invariant payload JSON. No dedup here:
-            // curateBatch itself repartitions by doc_id at explicit
-            // width and dedups — a second pass would just pay the
-            // shuffle twice
-            val docs = batch.select(
-              xxhash64(to_json(struct(batch.columns.map(col): _*)))
-                .as("doc_id"),
-              to_json(struct(payloadCols.map(col): _*)).as("text"))
-            writeLog("curation_log",
-              Curation.curateBatch(docs, cng, cnd, models)
-                .withColumnRenamed("doc_id", "ingest_id"))
-          }
-          // Month partition (the TableLayout key) must be STABLE per
-          // event_id across re-scrapes, or the partition-pruned merge
-          // accumulates cross-month duplicates. Unify coalesces an
-          // absent/unparseable start date to SCRAPE time — which
-          // varies per crawl — so those rows are routed to the
-          // "0000-00" sentinel month instead, detected from the raw
-          // evidence: no raw date string at all, or the datetime
-          // validation ERROR Unify raises on a failed parse. (A
-          // legitimately CHANGED date still moves months — that is
-          // reconcileCrossMonthKeys' documented job.)
-          val scrapeDated =
-            col("datetime.recurring.pattern_description").isNull ||
-              col("datetime.recurring.pattern_description") === "" ||
-              exists(col("validation_metadata.validation_errors"),
-                e => e.getField("field") === "datetime")
-          val unified = Unify.unify(batch, platform)
-            .transform(df => MergeOps.dedupFirstWins(df, Seq("event_id")))
-            .withColumn("start_month",
-              when(scrapeDated, lit("0000-00"))
-                .otherwise(substring(col("datetime.start_date"), 1, 7)))
-            // the merge runs several actions (month collect, staging
-            // write) — materialize the unified batch once instead of
-            // re-running the Unify projection + dedup shuffle per
-            // action
-            .localCheckpoint()
-          // partition-pruned merge: a micro-batch touches only the
-          // months it carries — sustained ingest against a 100 TB
-          // table never rewrites the table (the reference's
-          // upsert-on-arrival, unified_scraper.py:622-642)
-          MergeOps.upsertParquetByMonth(batch.sparkSession,
-            s"$tableDir/events", unified, Seq("event_id"), "updated_at")
-          // commit point for the replay guard above — written only
-          // after every log write and the merge landed
-          graft.operators.GateOps.writeMarker(tfs, tableDir,
-            "_last_commit", commitKey)
-          // the logs self-tend on the gates' cadence: one file set per
-          // batch otherwise accumulates forever at sustained ingest
-          batchesSinceCompact = if (tick) 0 else batchesSinceCompact + 1
-        }
+    Curation.guardedStream(stream, tableDir,
+        checkpoint.getOrElse(s"$tableDir/_checkpoint"),
+        Seq("curation_log" -> None), "graft-incremental-ingest", trigger,
+        autoCompactEvery) { (batch, _, tick) =>
+      curate.foreach { case (getModels, (cng, cnd)) =>
+        // per-batch generation check (no-op unless a retrain landed
+        // since the last batch)
+        val models = getModels()
+        val payloadCols = batch.columns.filterNot(_ == "scraped_at")
+        // id = full-record hash, document = the crawl-invariant
+        // payload JSON. No dedup here: curateBatch itself repartitions
+        // by doc_id at explicit width and dedups — a second pass would
+        // just pay the shuffle twice
+        val docs = batch.select(
+          xxhash64(to_json(struct(batch.columns.map(col): _*)))
+            .as("doc_id"),
+          to_json(struct(payloadCols.map(col): _*)).as("text"))
+        graft.operators.GateOps.writeLog(batch.sparkSession, tableDir,
+          "curation_log", "ingest_id", Some(
+            Curation.curateBatch(docs, cng, cnd, models)
+              .withColumnRenamed("doc_id", "ingest_id")),
+          tick, logMergeBytes)
       }
-      .start()
+      // Month partition (the TableLayout key) must be STABLE per
+      // event_id across re-scrapes, or the partition-pruned merge
+      // accumulates cross-month duplicates. Unify coalesces an
+      // absent/unparseable start date to SCRAPE time — which varies
+      // per crawl — so those rows are routed to the "0000-00"
+      // sentinel month instead, detected from the raw evidence: no
+      // raw date string at all, or the datetime validation ERROR
+      // Unify raises on a failed parse. (A legitimately CHANGED date
+      // still moves months — that is reconcileCrossMonthKeys'
+      // documented job.)
+      val scrapeDated =
+        col("datetime.recurring.pattern_description").isNull ||
+          col("datetime.recurring.pattern_description") === "" ||
+          exists(col("validation_metadata.validation_errors"),
+            e => e.getField("field") === "datetime")
+      val unified = Unify.unify(batch, platform)
+        .transform(df => MergeOps.dedupFirstWins(df, Seq("event_id")))
+        .withColumn("start_month",
+          when(scrapeDated, lit("0000-00"))
+            .otherwise(substring(col("datetime.start_date"), 1, 7)))
+        // the merge runs several actions (month collect, staging
+        // write) — materialize the unified batch once instead of
+        // re-running the Unify projection + dedup shuffle per action
+        .localCheckpoint()
+      // partition-pruned merge: a micro-batch touches only the months
+      // it carries — sustained ingest against a 100 TB table never
+      // rewrites the table (the reference's upsert-on-arrival,
+      // unified_scraper.py:622-642)
+      MergeOps.upsertParquetByMonth(batch.sparkSession,
+        s"$tableDir/events", unified, Seq("event_id"), "updated_at")
+    }.start()
   }
 
   /** Streaming hourly event rollup with watermark — the windowed-agg

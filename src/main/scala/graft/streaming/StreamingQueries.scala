@@ -708,9 +708,9 @@ object StreamingQueries {
     // graft.operators.NoveltyGate below), so a batch probe costs
     // O(batch) bloom tests plus only its possible-members' co-located
     // buckets — the ScaleProbe `noveltyb` row measures the per-batch
-    // cost flat where the unbucketed baseline grew linearly. The final
-    // census (novel count = distinct fingerprints, plus an
-    // order-free checksum over them) is micro-batch-split invariant:
+    // cost flat as the table grows. The final census (novel count =
+    // distinct fingerprints, plus an order-free checksum over them)
+    // is micro-batch-split invariant:
     // whichever batch sees a fingerprint first claims it, and the
     // SET of fingerprints is split-independent.
     "ev_stream_novelty" -> QueryDef(
@@ -1280,9 +1280,6 @@ object StreamingQueries {
         // the pipeline lives in streaming.Curation — this row wires
         // the fixture stream through it and censuses the verdicts
         val models = sharedModels(s, d)
-        seedEmptyParquet(s, s"$out/scored",
-          "doc_id BIGINT, is_novel INT, is_neardup INT, " +
-            "quality_kept INT, decontam_kept INT, lm_kept INT, kept INT")
         val fileSchema = s.read.parquet(d + "/documents.parquet").schema
         graft.streaming.Curation.start(s, d + "/documents.parque*",
             fileSchema, out, models)
@@ -1293,60 +1290,12 @@ object StreamingQueries {
       curateOracleSql()),
 
     // Flag-don't-drop INGEST topology — the five-gate verdict chain
-    // composed into the keyed month-merge path (the
-    // IncrementalIngest.start(curation=...) production shape, staged
-    // over the documents fixture): per-doc verdicts land in a log
-    // BEFORE the merge, and the merge still processes the FULL batch
-    // — curation informs the corpus, it never censors the system of
-    // record. The result joins the verdict log against the ACTUAL
-    // merged table, so `merged` = 1 proves every doc (kept or not)
-    // reached the table; the oracle replays the curate chain plus
-    // that all-merged invariant.
+    // composed into the keyed month-merge path, through the body
+    // IncrementalIngest.start runs (ingestCurated): curation informs
+    // the corpus, it never censors the system of record. The oracle
+    // replays the curate chain plus the all-merged invariant.
     "ev_stream_ingest_curated" -> QueryDef(
-      (s, d) => {
-        val out = freshDir(s, "stream_ingest_curated", d)
-        val models = sharedModels(s, d)
-        val ngate = new graft.operators.NoveltyGate(s"$out/nov")
-        val ndgate = new graft.operators.NearDupGate(s"$out/nd")
-        seedEmptyParquet(s, s"$out/log",
-          "doc_id BIGINT, is_novel INT, is_neardup INT, " +
-            "quality_kept INT, decontam_kept INT, lm_kept INT, kept INT")
-        val fileSchema = s.read.parquet(d + "/documents.parquet").schema
-        val stream = s.readStream.schema(fileSchema)
-          .parquet(d + "/documents.parque*")
-        val q = stream.writeStream
-          .queryName("graft_stream_ingest_curated")
-          .option("checkpointLocation", s"$out/_ckpt")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              // verdicts FIRST (flag-don't-drop), then the partition-
-              // pruned merge of the full batch (synthetic month key,
-              // the ev_stream_upsert layout)
-              graft.streaming.Curation
-                .curateBatch(batch, ngate, ndgate, models)
-                .write.mode("append").parquet(s"$out/log")
-              graft.operators.MergeOps.upsertParquetByMonth(
-                batch.sparkSession, s"$out/events",
-                batch.select(col("doc_id"),
-                  concat(lit("2025-0"),
-                    (col("doc_id") % 6 + 1).cast("string"))
-                    .as("start_month"),
-                  col("doc_id").as("updated_seq")),
-                Seq("doc_id"), "updated_seq")
-            }
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$out/log").distinct()
-          .join(s.read.parquet(s"$out/events")
-            .select(col("doc_id"), lit(1).as("merged")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), col("is_novel"), col("is_neardup"),
-            col("quality_kept"), col("decontam_kept"), col("lm_kept"),
-            col("kept"), coalesce(col("merged"), lit(0)).as("merged"))
-          .orderBy(col("doc_id"))
-      },
+      (s, d) => ingestCurated(s, d, "stream_ingest_curated", 0),
       curateOracleSql(",\n  CAST(1 AS INTEGER) AS merged")),
 
     // The CAPPED curation pipeline — the production configuration of
@@ -1366,9 +1315,6 @@ object StreamingQueries {
       (s, d) => {
         val out = freshDir(s, "stream_curate_cap", d)
         val models = sharedModels(s, d)
-        seedEmptyParquet(s, s"$out/scored",
-          "doc_id BIGINT, is_novel INT, is_neardup INT, " +
-            "quality_kept INT, decontam_kept INT, lm_kept INT, kept INT")
         val fileSchema = s.read.parquet(d + "/documents.parquet").schema
         graft.streaming.Curation.start(s, d + "/documents.parque*",
             fileSchema, out, models, bandKeyCap = 8)
@@ -1392,48 +1338,7 @@ object StreamingQueries {
     // single-batch caveat as every capped row — the multi-batch
     // per-probe composition is spec-frozen for both gate families).
     "ev_stream_ingest_curated_capped" -> QueryDef(
-      (s, d) => {
-        val out = freshDir(s, "stream_ingest_curated_cap", d)
-        val models = sharedModels(s, d)
-        val ngate = new graft.operators.NoveltyGate(s"$out/nov")
-        val ndgate = new graft.operators.NearDupGate(s"$out/nd",
-          bandKeyCap = 8)
-        seedEmptyParquet(s, s"$out/log",
-          "doc_id BIGINT, is_novel INT, is_neardup INT, " +
-            "quality_kept INT, decontam_kept INT, lm_kept INT, kept INT")
-        val fileSchema = s.read.parquet(d + "/documents.parquet").schema
-        val stream = s.readStream.schema(fileSchema)
-          .parquet(d + "/documents.parque*")
-        val q = stream.writeStream
-          .queryName("graft_stream_ingest_curated_cap")
-          .option("checkpointLocation", s"$out/_ckpt")
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) {
-              graft.streaming.Curation
-                .curateBatch(batch, ngate, ndgate, models)
-                .write.mode("append").parquet(s"$out/log")
-              graft.operators.MergeOps.upsertParquetByMonth(
-                batch.sparkSession, s"$out/events",
-                batch.select(col("doc_id"),
-                  concat(lit("2025-0"),
-                    (col("doc_id") % 6 + 1).cast("string"))
-                    .as("start_month"),
-                  col("doc_id").as("updated_seq")),
-                Seq("doc_id"), "updated_seq")
-            }
-          }
-          .start()
-        q.awaitTermination()
-        s.read.parquet(s"$out/log").distinct()
-          .join(s.read.parquet(s"$out/events")
-            .select(col("doc_id"), lit(1).as("merged")),
-            Seq("doc_id"), "left")
-          .select(col("doc_id"), col("is_novel"), col("is_neardup"),
-            col("quality_kept"), col("decontam_kept"), col("lm_kept"),
-            col("kept"), coalesce(col("merged"), lit(0)).as("merged"))
-          .orderBy(col("doc_id"))
-      },
+      (s, d) => ingestCurated(s, d, "stream_ingest_curated_cap", 8),
       curateOracleSql(",\n  CAST(1 AS INTEGER) AS merged",
         bandKeyCap = 8)),
 
@@ -1452,8 +1357,6 @@ object StreamingQueries {
       (s, d) => {
         val out = freshDir(s, "stream_curate_report", d)
         val models = sharedModels(s, d)
-        // no seedEmptyParquet here: Curation.start seeds scored with
-        // the zero-row schema itself before any batch runs
         val fileSchema = s.read.parquet(d + "/documents.parquet").schema
         graft.streaming.Curation.start(s, d + "/documents.parque*",
             fileSchema, out, models, bandKeyCap = 8)
@@ -1615,6 +1518,46 @@ object StreamingQueries {
        |FROM (SELECT vec_id FROM embeddings) e
        |LEFT JOIN agg a ON a.id = e.vec_id$capJoin
        |ORDER BY id""".stripMargin
+  }
+
+  /** The flag-don't-drop ingest topology staged over the documents
+    * fixture (ev_stream_ingest_curated[_capped]): the curated streams'
+    * guarded body and gate pair ([[Curation.guardedStream]],
+    * [[Curation.gates]]) with stage 2's band-key cap at `bandKeyCap`.
+    * Per batch the verdicts land in `log` FIRST, then the
+    * partition-pruned merge runs over the FULL batch (synthetic month
+    * key, the ev_stream_upsert layout). The result joins the verdict
+    * log against the ACTUAL merged table, so `merged` = 1 proves every
+    * doc (kept or not) reached the table. */
+  private def ingestCurated(s: SparkSession, d: String, prefix: String,
+      bandKeyCap: Int): DataFrame = {
+    val out = freshDir(s, prefix, d)
+    val models = sharedModels(s, d)
+    val (ngate, ndgate) = Curation.gates(out, bandKeyCap = bandKeyCap)
+    val fileSchema = s.read.parquet(d + "/documents.parquet").schema
+    Curation.guardedStream(
+        s.readStream.schema(fileSchema).parquet(d + "/documents.parque*"),
+        out, s"$out/_ckpt", Seq("log" -> Some(Curation.verdictDdl)),
+        s"graft_$prefix", Trigger.AvailableNow(), 16) { (batch, _, tick) =>
+      graft.operators.GateOps.writeLog(batch.sparkSession, out, "log",
+        "doc_id", Some(Curation.curateBatch(batch, ngate, ndgate, models)),
+        tick, 0L)
+      graft.operators.MergeOps.upsertParquetByMonth(
+        batch.sparkSession, s"$out/events",
+        batch.select(col("doc_id"),
+          concat(lit("2025-0"), (col("doc_id") % 6 + 1).cast("string"))
+            .as("start_month"),
+          col("doc_id").as("updated_seq")),
+        Seq("doc_id"), "updated_seq")
+    }.start().awaitTermination()
+    s.read.parquet(s"$out/log").distinct()
+      .join(s.read.parquet(s"$out/events")
+        .select(col("doc_id"), lit(1).as("merged")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), col("is_novel"), col("is_neardup"),
+        col("quality_kept"), col("decontam_kept"), col("lm_kept"),
+        col("kept"), coalesce(col("merged"), lit(0)).as("merged"))
+      .orderBy(col("doc_id"))
   }
 
   /** The three curate-family rows train IDENTICAL reference models

@@ -37,7 +37,7 @@ import graft.operators.{Unify, V2Fixtures}
   *   merge | mergeshard | reshard | reshardonline | annprobe |
   *   annappend | anncompact |
   *   bpe | ppjoin | ppjoinz | pagerank | rolling | lm | nb |
-  *   novelty | noveltyb | neardup | neardupb | neardupt |
+  *   noveltyb | neardup | neardupb | neardupt |
   *   neardupcap | neardupauto | embedt | embedcap | curate | curatecap |
   *   ingest | ingestcap | ingestcapm | spandedup
   *   (`curate`/`curatecap` time ONE fixed 500-doc micro-batch through
@@ -47,9 +47,9 @@ import graft.operators.{Unify, V2Fixtures}
   *   verdict-log write + month-pruned merge — against a factor-scaled
   *   events table, months constant vs scaled with the corpus)
   *   (`funnelcap` clones ONE doc ×factor — the adversarial duplicate
-  *   cluster — through degree-capped clustering; the `novelty`/
-  *   `neardup` pairs measure each standing gate's unbucketed baseline
-  *   vs its persistent-index layout as the table grows)
+  *   cluster — through degree-capped clustering; the `neardup`/
+  *   `neardupb` pair measures the standing near-dup gate's full-scan
+  *   baseline vs its persistent-index layout as the table grows)
   */
 object ScaleProbe {
 
@@ -702,41 +702,10 @@ object ScaleProbe {
         Seq("sec_train" -> trainSec, "nb_vocab_rows" -> nbVocab))
     }
 
-    // Standing novelty-gate probe (ev_stream_novelty): the per-batch
-    // cost driver is the anti-join against the PERSISTENT fingerprint
-    // table — one probe of the table per batch, linear in table size
-    // (the batch side broadcasts). The table is seeded with factor-1
-    // perturbed replicas (base excluded, so the timed batch is always
-    // fully novel and constant-sized); what grows across factors is
-    // ONLY the table. At 100 TB the linear term is why production
-    // buckets the table by fp prefix (co-located probe) or fronts it
-    // with a Bloom bitmap — this probe records the unbucketed
-    // baseline the layout exists to beat.
-    def runNoveltyAt(factor: Int): Lap = {
-      val out = new java.io.File("target/probe_novelty").getAbsolutePath
-      val fs = new org.apache.hadoop.fs.Path(out)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(out), true)
-      val fpTable = out + "/fp"
-      replicate(factor, perturbText = true)
-        .filter(col("doc_id") >= 10000000L)
-        .select(graft.operators.Dedup.exactFingerprint(col("text"))
-          .as("fp"))
-        .filter(col("fp").isNotNull).distinct()
-        .write.mode("overwrite").parquet(fpTable)
-      val tableRows = spark.read.parquet(fpTable).count()
-      val t0 = System.nanoTime()
-      graft.operators.Dedup.appendNovelFingerprints(
-        base.select(col("text")), fpTable)
-      val sec = (System.nanoTime() - t0) / 1e9
-      Lap(spark.read.parquet(fpTable).count() - tableRows, sec,
-        Seq("table_rows" -> tableRows))
-    }
-
-    // Bucketed novelty-gate probe (the layout the `novelty` baseline
-    // exists to beat): identical traffic shape — table seeded with
-    // factor-1 perturbed replicas THROUGH THE GATE ITSELF (same code
-    // path: bloom deltas + prefix-partitioned appends), then the
+    // Standing novelty-gate probe (ev_stream_novelty): the table is
+    // seeded with factor-1 perturbed replicas THROUGH THE GATE ITSELF
+    // (base excluded; same code path: bloom deltas +
+    // prefix-partitioned appends), then the
     // constant-sized, fully-novel base batch is timed against a
     // STANDING NoveltyGate (bloom cached, as in the stream — the
     // one-time load is the stream-start cost, not the per-batch
@@ -745,7 +714,7 @@ object ScaleProbe {
     // front a novel batch is ~all bloom-negative and the rare false
     // positives resolve via a driver-collected INSET probe of their
     // buckets, so the measured claim is per-batch cost FLAT in table
-    // rows where the unbucketed anti-join's O(table) scan grows.
+    // rows.
     def runNoveltyBucketedAt(factor: Int): Lap = {
       val out = new java.io.File("target/probe_noveltyb").getAbsolutePath
       val fs = new org.apache.hadoop.fs.Path(out)
@@ -1132,7 +1101,6 @@ object ScaleProbe {
       "rolling"     -> ("ev_rolling_mau", "days", runRollingAt),
       "lm"          -> ("ta_lm_quality_filter", "scored_docs", runLmAt),
       "nb"          -> ("ta_nb_classifier", "scored_docs", runNbAt),
-      "novelty"     -> ("ev_stream_novelty", "novel_appended", runNoveltyAt),
       "noveltyb"    -> ("ev_stream_novelty_bucketed", "novel_appended",
                         runNoveltyBucketedAt),
       "neardup"     -> ("ev_stream_neardup_fullscan", "verdicts", runNeardupAt),

@@ -224,50 +224,6 @@ class ApiMultimodalStreamingSpec extends AnyFunSuite {
     assert(months === Array("start_month=2025-07", "start_month=2025-08"))
   }
 
-  test("streaming: novelty-gated ingest flags re-crawls while the merge converges") {
-    val dir = Files.createTempDirectory("graft_gated").toFile.getAbsolutePath
-    val landing = s"$dir/landing"; new java.io.File(landing).mkdirs()
-    Files.writeString(new java.io.File(s"$landing/crawl1.json").toPath,
-      """[{"title": "Gated Event One", "time": "Friday 15 July 2025",
-        |  "venue": "pacha", "url": "https://x.com/1",
-        |  "scraped_at": "2025-07-01T00:00:00"}]""".stripMargin)
-    val q1 = IncrementalIngest.start(spark, landing, dir,
-      noveltyGate = true)
-    q1.awaitTermination(60000)
-    assert(spark.read.parquet(s"$dir/events").count() === 1)
-    val log1 = spark.read.parquet(s"$dir/novelty_log")
-    assert(log1.count() === 1 &&
-      log1.head().getInt(1) === 1, "first crawl is novel")
-    // crawl 2: the SAME record re-scraped (only scraped_at moved —
-    // the crawl-invariant payload is identical) plus one new event.
-    // A fresh start() also exercises the gate's restart path inside
-    // the ingest topology (bloom re-read from disk).
-    Files.writeString(new java.io.File(s"$landing/crawl2.json").toPath,
-      """[{"title": "Gated Event One", "time": "Friday 15 July 2025",
-        |  "venue": "pacha", "url": "https://x.com/1",
-        |  "scraped_at": "2025-07-02T00:00:00"},
-        | {"title": "Gated Event Two", "time": "Saturday 16 August 2025",
-        |  "venue": "dc10", "url": "https://x.com/2",
-        |  "scraped_at": "2025-07-02T00:00:00"}]""".stripMargin)
-    val q2 = IncrementalIngest.start(spark, landing, dir,
-      noveltyGate = true)
-    q2.awaitTermination(60000)
-    // agreement between the gate and the merge: the re-crawl flags
-    // is_novel=0 while the keyed upsert independently converges —
-    // novel-verdict count == distinct payloads == merged table rows
-    val log2 = spark.read.parquet(s"$dir/novelty_log")
-    assert(log2.count() === 3)
-    assert(log2.filter(col("is_novel") === 1).count() === 2,
-      "exactly the two distinct payloads flag novel")
-    assert(spark.read.parquet(s"$dir/events").count() === 2)
-    // flag-don't-drop: the re-crawl still reached the merge (its
-    // envelope may carry fresher fields even when the payload hasn't
-    // changed) — both month partitions exist
-    val months = new java.io.File(s"$dir/events").listFiles()
-      .map(_.getName).filter(_.startsWith("start_month=")).sorted
-    assert(months === Array("start_month=2025-07", "start_month=2025-08"))
-  }
-
   test("streaming: curated ingest logs five-gate verdicts while the merge converges") {
     // the COMPLETE production topology: the composed curation chain
     // in flag-don't-drop mode ahead of the keyed month merge — every

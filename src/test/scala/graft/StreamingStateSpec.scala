@@ -77,51 +77,6 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(got === Seq((1, "A", 10L, Some(30L)), (2, "B", 30L, None)))
   }
 
-  test("streaming novelty gate drops a duplicate arriving in a LATER batch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val out = new java.io.File(
-      "target/test_stream_novelty").getAbsolutePath
-    val fs = new org.apache.hadoop.fs.Path(out)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(out), true)
-    val fpTable = s"$out/fingerprints"
-    spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](),
-        org.apache.spark.sql.types.StructType.fromDDL("fp STRING"))
-      .write.mode("overwrite").parquet(fpTable)
-    val ms = MemoryStream[(Long, String)]
-    val src = ms.toDF().toDF("doc_id", "text")
-    val q = src.writeStream
-      .option("checkpointLocation", s"$out/_ckpt")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          graft.operators.Dedup.appendNovelFingerprints(batch, fpTable)
-        }
-      }
-      .start()
-    // batch 1: two docs, one intra-batch duplicate (whitespace-only
-    // difference must normalize to the same fingerprint)
-    ms.addData((1L, "alpha beta"), (2L, "alpha  beta"), (3L, "gamma"))
-    q.processAllAvailable()
-    // batch 2: a CROSS-BATCH duplicate of doc 1, one novel doc, and a
-    // NULL-text doc — the persistent table must absorb the first,
-    // admit the second, and NOT accumulate a NULL row for the third
-    // (NULL join keys never anti-match, so an unfiltered null fp
-    // would re-append on every batch and every run)
-    ms.addData((4L, "alpha beta"), (5L, "delta"),
-      (6L, null.asInstanceOf[String]))
-    q.processAllAvailable()
-    // batch 3: the null doc again — still nothing to remember
-    ms.addData((7L, null.asInstanceOf[String]))
-    q.processAllAvailable()
-    q.stop()
-    val fps = spark.read.parquet(fpTable).collect().map(_.getString(0))
-    assert(fps.length === 3, s"expected 3 novel fingerprints: ${fps.toSeq}")
-    assert(fps.distinct.length === 3, "table must never hold a dup")
-    assert(!fps.contains(null), "null fingerprints must never persist")
-  }
-
   test("bucketed novelty gate keeps its semantics across batches (cached bloom)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -521,8 +476,8 @@ class StreamingStateSpec extends AnyFunSuite {
       .option("checkpointLocation", s"$out/_ckpt")
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          graft.operators.Dedup.appendNearDupVerdicts(
-            batch, out, "doc_id", "text")
+          new graft.operators.NearDupGate(out)
+            .admit(batch, "doc_id", "text")
         }
       }
       .start()
@@ -960,39 +915,6 @@ class StreamingStateSpec extends AnyFunSuite {
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty,
       "a loaded-models stream must reproduce the trained-models stream")
     assert(a.count() === corpus.count())
-  }
-
-  test("ingest runs the novelty flag and the curation chain independently") {
-    // the two flag-modes are independent knobs — enabling both must
-    // keep each log correct (curation subsumes the novelty flag's
-    // information but keeps its own state)
-    val dir = java.nio.file.Files.createTempDirectory("graft_both")
-      .toFile.getAbsolutePath
-    val landing = s"$dir/landing"; new java.io.File(landing).mkdirs()
-    val models = graft.streaming.Curation.trainModels(
-      Seq((900L, "reference corpus tokens for the shared models", "en"),
-        (901L, "andere referenz woerter fuer das geteilte modell", "de"))
-        .toDF("doc_id", "text", "lang"))
-    java.nio.file.Files.writeString(
-      new java.io.File(s"$landing/c1.json").toPath,
-      """[{"title": "Both Gates Event", "time": "Friday 15 July 2025",
-        |  "venue": "pacha", "url": "https://x.com/1",
-        |  "scraped_at": "2025-07-01T00:00:00"},
-        | {"title": "Both Gates Event", "time": "Friday 15 July 2025",
-        |  "venue": "pacha", "url": "https://x.com/1",
-        |  "scraped_at": "2025-07-02T00:00:00"}]""".stripMargin)
-    assert(IncrementalIngest.start(spark, landing, dir,
-        noveltyGate = true, curation = Some(models))
-      .awaitTermination(120000), "dual-flag drain must finish")
-    // same payload scraped twice in ONE batch: both logs see two
-    // records, flag exactly one novel, and the merge converges to one
-    val nlog = spark.read.parquet(s"$dir/novelty_log").distinct()
-    val clog = spark.read.parquet(s"$dir/curation_log").distinct()
-    assert(nlog.count() === 2 &&
-      nlog.filter(col("is_novel") === 1).count() === 1)
-    assert(clog.count() === 2 &&
-      clog.filter(col("is_novel") === 1).count() === 1)
-    assert(spark.read.parquet(s"$dir/events").count() === 1)
   }
 
   test("near-dup gates reach the same verdicts through the dup-heavy fallback paths") {
@@ -1477,7 +1399,7 @@ class StreamingStateSpec extends AnyFunSuite {
 
   test("pipeline-level logs compact on the gate cadence with verdicts unchanged") {
     // the gates' state tables self-compact; the sinks OUTSIDE them
-    // (Curation.start's scored, ingest's novelty_log/curation_log)
+    // (Curation.start's scored, ingest's curation_log)
     // accumulate one file set per batch forever without this — the
     // classic sustained-ingest small-files leak. Cadence=1 makes every
     // drain compact; across three drains the logs must stay at ONE
@@ -1503,18 +1425,13 @@ class StreamingStateSpec extends AnyFunSuite {
       java.nio.file.Files.writeString(
         new java.io.File(s"$landing/c$i.json").toPath, rec(i))
       assert(IncrementalIngest.start(spark, landing, s"$dir/t",
-          noveltyGate = true, curation = Some(models),
-          autoCompactEvery = 1)
+          curation = Some(models), autoCompactEvery = 1)
         .awaitTermination(180000), s"drain $i must finish")
     }
     // three drains = three appended batches, compacted after each:
     // one file per log, nothing lost, nothing duplicated
-    assert(partFiles(s"$dir/t/novelty_log") === 1)
     assert(partFiles(s"$dir/t/curation_log") === 1)
-    val nlog = spark.read.parquet(s"$dir/t/novelty_log")
     val clog = spark.read.parquet(s"$dir/t/curation_log")
-    assert(nlog.count() === 3 &&
-      nlog.filter(col("is_novel") === 1).count() === 3)
     assert(clog.count() === 3 &&
       clog.filter(col("is_novel") === 1).count() === 3)
     // Curation.start's scored sink under the same cadence: two drains
@@ -1573,7 +1490,7 @@ class StreamingStateSpec extends AnyFunSuite {
       s"$dir/cur", models).awaitTermination()
     assert(spark.read.parquet(s"$dir/cur/scored").distinct()
       .count() === 3, "the healed scored log must carry every verdict")
-    // ingest layout: same window on novelty_log
+    // ingest layout: same window on curation_log
     val landing = s"$dir/landing"; new java.io.File(landing).mkdirs()
     java.nio.file.Files.writeString(
       new java.io.File(s"$landing/c1.json").toPath,
@@ -1581,18 +1498,18 @@ class StreamingStateSpec extends AnyFunSuite {
         |  "url": "https://x.com/1",
         |  "scraped_at": "2025-07-01T00:00:00"}]""".stripMargin)
     assert(IncrementalIngest.start(spark, landing, s"$dir/ing",
-      noveltyGate = true).awaitTermination(180000))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/ing/novelty_log"),
-      new org.apache.hadoop.fs.Path(s"$dir/ing/novelty_log_tmp"))
+      curation = Some(models)).awaitTermination(180000))
+    fs.rename(new org.apache.hadoop.fs.Path(s"$dir/ing/curation_log"),
+      new org.apache.hadoop.fs.Path(s"$dir/ing/curation_log_tmp"))
     java.nio.file.Files.writeString(
       new java.io.File(s"$landing/c2.json").toPath,
       """[{"title": "Heal Event Two", "venue": "amnesia",
         |  "url": "https://x.com/2",
         |  "scraped_at": "2025-07-02T00:00:00"}]""".stripMargin)
     assert(IncrementalIngest.start(spark, landing, s"$dir/ing",
-      noveltyGate = true).awaitTermination(180000))
-    assert(spark.read.parquet(s"$dir/ing/novelty_log").distinct()
-      .count() === 2, "the healed novelty log must carry every record")
+      curation = Some(models)).awaitTermination(180000))
+    assert(spark.read.parquet(s"$dir/ing/curation_log").distinct()
+      .count() === 2, "the healed curation log must carry every record")
   }
 
   test("incremental log compaction bounds per-tick work: epochs seal, census holds") {
@@ -2512,6 +2429,41 @@ class StreamingStateSpec extends AnyFunSuite {
         "previous run's marker")
   }
 
+  test("a replayed committed startEmbedding batch leaves the gate's " +
+      "verdicts unchanged") {
+    // the replay fixture above on the embedding entry point, which has
+    // no _last_commit guard: drain one batch, delete its commit-log
+    // entry, restart — Spark re-executes batch 0 against a gate that
+    // already indexed it. The own-id exclusion must keep every
+    // re-admitted verdict byte-identical, so distinct() absorbs them.
+    val dir = Files.createTempDirectory("graft_embed_replay").toFile
+      .getAbsolutePath
+    Seq((1L, Seq(1f, 0f, 0f, 0f)), (2L, Seq(0.99f, 0.05f, 0f, 0f)),
+        (3L, Seq(0f, 0f, 1f, 0f)), (4L, Seq(0f, 0.02f, 0.98f, 0f)))
+      .toDF("vec_id", "embedding")
+      .coalesce(1).write.parquet(s"$dir/src")
+    val schema = spark.read.parquet(s"$dir/src").schema
+    def drain(): Unit = assert(graft.streaming.Curation.startEmbedding(
+        spark, s"$dir/src", schema, s"$dir/out", dim = 4,
+        idCol = "vec_id", vecCol = "embedding", bands = 2, rowBits = 2)
+      .awaitTermination(180000))
+    def verdicts() = spark.read.parquet(s"$dir/out/verdicts")
+    drain()
+    val first = verdicts().distinct().collect().toSet
+    assert(first.size === 4 &&
+      first.exists(r => r.getLong(0) == 2L && r.getInt(3) == 1),
+      "the batch-internal near-dup must flag")
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(
+      new org.apache.hadoop.fs.Path(s"$dir/out/_ckpt/commits/0"), false),
+      "fixture must find the batch's commit-log entry to delete")
+    drain()
+    assert(verdicts().count() === 8, "the restart must re-admit batch 0")
+    assert(verdicts().distinct().collect().toSet === first,
+      "a replayed startEmbedding batch changed the gate's verdicts")
+  }
+
   test("per-tick census rows sum to the post-hoc curation report") {
     // the standing `report` log (one six-stage census block per
     // non-empty batch) vs the post-hoc whole-log census: for distinct
@@ -2724,6 +2676,16 @@ class StreamingStateSpec extends AnyFunSuite {
     refused(s"$out/nd", "_layout without verdict_schema")(
       new graft.operators.NearDupGate(s"$out/nd")
         .admit(docs, "doc_id", "text"))
+    // an embedding-gate manifest without its row_bits entry
+    val vecs1 = Seq((1L, Seq(1f, 0f, 0f, 0f))).toDF("vec_id", "embedding")
+    new graft.operators.EmbedNearDupGate(s"$out/emb", dim = 4)
+      .admit(vecs1, "vec_id", "embedding")
+    graft.operators.GateLayout.write(fs, p(s"$out/emb/_layout"),
+      (graft.operators.GateLayout.read(fs, p(s"$out/emb/_layout")) -
+        "row_bits").toSeq)
+    refused(s"$out/emb", "_layout without row_bits")(
+      new graft.operators.EmbedNearDupGate(s"$out/emb", dim = 4)
+        .admit(vecs1, "vec_id", "embedding"))
     // model artifacts and _layout at the dir root, no current/
     val models = s"$out/models"
     graft.streaming.Curation.Models.save(graft.streaming.Curation
